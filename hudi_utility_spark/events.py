@@ -13,9 +13,6 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 Payload = dict
 Callback = Callable[[Payload], None]
 
@@ -54,12 +51,3 @@ class StatusObserver:
         for cb in self._subs.get(transaction_id, []) + self._global:
             cb(payload)
         return payload
-
-
-def with_count_metric(df: DataFrame, name: str) -> DataFrame:
-    """Attach an ``observe`` metric counting rows, piggybacking on the next
-    action instead of a separate ``count()`` job (replaces the reference's
-    log-scraped "Total records in Input DataFrame: N", ``app.py:320-321``).
-    Read back via a QueryExecutionListener or ``observedMetrics``.
-    """
-    return df.observe(name, F.count(F.lit(1)).alias("rows"))

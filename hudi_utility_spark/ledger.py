@@ -212,9 +212,16 @@ class Ledger:
         files read in-process."""
         import glob as _glob
 
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        files = _glob.glob(os.path.join(self.path, "*.parquet"))
+        # "_tmp-*" files are appends still in flight (see _append_row);
+        # like Spark's reader, skip "_"- and "."-prefixed names
+        files = [
+            fp
+            for fp in _glob.glob(os.path.join(self.path, "*.parquet"))
+            if not os.path.basename(fp).startswith(("_", "."))
+        ]
         if not files:
             return None
         _epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
@@ -227,8 +234,10 @@ class Ledger:
         for fp in files:
             try:
                 t = pq.read_table(fp)
-            except Exception:
-                continue
+            except FileNotFoundError:
+                continue  # compacted away between the glob and the read
+            except pa.ArrowException as e:
+                raise ValueError(f"corrupt ledger event file {fp}: {e}") from e
             for r in t.to_pylist():
                 if r.get("transaction_id") != transaction_id:
                     continue

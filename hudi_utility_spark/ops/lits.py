@@ -38,12 +38,6 @@ def array_double(vec: list[float]) -> Column:
     return F.expr(_arr_d(vec))
 
 
-def array_array_double(arrays: list[list[float]]) -> Column:
-    """``array<array<double>>`` literal (e.g. a centroid table where
-    the cluster id is the array index)."""
-    return F.expr("array(" + ",".join(_arr_d(v) for v in arrays) + ")")
-
-
 def _struct_cid_c(cid: int, vec: list[float]) -> str:
     return f"named_struct('cid',{int(cid)},'c',{_arr_d(vec)})"
 

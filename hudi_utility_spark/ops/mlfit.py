@@ -799,29 +799,14 @@ def isotonic_calibrate(
     )
 
 
-def permutation_test(
-    df: DataFrame,
-    id_col: str,
-    value_col: str,
-    label_col: str,
-    n_perm: int = 64,
-    seed_tag: str = "perm",
-) -> DataFrame:
-    """Permutation test for a difference in group means, distributed
-    the only way a permutation test can be at 100 TB: all ``n_perm``
-    permutations evaluate in ONE aggregate pass. Each permutation b
-    re-assigns every row to a pseudo-arm via md5(id || tag || b) % 2 —
-    a deterministic, engine-portable surrogate for "shuffle the
-    labels" (hash-randomization is exchangeable under H0 exactly like
-    a shuffle, and unlike a shuffle it needs no global sort, no
-    driver-side RNG state, and replays identically on any engine).
-    The aggregate carries 3 expressions per permutation (arm-1 sum,
-    arm-1 count, all shared with the grand totals), so the plan is one
-    map-side-combinable aggregate regardless of n_perm.
-
-    Returns one row: (n, obs_diff, n_extreme, p_value) with the
-    add-one (phipson-smyth) estimator p = (1 + #extreme) / (B + 1).
-    """
+def _permutation_exprs(
+    id_col: str, value_col: str, label_col: str, n_perm: int, seed_tag: str
+):
+    """Shared expression set of :func:`permutation_test` and
+    :func:`grouped_permutation_pvalues`: the aggregate columns (grand
+    totals plus an arm-1 sum and count per permutation), the observed
+    mean difference over them, and the count of permutations at least
+    as extreme."""
     from pyspark.sql import functions as F
 
     v = F.col(value_col).cast("double")
@@ -854,10 +839,7 @@ def permutation_test(
             == 1
         )
         perms.append(F.sum(F.when(arm, v)).alias(f"s{b}"))
-        perms.append(
-            F.sum(arm.cast("long")).cast("double").alias(f"c{b}")
-        )
-    agg = df.agg(*grand, *perms)
+        perms.append(F.sum(arm.cast("long")).cast("double").alias(f"c{b}"))
     obs = F.col("sv1") / F.col("n1") - (F.col("sv") - F.col("sv1")) / (
         F.col("n") - F.col("n1")
     )
@@ -868,6 +850,38 @@ def permutation_test(
         ) / (F.col("n") - F.col(f"c{b}"))
         hit = (F.abs(diff_b) >= F.abs(obs)).cast("int")
         extreme = hit if extreme is None else extreme + hit
+    return grand + perms, obs, extreme
+
+
+def permutation_test(
+    df: DataFrame,
+    id_col: str,
+    value_col: str,
+    label_col: str,
+    n_perm: int = 64,
+    seed_tag: str = "perm",
+) -> DataFrame:
+    """Permutation test for a difference in group means, distributed
+    the only way a permutation test can be at 100 TB: all ``n_perm``
+    permutations evaluate in ONE aggregate pass. Each permutation b
+    re-assigns every row to a pseudo-arm via md5(id || tag || b) % 2 —
+    a deterministic, engine-portable surrogate for "shuffle the
+    labels" (hash-randomization is exchangeable under H0 exactly like
+    a shuffle, and unlike a shuffle it needs no global sort, no
+    driver-side RNG state, and replays identically on any engine).
+    The aggregate carries 3 expressions per permutation (arm-1 sum,
+    arm-1 count, all shared with the grand totals), so the plan is one
+    map-side-combinable aggregate regardless of n_perm.
+
+    Returns one row: (n, obs_diff, n_extreme, p_value) with the
+    add-one (phipson-smyth) estimator p = (1 + #extreme) / (B + 1).
+    """
+    from pyspark.sql import functions as F
+
+    aggs, obs, extreme = _permutation_exprs(
+        id_col, value_col, label_col, n_perm, seed_tag
+    )
+    agg = df.agg(*aggs)
     return agg.select(
         F.col("n").cast("long").alias("n"),
         F.round(obs, 6).alias("obs_diff"),
@@ -1078,48 +1092,10 @@ def grouped_permutation_pvalues(
     loop. Returns one row per group: (group, n, obs_diff, p_value)."""
     from pyspark.sql import functions as F
 
-    v = F.col(value_col).cast("double")
-    grand = [
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(v).alias("sv"),
-        F.sum(F.when(F.col(label_col).cast("int") == 1, v)).alias("sv1"),
-        F.sum((F.col(label_col).cast("int") == 1).cast("long"))
-        .cast("double")
-        .alias("n1"),
-    ]
-    perms = []
-    for b in range(n_perm):
-        arm = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col(id_col).cast("string"),
-                            F.lit(f"-{seed_tag}-{b}"),
-                        )
-                    ),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("int")
-            % 2
-            == 1
-        )
-        perms.append(F.sum(F.when(arm, v)).alias(f"s{b}"))
-        perms.append(F.sum(arm.cast("long")).cast("double").alias(f"c{b}"))
-    agg = df.groupBy(group_col).agg(*grand, *perms)
-    obs = F.col("sv1") / F.col("n1") - (F.col("sv") - F.col("sv1")) / (
-        F.col("n") - F.col("n1")
+    aggs, obs, extreme = _permutation_exprs(
+        id_col, value_col, label_col, n_perm, seed_tag
     )
-    extreme = None
-    for b in range(n_perm):
-        diff_b = F.col(f"s{b}") / F.col(f"c{b}") - (
-            F.col("sv") - F.col(f"s{b}")
-        ) / (F.col("n") - F.col(f"c{b}"))
-        hit = (F.abs(diff_b) >= F.abs(obs)).cast("int")
-        extreme = hit if extreme is None else extreme + hit
+    agg = df.groupBy(group_col).agg(*aggs)
     return agg.select(
         F.col(group_col),
         F.col("n").cast("long").alias("n"),

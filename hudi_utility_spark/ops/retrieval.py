@@ -44,6 +44,50 @@ def _term_count(term: str) -> Column:
     return F.size(F.filter("toks", lambda x: x == F.lit(term)))
 
 
+def _term_freqs(
+    df: DataFrame, id_col: str, text_col: str, terms: list[str]
+) -> DataFrame:
+    """Map-side base of the lexical rankers: per doc, its token count
+    ``dl`` and one count ``tf_i`` per (lowercased) query term."""
+    toks = _terms(F.col(text_col)).alias("toks")
+    return df.select(F.col(id_col), toks).select(
+        id_col,
+        F.size("toks").alias("dl"),
+        *[_term_count(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
+    )
+
+
+def _collection_stats(base: DataFrame, n_terms: int) -> DataFrame:
+    """ONE aggregate of the query-likelihood corpus statistics over a
+    :func:`_term_freqs` base: total token count ``c_len`` and the
+    collection frequency ``cf_i`` of each query term."""
+    return base.agg(
+        F.sum("dl").cast("double").alias("c_len"),
+        *[
+            F.sum(F.col(f"tf_{i}")).cast("double").alias(f"cf_{i}")
+            for i in range(n_terms)
+        ],
+    )
+
+
+def _matching_topk(
+    scored: DataFrame, id_col: str, score: Column, n_terms: int, k: int
+) -> DataFrame:
+    """Top-*k* docs by *score* among those containing at least one
+    query term (the rest rank on smoothing mass alone); ties break on
+    ascending id."""
+    any_tf = None
+    for i in range(n_terms):
+        hit = F.col(f"tf_{i}")
+        any_tf = hit if any_tf is None else any_tf + hit
+    return (
+        scored.filter(any_tf > 0)
+        .select(F.col(id_col), F.round(score, 6).alias("score"))
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
@@ -61,12 +105,7 @@ def bm25_topk(
     scalars broadcast back into the scoring expression. Ties break on
     ascending id for a total order."""
     terms = [t.lower() for t in query_terms]
-    toks = _terms(F.col(text_col)).alias("toks")
-    base = df.select(F.col(id_col), toks).select(
-        id_col,
-        F.size("toks").alias("dl"),
-        *[_term_count(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
-    )
+    base = _term_freqs(df, id_col, text_col, terms)
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs_total"),
         F.avg("dl").alias("avgdl"),
@@ -220,36 +259,17 @@ def query_likelihood_topk(
     smoothing mass alone — pure length noise). Ties break ascending id.
     """
     terms = [t.lower() for t in query_terms]
-    toks = _terms(F.col(text_col)).alias("toks")
-    base = df.select(F.col(id_col), toks).select(
-        id_col,
-        F.size("toks").alias("dl"),
-        *[_term_count(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
-    )
-    stats = base.agg(
-        F.sum("dl").cast("double").alias("c_len"),
-        *[
-            F.sum(F.col(f"tf_{i}")).cast("double").alias(f"cf_{i}")
-            for i in range(len(terms))
-        ],
-    )
+    base = _term_freqs(df, id_col, text_col, terms)
+    stats = _collection_stats(base, len(terms))
     scored = base.join(F.broadcast(stats))
     score = None
-    any_tf = None
     for i in range(len(terms)):
         part = F.log(
             (F.col(f"tf_{i}") + F.lit(mu) * F.col(f"cf_{i}") / F.col("c_len"))
             / (F.col("dl") + F.lit(mu))
         )
         score = part if score is None else score + part
-        hit = F.col(f"tf_{i}")
-        any_tf = hit if any_tf is None else any_tf + hit
-    return (
-        scored.filter(any_tf > 0)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _matching_topk(scored, id_col, score, len(terms), k)
 
 
 def rrf_fuse(
@@ -384,36 +404,17 @@ def jm_query_likelihood_topk(
     matching no query term are excluded (they score a rank-constant
     collection mass). Ties break ascending id."""
     terms = [t.lower() for t in query_terms]
-    toks = _terms(F.col(text_col)).alias("toks")
-    base = df.select(F.col(id_col), toks).select(
-        id_col,
-        F.size("toks").alias("dl"),
-        *[_term_count(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
-    )
-    stats = base.agg(
-        F.sum("dl").cast("double").alias("c_len"),
-        *[
-            F.sum(F.col(f"tf_{i}")).cast("double").alias(f"cf_{i}")
-            for i in range(len(terms))
-        ],
-    )
+    base = _term_freqs(df, id_col, text_col, terms)
+    stats = _collection_stats(base, len(terms))
     scored = base.filter(F.col("dl") > 0).join(F.broadcast(stats))
     score = None
-    any_tf = None
     for i in range(len(terms)):
         part = F.log(
             F.lit(1.0 - lam) * F.col(f"tf_{i}") / F.col("dl")
             + F.lit(lam) * F.col(f"cf_{i}") / F.col("c_len")
         )
         score = part if score is None else score + part
-        hit = F.col(f"tf_{i}")
-        any_tf = hit if any_tf is None else any_tf + hit
-    return (
-        scored.filter(any_tf > 0)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _matching_topk(scored, id_col, score, len(terms), k)
 
 
 def rocchio_feedback_topk(
@@ -443,7 +444,6 @@ def rocchio_feedback_topk(
     term-keyed df aggregate, two bounded top-k windows (seeds, expansion
     terms — both ≤ tens of rows), one rescoring join. Ranking rounds
     to 6dp before every ordering (id / term tiebreaks)."""
-    from pyspark.sql import Window
 
     from hudi_utility_spark.ops.text import _STOPWORDS
 

@@ -1053,6 +1053,39 @@ def bpe_encode(
     )
 
 
+def _adjacent_pairs(df: DataFrame, id_col: str, arr) -> DataFrame:
+    """(id, w1, w2) for every adjacent token pair of the *arr* array
+    column: a map-only array zip, no self-join."""
+    return df.select(
+        F.col(id_col),
+        F.explode(
+            F.arrays_zip(
+                F.slice(arr, 1, F.greatest(F.size(arr) - 1, F.lit(0))).alias("w1"),
+                F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))).alias("w2"),
+            )
+        ).alias("bg"),
+    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+
+
+def _per_doc_bigram_scores(
+    scored: DataFrame, ids: DataFrame, id_col: str
+) -> DataFrame:
+    """Per-doc (id, n_bigrams, n_model_hits, avg_neg_logprob) over
+    scored (id, hit, neg_logp) bigrams, zero-filled for every id in
+    *ids* without a bigram."""
+    per_doc = scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.sum("hit").alias("n_model_hits"),
+        F.round(F.avg("neg_logp"), 6).alias("avg_neg_logprob"),
+    )
+    return ids.join(per_doc, id_col, "left").select(
+        id_col,
+        F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
+        F.coalesce("n_model_hits", F.lit(0)).cast("long").alias("n_model_hits"),
+        F.coalesce("avg_neg_logprob", F.lit(0.0)).alias("avg_neg_logprob"),
+    )
+
+
 def bigram_backoff_score(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1084,15 +1117,7 @@ def bigram_backoff_score(
     mean. N is the only scalar collected."""
     df = widen_for_compute(df)
     arr = F.filter(F.split(normalized(F.col(text_col)), " "), lambda t: t != "")
-    pairs = df.select(
-        F.col(id_col),
-        F.explode(
-            F.arrays_zip(
-                F.slice(arr, 1, F.greatest(F.size(arr) - 1, F.lit(0))).alias("w1"),
-                F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))).alias("w2"),
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    pairs = _adjacent_pairs(df, id_col, arr)
 
     toks = df.select(
         F.explode(arr).alias("tok")
@@ -1181,17 +1206,7 @@ def bigram_backoff_score(
         )
         .alias("neg_logp"),
     )
-    per_doc = scored_pos.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("hit").alias("n_model_hits"),
-        F.round(F.avg("neg_logp"), 6).alias("avg_neg_logprob"),
-    )
-    return ids.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-        F.coalesce("n_model_hits", F.lit(0)).cast("long").alias("n_model_hits"),
-        F.coalesce("avg_neg_logprob", F.lit(0.0)).alias("avg_neg_logprob"),
-    )
+    return _per_doc_bigram_scores(scored_pos, ids, id_col)
 
 
 def kneser_ney_score(
@@ -1231,15 +1246,7 @@ def kneser_ney_score(
     """
     df = widen_for_compute(df)
     arr = F.filter(F.split(normalized(F.col(text_col)), " "), lambda t: t != "")
-    pairs = df.select(
-        F.col(id_col),
-        F.explode(
-            F.arrays_zip(
-                F.slice(arr, 1, F.greatest(F.size(arr) - 1, F.lit(0))).alias("w1"),
-                F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))).alias("w2"),
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    pairs = _adjacent_pairs(df, id_col, arr)
     ids = df.select(id_col)
 
     top_bg = (
@@ -1308,21 +1315,12 @@ def kneser_ney_score(
         .when(w1v.isNotNull(), lam * pc)
         .otherwise(pc)
     )
-    per_doc = pairs.select(
+    scored = pairs.select(
         id_col,
         cbv.isNotNull().cast("long").alias("hit"),
         (-F.log(p)).alias("neg_logp"),
-    ).groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("hit").alias("n_model_hits"),
-        F.round(F.avg("neg_logp"), 6).alias("avg_neg_logprob"),
     )
-    return ids.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-        F.coalesce("n_model_hits", F.lit(0)).cast("long").alias("n_model_hits"),
-        F.coalesce("avg_neg_logprob", F.lit(0.0)).alias("avg_neg_logprob"),
-    )
+    return _per_doc_bigram_scores(scored, ids, id_col)
 
 
 def gopher_rules(

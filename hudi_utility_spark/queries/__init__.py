@@ -17,6 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hudi_utility_spark.table import KeyedTable, TableType
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 # queries that mutate session-global state (scratch tables / dirs,
@@ -42,6 +44,21 @@ def record_phase(name: str, phase: str, seconds: float) -> None:
     PHASES.setdefault(name, {})[phase] = round(seconds, 3)
 
 
+def events_table(
+    path: str, table_type: TableType = TableType.MERGE_ON_READ
+) -> KeyedTable:
+    """The keyed ``events`` table the lifecycle, scale, timeline and
+    streaming queries write: keyed by event_id, latest ts wins,
+    Hive-partitioned by event_type."""
+    return KeyedTable(
+        path=path,
+        record_key=["event_id"],
+        precombine="ts",
+        partition_fields=["event_type"],
+        table_type=table_type,
+    )
+
+
 def scratch_base() -> str:
     """Root for the query layer's PER-RUN scratch (replay input slices,
     streaming checkpoints, lifecycle/table round-trip copies). Ephemeral
@@ -63,6 +80,21 @@ def scratch_base() -> str:
     if env:
         return env
     return "/dev/shm" if _os.path.isdir("/dev/shm") else _tempfile.gettempdir()
+
+
+def fresh_scratch(sf_dir: str, name: str) -> str:
+    """Empty per-query, per-SF scratch dir path under
+    :func:`scratch_base` (any previous run's contents are removed)."""
+    import os as _os
+    import shutil as _shutil
+
+    root = _os.path.join(
+        scratch_base(),
+        "hudi_utility_spark_q",
+        f"{name}_{_os.path.basename(sf_dir.rstrip('/'))}",
+    )
+    _shutil.rmtree(root, ignore_errors=True)
+    return root
 
 
 def forensic_active(sf_dir: str, table: str, max_rows: int) -> bool:

@@ -26,6 +26,70 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
+# Cramer's-rule solve of the 3x3 normal equations over the sums in CTE s
+# (n, s1, s2, sy, s11, s12, s22, s1y, s2y): determinant, then b0..b2
+_OLS2_DET = """d AS (
+        SELECT *,
+               n * (s11 * s22 - s12 * s12)
+               - s1 * (s1 * s22 - s12 * s2)
+               + s2 * (s1 * s12 - s11 * s2) AS det
+        FROM s
+    )"""
+_OLS2_SOLVE = _OLS2_DET + """,
+    b AS (
+        SELECT *,
+               (sy * (s11 * s22 - s12 * s12)
+                - s1 * (s1y * s22 - s12 * s2y)
+                + s2 * (s1y * s12 - s11 * s2y)) / det AS b0,
+               (n * (s1y * s22 - s12 * s2y)
+                - sy * (s1 * s22 - s12 * s2)
+                + s2 * (s1 * s2y - s1y * s2)) / det AS b1,
+               (n * (s11 * s2y - s1y * s12)
+                - s1 * (s1 * s2y - s1y * s2)
+                + sy * (s1 * s12 - s11 * s2)) / det AS b2
+        FROM d
+    )"""
+# ... with each weight rounded to 6dp before it is applied (both engines
+# then predict identical values)
+_OLS2_SOLVE_ROUNDED = _OLS2_DET + """,
+    b AS (
+        SELECT ROUND((sy * (s11 * s22 - s12 * s12)
+                - s1 * (s1y * s22 - s12 * s2y)
+                + s2 * (s1y * s12 - s11 * s2y)) / det, 6) AS b0,
+               ROUND((n * (s1y * s22 - s12 * s2y)
+                - sy * (s1 * s22 - s12 * s2)
+                + s2 * (s1 * s2y - s1y * s2)) / det, 6) AS b1,
+               ROUND((n * (s11 * s2y - s1y * s12)
+                - s1 * (s1 * s2y - s1y * s2)
+                + sy * (s1 * s12 - s11 * s2)) / det, 6) AS b2
+        FROM d
+    )"""
+
+# documents: length y ~ word count x1 + longest-token length x2
+_DOC_LEN_FEATS = r"""feats AS (
+        SELECT doc_id, CAST(n_chars AS DOUBLE) AS y,
+               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
+                   AS x1,
+               CAST(list_max(list_transform(
+                   string_split_regex(trim(text), '\s+'),
+                   t -> len(t))) AS DOUBLE) AS x2
+        FROM documents
+    )"""
+
+
+def _doc_len_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `_DOC_LEN_FEATS`."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    return d.select(
+        "doc_id",
+        F.col("n_chars").cast("double").alias("y"),
+        F.size(toks).cast("double").alias("x1"),
+        F.array_max(F.transform(toks, lambda t: F.length(t)))
+        .cast("double")
+        .alias("x2"),
+    )
+
 
 def _li_baskets(spark: SparkSession, li: DataFrame) -> DataFrame:
     """Per-order sorted item baskets in ONE pinned-width shuffle:
@@ -47,8 +111,24 @@ def _li_baskets(spark: SparkSession, li: DataFrame) -> DataFrame:
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+def _basket_pairs(
+    baskets: DataFrame, a: str = "src", b: str = "dst"
+) -> DataFrame:
+    """Every i<j part pair inside each ``_li_baskets`` basket as columns
+    *a* < *b*: a map-side HOF explosion, quadratic per basket and never
+    a corpus self-join. Duplicate pairs across baskets are kept."""
+    pair_structs = F.flatten(
+        F.transform(
+            F.col("ps"),
+            lambda x, i: F.transform(
+                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+    return baskets.select(F.explode(pair_structs).alias("p")).select(
+        f"p.{a}", f"p.{b}"
+    )
 
 
 @query(
@@ -73,7 +153,7 @@ def arr_hof_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `F.aggregate` shape is the dot-product kernel used by
     `sim_bruteforce_topk` (ops/similarity.py). Map-only until the final
     per-label aggregate (one shuffle over ≤ #labels groups)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     pos = F.size(F.filter("embedding", lambda x: x > 0))
     l1 = F.aggregate(
         "embedding", F.lit(0.0), lambda acc, x: acc + F.abs(x.cast("double"))
@@ -118,7 +198,7 @@ def ts_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar × hourly-aggregate, both tiny. Timestamps cross the oracle
     compare as unix-microsecond bigints (driver hashes stringified
     values; tz-render differences would false-negative)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     counts = (
         ev.withColumn("hr", F.date_trunc("hour", F.col("ts")))
         .groupBy("event_type", "hr")
@@ -163,7 +243,7 @@ def stat_correlation_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     All are single-pass partial-aggregable (sum/sum-of-squares/
     sum-of-products decompositions), so Catalyst does map-side partials:
     one shuffle of O(groups) rows regardless of input size."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -198,7 +278,7 @@ def f_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — that's exactly what `dedup_jaccard_pairs` (PPJoin prefix
     filter) and `dedup_minhash_lsh` (band buckets) do; this query is the
     exact kernel they bound."""
-    nat = _t(spark, sf_dir, "nation").select("n_name")
+    nat = load_table(spark, sf_dir, "nation").select("n_name")
     a = nat.alias("a")
     b = nat.alias("b")
     dist = F.levenshtein(F.col("a.n_name"), F.col("b.n_name"))
@@ -252,7 +332,7 @@ def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-cardinality keys, no hot partitions; the final 3-row ranking
     window is driver-sized. The standard product-analytics readout a
     timeline/events store must answer."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     v = (
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -332,7 +412,7 @@ def ev_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id plus one keyed join; the (cohort, offset) matrix is
     weeks², driver-tiny. Week truncation is ISO-Monday in both engines;
     offsets compared as exact day multiples of 7."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
@@ -378,7 +458,7 @@ def ev_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavioral-flow readout of an events store."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = e.withColumn("next_type", F.lead("event_type").over(w))
     return (
@@ -421,18 +501,8 @@ def co_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     at corpus scale."""
     li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-            ),
-        )
-    )
     return (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.part_a", "p.part_b")
+        _basket_pairs(baskets, "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
@@ -462,7 +532,7 @@ def stat_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass shape — tiny stats relation broadcast into a map-side
     scoring pass — is the standard distributed anomaly scan; no window
     over the fact, no per-group sort."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     stats = e.groupBy("event_type").agg(
         F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
     )
@@ -510,7 +580,7 @@ def ts_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines via the padded string key)."""
     from hudi_utility_spark.tsutil import us
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     ord_key = F.concat(
         F.lpad(us(F.col("ts")).cast("string"), 20, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
@@ -562,7 +632,7 @@ def ml_group_linfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate; a sklearn/torch fit drops into the same plumbing."""
     from hudi_utility_spark.ops.mlfit import group_linear_fit
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     xs = ((us("ts") - F.lit(1704067200000000)) / F.lit(3.6e9)).alias("x_hours")
     fit = group_linear_fit(
         ev.select("event_type", xs, F.col("value")),
@@ -630,20 +700,7 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
-    pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-    )
+    pairs = _basket_pairs(baskets).distinct()
     # src < dst by construction; the reversed union is distinct for free
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -683,7 +740,7 @@ def ts_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row subquery, scales linearly in events."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", us("ts").alias("ts_us"), "value"
     )
     w = (
@@ -727,7 +784,7 @@ def stat_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean is cut-invariant)."""
     from hudi_utility_spark.ops.mlfit import trimmed_mean_agg
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     out = trimmed_mean_agg(ev, "event_type", "value", trim=0.1)
     return out.select(
         "event_type",
@@ -794,7 +851,7 @@ def ev_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
        top-50 while bounding the expansion at 51² rows per sig-pair.
     5. global top-50 via TakeOrderedAndProject (no global sort).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -965,7 +1022,7 @@ def ml_tree_ensemble_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec, so branch structure and literal arithmetic are mirrored."""
     from hudi_utility_spark.ops.mlfit import ensemble_score
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "value",
         (F.col("user_id") % 7).alias("u7"),
@@ -1032,7 +1089,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization."""
     from hudi_utility_spark.ops.mlfit import logistic_fit
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     feats = d.select(
         (F.col("n_chars") / F.lit(1000.0)).alias("x1"),
         (F.size(F.split(F.col("text"), " ")) / F.lit(200.0)).alias("x2"),
@@ -1085,20 +1142,7 @@ def graph_triangles_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
-    pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-    )
+    pairs = _basket_pairs(baskets).distinct()
     return triangle_counts(pairs, assume_canonical=True).select(
         F.col("node").alias("node"), "triangles"
     )
@@ -1142,7 +1186,7 @@ def ev_session_trajectories(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by user; no single-partition stage."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (
         us(F.col("ts")) - us(F.lag("ts").over(w)) > 1_800_000_000
@@ -1216,7 +1260,7 @@ def ev_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     means and stddevs show the variance the covariate removed —
     sd_adjusted < sd_post is the whole point of CUPED. Two shuffles
     total (user rollup, variant rollup) at any scale."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cutoff = "2024-01-16 00:00:00"
     per_user = ev.groupBy("user_id").agg(
         F.sum(
@@ -1283,7 +1327,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the only fact-sized work is the first hash aggregate."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -1338,7 +1382,7 @@ def ev_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar broadcasts."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = e.withColumn("next_type", F.lead("event_type").over(w))
     counts = (
@@ -1384,26 +1428,7 @@ def ev_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(l_extendedprice * l_extendedprice) AS syy
         FROM lineitem
     ),
-    d AS (
-        SELECT *,
-               n * (s11 * s22 - s12 * s12)
-               - s1 * (s1 * s22 - s12 * s2)
-               + s2 * (s1 * s12 - s11 * s2) AS det
-        FROM s
-    ),
-    b AS (
-        SELECT *,
-               (sy * (s11 * s22 - s12 * s12)
-                - s1 * (s1y * s22 - s12 * s2y)
-                + s2 * (s1y * s12 - s11 * s2y)) / det AS b0,
-               (n * (s1y * s22 - s12 * s2y)
-                - sy * (s1 * s22 - s12 * s2)
-                + s2 * (s1 * s2y - s1y * s2)) / det AS b1,
-               (n * (s11 * s2y - s1y * s12)
-                - s1 * (s1 * s2y - s1y * s2)
-                + sy * (s1 * s12 - s11 * s2)) / det AS b2
-        FROM d
-    )
+    """ + _OLS2_SOLVE + """
     SELECT CAST(n AS BIGINT) AS n,
            ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1, ROUND(b2, 6) AS b2,
            ROUND(1 - (syy - 2 * (b0 * sy + b1 * s1y + b2 * s2y)
@@ -1421,7 +1446,7 @@ def ml_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the many-models complement)."""
     from hudi_utility_spark.ops.mlfit import ols2_normal_equations
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return ols2_normal_equations(
         li, "l_extendedprice", "l_quantity", "l_discount"
     )
@@ -1471,7 +1496,7 @@ def ts_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything downstream of the hourly aggregate is series-sized."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -1544,7 +1569,7 @@ def ev_engagement_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered cumulative window runs over activity levels, never users."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
     lvl = per_user.groupBy("c").agg(F.count(F.lit(1)).alias("n_users"))
     w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
@@ -1606,7 +1631,7 @@ def ev_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering differences."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("d")
     )
@@ -1836,18 +1861,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = baskets.select(F.explode("ps").alias("l_partkey")).groupBy(
         "l_partkey"
     ).agg(F.count(F.lit(1)).alias("d"))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-            ),
-        )
-    )
     co = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.part_a", "p.part_b")
+        _basket_pairs(baskets, "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("co_n"))
     )
@@ -2097,7 +2112,7 @@ def ts_acf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     no pair (documented: ACF over the observed grid)."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -2188,18 +2203,8 @@ def graph_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
     co = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.pa", "p.pb")
+        _basket_pairs(baskets, "pa", "pb")
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
@@ -2315,7 +2320,7 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating percentiles over the bounded pair relation."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -2431,26 +2436,7 @@ def ev_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(l_extendedprice * l_extendedprice) AS syy
         FROM lineitem
     ),
-    d AS (
-        SELECT *,
-               n * (s11 * s22 - s12 * s12)
-               - s1 * (s1 * s22 - s12 * s2)
-               + s2 * (s1 * s12 - s11 * s2) AS det
-        FROM s
-    ),
-    b AS (
-        SELECT *,
-               (sy * (s11 * s22 - s12 * s12)
-                - s1 * (s1y * s22 - s12 * s2y)
-                + s2 * (s1y * s12 - s11 * s2y)) / det AS b0,
-               (n * (s1y * s22 - s12 * s2y)
-                - sy * (s1 * s22 - s12 * s2)
-                + s2 * (s1 * s2y - s1y * s2)) / det AS b1,
-               (n * (s11 * s2y - s1y * s12)
-                - s1 * (s1 * s2y - s1y * s2)
-                + sy * (s1 * s12 - s11 * s2)) / det AS b2
-        FROM d
-    )
+    """ + _OLS2_SOLVE + """
     SELECT CAST(n AS BIGINT) AS n,
            ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1, ROUND(b2, 6) AS b2,
            ROUND(1 - (syy - 2 * (b0 * sy + b1 * s1y + b2 * s2y)
@@ -2473,7 +2459,7 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambda back out)."""
     from hudi_utility_spark.ops.mlfit import ols2_normal_equations
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return ols2_normal_equations(
         li, "l_extendedprice", "l_quantity", "l_discount", lam=100000.0
     )
@@ -2525,7 +2511,7 @@ def stat_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     run over the bounded series, never facts."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -2607,7 +2593,7 @@ def ev_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-sized moves after the aggregate."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     base = ev.select(
         (
             F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
@@ -2687,7 +2673,7 @@ def ev_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw orientation (segment 1 = most recent)."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.unix_micros(F.max("ts").cast("timestamp_ltz")).alias("last_us"),
         F.count(F.lit(1)).cast("double").alias("freq"),
@@ -2779,22 +2765,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     once."""
     from pyspark.sql import functions as F
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
-    co = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.pa", "p.pb")
-        .distinct()
-    )
+    co = _basket_pairs(baskets, "pa", "pb").distinct()
     deg = (
         co.select(F.explode(F.array("pa", "pb")).alias("node"))
         .groupBy("node")
@@ -2868,7 +2841,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE, so even a 700-step float recursion hash-matches at 4dp."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -2984,7 +2957,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-step forecast l + b + s[next]."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -3105,7 +3078,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic is three scalars."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -3199,7 +3172,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcast."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.filter(F.col("value").isNotNull()).select(
         "event_type", F.col("value").alias("v")
     )
@@ -3280,7 +3253,7 @@ def ts_forecast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented: accuracy over the observed grid)."""
     from pyspark.sql import functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.groupBy(
             F.datediff(
@@ -3380,7 +3353,7 @@ def ts_technical_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly reproducible in one window on both engines."""
     from pyspark.sql import Window, functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(
             F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
@@ -3474,18 +3447,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
     pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.src", "p.dst")
+        _basket_pairs(baskets)
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -3542,20 +3505,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
-    pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-    )
+    pairs = _basket_pairs(baskets).distinct()
     sym = symmetrize(pairs, assume_canonical=True)
     seeds = sym.agg(F.min("src").alias("node"))
     return bfs_hops(sym, seeds, max_hops=4).select(
@@ -3612,7 +3562,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation."""
     from pyspark.sql import functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.groupBy(
             F.datediff(
@@ -3702,7 +3652,7 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum runs over the 12-row ACF relation."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -3789,7 +3739,7 @@ def stat_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines can't flip the winner)."""
     from pyspark.sql import functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(
             F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
@@ -3859,7 +3809,7 @@ def ev_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     events; cohort sizes ride a broadcast join."""
     from pyspark.sql import Window, functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
@@ -3967,7 +3917,7 @@ def ev_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sums run over the 10-row decile relation."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     users = ev.groupBy("user_id").agg(
         F.round(F.coalesce(F.sum("value"), F.lit(0.0)), 4).alias("score"),
         (
@@ -4072,7 +4022,7 @@ def ev_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s = ev.filter(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select(
@@ -4158,7 +4108,7 @@ def stat_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized."""
     from pyspark.sql import functions as F
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     n_good = (
         (F.col("n_chars") > 300).cast("int")
@@ -4219,7 +4169,7 @@ def ev_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the month; the result relation is months-sized."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         F.date_trunc("month", F.col("ts")).cast("date").alias("month"),
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
@@ -4280,7 +4230,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     final statistic)."""
     from pyspark.sql import functions as F
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()
     b = items.select(
         F.col("l_orderkey").alias("l_orderkey"),
@@ -4378,7 +4328,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     both strengths come from one variance aggregate."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -4472,7 +4422,7 @@ def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-percentile aggregate over converted users."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.min(
             F.when(F.col("event_type") == "signup", F.col("ts"))
@@ -4554,7 +4504,7 @@ def ml_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     approach."""
     from hudi_utility_spark.ops.mlfit import logistic_fit
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     feats = ev.select(
         (F.col("value") / F.lit(100.0)).alias("s"),
         (F.col("event_type") == "purchase").cast("int").alias("y"),
@@ -4613,7 +4563,7 @@ def ts_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calendar-bounded), the documented collapse-then-window pattern."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.select(
             (
@@ -4708,7 +4658,7 @@ def ev_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The classic churn readout next to `ev_retention_cohorts`."""
     from pyspark.sql import Window, functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     bounds = e.agg(F.max("ts").alias("t_end"))
     users = (
         e.crossJoin(F.broadcast(bounds))
@@ -4817,8 +4767,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluating the catalog's own labels."""
     from pyspark.sql import functions as F
 
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     items = li.select("l_orderkey", "l_partkey").distinct()
     b = items.select(
         F.col("l_orderkey"), F.col("l_partkey").alias("p2")
@@ -4928,7 +4878,7 @@ def ev_its_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate (level + trend change)."""
     from pyspark.sql import functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(
             F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
@@ -5023,7 +4973,7 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q ~ chi²(k−1) under the null."""
     from pyspark.sql import functions as F
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     rated = d.select(
         (F.col("n_chars") > 300).cast("int").alias("ra"),
@@ -5093,7 +5043,7 @@ def ev_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + one four-sum aggregate, everything map-combinable."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     arms = e.groupBy("user_id").agg(
         (
             F.sum((F.col("event_type") == "purchase").cast("int")) >= 14
@@ -5163,7 +5113,7 @@ def stat_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-row collapse — chi²(k−1) under the null."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per = (
         ev.filter(F.col("value").isNotNull())
         .groupBy("event_type")
@@ -5242,7 +5192,7 @@ def ml_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold as tiebreak."""
     from pyspark.sql import Window, functions as F
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     per = ev.select(
         F.round("value", 1).alias("score"),
         (F.col("event_type") == "purchase").cast("int").alias("pos"),
@@ -5274,16 +5224,9 @@ def ml_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_regression_report",
-    r"""
-    WITH feats AS (
-        SELECT doc_id, CAST(n_chars AS DOUBLE) AS y,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS x1,
-               CAST(list_max(list_transform(
-                   string_split_regex(trim(text), '\s+'),
-                   t -> len(t))) AS DOUBLE) AS x2
-        FROM documents
-    ),
+    "\n    WITH "
+    + _DOC_LEN_FEATS
+    + r""",
     s AS (
         SELECT CAST(COUNT(*) AS DOUBLE) AS n,
                SUM(x1) AS s1, SUM(x2) AS s2,
@@ -5295,25 +5238,7 @@ def ml_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(x2 * y) AS s2y
         FROM feats WHERE doc_id % 2 = 0
     ),
-    d AS (
-        SELECT *,
-               n * (s11 * s22 - s12 * s12)
-               - s1 * (s1 * s22 - s12 * s2)
-               + s2 * (s1 * s12 - s11 * s2) AS det
-        FROM s
-    ),
-    b AS (
-        SELECT ROUND((sy * (s11 * s22 - s12 * s12)
-                - s1 * (s1y * s22 - s12 * s2y)
-                + s2 * (s1y * s12 - s11 * s2y)) / det, 6) AS b0,
-               ROUND((n * (s1y * s22 - s12 * s2y)
-                - sy * (s1 * s22 - s12 * s2)
-                + s2 * (s1 * s2y - s1y * s2)) / det, 6) AS b1,
-               ROUND((n * (s11 * s2y - s1y * s12)
-                - s1 * (s1 * s2y - s1y * s2)
-                + sy * (s1 * s12 - s11 * s2)) / det, 6) AS b2
-        FROM d
-    ),
+    """ + _OLS2_SOLVE_ROUNDED + r""",
     test AS (
         SELECT y, b.b0 + b.b1 * x1 + b.b2 * x2 AS pred
         FROM feats, b WHERE doc_id % 2 = 1
@@ -5348,16 +5273,7 @@ def ml_regression_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hudi_utility_spark.ops.mlfit import ols2_normal_equations
 
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    feats = d.select(
-        "doc_id",
-        F.col("n_chars").cast("double").alias("y"),
-        F.size(toks).cast("double").alias("x1"),
-        F.array_max(F.transform(toks, lambda t: F.length(t)))
-        .cast("double")
-        .alias("x2"),
-    ).localCheckpoint(eager=False)
+    feats = _doc_len_feats(spark, sf_dir).localCheckpoint(eager=False)
     w = ols2_normal_equations(
         feats.filter(F.col("doc_id") % 2 == 0), "y", "x1", "x2"
     ).select("b0", "b1", "b2")
@@ -5459,7 +5375,7 @@ def ev_markov_absorbing(spark: SparkSession, sf_dir: str) -> DataFrame:
     does.""".replace("{n}", str(_ABSORB_ITERS))
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     counts = (
         e.select(
@@ -5546,7 +5462,7 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     window live on the collapsed calendar-bounded daily relation."""
     from pyspark.sql import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(
             F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
@@ -5619,7 +5535,7 @@ def ev_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates joined on user_id, result relation days-sized."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).cast("date").alias("d0")
     )
@@ -5681,7 +5597,7 @@ def ev_cart_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiple purchases can't double-count a click."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id",
         F.col("ts").alias("click_ts"),
@@ -5747,7 +5663,7 @@ def stat_chi2_gof_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stat_chi2_independence`'s two-variable version."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per = e.groupBy(F.hour("ts").alias("hod")).agg(
         F.count(F.lit(1)).cast("double").alias("o")
     )
@@ -5799,7 +5715,7 @@ def ev_interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort); quantiles are one exact-percentile aggregate per type."""
     from pyspark.sql import Window, functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     gaps = e.select(
         "event_type",
@@ -5841,7 +5757,7 @@ def ts_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek−1, aligned explicitly."""
     from pyspark.sql import functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("day")
     ).agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
@@ -5860,16 +5776,9 @@ def ts_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_permutation_importance",
-    r"""
-    WITH feats AS (
-        SELECT doc_id, CAST(n_chars AS DOUBLE) AS y,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                   AS x1,
-               CAST(list_max(list_transform(
-                   string_split_regex(trim(text), '\s+'),
-                   t -> len(t))) AS DOUBLE) AS x2
-        FROM documents
-    ),
+    "\n    WITH "
+    + _DOC_LEN_FEATS
+    + r""",
     swapped AS (
         SELECT a.doc_id, a.y, a.x1, a.x2,
                b.x1 AS x1p, b.x2 AS x2p
@@ -5884,24 +5793,7 @@ def ts_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(x1 * y) AS s1y, SUM(x2 * y) AS s2y
         FROM swapped
     ),
-    d AS (
-        SELECT *, n * (s11 * s22 - s12 * s12)
-               - s1 * (s1 * s22 - s12 * s2)
-               + s2 * (s1 * s12 - s11 * s2) AS det
-        FROM s
-    ),
-    b AS (
-        SELECT ROUND((sy * (s11 * s22 - s12 * s12)
-                - s1 * (s1y * s22 - s12 * s2y)
-                + s2 * (s1y * s12 - s11 * s2y)) / det, 6) AS b0,
-               ROUND((n * (s1y * s22 - s12 * s2y)
-                - sy * (s1 * s22 - s12 * s2)
-                + s2 * (s1 * s2y - s1y * s2)) / det, 6) AS b1,
-               ROUND((n * (s11 * s2y - s1y * s12)
-                - s1 * (s1 * s2y - s1y * s2)
-                + sy * (s1 * s12 - s11 * s2)) / det, 6) AS b2
-        FROM d
-    ),
+    """ + _OLS2_SOLVE_ROUNDED + r""",
     scores AS (
         SELECT 'baseline' AS variant, y,
                b.b0 + b.b1 * x1 + b.b2 * x2 AS pred
@@ -5938,16 +5830,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hudi_utility_spark.ops.mlfit import ols2_normal_equations
 
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    feats = d.select(
-        "doc_id",
-        F.col("n_chars").cast("double").alias("y"),
-        F.size(toks).cast("double").alias("x1"),
-        F.array_max(F.transform(toks, lambda t: F.length(t)))
-        .cast("double")
-        .alias("x2"),
-    )
+    feats = _doc_len_feats(spark, sf_dir)
     part = feats.select(
         F.col("doc_id").bitwiseXOR(F.lit(1)).alias("doc_id"),
         F.col("x1").alias("x1p"),
@@ -6040,7 +5923,7 @@ def stat_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the bounded series."""
     from pyspark.sql import Window, functions as F
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(
             F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
@@ -6144,7 +6027,7 @@ def ts_holt_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ~700 accumulation steps."""
     from pyspark.sql import functions as F
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.withColumn(
             "hidx",
@@ -6239,25 +6122,12 @@ def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row TakeOrdered, never a global sort."""
     from hudi_utility_spark.ops.graph import bfs_hops, symmetrize
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets = _li_baskets(spark, li)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + F.lit(2), F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
     # same distinct canonical pair set as the old items self-join (both
     # enumerate i<j part pairs within an order), built map-side from
     # ONE lineitem scan instead of a two-scan self-join (guide §1.2)
-    pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-    )
+    pairs = _basket_pairs(baskets, "u", "v").distinct()
     sym = symmetrize(pairs, "u", "v", assume_canonical=True).localCheckpoint(eager=False)
     seed = sym.agg(F.min("src").alias("node"))
     d1 = bfs_hops(sym, seed, max_hops=8)
@@ -6332,7 +6202,7 @@ def ev_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented: retention not decaying)."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
@@ -6425,7 +6295,7 @@ def ev_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     One user-collapse + one 2-row aggregate."""
     from pyspark.sql import functions as F
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     arms = e.groupBy("user_id").agg(
         (
             F.sum((F.col("event_type") == "purchase").cast("int")) >= 14

@@ -14,6 +14,36 @@ _NORM_SQL = (
     " '\\s+', ' ', 'g'))"
 )
 
+# normalized unigram word sets, their sizes, and the shared-word count
+# of every doc pair a < b: the CTEs the Jaccard oracles start from
+_UNIGRAM_COMMON = f"""words AS (
+        SELECT doc_id, unnest(list_distinct(string_split({_NORM_SQL}, ' '))) AS w
+        FROM documents
+    ),
+    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
+    common AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
+        FROM words a JOIN words b ON a.w = b.w AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+
+# the same over distinct word trigrams, for every ordered pair a <> b
+# (containment is directed)
+_TRIGRAM_COMMON = f"""toks AS (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws FROM documents),
+    grams AS (
+        SELECT doc_id,
+               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+                              for i in range(1, len(ws) - 1)]) AS gs
+        FROM toks WHERE len(ws) >= 3
+    ),
+    words AS (SELECT doc_id, unnest(gs) AS w FROM grams),
+    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
+    common AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
+        FROM words a JOIN words b ON a.w = b.w AND a.doc_id <> b.doc_id
+        GROUP BY 1, 2
+    )"""
+
 
 @query(
     "dedup_exact_groups",
@@ -50,16 +80,7 @@ def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_jaccard_pairs",
     f"""
-    WITH words AS (
-        SELECT doc_id, unnest(list_distinct(string_split({_NORM_SQL}, ' '))) AS w
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM words a JOIN words b ON a.w = b.w AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {_UNIGRAM_COMMON}
     SELECT id_a, id_b,
            ROUND(common / (sa.set_size + sb.set_size - common), 6) AS jaccard
     FROM common
@@ -76,16 +97,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PAIRS_09_SQL = f"""
-    WITH RECURSIVE words AS (
-        SELECT doc_id, unnest(list_distinct(string_split({_NORM_SQL}, ' '))) AS w
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM words a JOIN words b ON a.w = b.w AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    WITH RECURSIVE {_UNIGRAM_COMMON},
     pairs AS (
         SELECT id_a, id_b FROM common
         JOIN sizes sa ON sa.doc_id = id_a
@@ -403,20 +415,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_containment_pairs",
     f"""
-    WITH toks AS (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws FROM documents),
-    grams AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              for i in range(1, len(ws) - 1)]) AS gs
-        FROM toks WHERE len(ws) >= 3
-    ),
-    words AS (SELECT doc_id, unnest(gs) AS w FROM grams),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM words a JOIN words b ON a.w = b.w AND a.doc_id <> b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {_TRIGRAM_COMMON}
     SELECT id_a, id_b,
            ROUND(common / sa.set_size, 6) AS containment
     FROM common
@@ -439,20 +438,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_containment_survivors",
     f"""
-    WITH toks AS (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws FROM documents),
-    grams AS (
-        SELECT doc_id,
-               list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                              for i in range(1, len(ws) - 1)]) AS gs
-        FROM toks WHERE len(ws) >= 3
-    ),
-    words AS (SELECT doc_id, unnest(gs) AS w FROM grams),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM words a JOIN words b ON a.w = b.w AND a.doc_id <> b.doc_id
-        GROUP BY 1, 2
-    ),
+    WITH {_TRIGRAM_COMMON},
     contained AS (
         SELECT DISTINCT id_a FROM common
         JOIN sizes sa ON sa.doc_id = id_a
@@ -527,16 +513,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_threshold_curve",
     f"""
-    WITH words AS (
-        SELECT doc_id, unnest(list_distinct(string_split({_NORM_SQL}, ' '))) AS w
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM words a JOIN words b ON a.w = b.w AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    WITH {_UNIGRAM_COMMON},
     sims AS (
         SELECT common / (sa.set_size + sb.set_size - common) AS sim
         FROM common

@@ -8,25 +8,13 @@ parquet, so the round trip is value-hash checked.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.io import read_source
-from hudi_utility_spark.queries import query, scratch_base
+from hudi_utility_spark.queries import fresh_scratch, query
 from hudi_utility_spark.tables import load_table
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return root
 
 
 @query(
@@ -44,7 +32,7 @@ def fmt_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: ORC scan with mergeSchema. Lineitem round-trips through ORC
     (the reference's second accepted format, pyspark_script.py:335) and
     the format is *sniffed*, not declared, on re-read."""
-    root = _scratch(sf_dir, "orc")
+    root = fresh_scratch(sf_dir, "orc")
     load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity"
     ).write.mode("overwrite").orc(root)
@@ -70,8 +58,8 @@ def fmt_csv_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 extension formats: nation round-trips through CSV (header +
     inferSchema) and region through JSON; both re-read via the sniffing
     dispatcher, then broadcast-joined."""
-    csv_root = _scratch(sf_dir, "csv")
-    json_root = _scratch(sf_dir, "json")
+    csv_root = fresh_scratch(sf_dir, "csv")
+    json_root = fresh_scratch(sf_dir, "json")
     load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     ).write.mode("overwrite").option("header", "true").csv(csv_root)
@@ -212,7 +200,7 @@ def src_synth_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         expected[etype] = (c + 1, s + round(value * 100))
 
     def _run_once() -> tuple[list[tuple[str, int, int]], list[str]]:
-        ckpt = _scratch(sf_dir, f"stream_ckpt_{uuid.uuid4().hex[:8]}")
+        ckpt = fresh_scratch(sf_dir, f"stream_ckpt_{uuid.uuid4().hex[:8]}")
         # bid -> (coverage (n, mn, mx, sum_id, n_distinct), partials)
         acc: dict[int, tuple[tuple[int, int, int, int, int], list]] = {}
 
@@ -384,7 +372,7 @@ def src_synth_stream_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_rows, rows_per_batch = 500, 120
 
     def _run_once() -> tuple[dict, list[str]]:
-        ckpt = _scratch(sf_dir, f"stream_off_ckpt_{uuid.uuid4().hex[:8]}")
+        ckpt = fresh_scratch(sf_dir, f"stream_off_ckpt_{uuid.uuid4().hex[:8]}")
         acc: dict[int, tuple[int, int, int, int]] = {}
 
         def audit(bdf, bid: int) -> None:
@@ -482,7 +470,7 @@ def src_jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hudi_utility_spark.sources import register_sources
 
     register_sources(spark)
-    root = _scratch(sf_dir, "jsonl_export")
+    root = fresh_scratch(sf_dir, "jsonl_export")
     out = os.path.join(root, "docs")
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 0
@@ -527,7 +515,6 @@ def fmt_text_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python. Float round-trip is exact because the value serializes via
     CAST(double AS STRING) and parses back with CAST(STRING AS DOUBLE)
     — both shortest-round-trip representations."""
-    import os
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -543,7 +530,7 @@ def fmt_text_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value")
         )
     )
-    root = _scratch(sf_dir, "textlog")
+    root = fresh_scratch(sf_dir, "textlog")
     ev.write.mode("overwrite").text(root)
     lines = spark.read.text(root)
     parsed = lines.select(
@@ -592,7 +579,7 @@ def fmt_corrupt_json_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed into the parse."""
     import os
 
-    root = _scratch(sf_dir, "corrupt_json")
+    root = fresh_scratch(sf_dir, "corrupt_json")
     os.makedirs(root, exist_ok=True)
     d = (
         load_table(spark, sf_dir, "documents")

@@ -7,30 +7,19 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.queries import query, scratch_base
-from hudi_utility_spark.table import KeyedTable, TableType
+from hudi_utility_spark.queries import events_table, fresh_scratch, query
+from hudi_utility_spark.table import TableType
 from hudi_utility_spark.tables import load_table
 from hudi_utility_spark.write import upsert
 
 
-def _scratch(sf_dir: str, name: str) -> str:
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return root
-
-
-@query(
-    "mor_snapshot_read",
-    """
+# base + log resolution of `_signup_update_table`: both versions of every
+# signup, latest ts wins per key
+_SIGNUP_RESOLVED = """
     WITH unioned AS (
       SELECT event_id, ts, user_id, event_type, value FROM events
       UNION ALL
@@ -43,7 +32,30 @@ def _scratch(sf_dir: str, name: str) -> str:
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY event_id ORDER BY ts DESC) AS rn
       FROM unioned
+    )"""
+
+
+def _signup_update_table(spark: SparkSession, sf_dir: str, name: str):
+    """Fresh MOR events table: every event, then a second commit moving
+    each signup an hour later with value +5000 (a delta-log append)."""
+    table = events_table(fresh_scratch(sf_dir, name))
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
     )
+    upsert(spark, events, table)
+    changed = (
+        events.filter(F.col("event_type") == "signup")
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+        .withColumn("value", F.col("value") + 5000)
+    )
+    upsert(spark, changed, table)
+    return table
+
+
+@query(
+    "mor_snapshot_read",
+    _SIGNUP_RESOLVED
+    + """
     SELECT event_id, user_id, event_type, ROUND(value, 2) AS value
     FROM resolved WHERE rn = 1
     """,
@@ -55,24 +67,7 @@ def mor_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite), read the snapshot — the read-time precombine window
     (SURVEY §7 hard-part (a)) must resolve base+log to latest-by-key.
     The oracle replays the same union+window in SQL."""
-    root = _scratch(sf_dir, "mor_snapshot")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    upsert(spark, events, table)
-    changed = (
-        events.filter(F.col("event_type") == "signup")
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn("value", F.col("value") + 5000)
-    )
-    upsert(spark, changed, table)
+    table = _signup_update_table(spark, sf_dir, "mor_snapshot")
     snap = table.read(spark)
     return snap.select(
         "event_id", "user_id", "event_type", F.round("value", 2).alias("value")
@@ -103,7 +98,7 @@ def lifecycle_bootstrap_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
     from hudi_utility_spark.engine import bootstrap
     from hudi_utility_spark.validate import BootstrapRequest
 
-    root = _scratch(sf_dir, "lifecycle")
+    root = fresh_scratch(sf_dir, "lifecycle")
     req = BootstrapRequest(
         data_file_path=os.path.join(sf_dir, "events.parquet"),
         table_name="events_lifecycle",
@@ -164,14 +159,8 @@ def lifecycle_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows resolve with NULL score, evolved rows with the value; the
     oracle replays union + precombine window with an explicit NULL
     column."""
-    root = _scratch(sf_dir, "schema_evo")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.COPY_ON_WRITE,
-    )
+    root = fresh_scratch(sf_dir, "schema_evo")
+    table = events_table(root, TableType.COPY_ON_WRITE)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
@@ -221,14 +210,8 @@ def lifecycle_delete_reinsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     races with a union + window + tombstone filter."""
     from hudi_utility_spark.write import delete_keys
 
-    root = _scratch(sf_dir, "delete_lifecycle")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "delete_lifecycle")
+    table = events_table(root)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -290,14 +273,8 @@ def s7_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows."""
     from hudi_utility_spark.write import upsert_partial
 
-    root = _scratch(sf_dir, "partial_update")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.COPY_ON_WRITE,
-    )
+    root = fresh_scratch(sf_dir, "partial_update")
+    table = events_table(root, TableType.COPY_ON_WRITE)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value", "props"
     )
@@ -359,14 +336,8 @@ def rollup_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     from hudi_utility_spark import materialize
     from hudi_utility_spark.write import delete_keys
 
-    root = _scratch(sf_dir, "rollup_maint")
-    table = KeyedTable(
-        path=os.path.join(root, "t"),
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "rollup_maint")
+    table = events_table(os.path.join(root, "t"))
     t1, t2 = "20260101000000001", "20260102000000001"
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "user_id", "value"
@@ -433,14 +404,8 @@ def merge_multi_action(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hudi_utility_spark import tsutil
     from hudi_utility_spark.write import merge_into
 
-    root = _scratch(sf_dir, "merge_multi")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.COPY_ON_WRITE,
-    )
+    root = fresh_scratch(sf_dir, "merge_multi")
+    table = events_table(root, TableType.COPY_ON_WRITE)
     base = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -469,20 +434,8 @@ def merge_multi_action(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_api_mor_view",
-    """
-    WITH unioned AS (
-      SELECT event_id, ts, user_id, event_type, value FROM events
-      UNION ALL
-      SELECT event_id,
-             ts + INTERVAL 1 HOUR AS ts,
-             user_id, event_type,
-             value + 5000 AS value
-      FROM events WHERE event_type = 'signup'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    _SIGNUP_RESOLVED
+    + """
     SELECT event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS total_value
     FROM resolved WHERE rn = 1
     GROUP BY event_type
@@ -495,24 +448,7 @@ def sql_api_mor_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plain `spark.sql` aggregate runs against it — a user who only
     speaks SQL sees exactly what `KeyedTable.read` returns. Oracle
     replays the log-resolution union+window, then the same aggregate."""
-    root = _scratch(sf_dir, "sql_mor_view")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    upsert(spark, events, table)
-    changed = (
-        events.filter(F.col("event_type") == "signup")
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn("value", F.col("value") + 5000)
-    )
-    upsert(spark, changed, table)
+    table = _signup_update_table(spark, sf_dir, "sql_mor_view")
     view = table.create_or_replace_view(spark, "mor_view_q")
     return spark.sql(
         f"""
@@ -556,21 +492,9 @@ def replication_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hudi_utility_spark.materialize import replicate_incremental
     from hudi_utility_spark.write import delete_keys
 
-    root = _scratch(sf_dir, "replication_sync")
-    src = KeyedTable(
-        path=os.path.join(root, "src"),
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
-    dst = KeyedTable(
-        path=os.path.join(root, "dst"),
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.COPY_ON_WRITE,
-    )
+    root = fresh_scratch(sf_dir, "replication_sync")
+    src = events_table(os.path.join(root, "src"))
+    dst = events_table(os.path.join(root, "dst"), TableType.COPY_ON_WRITE)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -657,7 +581,7 @@ def v_anti_entropy_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hudi_utility_spark.repair import content_diff
     from hudi_utility_spark.write import write_partitioned
 
-    root = _scratch(sf_dir, "anti_entropy")
+    root = fresh_scratch(sf_dir, "anti_entropy")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
@@ -770,14 +694,8 @@ def mor_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions are read or rewritten — a hot-tail ingest compacts days,
     not the table); clustering is the out-of-band layout rewrite whose
     payoff `zorder_two_dim_scan`/`index_file_skipping_scan` measure."""
-    root = _scratch(sf_dir, "mor_compaction")
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "mor_compaction")
+    table = events_table(root)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )

@@ -20,6 +20,53 @@ from hudi_utility_spark.queries import (
 from hudi_utility_spark.tables import load_table
 
 
+def _wav_params(spark: SparkSession, sf_dir: str, tone: bool = False) -> DataFrame:
+    """Per-document synthetic-WAV parameters from the portable md5
+    formula the audio oracles replay: h (48 bits of md5(doc_id)) picks
+    the sample rate. Ramp files are mono or stereo with 50-249 samples;
+    *tone* files are mono, 256-511 samples, with a 3-22 cycle sine."""
+    d = load_table(spark, sf_dir, "documents")
+    h = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
+        16,
+        10,
+    ).cast("long")
+    rate = F.element_at(
+        F.array(*[F.lit(r) for r in (8000, 16000, 22050, 44100, 48000)]),
+        (h % 5).cast("int") + 1,
+    ).alias("sample_rate")
+    if tone:
+        return d.select(
+            F.col("doc_id").alias("media_id"),
+            rate,
+            F.lit(1).alias("channels"),
+            (F.lit(256) + h % 256).alias("n_samples"),
+            (F.lit(3) + h % 20).alias("freq_bin"),
+        )
+    return d.select(
+        F.col("doc_id").alias("media_id"),
+        rate,
+        (F.lit(1) + h % 2).alias("channels"),
+        (F.lit(50) + h % 200).alias("n_samples"),
+    )
+
+
+def _ppm_params(spark: SparkSession, sf_dir: str, n_imgs: int = 40) -> DataFrame:
+    """Dimensions of the first *n_imgs* synthetic P6 images, one per
+    document in doc_id order — the ``imgs`` CTE of the image oracles."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .orderBy("doc_id")
+        .limit(n_imgs)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (16 + F.col("doc_id") % 16).cast("int").alias("width"),
+            (12 + F.col("doc_id") % 9).cast("int").alias("height"),
+        )
+    )
+
+
 @query(
     "mm_binary_metadata",
     """
@@ -88,7 +135,6 @@ def mm_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the source-of-truth documents table."""
     import hashlib
     import os
-    import tempfile
 
     d = load_table(spark, sf_dir, "documents")
     media = M.attach_binary(d, "text", "doc_id")
@@ -146,21 +192,7 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementations (or a corrupted Arrow transfer) breaks the value
     hash. Both kernels are map-only mapInPandas stages; the payload
     never enters a shuffle."""
-    d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    params = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in (8000, 16000, 22050, 44100, 48000)]),
-            (h % 5).cast("int") + 1,
-        ).alias("sample_rate"),
-        (F.lit(1) + h % 2).alias("channels"),
-        (F.lit(50) + h % 200).alias("n_samples"),
-    )
+    params = _wav_params(spark, sf_dir)
     wav = M.synth_wav(params)
     out = M.decode_wav_meta(wav).select(
         "media_id",
@@ -223,21 +255,7 @@ def mm_audio_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reproduces them bit-for-bit from the generation formula.
     The curation use: drop or re-gain clipped/near-silent files before
     a speech training mix."""
-    d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    params = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in (8000, 16000, 22050, 44100, 48000)]),
-            (h % 5).cast("int") + 1,
-        ).alias("sample_rate"),
-        (F.lit(1) + h % 2).alias("channels"),
-        (F.lit(50) + h % 200).alias("n_samples"),
-    )
+    params = _wav_params(spark, sf_dir)
     decoded = M.decode_wav_meta(M.synth_wav(params))
     return decoded.select(
         "media_id",
@@ -287,22 +305,7 @@ def mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically known spectrum; any error in the encoder, the chunk
     walker, the int16 quantization, or the FFT pipeline shifts the
     argmax and breaks the hash. Both kernels map-only."""
-    d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    params = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in (8000, 16000, 22050, 44100, 48000)]),
-            (h % 5).cast("int") + 1,
-        ).alias("sample_rate"),
-        F.lit(1).alias("channels"),
-        (F.lit(256) + h % 256).alias("n_samples"),
-        (F.lit(3) + h % 20).alias("freq_bin"),
-    )
+    params = _wav_params(spark, sf_dir, tone=True)
     wav = M.synth_wav(params, waveform="sine")
     return M.audio_dominant_freq(wav).withColumn(
         "dominant_hz", F.round("dominant_hz", 4)
@@ -341,21 +344,7 @@ def mm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus breaks the hash; the oracle recomputes the same inventory
     from the generation formula. Decode is map-only; the aggregate is
     one partial-combine shuffle of |rates| rows."""
-    d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    params = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in (8000, 16000, 22050, 44100, 48000)]),
-            (h % 5).cast("int") + 1,
-        ).alias("sample_rate"),
-        (F.lit(1) + h % 2).alias("channels"),
-        (F.lit(50) + h % 200).alias("n_samples"),
-    )
+    params = _wav_params(spark, sf_dir)
     decoded = M.decode_wav_meta(M.synth_wav(params))
     out = decoded.groupBy("sample_rate").agg(
         F.count(F.lit(1)).alias("n_files"),
@@ -426,17 +415,7 @@ def mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping, offset arithmetic, AND raster content are all verified,
     not just echoed dimensions. De-stubs the image leg of the
     multimodal family the way mm_wav_decode de-stubbed audio."""
-    docs = load_table(spark, sf_dir, "documents")
-    imgs = (
-        docs.select("doc_id")
-        .orderBy("doc_id")
-        .limit(40)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (16 + F.col("doc_id") % 16).cast("int").alias("width"),
-            (12 + F.col("doc_id") % 9).cast("int").alias("height"),
-        )
-    )
+    imgs = _ppm_params(spark, sf_dir)
     encoded = M.synth_ppm(imgs)
     return M.decode_ppm_meta(encoded).select(
         "media_id", "width", "height", "n_pixels", "sum_r", "sum_g", "sum_b"
@@ -472,17 +451,7 @@ def mm_ppm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the full pipeline symbolically — source-pixel index mapping
     src = (dst*src_dim)//dst_dim composed with the generation formula —
     so the resize arithmetic itself is value-checked."""
-    docs = load_table(spark, sf_dir, "documents")
-    imgs = (
-        docs.select("doc_id")
-        .orderBy("doc_id")
-        .limit(40)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (16 + F.col("doc_id") % 16).cast("int").alias("width"),
-            (12 + F.col("doc_id") % 9).cast("int").alias("height"),
-        )
-    )
+    imgs = _ppm_params(spark, sf_dir)
     return M.ppm_resize_stats(M.synth_ppm(imgs), target=(8, 8))
 
 
@@ -528,17 +497,7 @@ def _dhash_oracle_cte(n_imgs: int = 40) -> str:
 
 
 def _dhash_imgs(spark: SparkSession, sf_dir: str, n_imgs: int = 40) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    imgs = (
-        docs.select("doc_id")
-        .orderBy("doc_id")
-        .limit(n_imgs)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (16 + F.col("doc_id") % 16).cast("int").alias("width"),
-            (12 + F.col("doc_id") % 9).cast("int").alias("height"),
-        )
-    )
+    imgs = _ppm_params(spark, sf_dir, n_imgs)
     # persisted: the near-dup/gate consumers reference this relation up
     # to ~9 times (band explodes, verification hash sides, final admit
     # join) and each lazy reference would re-run the encode + dHash
@@ -675,17 +634,7 @@ def mm_image_size_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the generation params; thresholds are integer-exact
     (2h >= w, 2w >= h) so no float boundary can split the engines."""
     meta = M.decode_ppm_meta(
-        M.synth_ppm(
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .orderBy("doc_id")
-            .limit(40)
-            .select(
-                F.col("doc_id").alias("media_id"),
-                (16 + F.col("doc_id") % 16).cast("int").alias("width"),
-                (12 + F.col("doc_id") % 9).cast("int").alias("height"),
-            )
-        )
+        M.synth_ppm(_ppm_params(spark, sf_dir))
     )
     w, h = F.col("width"), F.col("height")
     return meta.filter(
@@ -776,21 +725,7 @@ def mm_audio_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|s| < 1000) and silence fraction per file — dead-air detection
     before a speech mix. The kernel emits integer counts; the ratio is
     engine SQL on both sides (one shared rounding rule)."""
-    d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    params = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in (8000, 16000, 22050, 44100, 48000)]),
-            (h % 5).cast("int") + 1,
-        ).alias("sample_rate"),
-        (F.lit(1) + h % 2).alias("channels"),
-        (F.lit(50) + h % 200).alias("n_samples"),
-    )
+    params = _wav_params(spark, sf_dir)
     stats = M.audio_silence_stats(M.synth_wav(params), threshold=1000)
     return stats.select(
         "media_id",
@@ -842,16 +777,6 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     as `mm_ppm_decode` in a map-only Arrow kernel; the oracle rebuilds
     the histogram from the deterministic ramp formula over range(), so
     raster content — not just the header — backs the entropy."""
-    docs = load_table(spark, sf_dir, "documents")
-    imgs = (
-        docs.select("doc_id")
-        .orderBy("doc_id")
-        .limit(40)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (16 + F.col("doc_id") % 16).cast("int").alias("width"),
-            (12 + F.col("doc_id") % 9).cast("int").alias("height"),
-        )
-    )
+    imgs = _ppm_params(spark, sf_dir)
     encoded = M.synth_ppm(imgs)
     return M.ppm_entropy(encoded)

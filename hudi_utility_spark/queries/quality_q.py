@@ -681,9 +681,8 @@ def approx_union_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return est.crossJoin(F.broadcast(exact))
 
 
-@query(
-    "stat_ks_two_sample",
-    """
+# SQL twin of `_click_purchase_counts`
+_CLICK_PURCHASE_VALS = """
     WITH vals AS (
         SELECT value,
                SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
@@ -694,7 +693,56 @@ def approx_union_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot AS (
         SELECT CAST(SUM(ca) AS DOUBLE) AS na, CAST(SUM(cb) AS DOUBLE) AS nb
         FROM vals
-    ),
+    )"""
+
+
+# count, sum and sum of squares of v on each side of the binary label
+# (CTE s) — the Welch and pooled-variance t-test inputs
+_LABEL_SPLIT_SUMS = """agg AS (
+        SELECT CAST(SUM(CASE WHEN label = 1 AND v IS NOT NULL
+                             THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
+               SUM(CASE WHEN label = 1 THEN v ELSE 0.0 END) AS s1,
+               SUM(CASE WHEN label = 1 THEN v * v ELSE 0.0 END) AS q1,
+               CAST(SUM(CASE WHEN label = 0 AND v IS NOT NULL
+                             THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
+               SUM(CASE WHEN label = 0 THEN v ELSE 0.0 END) AS s2,
+               SUM(CASE WHEN label = 0 THEN v * v ELSE 0.0 END) AS q2
+        FROM s
+    )"""
+
+
+def _click_purchase_counts(
+    spark: SparkSession, sf_dir: str, context: str, window: str
+) -> tuple[DataFrame, DataFrame]:
+    """Click (ca) and purchase (cb) counts per distinct event value,
+    bounded-distinct-guarded for the ordered *window* that follows, and
+    the one-row totals (na, nb) of the two-sample ECDF statistics."""
+    from hudi_utility_spark.ops.mlfit import require_bounded_distinct
+
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "purchase")
+    )
+    vals = ev.groupBy("value").agg(
+        F.sum((F.col("event_type") == "click").cast("long")).alias("ca"),
+        F.sum((F.col("event_type") == "purchase").cast("long")).alias("cb"),
+    )
+    vals = require_bounded_distinct(
+        vals,
+        1_000_000,
+        context,
+        f"pre-bucket the value column (equi-width) before the {window} window",
+    )
+    tot = vals.agg(
+        F.sum("ca").cast("double").alias("na"),
+        F.sum("cb").cast("double").alias("nb"),
+    )
+    return vals, tot
+
+
+@query(
+    "stat_ks_two_sample",
+    _CLICK_PURCHASE_VALS
+    + """,
     cum AS (
         SELECT SUM(ca) OVER (ORDER BY value) AS cca,
                SUM(cb) OVER (ORDER BY value) AS ccb
@@ -718,25 +766,7 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition-sorting the fact table."""
     from pyspark.sql import Window
 
-    from hudi_utility_spark.ops.mlfit import require_bounded_distinct
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    vals = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == "click").cast("long")).alias("ca"),
-        F.sum((F.col("event_type") == "purchase").cast("long")).alias("cb"),
-    )
-    vals = require_bounded_distinct(
-        vals,
-        1_000_000,
-        "stat_ks_two_sample",
-        "pre-bucket the value column (equi-width) before the KS window",
-    )
-    tot = vals.agg(
-        F.sum("ca").cast("double").alias("na"),
-        F.sum("cb").cast("double").alias("nb"),
-    )
+    vals, tot = _click_purchase_counts(spark, sf_dir, "stat_ks_two_sample", "KS")
     w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
     cum = vals.select(
         F.sum("ca").over(w).alias("cca"), F.sum("cb").over(w).alias("ccb")
@@ -1301,17 +1331,7 @@ def dq_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
         FROM documents
     ),
-    agg AS (
-        SELECT CAST(SUM(CASE WHEN label = 1 AND v IS NOT NULL
-                             THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-               SUM(CASE WHEN label = 1 THEN v ELSE 0.0 END) AS s1,
-               SUM(CASE WHEN label = 1 THEN v * v ELSE 0.0 END) AS q1,
-               CAST(SUM(CASE WHEN label = 0 AND v IS NOT NULL
-                             THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-               SUM(CASE WHEN label = 0 THEN v ELSE 0.0 END) AS s2,
-               SUM(CASE WHEN label = 0 THEN v * v ELSE 0.0 END) AS q2
-        FROM s
-    ),
+    """ + _LABEL_SPLIT_SUMS + """,
     d AS (
         SELECT n1, n2, s1 / n1 - s2 / n2 AS mean_diff,
                (q1 - s1 * s1 / n1) / (n1 - 1) / n1 AS se1,
@@ -1539,10 +1559,12 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _perm_oracle(n_perm: int = 64) -> str:
-    """DuckDB rendition of the one-pass permutation test: identical
-    md5-parity arm assignment and identical expression set, generated
-    by the same loop shape as the Spark side."""
+def _perm_sql(n_perm: int) -> tuple[str, str]:
+    """DuckDB rendition of the one-pass permutation expression set:
+    identical md5-parity arm assignment, generated by the same loop
+    shape as the Spark side. Returns the per-permutation arm-1 sum and
+    count select list, and the count of permutations at least as
+    extreme as the observed difference."""
     cols = []
     for b in range(n_perm):
         h = (
@@ -1559,6 +1581,12 @@ def _perm_oracle(n_perm: int = 64) -> str:
         " THEN 1 ELSE 0 END)"
         for b in range(n_perm)
     )
+    return ", ".join(cols), hits
+
+
+def _perm_oracle(n_perm: int = 64) -> str:
+    """DuckDB rendition of the one-pass permutation test."""
+    cols, hits = _perm_sql(n_perm)
     return f"""
     WITH a AS (
         SELECT CAST(COUNT(*) AS DOUBLE) AS n,
@@ -1566,7 +1594,7 @@ def _perm_oracle(n_perm: int = 64) -> str:
                SUM(CASE WHEN user_id % 2 = 1 THEN value END) AS sv1,
                CAST(SUM(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
                     AS DOUBLE) AS n1,
-               {", ".join(cols)}
+               {cols}
         FROM events
     )
     SELECT CAST(n AS BIGINT) AS n,
@@ -1873,18 +1901,8 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stat_cramer_von_mises",
-    """
-    WITH vals AS (
-        SELECT value,
-               SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-               SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-        FROM events WHERE event_type IN ('click', 'purchase')
-        GROUP BY value
-    ),
-    tot AS (
-        SELECT CAST(SUM(ca) AS DOUBLE) AS na, CAST(SUM(cb) AS DOUBLE) AS nb
-        FROM vals
-    ),
+    _CLICK_PURCHASE_VALS
+    + """,
     cum AS (
         SELECT ca + cb AS cx,
                SUM(ca) OVER (ORDER BY value) AS cca,
@@ -1910,25 +1928,7 @@ def stat_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     value cardinality (bounded-distinct-guarded), one scalar."""
     from pyspark.sql import Window
 
-    from hudi_utility_spark.ops.mlfit import require_bounded_distinct
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    vals = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == "click").cast("long")).alias("ca"),
-        F.sum((F.col("event_type") == "purchase").cast("long")).alias("cb"),
-    )
-    vals = require_bounded_distinct(
-        vals,
-        1_000_000,
-        "stat_cramer_von_mises",
-        "pre-bucket the value column (equi-width) before the ECDF window",
-    )
-    tot = vals.agg(
-        F.sum("ca").cast("double").alias("na"),
-        F.sum("cb").cast("double").alias("nb"),
-    )
+    vals, tot = _click_purchase_counts(spark, sf_dir, "stat_cramer_von_mises", "ECDF")
     w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
     cum = vals.select(
         (F.col("ca") + F.col("cb")).alias("cx"),
@@ -2009,26 +2009,11 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return Q.t_closeness_audit(d, ["lang", "source"], "sb", m=4, t=0.2)
 
 
-def _holm_oracle(n_perm: int = 64) -> str:
-    """Grouped permutation p-values (GROUP BY event_type over the same
-    md5-parity expression set as `_perm_oracle`) + the Holm step-down
-    as window CTEs."""
-    cols = []
-    for b in range(n_perm):
-        h = (
-            "CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR) "
-            f"|| '-perm-{b}'), 1, 2)) AS BIGINT) % 2 = 1"
-        )
-        cols.append(f"SUM(CASE WHEN {h} THEN value END) AS s{b}")
-        cols.append(
-            f"CAST(SUM(CASE WHEN {h} THEN 1 ELSE 0 END) AS DOUBLE) AS c{b}"
-        )
-    hits = " + ".join(
-        f"(CASE WHEN abs(s{b} / c{b} - (sv - s{b}) / (n - c{b}))"
-        " >= abs(sv1 / n1 - (sv - sv1) / (n - n1))"
-        " THEN 1 ELSE 0 END)"
-        for b in range(n_perm)
-    )
+def _ranked_perm_pvalues(n_perm: int) -> str:
+    """Grouped permutation p-values (GROUP BY event_type over the
+    `_perm_sql` expression set), ranked ascending: the CTEs the Holm
+    and BH oracles share."""
+    cols, hits = _perm_sql(n_perm)
     return f"""
     WITH a AS (
         SELECT event_type,
@@ -2037,7 +2022,7 @@ def _holm_oracle(n_perm: int = 64) -> str:
                SUM(CASE WHEN user_id % 2 = 1 THEN value END) AS sv1,
                CAST(SUM(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
                     AS DOUBLE) AS n1,
-               {", ".join(cols)}
+               {cols}
         FROM events GROUP BY event_type
     ),
     p AS (
@@ -2051,7 +2036,13 @@ def _holm_oracle(n_perm: int = 64) -> str:
                     AS INTEGER) AS rank,
                COUNT(*) OVER () AS m
         FROM p
-    )
+    )"""
+
+
+def _holm_oracle(n_perm: int = 64) -> str:
+    """`_ranked_perm_pvalues` + the Holm step-down as a running-max
+    window."""
+    return _ranked_perm_pvalues(n_perm) + """
     SELECT event_type, p_value, rank,
            ROUND(LEAST(MAX((m - rank + 1) * p_value)
                            OVER (ORDER BY p_value, event_type
@@ -2065,20 +2056,10 @@ def _holm_oracle(n_perm: int = 64) -> str:
     """
 
 
-@query("stat_holm_bonferroni", _holm_oracle())
-def stat_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holm step-down multiple-testing correction over five
-    simultaneous per-event-type permutation tests (ops/mlfit.py
-    grouped_permutation_pvalues + holm_bonferroni): the user-parity
-    split is an A/A null within every type, so the corrected family
-    must reject nothing — the "k metrics, one intervention" guardrail
-    every experiment dashboard needs, as one scan (all 64 permutations
-    for all 5 groups in ONE grouped aggregate) plus windows over the
-    5-row p-value relation."""
-    from hudi_utility_spark.ops.mlfit import (
-        grouped_permutation_pvalues,
-        holm_bonferroni,
-    )
+def _type_parity_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type permutation p-values of the user-parity A/A split:
+    all 64 permutations for every type in ONE grouped aggregate."""
+    from hudi_utility_spark.ops.mlfit import grouped_permutation_pvalues
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -2089,55 +2070,32 @@ def stat_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = grouped_permutation_pvalues(
         ev, "event_type", "event_id", "value", "arm", n_perm=64
     )
+    return ps.select("event_type", "p_value")
+
+
+@query("stat_holm_bonferroni", _holm_oracle())
+def stat_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holm step-down multiple-testing correction over five
+    simultaneous per-event-type permutation tests (ops/mlfit.py
+    grouped_permutation_pvalues + holm_bonferroni): the user-parity
+    split is an A/A null within every type, so the corrected family
+    must reject nothing — the "k metrics, one intervention" guardrail
+    every experiment dashboard needs, as one scan (all 64 permutations
+    for all 5 groups in ONE grouped aggregate) plus windows over the
+    5-row p-value relation."""
+    from hudi_utility_spark.ops.mlfit import holm_bonferroni
+
     return holm_bonferroni(
-        ps.select("event_type", "p_value"),
+        _type_parity_pvalues(spark, sf_dir),
         p_col="p_value",
         key_col="event_type",
     )
 
 
 def _bh_oracle(n_perm: int = 64) -> str:
-    """Grouped permutation p-values + the BH step-up as a reverse
-    running-min window (shares the `_holm_oracle` p CTE shape)."""
-    cols = []
-    for b in range(n_perm):
-        h = (
-            "CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR) "
-            f"|| '-perm-{b}'), 1, 2)) AS BIGINT) % 2 = 1"
-        )
-        cols.append(f"SUM(CASE WHEN {h} THEN value END) AS s{b}")
-        cols.append(
-            f"CAST(SUM(CASE WHEN {h} THEN 1 ELSE 0 END) AS DOUBLE) AS c{b}"
-        )
-    hits = " + ".join(
-        f"(CASE WHEN abs(s{b} / c{b} - (sv - s{b}) / (n - c{b}))"
-        " >= abs(sv1 / n1 - (sv - sv1) / (n - n1))"
-        " THEN 1 ELSE 0 END)"
-        for b in range(n_perm)
-    )
-    return f"""
-    WITH a AS (
-        SELECT event_type,
-               CAST(COUNT(*) AS DOUBLE) AS n,
-               SUM(value) AS sv,
-               SUM(CASE WHEN user_id % 2 = 1 THEN value END) AS sv1,
-               CAST(SUM(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-                    AS DOUBLE) AS n1,
-               {", ".join(cols)}
-        FROM events GROUP BY event_type
-    ),
-    p AS (
-        SELECT event_type,
-               ROUND((1 + ({hits})) / {float(n_perm + 1)!r}, 6) AS p_value
-        FROM a
-    ),
-    ranked AS (
-        SELECT event_type, p_value,
-               CAST(ROW_NUMBER() OVER (ORDER BY p_value, event_type)
-                    AS INTEGER) AS rank,
-               COUNT(*) OVER () AS m
-        FROM p
-    )
+    """`_ranked_perm_pvalues` + the BH step-up as a reverse running-min
+    window."""
+    return _ranked_perm_pvalues(n_perm) + """
     SELECT event_type, p_value, rank,
            ROUND(MIN(LEAST(m * p_value / rank, 1.0))
                      OVER (ORDER BY p_value, event_type
@@ -2160,22 +2118,10 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     where Holm's family-wise guarantee is too conservative. One grouped
     aggregate for all tests; the reverse running-min window runs over
     the 5-row p-value relation."""
-    from hudi_utility_spark.ops.mlfit import (
-        benjamini_hochberg,
-        grouped_permutation_pvalues,
-    )
+    from hudi_utility_spark.ops.mlfit import benjamini_hochberg
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "value",
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-    )
-    ps = grouped_permutation_pvalues(
-        ev, "event_type", "event_id", "value", "arm", n_perm=64
-    )
     return benjamini_hochberg(
-        ps.select("event_type", "p_value"),
+        _type_parity_pvalues(spark, sf_dir),
         p_col="p_value",
         key_col="event_type",
     )
@@ -2265,17 +2211,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS v
         FROM documents
     ),
-    agg AS (
-        SELECT CAST(SUM(CASE WHEN label = 1 AND v IS NOT NULL
-                             THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-               SUM(CASE WHEN label = 1 THEN v ELSE 0.0 END) AS s1,
-               SUM(CASE WHEN label = 1 THEN v * v ELSE 0.0 END) AS q1,
-               CAST(SUM(CASE WHEN label = 0 AND v IS NOT NULL
-                             THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-               SUM(CASE WHEN label = 0 THEN v ELSE 0.0 END) AS s2,
-               SUM(CASE WHEN label = 0 THEN v * v ELSE 0.0 END) AS q2
-        FROM s
-    ),
+    """ + _LABEL_SPLIT_SUMS + """,
     d AS (
         SELECT n1, n2,
                s1 / n1 - s2 / n2 AS mean_diff,

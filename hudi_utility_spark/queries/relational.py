@@ -21,10 +21,6 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Aggregations (A1-A4) — reference counts/validation generalized
 # ---------------------------------------------------------------------------
@@ -50,7 +46,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: the groupBy+multi-agg the reference's per-partition
     counting (pyspark_script.py:199-222) should have been — one map-side
     partial hash aggregate, no per-group jobs."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -87,7 +83,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a2_partition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: per-partition row counts as ONE hash aggregate — replaces the
     reference's O(P) filter+count loop (pyspark_script.py:237-247)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.to_date(F.date_trunc("month", F.col("l_shipdate"))).alias("ship_month")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -101,7 +97,7 @@ def a3_distinct_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: distinct partition values (pyspark_script.py:231-234), kept
     distributed — no collect."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select(F.col("o_orderstatus").alias("status"))
         .distinct()
     )
@@ -118,9 +114,9 @@ def a3_distinct_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a4_global_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A4: the reconciliation count check (pyspark_script.py:168-174)
     as a single-row cross join of aggregates."""
-    li = _t(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("lineitem_cnt"))
-    o = _t(spark, sf_dir, "orders").agg(F.count(F.lit(1)).alias("orders_cnt"))
-    c = _t(spark, sf_dir, "customer").agg(F.count(F.lit(1)).alias("customer_cnt"))
+    li = load_table(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("lineitem_cnt"))
+    o = load_table(spark, sf_dir, "orders").agg(F.count(F.lit(1)).alias("orders_cnt"))
+    c = load_table(spark, sf_dir, "customer").agg(F.count(F.lit(1)).alias("customer_cnt"))
     return li.crossJoin(o).crossJoin(c)
 
 
@@ -136,7 +132,7 @@ def a4_global_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a5_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct aggregation (the scale-friendly approx variant is
     `approx_distinct_profile`, rows-only checked)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_orderkey").alias("n_orders"),
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -155,7 +151,7 @@ def a5_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping sets / rollup (absent in reference, SURVEY §2.4 'absent')."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -172,7 +168,7 @@ def a_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(F.count(F.lit(1)).alias("cnt"))
 
 
@@ -194,10 +190,10 @@ def j1_missing_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast left-anti join over distinct partition values."""
     from hudi_utility_spark.repair import missing_partitions
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.to_date(F.date_trunc("month", F.col("l_shipdate"))).alias("part_month")
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("part_month")
     )
     out = missing_partitions(li, o, "part_month")
@@ -224,10 +220,10 @@ def j2_incomplete_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     clearest win over the reference's O(P)-jobs loop."""
     from hudi_utility_spark.repair import incomplete_partitions
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.to_date(F.date_trunc("month", F.col("l_shipdate"))).alias("part_month")
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("part_month")
     )
     out = incomplete_partitions(li, o, "part_month")
@@ -257,11 +253,11 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dimension broadcast into a fact join.
     customer (~150k rows at SF100, ~MBs) broadcasts; lineitem never
     shuffles until the final top-k."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
     )
     return (
@@ -301,15 +297,15 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join; all dimensions broadcast, the single
     shuffle is the final groupBy on n_name (25 groups)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -339,8 +335,8 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS) — SURVEY §2.3 'absent' surface."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .groupBy("c_mktsegment")
@@ -364,8 +360,8 @@ def j_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle comparison is non-trivially non-empty; every customer has
     orders, which made the customer-side anti-join structurally empty).
     """
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_anti")
         .groupBy("o_orderstatus")
@@ -385,9 +381,9 @@ def j_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer join with aggregate-below-join (pre-aggregation shrinks
     the shuffled side before the join)."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -415,7 +411,7 @@ def j_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s7_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7: the precombine semantic (latest row per key) as a query —
     the engine's upsert resolution (write.latest_by_key)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -437,7 +433,7 @@ def s7_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead ranking windows over the events table (SURVEY §2.5)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
@@ -459,7 +455,7 @@ def w_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-bounded running aggregate (rowsBetween)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -483,7 +479,7 @@ def w_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / ntile ranking family."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -514,7 +510,7 @@ def w_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same status-partitioned total order as `w_rank_dense`; both are
     rounded to 6dp so the (rank-1)/(n-1) division hashes identically
     across engines."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(
         F.asc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -540,7 +536,7 @@ def o1_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1: descending sort + top-k (app.py:243 generalized). Spark plans
     TakeOrderedAndProject — no global sort materialization."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(10)
@@ -558,7 +554,7 @@ def o2_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2: server-side pagination (the reference paginates client-side in
     React; Spark 3.4+ has a real offset)."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .offset(10)
@@ -581,8 +577,8 @@ def o2_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """union-distinct: the reference's set(missing + incomplete)
     (pyspark_script.py:257)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
 
 
@@ -596,8 +592,8 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """except: set-difference semantics of the missing-partition diff."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.distinct().exceptAll(s.distinct())
 
 
@@ -611,8 +607,8 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intersect: the 'present in both' probe of J2."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
 
 
@@ -635,7 +631,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p_filter_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 equality + P3 isin + P5 timestamp-range predicates, all pushed
     to the parquet scan (check PushedFilters in explain)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(
             (F.col("o_orderstatus") == "F")
@@ -661,7 +657,7 @@ def p4_like_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     '%red%' appears in the synthetic part names ('%green%' does not), so
     the pushed-down LIKE conjunction returns rows to hash-compare.
     """
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.filter(
         F.col("p_name").like("%red%") & F.col("p_type").like("SMALL%")
     ).select("p_partkey", "p_name")
@@ -681,7 +677,7 @@ def p6_regex_partition_selector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6+F2: hive-style partition-path formatting + the regex mode
     selector (pyspark_script.py:386-389) — partitions whose formatted path
     matches the bootstrap regex."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     path = F.concat_ws(
         "=",
         F.lit("ship_month"),
@@ -715,7 +711,7 @@ def p6_regex_partition_selector(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6/F7/F9/F10 scalar surface: casts, date arithmetic (app.py:236-241),
     string ops, transaction-id synthesis (app.py:209)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 100)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 100)
     return o.select(
         "o_orderkey",
         (F.col("o_orderkey") % 7).alias("key_mod"),
@@ -743,7 +739,7 @@ def f_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f3_partition_path_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: the ([^/]+)=([^/]+) partition-discovery regex (app.py:448-451)
     as a column expression."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     path = F.concat_ws("=", F.lit("event_type"), F.col("event_type"))
     rx = r"([^/]+)=([^/]+)"
     return (
@@ -769,7 +765,7 @@ def f3_partition_path_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f8_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8: JSON decode of the reference's transaction_data payloads
     (app.py:213) — structured extraction from a JSON string column."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             (F.get_json_object("props", "$.k").cast("bigint") % 10).alias("k_bucket"),
@@ -798,7 +794,7 @@ def f8_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f5_error_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: the substring-dispatch error classifier (app.py:296-305) as a
     CASE/WHEN chain over the events stream."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             F.when(
@@ -826,7 +822,7 @@ def f5_error_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_pivot_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: return-flag categories to columns (explicit value list —
     without it Spark runs an extra distinct job to discover them)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     p = (
         li.groupBy("l_linestatus")
         .pivot("l_returnflag", ["A", "N", "R"])
@@ -852,7 +848,7 @@ def a_pivot_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot via stack(): melts the pivoted frame back to long form —
     pivot∘unpivot must reproduce the plain group-by (the oracle)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     p = (
         li.groupBy("l_linestatus")
         .pivot("l_returnflag", ["A", "N", "R"])

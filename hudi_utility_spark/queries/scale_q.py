@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.ops.skew import key_histogram, salted_join
-from hudi_utility_spark.queries import query, scratch_base
+from hudi_utility_spark.queries import events_table, fresh_scratch, query
 from hudi_utility_spark.tables import load_table
 
 
@@ -130,19 +130,11 @@ def index_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter the oracle runs. The pruned file list is asserted strictly
     smaller in tests/test_index.py; here the value hash pins
     correctness."""
-    import os
-    import shutil
-    import tempfile
 
     from hudi_utility_spark import index
     from hudi_utility_spark.write import write_sorted_partitioned
 
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"idx_skip_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "idx_skip")
     import time as _time
 
     from hudi_utility_spark.queries import record_phase
@@ -185,27 +177,12 @@ def index_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch by reading only the matched base files — results must equal
     the oracle's plain key filter. Lookup cost on a clustered layout is
     ~one file per key instead of a partition scan."""
-    import os
-    import shutil
-    import tempfile
 
     from hudi_utility_spark import index
-    from hudi_utility_spark.table import KeyedTable, TableType
     from hudi_utility_spark.write import upsert
 
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"idx_point_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "idx_point")
+    table = events_table(root)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -239,27 +216,12 @@ def index_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain key filter: routing through the index must be
     result-invisible. Strict file pruning is asserted in
     tests/test_index.py."""
-    import os
-    import shutil
-    import tempfile
 
     from hudi_utility_spark import index
-    from hudi_utility_spark.table import KeyedTable, TableType
     from hudi_utility_spark.write import upsert
 
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"idx_bloom_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "idx_bloom")
+    table = events_table(root)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -294,18 +256,11 @@ def zorder_two_dim_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's full-scan filter; strict pruning on both dims is asserted
     in tests/test_index.py."""
     import os
-    import shutil
-    import tempfile
 
     from hudi_utility_spark import index
     from hudi_utility_spark.write import write_zordered
 
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"zorder_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "zorder")
     li = load_table(spark, sf_dir, "lineitem")
     # file count derived from input size, not a constant (guide §6: a
     # hard-coded 16 means 4 MB files at sf0.1 and 6 TB files at 100 TB).
@@ -341,20 +296,12 @@ def index_secondary_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     after precombine resolution. Must be result-identical to the
     oracle's plain filter; strict pruning + post-index log churn pinned
     in tests/test_index.py."""
-    import os
-    import shutil
-    import tempfile
 
     from hudi_utility_spark import index
     from hudi_utility_spark.table import KeyedTable, TableType
     from hudi_utility_spark.write import upsert
 
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"idx_secondary_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "idx_secondary")
     table = KeyedTable(
         path=root,
         record_key=["o_orderkey"],

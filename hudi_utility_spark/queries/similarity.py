@@ -14,6 +14,42 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
+# per-cell IVF centroids (mean embedding per label): the CTE pair the
+# IVF oracles build on
+_IVF_CENTS = """dims AS (
+        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
+        FROM embeddings,
+             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
+                             generate_subscripts(embedding, 1) AS i) d
+        GROUP BY label, d.i
+    ),
+    cents AS (
+        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
+    )"""
+# ... plus every vector's nearest centroid cell (ties to the lower cell)
+_IVF_ASSIGNED = _IVF_CENTS + """,
+    assigned AS (
+        SELECT e.vec_id, e.label, e.embedding::DOUBLE[] AS v,
+               (SELECT c.cell FROM cents c
+                ORDER BY ROUND(list_cosine_similarity(e.embedding::DOUBLE[],
+                                                       c.centroid), 6) DESC,
+                         c.cell
+                LIMIT 1) AS cell
+        FROM embeddings e
+    )"""
+
+
+# exact cosine top-10 of vec 0, shared by the HOF and Arrow brute-force arms
+_BRUTE_TOPK_ORACLE = """
+    SELECT e.vec_id,
+           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS score
+    FROM embeddings e,
+         (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
+    ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], q.qv) DESC, e.vec_id
+    LIMIT 10
+    """
+
+
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     e = load_table(spark, sf_dir, "embeddings")
     return list(e.filter(F.col("vec_id") == 0).select("embedding").first()[0])
@@ -21,14 +57,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 
 @query(
     "sim_bruteforce_topk",
-    """
-    SELECT e.vec_id,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS score
-    FROM embeddings e,
-         (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
-    ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], q.qv) DESC, e.vec_id
-    LIMIT 10
-    """,
+    _BRUTE_TOPK_ORACLE,
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 neighbors of vec 0 — the ANN correctness
@@ -40,16 +69,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ivf_centroid_ranking",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
-    ),
+    WITH """ + _IVF_CENTS + """,
     q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
     SELECT cell, ROUND(list_cosine_similarity(centroid, qv), 6) AS score
     FROM cents, q
@@ -69,16 +89,7 @@ def sim_ivf_centroid_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ivf_topk",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
-    ),
+    WITH """ + _IVF_CENTS + """,
     q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
     probed AS (
         SELECT cell FROM cents, q
@@ -103,8 +114,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_topk(e, _query_vec(spark, sf_dir), k=10, nprobe=3)
 
 
-def _sketch_oracle(planes: int = 16, dim: int = 64) -> str:
-    """Hyperplane-sketch histogram in DuckDB: the ±1 plane components
+def _sketch_sql(planes: int, dim: int) -> str:
+    """Hyperplane sketch of ``v`` in DuckDB: the ±1 plane components
     come from the same `plane_component` derivation the Spark operator
     uses (md5 of a public tag — shared Python, embedded as literals),
     and each projection is written as the identical left-associated sum,
@@ -119,6 +130,12 @@ def _sketch_oracle(planes: int = 16, dim: int = 64) -> str:
             "ELSE CAST(0 AS BIGINT) END"
         )
     sketch = "\n             + ".join(projs)
+    return sketch
+
+
+def _sketch_oracle(planes: int = 16, dim: int = 64) -> str:
+    """Hyperplane-sketch histogram in DuckDB (see `_sketch_sql`)."""
+    sketch = _sketch_sql(planes, dim)
     return f"""
     WITH vecs AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -407,14 +424,7 @@ def sim_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_bruteforce_topk_arrow",
-    """
-    SELECT e.vec_id,
-           ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS score
-    FROM embeddings e,
-         (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
-    ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], q.qv) DESC, e.vec_id
-    LIMIT 10
-    """,
+    _BRUTE_TOPK_ORACLE,
 )
 def sim_bruteforce_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALAR pandas_udf arm of the UDF matrix: exact cosine top-10
@@ -429,25 +439,7 @@ def sim_bruteforce_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_hard_negatives",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
-    ),
-    assigned AS (
-        SELECT e.vec_id, e.label, e.embedding::DOUBLE[] AS v,
-               (SELECT c.cell FROM cents c
-                ORDER BY ROUND(list_cosine_similarity(e.embedding::DOUBLE[],
-                                                       c.centroid), 6) DESC,
-                         c.cell
-                LIMIT 1) AS cell
-        FROM embeddings e
-    )
+    WITH """ + _IVF_ASSIGNED + """
     SELECT anchor_id, neg_id, anchor_label, neg_label, score FROM (
       SELECT a.vec_id AS anchor_id, b.vec_id AS neg_id,
              a.label AS anchor_label, b.label AS neg_label,
@@ -781,16 +773,7 @@ def dedup_pq_code_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], qv.v) DESC, e.vec_id
         LIMIT 10
     ),
-    dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
-    ),
+    """ + _IVF_CENTS + """,
     probed AS (
         SELECT cell FROM cents, qv
         ORDER BY list_cosine_similarity(centroid, qv.v) DESC, cell LIMIT 3
@@ -911,16 +894,7 @@ def _multiprobe_oracle(planes: int = 10, dim: int = 64, k: int = 10) -> str:
     """Sketch expression identical to `_sketch_oracle`'s (same literal
     plane components, same left-associated fold), then the Hamming<=1
     probe as integer algebra and an exact-cosine rescore."""
-    projs = []
-    for p in range(planes):
-        terms = " + ".join(
-            f"v[{d + 1}] * {S.plane_component(p, d)}" for d in range(dim)
-        )
-        projs.append(
-            f"CASE WHEN (0.0 + {terms}) >= 0 THEN CAST({1 << p} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-        )
-    sketch = "\n             + ".join(projs)
+    sketch = _sketch_sql(planes, dim)
     return f"""
     WITH vecs AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -963,16 +937,7 @@ def sim_multiprobe_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_knn_graph",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
-    ),
+    WITH """ + _IVF_CENTS + """,
     assigned AS (
         SELECT e.vec_id, e.embedding::DOUBLE[] AS v,
                (SELECT c.cell FROM cents c
@@ -1131,16 +1096,7 @@ def sim_binary_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cluster_silhouette_simplified",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims GROUP BY cell
-    ),
+    WITH """ + _IVF_CENTS + """,
     scored AS (
         SELECT e.vec_id, c.cell,
                ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.centroid),
@@ -1327,26 +1283,7 @@ def sim_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_knn_accuracy",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid FROM dims
-        GROUP BY cell
-    ),
-    assigned AS (
-        SELECT e.vec_id, e.label, e.embedding::DOUBLE[] AS v,
-               (SELECT c.cell FROM cents c
-                ORDER BY ROUND(list_cosine_similarity(e.embedding::DOUBLE[],
-                                                       c.centroid), 6) DESC,
-                         c.cell
-                LIMIT 1) AS cell
-        FROM embeddings e
-    ),
+    WITH """ + _IVF_ASSIGNED + """,
     nbrs AS (
       SELECT src, true_label, nbr_label FROM (
         SELECT a.vec_id AS src, a.label AS true_label,

@@ -12,7 +12,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.queries import query, scratch_base
+from hudi_utility_spark.queries import events_table, fresh_scratch, query
 from hudi_utility_spark.streaming.windows import (
     session_windows_batch,
     sliding_counts,
@@ -22,9 +22,35 @@ from hudi_utility_spark.tables import load_table
 from hudi_utility_spark.tsutil import us
 
 
-# per-run scratch root (tmpfs default; SPARK_GRAFT_SCRATCH overrides) —
-# shared with the lifecycle/format/timeline scratch users
-_scratch_base = scratch_base
+# click -> purchase within 30 minutes per user, shared by the batch twin
+# and the true streaming interval join
+_INTERVAL_JOIN_ORACLE = """
+    SELECT c.user_id AS user_id,
+           c.event_id AS lead_id,
+           p.event_id AS follow_id,
+           epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
+    FROM (SELECT * FROM events WHERE event_type = 'click') c
+    JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
+      ON c.user_id = p.user_id
+     AND p.ts > c.ts
+     AND p.ts <= c.ts + INTERVAL 30 MINUTE
+    """
+
+# closed form of the per-user EWMA recursion (alpha 0.3), shared by the
+# batch twin and the transformWithState processor
+_EWMA_ORACLE = """
+    WITH ordered AS (
+        SELECT user_id, value,
+               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
+               COUNT(*) OVER (PARTITION BY user_id) AS n
+        FROM events
+    )
+    SELECT user_id,
+           ROUND(SUM(CASE WHEN rn = 1 THEN POW(0.7, n - 1) * value
+                          ELSE 0.3 * POW(0.7, n - rn) * value END), 4) AS ewma,
+           MAX(n) AS n_events
+    FROM ordered GROUP BY user_id
+    """
 
 
 def _replay_width(root: str) -> int:
@@ -47,7 +73,16 @@ def _replay_width(root: str) -> int:
     takes precedence."""
     env = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
     if env:
-        return int(env)
+        try:
+            width = int(env)
+        except ValueError:
+            width = 0
+        if width < 1:
+            raise ValueError(
+                "SPARK_GRAFT_STREAM_STATE_PARTS must be a positive "
+                f"integer, got {env!r}"
+            )
+        return width
     total = 0
     for dirpath, _dirs, files in _os.walk(root):
         for f in files:
@@ -210,17 +245,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_interval_join",
-    """
-    SELECT c.user_id AS user_id,
-           c.event_id AS lead_id,
-           p.event_id AS follow_id,
-           epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-    FROM (SELECT * FROM events WHERE event_type = 'click') c
-    JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-      ON c.user_id = p.user_id
-     AND p.ts > c.ts
-     AND p.ts <= c.ts + INTERVAL 30 MINUTE
-    """,
+    _INTERVAL_JOIN_ORACLE,
     sequential=True,
 )
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,19 +266,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_running_ewma",
-    """
-    WITH ordered AS (
-        SELECT user_id, value,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-               COUNT(*) OVER (PARTITION BY user_id) AS n
-        FROM events
-    )
-    SELECT user_id,
-           ROUND(SUM(CASE WHEN rn = 1 THEN POW(0.7, n - 1) * value
-                          ELSE 0.3 * POW(0.7, n - rn) * value END), 4) AS ewma,
-           MAX(n) AS n_events
-    FROM ordered GROUP BY user_id
-    """,
+    _EWMA_ORACLE,
     sequential=True,
 )
 def stream_running_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,8 +337,6 @@ def stream_true_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash gate rather than a unit test. Bench-measurable true
     streaming cost (SCALE.md round-6 advice #8)."""
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from hudi_utility_spark.streaming.windows import tumbling_counts
@@ -334,12 +345,7 @@ def stream_true_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # µs-timestamp replay dir (readStream cannot apply load_table's
     # ns→µs conversion); deterministic per-SF path, rewritten per run
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"true_stream_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "true_stream")
     # two files → two real micro-batches: cross-batch incremental state
     # is still exercised, at half the per-batch fixed cost (planning,
     # WAL, one state-store open+commit per partition per batch) of the
@@ -400,17 +406,10 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the Spark-first upgrade of its A5 key-dedup to a stream.
     """
     import os
-    import shutil
-    import tempfile
     import uuid
 
     ev = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"dedup_stream_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "dedup_stream")
     # Two identical writes -> every event_id present twice on disk.
     # One file per copy and explicit mtimes pin batch 1 = copy 1,
     # batch 2 = copy 2: the duplicate of every surviving row arrives in
@@ -465,19 +464,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_ewma_tws",
-    """
-    WITH ordered AS (
-        SELECT user_id, value,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-               COUNT(*) OVER (PARTITION BY user_id) AS n
-        FROM events
-    )
-    SELECT user_id,
-           ROUND(SUM(CASE WHEN rn = 1 THEN POW(0.7, n - 1) * value
-                          ELSE 0.3 * POW(0.7, n - rn) * value END), 4) AS ewma,
-           MAX(n) AS n_events
-    FROM ordered GROUP BY user_id
-    """,
+    _EWMA_ORACLE,
     sequential=True,
 )
 def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,8 +493,6 @@ def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch sort is within-key within-batch only."""
     import glob
     import os
-    import shutil
-    import tempfile
     import time as _time
     import uuid
 
@@ -524,12 +509,7 @@ def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"ewma_tws_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "ewma_tws")
     # time-contiguous split at the median ts — map-only, no global window
     thr = ev.agg(
         F.expr("percentile_approx(ts, 0.5)").alias("thr")
@@ -672,8 +652,6 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; watermark horizon bounds state lifetime exactly."""
     import glob
     import os
-    import shutil
-    import tempfile
     import time as _time
     import uuid
 
@@ -687,12 +665,7 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp_ltz").alias("ts")
     )
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"sess_tws_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "sess_tws")
     ev.coalesce(1).write.parquet(root)
     first_files = set(glob.glob(os.path.join(root, "*.parquet")))
     sentinel_uid = 10**9
@@ -797,19 +770,12 @@ def stream_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite rather than a duplicate row."""
     import glob
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     from hudi_utility_spark.streaming.ingest import stream_upsert
-    from hudi_utility_spark.table import KeyedTable, TableType
+    from hudi_utility_spark.table import TableType
 
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"stream_upsert_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "stream_upsert")
     src = os.path.join(root, "src")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -826,13 +792,7 @@ def stream_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in glob.glob(os.path.join(src, "*.parquet")):
         os.utime(f, (now, now) if f in first_files else (now + 60, now + 60))
 
-    table = KeyedTable(
-        path=os.path.join(root, "table"),
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.COPY_ON_WRITE,
-    )
+    table = events_table(os.path.join(root, "table"), TableType.COPY_ON_WRITE)
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -908,8 +868,6 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic relies on."""
     import glob
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     from hudi_utility_spark.streaming.windows import tumbling_counts
@@ -919,12 +877,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(us("ts")).alias("mn"), F.max(us("ts")).alias("mx")
     ).collect()[0]
     thr_us = mm.mn + (mm.mx - mm.mn) // 2
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"late_drop_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "late_drop")
 
     def _write(df) -> set[str]:
         before = set(glob.glob(os.path.join(root, "*.parquet")))
@@ -993,17 +946,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_true_interval_join",
-    """
-    SELECT c.user_id AS user_id,
-           c.event_id AS lead_id,
-           p.event_id AS follow_id,
-           epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-    FROM (SELECT * FROM events WHERE event_type = 'click') c
-    JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-      ON c.user_id = p.user_id
-     AND p.ts > c.ts
-     AND p.ts <= c.ts + INTERVAL 30 MINUTE
-    """,
+    _INTERVAL_JOIN_ORACLE,
     sequential=True,
 )
 def stream_true_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1034,19 +977,12 @@ def stream_true_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-batch capture here collects the JOIN OUTPUT (the query's
     own result set, driver-bound by contract), not the inputs."""
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     from hudi_utility_spark.streaming.joins import followed_within
 
     ev = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        _scratch_base(),
-        "hudi_utility_spark_q",
-        f"true_ivj_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch(sf_dir, "true_ivj")
     # linear time slices from min/max (one cheap agg): the slices only
     # need to be event-time ORDERED, not equal-count, so an exact
     # quantile pass would be wasted work. TWO slices, not four: the

@@ -10,6 +10,53 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
+# stopword-marker language prediction per document (ops.text.LANG_MARKERS
+# and array_max's tiebreak in SQL), shared by the langid oracles
+_LANGID_PRED = r"""w AS (
+      SELECT doc_id, lang,
+             list_transform(string_split_regex(trim(text), '\s+'),
+                            x -> lower(x)) AS words
+      FROM documents
+    ), scored AS (
+      SELECT doc_id, lang,
+             len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
+             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
+             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
+             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
+             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh
+      FROM w
+    ), pred AS (
+      SELECT lang, CASE
+               WHEN greatest(s_en,s_es,s_fr,s_de,s_zh) = 0 THEN 'und'
+               WHEN s_zh = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'zh'
+               WHEN s_fr = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
+               WHEN s_es = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
+               WHEN s_en = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
+               ELSE 'de'
+             END AS lang_pred
+      FROM scored
+    )"""
+
+
+# per-document quality-heuristic inputs (ops.text quality score), shared
+# by the quality-score oracles
+_QUALITY_STATS = r"""stats AS (
+      SELECT doc_id,
+             len(string_split_regex(trim(text), '\s+')) AS n_words,
+             ROUND(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
+                   / greatest(length(text), 1), 6) AS punct_ratio,
+             ROUND(len(list_intersect(
+                     list_transform(string_split_regex(trim(text), '\s+'),
+                                    x -> lower(x)),
+                     ['the','a','an','and','or','of','to','in','is','are',
+                      'was','were','be','been','it','this','that','for',
+                      'on','with','as','by','at','from']))
+                   / greatest(len(string_split_regex(trim(text), '\s+')), 1),
+                   6) AS stopword_ratio
+      FROM documents
+    )"""
+
+
 @query(
     "text_token_counts",
     """
@@ -145,22 +192,9 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality_score",
-    r"""
-    WITH stats AS (
-      SELECT doc_id,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             ROUND(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-                   / greatest(length(text), 1), 6) AS punct_ratio,
-             ROUND(len(list_intersect(
-                     list_transform(string_split_regex(trim(text), '\s+'),
-                                    x -> lower(x)),
-                     ['the','a','an','and','or','of','to','in','is','are',
-                      'was','were','be','been','it','this','that','for',
-                      'on','with','as','by','at','from']))
-                   / greatest(len(string_split_regex(trim(text), '\s+')), 1),
-                   6) AS stopword_ratio
-      FROM documents
-    )
+    "\n    WITH "
+    + _QUALITY_STATS
+    + r"""
     SELECT doc_id,
            ROUND(CASE WHEN n_words < 5 THEN 0.0
                       WHEN punct_ratio > 0.3 THEN 0.2
@@ -551,22 +585,9 @@ def text_feature_hash_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_curriculum_bins",
-    r"""
-    WITH stats AS (
-      SELECT doc_id,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             ROUND(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-                   / greatest(length(text), 1), 6) AS punct_ratio,
-             ROUND(len(list_intersect(
-                     list_transform(string_split_regex(trim(text), '\s+'),
-                                    x -> lower(x)),
-                     ['the','a','an','and','or','of','to','in','is','are',
-                      'was','were','be','been','it','this','that','for',
-                      'on','with','as','by','at','from']))
-                   / greatest(len(string_split_regex(trim(text), '\s+')), 1),
-                   6) AS stopword_ratio
-      FROM documents
-    ),
+    "\n    WITH "
+    + _QUALITY_STATS
+    + r""",
     scored AS (
       SELECT doc_id, n_words,
              ROUND(CASE WHEN n_words < 5 THEN 0.0
@@ -1211,31 +1232,9 @@ def pack_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_langid_confusion",
-    r"""
-    WITH w AS (
-      SELECT doc_id, lang,
-             list_transform(string_split_regex(trim(text), '\s+'),
-                            x -> lower(x)) AS words
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, lang,
-             len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
-             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
-             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
-             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
-             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh
-      FROM w
-    ), pred AS (
-      SELECT lang, CASE
-               WHEN greatest(s_en,s_es,s_fr,s_de,s_zh) = 0 THEN 'und'
-               WHEN s_zh = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'zh'
-               WHEN s_fr = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-               WHEN s_es = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-               WHEN s_en = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-               ELSE 'de'
-             END AS lang_pred
-      FROM scored
-    )
+    "\n    WITH "
+    + _LANGID_PRED
+    + r"""
     SELECT lang, lang_pred, COUNT(*) AS n_docs
     FROM pred GROUP BY lang, lang_pred
     """,
@@ -2020,32 +2019,6 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(beta, 6) + F.lit(0.0)).alias("heaps_beta"),
         (F.round(kconst, 4) + F.lit(0.0)).alias("heaps_k"),
     )
-
-
-_LANGID_PRED = r"""w AS (
-      SELECT doc_id, lang,
-             list_transform(string_split_regex(trim(text), '\s+'),
-                            x -> lower(x)) AS words
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, lang,
-             len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
-             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
-             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
-             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
-             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh
-      FROM w
-    ), pred AS (
-      SELECT lang, CASE
-               WHEN greatest(s_en,s_es,s_fr,s_de,s_zh) = 0 THEN 'und'
-               WHEN s_zh = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'zh'
-               WHEN s_fr = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-               WHEN s_es = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-               WHEN s_en = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-               ELSE 'de'
-             END AS lang_pred
-      FROM scored
-    )"""
 
 
 @query(

@@ -7,20 +7,53 @@ write→stamp→incremental lifecycle under the driver's hash check.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark import timeline
-from hudi_utility_spark.queries import query, scratch_base
-from hudi_utility_spark.table import KeyedTable, TableType
+from hudi_utility_spark.queries import events_table, fresh_scratch, query
 from hudi_utility_spark.tables import load_table
 from hudi_utility_spark.write import upsert
 
 T1, T2 = "20260101000000001", "20260102000000001"
+
+# snapshot after the first two commits of `_three_commits`: union of
+# both versions resolved by the precombine window
+_TWO_COMMIT_STATE = """
+    WITH unioned AS (
+      SELECT event_id, ts, event_type, value FROM events
+      UNION ALL
+      SELECT event_id, ts + INTERVAL 1 HOUR AS ts, event_type,
+             value + 1000 AS value
+      FROM events WHERE event_type = 'click'
+    ), resolved AS (
+      SELECT *, ROW_NUMBER() OVER (
+        PARTITION BY event_id ORDER BY ts DESC) AS rn
+      FROM unioned
+    )
+    SELECT event_id, event_type, ROUND(value, 2) AS value
+    FROM resolved WHERE rn = 1
+    """
+
+
+def _three_commits(spark: SparkSession, sf_dir: str, name: str):
+    """Fresh MOR events table with three commits: every event at T1,
+    clicks +1000 an hour later at T2, then a bad -1 overwrite of every
+    click another hour later at a third instant."""
+    table = events_table(fresh_scratch(sf_dir, name))
+    events = load_table(spark, sf_dir, "events")
+    upsert(spark, events, table, commit_time=T1)
+    clicks = (
+        events.filter(F.col("event_type") == "click")
+        .withColumn("value", F.col("value") + 1000)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+    )
+    upsert(spark, clicks, table, commit_time=T2)
+    bad = clicks.withColumn("value", F.lit(-1.0)).withColumn(
+        "ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")
+    )
+    upsert(spark, bad, table, commit_time="20260103000000001")
+    return table
 
 
 @query(
@@ -36,19 +69,8 @@ def timeline_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     modified click slice at T2, read the (T1, T2] window — exactly the
     modified records come back, which is what lets a downstream consumer
     of a 100 TB table process deltas instead of snapshots."""
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"timeline_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "timeline")
+    table = events_table(root)
     events = load_table(spark, sf_dir, "events")
     upsert(spark, events, table, commit_time=T1)
     clicks = events.filter(F.col("event_type") == "click").withColumn(
@@ -63,21 +85,7 @@ def timeline_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "timeline_rollback_restore",
-    oracle="""
-    WITH unioned AS (
-      SELECT event_id, ts, event_type, value FROM events
-      UNION ALL
-      SELECT event_id, ts + INTERVAL 1 HOUR AS ts, event_type,
-             value + 1000 AS value
-      FROM events WHERE event_type = 'click'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
-    SELECT event_id, event_type, ROUND(value, 2) AS value
-    FROM resolved WHERE rn = 1
-    """,
+    oracle=_TWO_COMMIT_STATE,
     sequential=True,
 )
 def timeline_rollback_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,32 +95,7 @@ def timeline_rollback_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays as union + precombine window. The bad commit
     leaves no trace (Hudi restore semantics; the reference app can only
     re-bootstrap after a bad load)."""
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"timeline_rb_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
-    t3 = "20260103000000001"
-    events = load_table(spark, sf_dir, "events")
-    upsert(spark, events, table, commit_time=T1)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .withColumn("value", F.col("value") + 1000)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    upsert(spark, clicks, table, commit_time=T2)
-    bad = clicks.withColumn("value", F.lit(-1.0)).withColumn(
-        "ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")
-    )
-    upsert(spark, bad, table, commit_time=t3)
+    table = _three_commits(spark, sf_dir, "timeline_rb")
     timeline.rollback(spark, table, T2)
     snap = table.read(spark)
     return snap.select(
@@ -144,19 +127,8 @@ def timeline_cdc_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal union of the three expected change sets."""
     from hudi_utility_spark.write import delete_keys
 
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"timeline_cdc_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "timeline_cdc")
+    table = events_table(root)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -185,21 +157,7 @@ def timeline_cdc_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "timeline_read_as_of",
-    oracle="""
-    WITH unioned AS (
-      SELECT event_id, ts, event_type, value FROM events
-      UNION ALL
-      SELECT event_id, ts + INTERVAL 1 HOUR AS ts, event_type,
-             value + 1000 AS value
-      FROM events WHERE event_type = 'click'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
-    SELECT event_id, event_type, ROUND(value, 2) AS value
-    FROM resolved WHERE rn = 1
-    """,
+    oracle=_TWO_COMMIT_STATE,
     sequential=True,
 )
 def timeline_read_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,32 +166,7 @@ def timeline_read_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     state while the live table keeps all three (non-destructive, unlike
     rollback). The MOR log is the version store; the as-of read just
     bounds the precombine window at the instant."""
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"timeline_asof_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
-    t3 = "20260103000000001"
-    events = load_table(spark, sf_dir, "events")
-    upsert(spark, events, table, commit_time=T1)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .withColumn("value", F.col("value") + 1000)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    upsert(spark, clicks, table, commit_time=T2)
-    later = clicks.withColumn("value", F.lit(-1.0)).withColumn(
-        "ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")
-    )
-    upsert(spark, later, table, commit_time=t3)
+    table = _three_commits(spark, sf_dir, "timeline_asof")
     snap = timeline.read_as_of(spark, table, T2)
     return snap.select(
         "event_id", "event_type", F.round("value", 2).alias("value")
@@ -269,19 +202,8 @@ def timeline_clean_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical before and after (the cleaner deletes only superseded
     versions), which the oracle pins by recomputing the resolved state
     from the full history."""
-    root = os.path.join(
-        scratch_base(),
-        "hudi_utility_spark_q",
-        f"timeline_clean_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    table = KeyedTable(
-        path=root,
-        record_key=["event_id"],
-        precombine="ts",
-        partition_fields=["event_type"],
-        table_type=TableType.MERGE_ON_READ,
-    )
+    root = fresh_scratch(sf_dir, "timeline_clean")
+    table = events_table(root)
     t3 = "20260103000000001"
     events = load_table(spark, sf_dir, "events")
     upsert(spark, events, table, commit_time=T1)

@@ -19,10 +19,6 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "q2_top_supplier_per_nation",
     oracle="""
@@ -37,7 +33,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q2_top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: best supplier per group via ranking window over a
     broadcast dim join (no partsupp table — acctbal stands in for cost)."""
-    s, n = _t(spark, sf_dir, "supplier"), _t(spark, sf_dir, "nation")
+    s, n = load_table(spark, sf_dir, "supplier"), load_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_name").orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -61,7 +57,7 @@ def q2_top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4: EXISTS → left-semi join; the date filter is pushed to
     the orders scan (shipdate > orderdate proxies commit < receipt)."""
-    o, l = _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
+    o, l = load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     o = o.filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
@@ -91,7 +87,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure scan-filter-agg; all three predicates must reach
     the parquet reader as PushedFilters."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -130,11 +126,11 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7: cross-nation trade volume; nation/supplier/customer are
     broadcast so lineitem shuffles only for the orders equi-join + agg."""
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     n1 = n.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
@@ -179,11 +175,11 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation × order year (supply
     cost proxied by half retail price; PROMO parts only)."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
@@ -221,12 +217,12 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: top-20 customers by returned-item revenue in a half
     year; customer dim broadcast, single agg shuffle, global top-k."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-07-01"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -256,7 +252,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_priority_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional counts by ship year (orderpriority
     stands in for the absent shipmode column)."""
-    o, l = _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
+    o, l = load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
@@ -282,11 +278,11 @@ def q12_priority_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: promo revenue share for one month; part dim broadcast,
     conditional aggregation in one pass."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01"))
         & (F.col("l_shipdate") < F.lit("1996-10-01"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
@@ -318,9 +314,9 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: orders whose total quantity exceeds 150 — group-HAVING
     on the fact table first (map-side partial agg), then join the
     shrunken result to orders/customer."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
@@ -357,8 +353,8 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19: DNF predicate across both join sides — Catalyst pushes
     the per-side residuals below the broadcast join."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
     cond = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & q.between(1, 11))
@@ -393,8 +389,8 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-average-balance customers with no recent
     orders — the scalar threshold is a one-row aggregate broadcast onto
     the scan (single self-contained plan) + left-anti join."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01")
     )
     avg_bal = (
@@ -425,7 +421,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (SURVEY §2.4 extension): three grouping
     layouts in one shuffle via the Expand operator."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     l.createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """

@@ -28,10 +28,6 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "q8_national_market_share",
     oracle="""
@@ -59,15 +55,15 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: one nation's share of ASIA-market revenue per year.
     All five dims broadcast; lineitem shuffles once (orders equi-join)
     then aggregates — the conditional-sum ratio costs no extra pass."""
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
     )
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n1 = n.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_region")
     )
@@ -110,7 +106,7 @@ def q11_important_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row aggregate broadcast-cross-joined onto the grouped side, so the
     whole query is a single self-contained plan (no driver round-trip);
     the grouped side shuffles once."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     value = F.col("p_retailprice") * F.col("p_size")
     total = p.agg(F.sum(value).alias("_total"))
     return (
@@ -142,8 +138,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-order customers — the filter lives in the outer-join condition
     (a WHERE would silently drop the NULL-extended rows). Two
     aggregations; the second input is one row per customer, tiny."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     joined = c.join(
         o,
         (o.o_custkey == c.c_custkey) & (o.o_orderpriority != "1-URGENT"),
@@ -180,8 +176,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; lineitem is scanned twice, but both scans are shipdate-pruned
     partial-agg pipelines — cheaper at 100 TB than funneling the
     supplier relation through one task."""
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
     revenue = (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -225,13 +221,13 @@ def q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem stands in for partsupp), excluding flagged suppliers via a
     NOT IN → broadcast anti-join (supplier keys are never null here, so
     anti-join and NOT IN agree)."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35, 40, 45, 49)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (
@@ -260,8 +256,8 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part average becomes a pre-aggregation joined back to the fact —
     one extra shuffle instead of a per-row subquery. At 100 TB the
     per-part aggregate is ~|part| rows, far smaller than lineitem."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#5")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#5")
     avg_qty = l.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
         (0.5 * F.avg("l_quantity")).alias("half_avg_qty")
     )
@@ -296,12 +292,12 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers who shipped an excess volume of PROMO
     parts in 1996 — IN over a HAVING-filtered aggregate becomes a
     left-semi join; the aggregate output (≤ |supplier| rows) broadcasts."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    s = _t(spark, sf_dir, "supplier")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    s = load_table(spark, sf_dir, "supplier")
     heavy = (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
@@ -345,9 +341,9 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join scans of the fact table. Both consumers of the ll join
     sit in ONE plan, so ReusedExchange shares the join shuffle — no
     .cache() needed (the r2 version leaked one past the query)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    s = load_table(spark, sf_dir, "supplier")
     ll = (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .select(

@@ -24,10 +24,6 @@ from hudi_utility_spark.queries import forensic_active, forensic_return, query
 from hudi_utility_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "variant_extract_profile",
     """
@@ -52,7 +48,7 @@ def variant_extract_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     calls re-parsing the same string N times: one parse into the shredded
     encoding, then O(1) typed path reads per field.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     envelope = F.to_json(
         F.struct(
             F.col("event_id").alias("id"),
@@ -116,7 +112,7 @@ def variant_path_miss_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     not exist must yield NULL (never error), matching ANSI JSON extract.
     Counts per event_type how many rows resolve the real path vs the
     missing one — the missing-path count must be 0 on both engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type", F.parse_json(F.col("props")).alias("v")
     )

@@ -24,6 +24,20 @@ from hudi_utility_spark.table import KeyedTable
 from hudi_utility_spark.write import latest_by_key, upsert
 
 
+def _start_sink(stream: DataFrame, sink, checkpoint_dir: str, trigger_once: bool):
+    """Start *stream* into the foreachBatch *sink* in update mode,
+    checkpointed at *checkpoint_dir*; *trigger_once* drains what is
+    available now and stops."""
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_upsert(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -45,14 +59,7 @@ def stream_upsert(
         deduped = latest_by_key(batch_df, table.record_key, table.precombine)
         upsert(spark, deduped, table)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, _sink, checkpoint_dir, trigger_once)
 
 
 def stream_rollup_maintenance(
@@ -102,14 +109,7 @@ def stream_rollup_maintenance(
         .option("mergeSchema", "true")
         .parquet(table.log_path)
     )
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream, _sink, checkpoint_dir, trigger_once)
 
 
 def stream_dedup_ingest(
@@ -166,14 +166,7 @@ def stream_dedup_ingest(
         finally:
             fresh.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, _sink, checkpoint_dir, trigger_once)
 
 
 def stream_neardedup_ingest(
@@ -237,14 +230,7 @@ def stream_neardedup_ingest(
             fresh.unpersist()
             batch_bands.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, _sink, checkpoint_dir, trigger_once)
 
 
 def stream_scd2_maintenance(
@@ -313,14 +299,7 @@ def stream_scd2_maintenance(
         else:
             os.rename(tmp, dim_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, _sink, checkpoint_dir, trigger_once)
 
 
 def stream_replication(
@@ -351,11 +330,4 @@ def stream_replication(
         .option("mergeSchema", "true")
         .parquet(src_table.log_path)
     )
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream, _sink, checkpoint_dir, trigger_once)

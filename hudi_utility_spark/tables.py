@@ -38,11 +38,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         for name in TABLE_NAMES
         if os.path.exists(f"{sf_dir}/{name}.parquet")
     }
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every corpus table as a temp view (for spark.sql paths)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -158,3 +158,26 @@ def test_bootstrap_from_csv_source(spark, events, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 200
     assert set(got.columns) >= {"event_id", "value", "event_type"}
+
+
+def test_latest_event_skips_in_flight_and_vanished_files(tmp_path, monkeypatch):
+    """The driver-side point lookup never opens an in-flight ``_tmp-``
+    append, and an event file removed between the directory listing
+    and the read (a concurrent compact) is skipped, not an error."""
+    import glob
+
+    led = Ledger(None, str(tmp_path / "ledger"))
+    tid = led.begin("events")
+    (tmp_path / "ledger" / "_tmp-part-x.snappy.parquet").write_bytes(b"partial")
+    gone = str(tmp_path / "ledger" / "part-gone.snappy.parquet")
+    real_glob = glob.glob
+    monkeypatch.setattr(glob, "glob", lambda pat: real_glob(pat) + [gone])
+    assert led._latest_event_py(tid)["status"] == "PENDING"
+
+
+def test_latest_event_raises_on_corrupt_event_file(tmp_path):
+    led = Ledger(None, str(tmp_path / "ledger"))
+    tid = led.begin("events")
+    (tmp_path / "ledger" / "part-bad.snappy.parquet").write_bytes(b"garbage")
+    with pytest.raises(ValueError, match="part-bad.snappy.parquet"):
+        led._latest_event_py(tid)

@@ -1,0 +1,72 @@
+"""Spark-free checks of the plan-audit fingerprint normaliser: plan
+texts that differ only in run-specific tokens hash alike, and a real
+operator change hashes differently."""
+
+from __future__ import annotations
+
+from tools.plan_audit import fingerprint, shuffle_count
+
+PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (6)
++- HashAggregate (5)
+   +- Exchange (4)
+      +- HashAggregate (3)
+         +- Project (2)
+            +- Scan parquet (1)
+
+(1) Scan parquet
+Output [2]: [k#{a}L, arr#{b}]
+Location: InMemoryFileIndex [file:/data/t/part-00000-{uuid}-c000.snappy.parquet]
+Location: InMemoryFileIndex [file:/data/j/part-00000-{hexid}.jsonl]
+Location: InMemoryFileIndex [file:/data/k/{first}/part-00000-{uuid}.c000.snappy.parquet, ... 4 entries]
+
+(2) Project
+Output [1]: [transform(arr#{b}, lambdafunction((lambda x_{lam}#{c}L + 1), lambda x_{lam}#{c}L, false)) AS v#{d}]
+Input [2]: [k#{a}L, arr#{b}]
+
+(3) HashAggregate
+Keys [1]: [k#{a}L]
+Functions [1]: [partial_count(1)]
+Subquery [id=#{sub}] over Scan ExistingRDD MapPartitionsRDD[{rdd}]
+
+(4) Exchange
+Input [2]: [k#{a}L, count#{e}L]
+Arguments: hashpartitioning(k#{a}L, 4), ENSURE_REQUIREMENTS, [plan_id={pid}]
+
+(5) HashAggregate
+Keys [1]: [k#{a}L]
+Functions [1]: [count(1)]
+
+(6) AdaptiveSparkPlan
+Arguments: isFinalPlan=false
+"""
+
+RUN_1 = dict(
+    a=12, b=13, c=15, d=14, e=20, lam=1, sub=40, rdd=7, pid=31,
+    uuid="0f8e2a44-1c9b-4c1e-9a77-3b5f2d6e8a10",
+    hexid="ffdd99170d944f87a4b025466e8b9dc9", first="event_type=view",
+)
+RUN_2 = dict(
+    a=112, b=113, c=151, d=140, e=200, lam=17, sub=4, rdd=93, pid=8,
+    uuid="c3d1e0b2-77aa-4f0e-b0c4-91e2a8d35f6b",
+    hexid="d5cbd02ecc0841bfb0df1bd4a409cc98", first="event_type=click",
+)
+
+
+def test_fingerprint_ignores_run_specific_tokens():
+    assert fingerprint(PLAN.format(**RUN_1)) == fingerprint(PLAN.format(**RUN_2))
+
+
+def test_fingerprint_sees_operator_change():
+    base = PLAN.format(**RUN_1)
+    changed = base.replace("hashpartitioning(k#12L, 4)", "rangepartitioning(k#12L ASC, 4)")
+    assert changed != base
+    assert fingerprint(changed) != fingerprint(base)
+    assert fingerprint(base.replace("partial_count(1)", "partial_sum(1)")) != fingerprint(base)
+    assert fingerprint(base.replace("4 entries", "5 entries")) != fingerprint(base)
+
+
+def test_shuffle_count_counts_distinct_exchange_nodes():
+    # tree line "Exchange (4)" and detail header "(4) Exchange" are one node
+    assert shuffle_count(PLAN.format(**RUN_1)) == 1
+    assert shuffle_count("(3) BroadcastExchange\n(5) ReusedExchange\n") == 0

@@ -7,10 +7,9 @@ fails here before it ever reaches a cluster."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
+
+from tools.plan_audit import plan_of, shuffle_count
 
 # deliberate BNLJ: broadcasting a 1-row/scalar relation (corpus totals,
 # IVF probe thresholds) into a map-side comparison — bounded by design
@@ -39,13 +38,6 @@ SCRATCH = {
 }
 
 
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 @pytest.fixture(scope="module")
 def headline_plans(spark, sf_dir):
     """Every (non-scratch) headline query's formatted plan, built ONCE
@@ -58,7 +50,7 @@ def headline_plans(spark, sf_dir):
 
     qs = entrymod.queries()
     return {
-        name: _plan(qs[name](spark, sf_dir))
+        name: plan_of(qs[name](spark, sf_dir))
         for name in HEADLINE
         if name not in SCRATCH
     }
@@ -113,15 +105,11 @@ EXCHANGE_BUDGETS = {
     "cluster_kmeans_parallel_init": 0,  # returns driver-built diag rows;
     # rounds collect scalars + expected-l candidates only
     # r13: the df-ranked relation is persisted and feeds BOTH candidate
-    # sides (PPJoin+ positional filter needs rn on the index side), so
-    # the STATIC plan prints its 3-exchange lineage once per consumer —
-    # the executed plan computes it once into the cache (it was already
-    # computed once before; the second consumer previously read raw sh).
-    # Text count 26 -> 36 is the reprint, not a new executed shuffle.
-    "dedup_containment_pairs": 36,
-    "text_bigram_backoff": 20,
-    "text_bpe_encode": 2,
-    "stream_dedup_watermark": 2,
+    # sides (PPJoin+ positional filter needs rn on the index side)
+    "dedup_containment_pairs": 7,
+    "text_bigram_backoff": 3,
+    "text_bpe_encode": 1,
+    "stream_dedup_watermark": 1,
 }
 
 
@@ -131,8 +119,8 @@ def test_r7_headline_exchange_budgets(spark, sf_dir, headline_plans):
     qs = entrymod.queries()
     over = []
     for name, budget in EXCHANGE_BUDGETS.items():
-        plan = headline_plans.get(name) or _plan(qs[name](spark, sf_dir))
-        shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+        plan = headline_plans.get(name) or plan_of(qs[name](spark, sf_dir))
+        shuffles = shuffle_count(plan)
         if shuffles > budget:
             over.append((name, shuffles, budget))
     assert not over, f"shuffle-exchange budget exceeded: {over}"
@@ -144,16 +132,16 @@ def test_r7_headline_exchange_budgets(spark, sf_dir, headline_plans):
 # broadcast nested loops over RELATIONS BOUNDED BY CONSTRUCTION
 # (centroid count, bin count), not data-sized.
 EXCHANGE_BUDGETS_R8 = {
-    "text_kneser_ney": 16,
-    "dedup_semdedup": 24,
-    "rtr_rrf_fusion": 4,
-    "ev_attribution_channels": 4,
-    "ml_isotonic_calibration": 10,
-    "rollup_join_view_maintenance": 2,
-    "ml_pr_curve": 8,
-    "stat_mann_whitney": 4,
-    "text_ccnet_buckets": 18,
-    "graph_link_prediction": 12,
+    "text_kneser_ney": 3,
+    "dedup_semdedup": 1,
+    "rtr_rrf_fusion": 2,
+    "ev_attribution_channels": 2,
+    "ml_isotonic_calibration": 5,
+    "rollup_join_view_maintenance": 1,
+    "ml_pr_curve": 2,
+    "stat_mann_whitney": 1,
+    "text_ccnet_buckets": 4,
+    "graph_link_prediction": 6,
 }
 
 
@@ -163,9 +151,9 @@ def test_r8_exchange_budgets_and_no_cartesian(spark, sf_dir):
     qs = entrymod.queries()
     over = []
     for name, budget in EXCHANGE_BUDGETS_R8.items():
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, name
-        shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+        shuffles = shuffle_count(plan)
         if shuffles > budget:
             over.append((name, shuffles, budget))
     assert not over, f"shuffle-exchange budget exceeded: {over}"
@@ -202,11 +190,11 @@ def test_sim_hard_negatives_blocked_plan(spark, sf_dir):
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    plan = _plan(qs["sim_hard_negatives"](spark, sf_dir))
+    plan = plan_of(qs["sim_hard_negatives"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert shuffles <= 8, f"shuffle-exchange budget exceeded: {shuffles}"
+    shuffles = shuffle_count(plan)
+    assert shuffles <= 1, f"shuffle-exchange budget exceeded: {shuffles}"
 
 
 # round-9 additions: measured budgets for the r8 experiment-stack
@@ -214,14 +202,14 @@ def test_sim_hard_negatives_blocked_plan(spark, sf_dir):
 # re-introduce a row-level window into the collapsed-relation stats)
 # plus the two de-quadratified queries' final shapes.
 EXCHANGE_BUDGETS_R9 = {
-    "stat_permutation_test": 2,
-    "ml_conformal_interval": 10,
-    "ev_sprt_monitor": 4,
-    "ev_did_estimator": 4,
-    "sim_hard_negatives": 2,
-    "pack_length_buckets": 16,
-    "ml_pr_curve": 4,
-    "ml_auc_score": 2,
+    "stat_permutation_test": 1,
+    "ml_conformal_interval": 5,
+    "ev_sprt_monitor": 2,
+    "ev_did_estimator": 2,
+    "sim_hard_negatives": 1,
+    "pack_length_buckets": 7,
+    "ml_pr_curve": 2,
+    "ml_auc_score": 1,
 }
 
 
@@ -231,9 +219,9 @@ def test_r9_exchange_budgets_and_no_cartesian(spark, sf_dir):
     qs = entrymod.queries()
     over = []
     for name, budget in EXCHANGE_BUDGETS_R9.items():
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, name
-        shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+        shuffles = shuffle_count(plan)
         if shuffles > budget:
             over.append((name, shuffles, budget))
     assert not over, f"shuffle-exchange budget exceeded: {over}"
@@ -304,7 +292,7 @@ def test_r9_new_queries_no_cartesian_bounded_bnlj(spark, sf_dir):
     for name in R9_NEW_QUERIES:
         if name in ("stream_session_tws",):  # real streaming run, own tests
             continue
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in R9_BNLJ_OK:
@@ -350,7 +338,7 @@ def test_r9b_new_queries_no_cartesian_bounded_bnlj(spark, sf_dir):
     qs = entrymod.queries()
     offenders = []
     for name in R9B_NEW_QUERIES:
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in R9B_BNLJ_OK:
@@ -383,7 +371,7 @@ def test_r9c_new_queries_no_cartesian_bounded_bnlj(spark, sf_dir):
     qs = entrymod.queries()
     offenders = []
     for name in R9C_NEW_QUERIES:
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in R9C_BNLJ_OK:
@@ -411,7 +399,7 @@ def test_r9d_new_queries_no_cartesian_bounded_bnlj(spark, sf_dir):
     qs = entrymod.queries()
     offenders = []
     for name in R9D_NEW_QUERIES:
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in R9D_BNLJ_OK:
@@ -434,7 +422,7 @@ def test_r9e_new_queries_no_cartesian_bounded_bnlj(spark, sf_dir):
     qs = entrymod.queries()
     offenders = []
     for name in R9E_NEW_QUERIES:
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in R9E_BNLJ_OK:
@@ -456,7 +444,7 @@ def test_r9f_new_queries_no_cartesian_bounded_bnlj(spark, sf_dir):
     qs = entrymod.queries()
     offenders = []
     for name in R9F_NEW_QUERIES:
-        plan = _plan(qs[name](spark, sf_dir))
+        plan = plan_of(qs[name](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append((name, "cartesian"))
         if "BroadcastNestedLoopJoin" in plan and name not in R9F_BNLJ_OK:
@@ -473,14 +461,14 @@ def test_r10_knn_join_by_cell_equijoin_plan(spark, sf_dir):
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    plan = _plan(qs["sim_knn_join_by_cell"](spark, sf_dir))
+    plan = plan_of(qs["sim_knn_join_by_cell"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     # the corpus-side candidate join must be an equi-join: at least one
     # hash/sort-merge join node keyed on the cell id must exist
     assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             or "BroadcastHashJoin" in plan), plan
-    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert shuffles <= 8, f"shuffle-exchange budget exceeded: {shuffles}"
+    shuffles = shuffle_count(plan)
+    assert shuffles <= 3, f"shuffle-exchange budget exceeded: {shuffles}"
 
 
 def test_r10_new_queries_plan_shapes(spark, sf_dir):
@@ -491,12 +479,12 @@ def test_r10_new_queries_plan_shapes(spark, sf_dir):
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    plan = _plan(qs["pack_feistel_shuffle"](spark, sf_dir))
+    plan = plan_of(qs["pack_feistel_shuffle"](spark, sf_dir))
     assert "CartesianProduct" not in plan
-    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+    shuffles = shuffle_count(plan)
     assert shuffles == 0, f"feistel shuffle must be map-only: {shuffles}"
 
-    plan = _plan(qs["approx_moments_quantile"](spark, sf_dir))
+    plan = plan_of(qs["approx_moments_quantile"](spark, sf_dir))
     assert "CartesianProduct" not in plan
-    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert shuffles <= 2, f"moments sketch budget exceeded: {shuffles}"
+    shuffles = shuffle_count(plan)
+    assert shuffles <= 1, f"moments sketch budget exceeded: {shuffles}"

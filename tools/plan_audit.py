@@ -1,12 +1,21 @@
 """Physical-plan audit for the headline queries: pushed filters, join
-strategies, exchange counts, whole-stage-codegen coverage.
+strategies, exchange counts, whole-stage-codegen coverage, and a plan
+fingerprint.
 
-Usage: python tools/plan_audit.py [sf_dir] [name_filter]
+The fingerprint hashes ``explain("formatted")`` after normalising the
+tokens that change from one build of the same plan to the next
+(expression ids, plan ids, lambda-variable suffixes, RDD ids, part-file
+UUIDs, the first file a multi-file index happens to list). Two runs that print the same fingerprint for a query built the
+same physical plan, which makes the tool a refactor gate: audit with
+``--all`` before and after a change and diff the fingerprint column.
+
+Usage: python tools/plan_audit.py [sf_dir] [name_filter] [--all]
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import re
 import sys
@@ -14,9 +23,20 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import __spark_entry__ as entrymod
-from bench import HEADLINE
-from hudi_utility_spark.session import get_spark
+# run-specific tokens of a formatted plan, in the order they are
+# rewritten: "[id=#12]" must go before the bare "#12" rule eats its id
+_UNSTABLE_TOKENS = [
+    (re.compile(r"\[id=#\d+\]"), "[id=#]"),
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\b(lambda \w+?_)\d+\b"), r"\1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    # a multi-file index prints one file + a count; which file comes
+    # first follows directory listing order, not the plan
+    (re.compile(r"(InMemoryFileIndex \[)[^\],]*(, \.\.\. \d+ entries\])"), r"\1<first file>\2"),
+    # part-file UUIDs, dashed (parquet) or bare 32-hex (text formats)
+    (re.compile(r"\b[0-9a-f]{8}(-?)[0-9a-f]{4}\1[0-9a-f]{4}\1[0-9a-f]{4}\1[0-9a-f]{12}\b"), "<uuid>"),
+]
 
 
 def plan_of(df) -> str:
@@ -26,11 +46,27 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def normalise(plan: str) -> str:
+    for pattern, repl in _UNSTABLE_TOKENS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def fingerprint(plan: str) -> str:
+    return hashlib.sha256(normalise(plan).encode()).hexdigest()[:12]
+
+
+def shuffle_count(plan: str) -> int:
+    """Shuffle exchanges in a formatted plan: distinct "(N) Exchange"
+    node ids. Broadcast and reused exchanges have other node names, and
+    a node printed twice (tree line and detail section, or one subplan
+    shown under two consumers) counts once."""
+    return len(set(re.findall(r"\((\d+)\) Exchange\b", plan)))
+
+
 def audit(plan: str) -> dict:
     return {
-        # formatted plans print "(N) Exchange" with hashpartitioning on
-        # the Arguments line below — count node headers, not inline text
-        "shuffles": len(re.findall(r"\(\d+\) Exchange\b", plan)),
+        "shuffles": shuffle_count(plan),
         "broadcasts": len(re.findall(r"\(\d+\) BroadcastExchange", plan)),
         "bhj": len(re.findall(r"BroadcastHashJoin", plan)),
         "smj": len(re.findall(r"SortMergeJoin", plan)),
@@ -43,10 +79,15 @@ def audit(plan: str) -> dict:
         "wscg": len(re.findall(r"WholeStageCodegen", plan)),
         "python": len(re.findall(r"(ArrowEvalPython|BatchEvalPython|MapInPandas)", plan)),
         "sorts": len(re.findall(r"\bSort\b", plan)),
+        "fingerprint": fingerprint(plan),
     }
 
 
 def main() -> None:
+    import __spark_entry__ as entrymod
+    from bench import HEADLINE
+    from hudi_utility_spark.session import get_spark
+
     args = [a for a in sys.argv[1:] if a != "--all"]
     audit_all = "--all" in sys.argv[1:]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
@@ -54,7 +95,7 @@ def main() -> None:
     spark = get_spark("plan-audit")
     qs = entrymod.queries()
     names = sorted(qs) if audit_all else HEADLINE
-    print(f"{'query':34s} shuf bcast bhj smj bnlj cart push scan py")
+    print(f"{'query':34s} shuf bcast bhj smj bnlj cart push scan py fingerprint")
     for name in names:
         if name_filter and name_filter not in name:
             continue
@@ -67,7 +108,8 @@ def main() -> None:
         print(
             f"{name:34s} {a['shuffles']:4d} {a['broadcasts']:5d} {a['bhj']:3d}"
             f" {a['smj']:3d} {a['bnlj']:4d} {a['cartesian']:4d}"
-            f" {a['pushed']:4d} {a['scans']:4d} {a['python']:2d}  {' '.join(flags)}"
+            f" {a['pushed']:4d} {a['scans']:4d} {a['python']:2d}"
+            f" {a['fingerprint']}  {' '.join(flags)}"
         )
 
 
