@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -107,19 +108,24 @@ class TableServices:
         self.engine = engine
         self.table = table
 
-    def _ledgered(self, op: str, fn):
-        from hudi_utility_spark.concurrency import table_lock
-
+    @contextmanager
+    def _ledger(self, op: str):
+        """One ledger transaction around the block: FAILED (with the
+        error) if it raises, SUCCESS otherwise."""
         led = self.engine.ledger
         tid = led.begin(self.table.name or "table", {"op": op, "path": self.table.path})
         try:
-            with table_lock(self.table, owner=op):
-                out = fn()
+            yield
         except Exception as exc:
             led.finish(tid, "FAILED", error_log=str(exc))
             raise
         led.finish(tid, "SUCCESS")
-        return out
+
+    def _ledgered(self, op: str, fn):
+        from hudi_utility_spark.concurrency import table_lock
+
+        with self._ledger(op), table_lock(self.table, owner=op):
+            return fn()
 
     def upsert(self, df: DataFrame, commit_time: str | None = None) -> DataFrame:
         from hudi_utility_spark.write import upsert
@@ -164,23 +170,17 @@ class TableServices:
         )
 
     def compact_if_needed(self, max_log_ratio: float = 0.2) -> bool:
-        """Size-triggered compaction (KeyedTable.compact_if_needed) —
-        ledgered only when a compaction actually runs."""
+        """Size-triggered compaction (KeyedTable.needs_compaction) — the
+        check runs under the writer lock, and the call is ledgered only
+        when a compaction actually runs."""
         from hudi_utility_spark.concurrency import table_lock
 
-        with table_lock(self.table, owner="compact_check"):
-            if self.table.table_type.value != "MERGE_ON_READ":
+        with table_lock(self.table, owner="compact_if_needed"):
+            if not self.table.needs_compaction(max_log_ratio):
                 return False
-            import os
-
-            if not os.path.isdir(self.table.log_path):
-                return False
-        return self._ledgered(
-            "compact_if_needed",
-            lambda: self.table.compact_if_needed(
-                self.engine.spark, max_log_ratio=max_log_ratio
-            ),
-        )
+            with self._ledger("compact_if_needed"):
+                self.table.compact(self.engine.spark)
+        return True
 
     def compact(self, partitions: list | None = None) -> None:
         """Ledgered MOR compaction; *partitions* restricts the fold to

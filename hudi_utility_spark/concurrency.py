@@ -45,7 +45,7 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.table import KeyedTable, TableType
+from hudi_utility_spark.table import KeyedTable
 from hudi_utility_spark.timeline import COMMIT_COL, EPOCH_INSTANT
 
 
@@ -316,10 +316,9 @@ def latest_commit(spark: SparkSession, table: KeyedTable) -> str:
     base = table.read_base(spark)
     if COMMIT_COL in base.columns:
         parts.append(base.select(COMMIT_COL))
-    if table.table_type is TableType.MERGE_ON_READ and os.path.isdir(table.log_path):
-        log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
-        if COMMIT_COL in log.columns:
-            parts.append(log.select(COMMIT_COL))
+    log = table.read_log(spark)
+    if log is not None and COMMIT_COL in log.columns:
+        parts.append(log.select(COMMIT_COL))
     if not parts:
         return EPOCH_INSTANT
     merged = parts[0]

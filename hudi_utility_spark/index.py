@@ -233,9 +233,6 @@ def secondary_lookup(
     MOR delta log, resolve precombine, then re-apply the exact predicate
     (rows whose LATEST version left the probed value set drop out here —
     same residual-filter contract as every index in this module)."""
-    from hudi_utility_spark.table import DELETED_COL, TableType
-    from hudi_utility_spark.write import latest_by_key
-
     probe = F.broadcast(values_df.select(F.col(col).alias("value")).distinct())
     idx = spark.read.parquet(os.path.join(table.path, SECONDARY_INDEX_DIR, col))
     files = [
@@ -250,14 +247,7 @@ def secondary_lookup(
         )
     else:
         base = table.read_base(spark).filter(F.lit(False))
-    if table.table_type is TableType.MERGE_ON_READ and os.path.isdir(table.log_path):
-        log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
-        base = base.unionByName(log, allowMissingColumns=True)
-    resolved = latest_by_key(base, table.record_key, table.precombine)
-    if DELETED_COL in resolved.columns:
-        resolved = resolved.filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        ).drop(DELETED_COL)
+    resolved = table.resolve(base, table.read_log(spark))
     return resolved.join(
         probe.select(F.col("value").alias(col)), col, "left_semi"
     )
@@ -377,9 +367,6 @@ def bloom_lookup(
     `point_lookup` but with O(m_bits)-per-file index storage instead of
     O(records) — the trade Hudi makes between its BLOOM and
     record-level indexes."""
-    from hudi_utility_spark.table import DELETED_COL, TableType
-    from hudi_utility_spark.write import latest_by_key
-
     keys = table.record_key
     # materialized once: feeds the bloom candidate probe plus two
     # semi-joins (see point_lookup — same triple-scan hazard)
@@ -395,17 +382,7 @@ def bloom_lookup(
         matched = base.join(probe, on=keys, how="left_semi")
     else:
         matched = table.read_base(spark).filter(F.lit(False))
-    if table.table_type is TableType.MERGE_ON_READ and os.path.isdir(table.log_path):
-        log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
-        matched = matched.unionByName(
-            log.join(probe, on=keys, how="left_semi"), allowMissingColumns=True
-        )
-    resolved = latest_by_key(matched, keys, table.precombine)
-    if DELETED_COL in resolved.columns:
-        resolved = resolved.filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        ).drop(DELETED_COL)
-    return resolved
+    return table.resolve(matched, _log_rows(spark, table, probe))
 
 
 def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
@@ -418,9 +395,6 @@ def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
     ~one file per requested key on a clustered layout instead of a full
     partition scan. The MOR log is unioned unpruned because it is the
     small side by design (compaction keeps it so)."""
-    from hudi_utility_spark.table import DELETED_COL, TableType
-    from hudi_utility_spark.write import latest_by_key
-
     keys = table.record_key
     idx = spark.read.parquet(os.path.join(table.path, RECORD_INDEX_DIR))
     # materialize the point batch ONCE: it feeds three broadcast joins
@@ -444,16 +418,15 @@ def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
         matched = base.join(F.broadcast(kd), on=keys, how="left_semi")
     else:
         matched = table.read_base(spark).filter(F.lit(False))
-    if table.table_type is TableType.MERGE_ON_READ and os.path.isdir(table.log_path):
-        log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
-        log_matched = log.join(F.broadcast(kd), on=keys, how="left_semi")
-        matched = matched.unionByName(log_matched, allowMissingColumns=True)
-    resolved = latest_by_key(matched, keys, table.precombine)
-    if DELETED_COL in resolved.columns:
-        resolved = resolved.filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        ).drop(DELETED_COL)
-    return resolved
+    return table.resolve(matched, _log_rows(spark, table, F.broadcast(kd)))
+
+
+def _log_rows(spark: SparkSession, table, probe: DataFrame) -> DataFrame | None:
+    """The MOR log rows of the probed keys (``None`` without a log)."""
+    log = table.read_log(spark)
+    if log is None:
+        return None
+    return log.join(probe, on=table.record_key, how="left_semi")
 
 
 def refresh_indexes(spark: SparkSession, table) -> list[str]:

@@ -10,17 +10,44 @@ slow path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def _env_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` (default 32): a positive integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not re.fullmatch(r"\d+", raw) or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return raw
+
+
+def _env_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` (default 24g): a JVM size,
+    ``<digits>[kKmMgGtT]?``."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    if not re.fullmatch(r"\d+[kKmMgGtT]?", raw):
+        raise ValueError(
+            "SPARK_GRAFT_DRIVER_MEM must be a size like 4g, 512m or 1024, "
+            f"got {raw!r}"
+        )
+    return raw
+
 
 _DEFAULTS = {
     # local[32] runs every task in the driver JVM: the 1g default heap
     # GC-thrashes 32 concurrent tasks. Sized for the 128 GiB test box;
     # on a real cluster this is per-executor memory instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    "spark.driver.memory": _env_driver_mem(),
     # One shuffle partition per core locally; on a real cluster this would
     # be sized to ~2-3x total cores (AQE coalesces the excess anyway).
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    # Read at import, while get_spark reads SPARK_GRAFT_CPUS again for
+    # local[N]: perfbench/run.py imports this module before it defaults
+    # the variable to the core count, so its runs get local[nproc] with
+    # 32 partitions; 4 partitions measured 1.1-1.3x slower on its
+    # hot_small queries, CDC reads, lookups and MOR commits (4-core host).
+    "spark.sql.shuffle.partitions": _env_cpus(),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -155,7 +182,7 @@ def get_spark(app_name: str = "hudi_utility_spark", **conf: str) -> SparkSession
     configured by the caller's environment (e.g. spark-submit on a cluster).
     """
     _apply_pyshim()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _env_cpus()
     builder = SparkSession.builder.appName(app_name).master(
         os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     )

@@ -102,13 +102,7 @@ def stream_rollup_maintenance(
         with open(marker, "w") as f:
             f.write(until)
 
-    stream = (
-        spark.readStream.schema(
-            spark.read.option("mergeSchema", "true").parquet(table.log_path).schema
-        )
-        .option("mergeSchema", "true")
-        .parquet(table.log_path)
-    )
+    stream = table.read_log(spark, stream=True)
     return _start_sink(stream, _sink, checkpoint_dir, trigger_once)
 
 
@@ -321,13 +315,5 @@ def stream_replication(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         replicate_incremental(spark, src_table, dst_table)
 
-    stream = (
-        spark.readStream.schema(
-            spark.read.option("mergeSchema", "true")
-            .parquet(src_table.log_path)
-            .schema
-        )
-        .option("mergeSchema", "true")
-        .parquet(src_table.log_path)
-    )
+    stream = src_table.read_log(spark, stream=True)
     return _start_sink(stream, _sink, checkpoint_dir, trigger_once)

@@ -122,6 +122,52 @@ class KeyedTable:
             df = df.drop(_MOR_LOG_DIR)
         return df
 
+    def read_log(self, spark: SparkSession, stream: bool = False) -> DataFrame | None:
+        """The MOR delta log (every row version appended since the last
+        compaction), or ``None`` when the table has no log. ``stream``
+        returns it as a streaming source over the log's files instead,
+        with the schema of the log as it stands."""
+        if self.table_type is not TableType.MERGE_ON_READ or not os.path.isdir(
+            self.log_path
+        ):
+            return None
+        log = spark.read.option("mergeSchema", "true").parquet(self.log_path)
+        if stream:
+            reader = spark.readStream.schema(log.schema).option("mergeSchema", "true")
+            return reader.parquet(self.log_path)
+        return log
+
+    def resolve(
+        self,
+        *versions: DataFrame | None,
+        keep_tombstones: bool = False,
+        partial: bool = False,
+    ) -> DataFrame:
+        """The table's keyed semantics in one place: union the row
+        *versions* (``None`` entries skipped), keep one row per record
+        key — the latest by precombine (``latest_by_key``), or with
+        ``partial`` the column-wise fill of ``resolve_partial`` — and
+        drop keys whose winning version is a delete tombstone unless
+        ``keep_tombstones``. Snapshot reads, time travel, index lookups,
+        compaction and every COW commit resolve through here."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+
+        from hudi_utility_spark.write import latest_by_key, resolve_partial
+
+        merged = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [v for v in versions if v is not None],
+        )
+        pick = resolve_partial if partial else latest_by_key
+        resolved = pick(merged, self.record_key, self.precombine)
+        if DELETED_COL in resolved.columns and not keep_tombstones:
+            resolved = resolved.filter(
+                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+            ).drop(DELETED_COL)
+        return resolved
+
     def read(self, spark: SparkSession, keep_tombstones: bool = False) -> DataFrame:
         """Snapshot read: base ∪ delta-log resolved latest-by-key.
 
@@ -132,21 +178,11 @@ class KeyedTable:
         unless ``keep_tombstones`` (used by the cleaner, which must not
         reclaim an active tombstone lest the deleted row resurrect).
         """
-        from pyspark.sql import functions as F
-
-        from hudi_utility_spark.write import latest_by_key
-
         base = self.read_base(spark)
-        if self.table_type is TableType.MERGE_ON_READ and os.path.isdir(self.log_path):
-            log = spark.read.option("mergeSchema", "true").parquet(self.log_path)
-            merged = base.unionByName(log, allowMissingColumns=True)
-            resolved = latest_by_key(merged, self.record_key, self.precombine)
-            if DELETED_COL in resolved.columns and not keep_tombstones:
-                resolved = resolved.filter(
-                    ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-                ).drop(DELETED_COL)
-            return resolved
-        return base
+        log = self.read_log(spark)
+        if log is None:
+            return base
+        return self.resolve(base, log, keep_tombstones=keep_tombstones)
 
     # -- maintenance ----------------------------------------------------
     def cluster(
@@ -190,15 +226,15 @@ class KeyedTable:
         days and rewriting the table.
 
         Plan per run: one distinct over the (small) log's partition
-        column, precombine resolution over base∪log restricted to those
-        partitions (the isin lands on both scans as partition pruning),
-        one dynamic partition overwrite, then the folded log partition
-        dirs are removed (all-deleted partitions drop their base dir
-        too, as in ``delete_keys``). Partition identity is the FULL
-        partition-field tuple (see ``partition_paths``) and removed
-        directory names are Spark-escaped — first-field-only
-        bookkeeping or unescaped names would let tombstoned rows
-        resurface once the log is folded. Stored indexes are
+        columns, precombine resolution over base∪log restricted to those
+        partitions (the tuple predicate lands on both scans as partition
+        pruning), the COW commit's one dynamic partition overwrite
+        (``write._rewrite_cow``, which also drops base partitions left
+        with no row), then the folded log partition dirs are removed.
+        Partition identity is the FULL partition-field tuple (see
+        ``partition_paths``) and removed directory names are
+        Spark-escaped — first-field-only bookkeeping or unescaped names
+        would let tombstoned rows resurface once the log is folded. Stored indexes are
         invalidated (rebuild via ``index.refresh_indexes``), matching
         the whole-table path's ``_index`` drop.
 
@@ -215,17 +251,10 @@ class KeyedTable:
         partitioned table can force it by compacting via ``cluster()``
         (whole-table swap).
         """
-        if self.table_type is not TableType.MERGE_ON_READ:
+        log = self.read_log(spark)
+        if log is None:
             return
-        if not os.path.isdir(self.log_path):
-            return
-        from pyspark.sql import functions as F
-
-        from hudi_utility_spark.write import (
-            atomic_swap_dir,
-            latest_by_key,
-            write_partitioned,
-        )
+        from hudi_utility_spark.write import atomic_swap_dir, write_partitioned
 
         if self.partition_fields:
             import shutil
@@ -235,43 +264,28 @@ class KeyedTable:
                 partition_tuple_predicate,
                 remove_partition_leaves,
             )
+            from hudi_utility_spark.write import _rewrite_cow
 
-            log = spark.read.option("mergeSchema", "true").parquet(self.log_path)
             # FULL partition-field tuples, not partition_fields[0] alone:
             # with [p1, p2], an all-tombstoned leaf (A, y) is invisible to
             # first-field bookkeeping (A survives via (A, x)) — the stale
             # base leaf would outlive the folded log and resurrect its
             # deleted rows. `partitions` (a public first-field subset
             # selector) scopes by tuple[0].
-            log_tuples = set(distinct_partition_tuples(log, self.partition_fields))
             touched = {
                 t
-                for t in log_tuples
+                for t in distinct_partition_tuples(log, self.partition_fields)
                 if partitions is None or t[0] in set(partitions)
             }
             if not touched:
                 return
             pred = partition_tuple_predicate(self.partition_fields, touched)
-            base = self.read_base(spark).filter(pred)
-            merged = base.unionByName(
-                log.filter(pred), allowMissingColumns=True
-            )
-            resolved = latest_by_key(merged, self.record_key, self.precombine)
-            if DELETED_COL in resolved.columns:
-                resolved = resolved.filter(
-                    ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-                ).drop(DELETED_COL)
-            resolved = resolved.persist()  # the plan reads files the
-            # write replaces — materialize first (delete_keys contract)
-            survivors = set(
-                distinct_partition_tuples(resolved, self.partition_fields)
-            )
-            write_partitioned(
-                resolved, self.base_path, self.partition_fields, mode="overwrite"
-            )
-            resolved.unpersist()
-            remove_partition_leaves(
-                self.base_path, self.partition_fields, touched - survivors
+            _rewrite_cow(
+                self,
+                self.read_base(spark),
+                touched,
+                lambda scoped: self.resolve(scoped, log.filter(pred)),
+                "compact",
             )
             remove_partition_leaves(self.log_path, self.partition_fields, touched)
             # no data partitions left -> remove the whole log dir (a
@@ -289,7 +303,7 @@ class KeyedTable:
             spark.catalog.refreshByPath(self.path)
             return
 
-        resolved = self.read(spark)
+        resolved = self.resolve(self.read_base(spark), log)
         tmp = self.path.rstrip("/") + ".compact.tmp"
         write_partitioned(resolved, tmp, self.partition_fields, mode="overwrite")
         # the folded _delta_log and any stale _index go; locks and
@@ -297,15 +311,12 @@ class KeyedTable:
         # lease out from under TableServices' own critical section)
         atomic_swap_dir(tmp, self.path, drop_meta=(_MOR_LOG_DIR, "_index"))
 
-    def compact_if_needed(
-        self, spark: SparkSession, max_log_ratio: float = 0.2
-    ) -> bool:
-        """Hudi's compaction *scheduling* policy, size-triggered: fold
-        the log only when log bytes exceed ``max_log_ratio`` × base
-        bytes. The decision reads filesystem metadata only (no data
-        scan), so it is safe to call after every ingest batch — this is
-        the knob that keeps MOR read amplification bounded while keeping
-        ingest append-cheap. Returns True when a compaction ran."""
+    def needs_compaction(self, max_log_ratio: float = 0.2) -> bool:
+        """Hudi's compaction *scheduling* policy, size-triggered: True
+        when the MOR log's bytes exceed ``max_log_ratio`` × base bytes.
+        Reads filesystem metadata only (no data scan), so it is safe to
+        ask after every ingest batch — this is the knob that keeps MOR
+        read amplification bounded while keeping ingest append-cheap."""
         if self.table_type is not TableType.MERGE_ON_READ:
             return False
         if not os.path.isdir(self.log_path):
@@ -326,7 +337,14 @@ class KeyedTable:
             else _bytes(self.base_path),
             1,
         )
-        if log_b <= max_log_ratio * base_b:
+        return log_b > max_log_ratio * base_b
+
+    def compact_if_needed(
+        self, spark: SparkSession, max_log_ratio: float = 0.2
+    ) -> bool:
+        """Compact when :meth:`needs_compaction` says so. Returns True
+        when a compaction ran."""
+        if not self.needs_compaction(max_log_ratio):
             return False
         self.compact(spark)
         return True
@@ -449,9 +467,7 @@ class KeyedTable:
         """
         from dataclasses import replace
 
-        resolved = (
-            self.read(spark) if self.table_type is TableType.MERGE_ON_READ else self.read_base(spark)
-        )
+        resolved = self.read(spark)
         missing = [c for c in new_partition_fields if c not in resolved.columns]
         if missing:
             raise ValueError(f"partition fields not in schema: {missing}")

@@ -123,8 +123,6 @@ def rollback(spark: SparkSession, table: KeyedTable, instant: str) -> dict:
     Scale: one pruned scan + rewrite of the *log* (the small side of a
     MOR table by design); the base is untouched.
     """
-    import os
-
     if table.table_type is not TableType.MERGE_ON_READ:
         raise ValueError(
             "rollback requires a MERGE_ON_READ table: COPY_ON_WRITE "
@@ -138,9 +136,9 @@ def rollback(spark: SparkSession, table: KeyedTable, instant: str) -> dict:
                 f"base files contain commits after {instant} (compacted); "
                 "rollback target predates retained history"
             )
-    if not os.path.isdir(table.log_path):
+    log = table.read_log(spark)
+    if log is None:
         return {"instant": instant, "log_rows_kept": 0}
-    log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
     kept = log.filter(_commit_expr() <= F.lit(instant))
     n = _rewrite_log(spark, table, kept)
     return {"instant": instant, "log_rows_kept": n}
@@ -197,13 +195,9 @@ def clean(spark: SparkSession, table: KeyedTable, older_than: str) -> dict:
     against the resolved snapshot keyed on (record key, precombine,
     commit) — no collect, no O(commits) passes; then one log rewrite.
     """
-    import os
-
-    if table.table_type is not TableType.MERGE_ON_READ:
+    log = table.read_log(spark)
+    if log is None:
         return {"older_than": older_than, "log_rows_kept": 0}
-    if not os.path.isdir(table.log_path):
-        return {"older_than": older_than, "log_rows_kept": 0}
-    log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
     # keep_tombstones: an active delete marker IS the winning version of
     # its key — reclaiming it would resurrect the deleted row
     snap = table.read(spark, keep_tombstones=True)
@@ -247,28 +241,19 @@ def read_as_of(
             "read_as_of requires a MERGE_ON_READ table: COPY_ON_WRITE "
             "rewrites discard prior record versions"
         )
-    from hudi_utility_spark.table import DELETED_COL
-    from hudi_utility_spark.write import latest_by_key
 
-    import os
+    def _upto(versions: DataFrame | None) -> DataFrame | None:
+        if versions is None:
+            return None
+        if COMMIT_COL not in versions.columns:
+            versions = versions.withColumn(COMMIT_COL, F.lit(None).cast("string"))
+        return versions.filter(_commit_expr() <= F.lit(instant))
 
-    base = table.read_base(spark)
-    if COMMIT_COL not in base.columns:
-        base = base.withColumn(COMMIT_COL, F.lit(None).cast("string"))
-    merged = base
-    if os.path.isdir(table.log_path):
-        log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
-        merged = base.unionByName(log, allowMissingColumns=True)
-    resolved = latest_by_key(
-        merged.filter(_commit_expr() <= F.lit(instant)),
-        table.record_key,
-        table.precombine,
+    return table.resolve(
+        _upto(table.read_base(spark)),
+        _upto(table.read_log(spark)),
+        keep_tombstones=keep_tombstones,
     )
-    if DELETED_COL in resolved.columns and not keep_tombstones:
-        resolved = resolved.filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        ).drop(DELETED_COL)
-    return resolved
 
 
 def incremental_cdc(
@@ -302,12 +287,9 @@ def incremental_cdc(
     changed = after.filter(
         (_commit_expr() > F.lit(since)) & (_commit_expr() <= F.lit(hi))
     )
-    before = read_as_of(spark, table, since, keep_tombstones=True)
-    if DELETED_COL not in before.columns:
-        before = before.withColumn(DELETED_COL, F.lit(False))
-    before_alive = before.filter(
-        ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-    ).select(*table.record_key, F.lit(True).alias("__existed"))
+    before_alive = read_as_of(spark, table, since).select(
+        *table.record_key, F.lit(True).alias("__existed")
+    )
 
     joined = changed.join(before_alive, on=table.record_key, how="left")
     dead = F.coalesce(F.col(DELETED_COL), F.lit(False))

@@ -422,6 +422,105 @@ def append_partitions(
     return {"written_partitions": sorted(str(v) for v in partition_values)}
 
 
+def _touched(table: KeyedTable, df: DataFrame) -> set | None:
+    """Full partition tuples *df* writes to (``None`` when unpartitioned)."""
+    if not table.partition_fields:
+        return None
+    from hudi_utility_spark.partition_paths import distinct_partition_tuples
+
+    return set(distinct_partition_tuples(df, table.partition_fields))
+
+
+def _leaf_files(path: str) -> frozenset | None:
+    return frozenset(os.listdir(path)) if os.path.isdir(path) else None
+
+
+def _rewrite_cow(
+    table: KeyedTable, base: DataFrame, touched: set | None, rows_for, tag: str
+) -> None:
+    """The one COW commit: replace the *touched* partitions of the table
+    with ``rows_for(base restricted to them)``, where *base* is the
+    caller's ``read_base`` of the table.
+
+    Partitioned tables: the base is scoped by FULL, null-safe partition
+    tuples (``partition_tuple_predicate`` — ``isin`` on the first field
+    misses the NULL partition and sibling leaves), so the scan prunes to
+    the touched partitions and the resolution shuffles only their rows;
+    then one dynamic partition overwrite. Dynamic overwrite gives every
+    partition it writes new, job-stamped files and leaves the others
+    alone, so a touched leaf whose file listing is unchanged by the
+    write holds no surviving row: it is removed (dynamic overwrite
+    cannot erase a partition that ends up empty). That needs neither a
+    persist nor a second job over the rewritten rows.
+
+    Unpartitioned tables: full rewrite to ``<path>.<tag>.tmp`` and the
+    crash-safe ``atomic_swap_dir``. Either way an emptied table keeps
+    its schema (``preserve_schema_if_emptied``)."""
+    if not table.partition_fields:
+        rows = rows_for(base)
+        tmp = table.base_path.rstrip("/") + f".{tag}.tmp"
+        write_partitioned(rows, tmp, [], mode="overwrite")
+        atomic_swap_dir(tmp, table.base_path)
+    else:
+        from hudi_utility_spark.partition_paths import (
+            partition_leaf_dir,
+            partition_tuple_predicate,
+            remove_partition_leaves,
+        )
+
+        fields = table.partition_fields
+        rows = rows_for(base.filter(partition_tuple_predicate(fields, touched)))
+        leaves = {t: partition_leaf_dir(table.base_path, fields, t) for t in touched}
+        before = {t: _leaf_files(d) for t, d in leaves.items()}
+        write_partitioned(rows, table.base_path, fields, mode="overwrite")
+        remove_partition_leaves(
+            table.base_path,
+            fields,
+            [t for t, d in leaves.items() if _leaf_files(d) == before[t]],
+        )
+    preserve_schema_if_emptied(table, rows)
+
+
+def _upsert(
+    spark: SparkSession,
+    incoming: DataFrame,
+    table: KeyedTable,
+    commit_time: str | None,
+    partial: bool,
+) -> DataFrame:
+    from hudi_utility_spark.timeline import stamp
+
+    incoming = stamp(incoming, commit_time)
+    if not table.exists():
+        write_partitioned(incoming, table.base_path, table.partition_fields)
+        return table.read(spark)
+
+    # timestamp-flavor alignment with the existing table (no-op under
+    # the engine session; protects vanilla LTZ-default sessions)
+    base = table.read_base(spark)
+    incoming = align_timestamp_types(incoming, base.schema)
+
+    if table.table_type is TableType.MERGE_ON_READ:
+        # log append is cheap: no read-modify-write at ingest time
+        write_partitioned(incoming, table.log_path, table.partition_fields, mode="append")
+        return read_partial(spark, table) if partial else table.read(spark)
+
+    # Key uniqueness is per-partition (non-global index — untouched
+    # partitions are never rewritten), so rows outside the touched
+    # partitions cannot change the merge result: only those are read,
+    # re-windowed and rewritten. At 100 TB with daily partitions this is
+    # the difference between re-windowing ~1/1000 of the table and all
+    # of it.
+    _rewrite_cow(
+        table,
+        base,
+        _touched(table, incoming),
+        lambda scoped: table.resolve(scoped, incoming, partial=partial),
+        "upsert",
+    )
+    return table.read(spark)
+
+
 def upsert(
     spark: SparkSession,
     incoming: DataFrame,
@@ -440,45 +539,7 @@ def upsert(
     / ``timeline.read_as_of``; existing rows keep the instant of the
     upsert that last touched them.
     """
-    from hudi_utility_spark.timeline import stamp
-
-    incoming = stamp(incoming, commit_time)
-    if not table.exists():
-        write_partitioned(incoming, table.base_path, table.partition_fields)
-        return table.read(spark)
-
-    # timestamp-flavor alignment with the existing table (no-op under
-    # the engine session; protects vanilla LTZ-default sessions)
-    incoming = align_timestamp_types(incoming, table.read_base(spark).schema)
-
-    if table.table_type is TableType.MERGE_ON_READ:
-        # log append is cheap: no read-modify-write at ingest time
-        write_partitioned(incoming, table.log_path, table.partition_fields, mode="append")
-        return table.read(spark)
-
-    existing = table.read_base(spark)
-    if table.partition_fields:
-        # Key uniqueness is per-partition (non-global index — untouched
-        # partitions are never rewritten), so rows outside the touched
-        # partitions cannot change the merge result. Filter BEFORE the
-        # union: the isin lands on the parquet scan as partition pruning,
-        # so the precombine window shuffles only the touched partitions'
-        # rows instead of the whole table. At 100 TB with daily
-        # partitions this is the difference between re-windowing ~1/1000
-        # of the table and all of it.
-        pcol = table.partition_fields[0]
-        touched = [r[0] for r in incoming.select(pcol).distinct().collect()]
-        existing = existing.filter(F.col(pcol).isin(touched))
-        merged = existing.unionByName(incoming, allowMissingColumns=True)
-        affected = latest_by_key(merged, table.record_key, table.precombine)
-        write_partitioned(affected, table.base_path, table.partition_fields, mode="overwrite")
-    else:
-        merged = existing.unionByName(incoming, allowMissingColumns=True)
-        resolved = latest_by_key(merged, table.record_key, table.precombine)
-        tmp = table.base_path.rstrip("/") + ".upsert.tmp"
-        write_partitioned(resolved, tmp, [], mode="overwrite")
-        atomic_swap_dir(tmp, table.base_path)
-    return table.read(spark)
+    return _upsert(spark, incoming, table, commit_time, partial=False)
 
 
 def resolve_partial(df: DataFrame, keys: list[str], precombine: str) -> DataFrame:
@@ -488,12 +549,18 @@ def resolve_partial(df: DataFrame, keys: list[str], precombine: str) -> DataFram
     write-config surface exposes via payload class): order each key's
     versions by *precombine* ascending; every non-key column takes its
     LAST NON-NULL value, so a later writer that sets only some columns
-    inherits the rest instead of nulling them out.
+    inherits the rest instead of nulling them out. The delete tombstone
+    marker is the exception: it always comes from the winning version,
+    so a partial re-insert after a delete is alive (it still inherits
+    the pre-delete values of the columns it leaves NULL, since a
+    tombstone carries NULL there).
 
     One shuffle on the key columns (the same exchange `latest_by_key`
     pays — Catalyst reuses it for both windows since partitioning and
     ordering match); per-key state is O(1) per column. Ties on
     *precombine* are resolved arbitrarily, as in Hudi."""
+    from hudi_utility_spark.table import DELETED_COL
+
     if isinstance(keys, str):
         keys = [k.strip() for k in keys.split(",") if k.strip()]
     w = (
@@ -506,7 +573,9 @@ def resolve_partial(df: DataFrame, keys: list[str], precombine: str) -> DataFram
         *keys,
         precombine,
         *[
-            F.last(c, ignorenulls=True).over(w).alias(c)
+            F.col(c)
+            if c == DELETED_COL
+            else F.last(c, ignorenulls=True).over(w).alias(c)
             for c in df.columns
             if c not in fixed
         ],
@@ -521,45 +590,15 @@ def upsert_partial(
     commit_time: str | None = None,
 ) -> DataFrame:
     """Keyed merge where incoming NULL columns mean "keep the existing
-    value" — the partial-update flavor of :func:`upsert`. COW: union the
-    touched partitions with the incoming batch and rewrite them through
-    :func:`resolve_partial` (partition pruning before the union exactly
-    as `upsert` does). MOR: append to the delta log; read the
-    partial-resolved snapshot via :func:`read_partial`.
+    value" — :func:`upsert` resolved through :func:`resolve_partial`.
+    MOR: append to the delta log; read the partial-resolved snapshot
+    via :func:`read_partial`.
 
-    The rewrite MATERIALIZES the fill at write time, so subsequent plain
-    `table.read` snapshots are already column-complete — the partial
-    semantics never leak into later readers (same contract as Hudi
-    compacting a partial-update log)."""
-    from hudi_utility_spark.timeline import stamp
-
-    incoming = stamp(incoming, commit_time)
-    if not table.exists():
-        write_partitioned(incoming, table.base_path, table.partition_fields)
-        return table.read(spark)
-    incoming = align_timestamp_types(incoming, table.read_base(spark).schema)
-
-    if table.table_type is TableType.MERGE_ON_READ:
-        write_partitioned(incoming, table.log_path, table.partition_fields, mode="append")
-        return read_partial(spark, table)
-
-    existing = table.read_base(spark)
-    if table.partition_fields:
-        pcol = table.partition_fields[0]
-        touched = [r[0] for r in incoming.select(pcol).distinct().collect()]
-        existing = existing.filter(F.col(pcol).isin(touched))
-        merged = existing.unionByName(incoming, allowMissingColumns=True)
-        affected = resolve_partial(merged, table.record_key, table.precombine)
-        write_partitioned(
-            affected, table.base_path, table.partition_fields, mode="overwrite"
-        )
-    else:
-        merged = existing.unionByName(incoming, allowMissingColumns=True)
-        resolved = resolve_partial(merged, table.record_key, table.precombine)
-        tmp = table.base_path.rstrip("/") + ".upsert.tmp"
-        write_partitioned(resolved, tmp, [], mode="overwrite")
-        atomic_swap_dir(tmp, table.base_path)
-    return table.read(spark)
+    The COW rewrite MATERIALIZES the fill at write time, so subsequent
+    plain `table.read` snapshots are already column-complete — the
+    partial semantics never leak into later readers (same contract as
+    Hudi compacting a partial-update log)."""
+    return _upsert(spark, incoming, table, commit_time, partial=True)
 
 
 def read_partial(spark: SparkSession, table: KeyedTable) -> DataFrame:
@@ -567,11 +606,7 @@ def read_partial(spark: SparkSession, table: KeyedTable) -> DataFrame:
     base ∪ log resolved by :func:`resolve_partial` instead of the
     whole-row precombine window. COW tables resolve at write time, so
     this is only needed for MOR logs written by `upsert_partial`."""
-    base = table.read_base(spark)
-    if table.table_type is TableType.MERGE_ON_READ and os.path.isdir(table.log_path):
-        log = spark.read.option("mergeSchema", "true").parquet(table.log_path)
-        base = base.unionByName(log, allowMissingColumns=True)
-    return resolve_partial(base, table.record_key, table.precombine)
+    return table.resolve(table.read_base(spark), table.read_log(spark), partial=True)
 
 
 def delete_keys(
@@ -614,57 +649,20 @@ def delete_keys(
     )
     # tombstones union with base/log rows at read time — their timestamp
     # flavor must match the table's (no-op under the engine session)
-    tomb = align_timestamp_types(tomb, table.read_base(spark).schema)
+    base = table.read_base(spark)
+    tomb = align_timestamp_types(tomb, base.schema)
 
     if table.table_type is TableType.MERGE_ON_READ:
         write_partitioned(tomb, table.log_path, table.partition_fields, mode="append")
         return table.read(spark)
 
-    existing = table.read_base(spark)
-    not_dead = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-    if table.partition_fields:
-        from hudi_utility_spark.partition_paths import (
-            distinct_partition_tuples,
-            partition_tuple_predicate,
-            remove_partition_leaves,
-        )
-
-        # full-tuple identity: first-field-only touched/survivor sets
-        # miss an all-deleted leaf sub-partition (its first-level value
-        # survives via a sibling leaf), leaving stale base files behind
-        touched = set(distinct_partition_tuples(tomb, table.partition_fields))
-        scoped = existing.filter(
-            partition_tuple_predicate(table.partition_fields, touched)
-        )
-        merged = scoped.unionByName(tomb, allowMissingColumns=True)
-        kept = (
-            latest_by_key(merged, table.record_key, table.precombine)
-            .filter(not_dead)
-            .drop(DELETED_COL)
-            .persist()  # materialize BEFORE the overwrite: the plan reads
-            # the very files the write replaces, so both the write and the
-            # survivor listing must not re-scan the old base
-        )
-        survivors = set(distinct_partition_tuples(kept, table.partition_fields))
-        write_partitioned(kept, table.base_path, table.partition_fields, mode="overwrite")
-        kept.unpersist()
-        # dynamic overwrite can't erase a partition that ends up empty —
-        # drop those leaf directories explicitly (Spark-escaped names)
-        remove_partition_leaves(
-            table.base_path, table.partition_fields, touched - survivors
-        )
-        preserve_schema_if_emptied(table, kept)
-    else:
-        merged = existing.unionByName(tomb, allowMissingColumns=True)
-        kept = (
-            latest_by_key(merged, table.record_key, table.precombine)
-            .filter(not_dead)
-            .drop(DELETED_COL)
-        )
-        tmp = table.base_path.rstrip("/") + ".delete.tmp"
-        write_partitioned(kept, tmp, [], mode="overwrite")
-        atomic_swap_dir(tmp, table.base_path)
-        preserve_schema_if_emptied(table, kept)
+    _rewrite_cow(
+        table,
+        base,
+        _touched(table, tomb),
+        lambda scoped: table.resolve(scoped, tomb),
+        "delete",
+    )
     return table.read(spark)
 
 
@@ -713,10 +711,10 @@ def merge_into(
     instead of the MERGE predicates.
 
     Scale: one full-outer shuffle join on the record key over the
-    source-touched partitions only (the isin lands on the scan as
-    partition pruning, exactly like :func:`upsert`), then a dynamic
-    partition overwrite of those partitions. Untouched partitions are
-    never read or written.
+    source-touched partitions only (the partition-tuple predicate lands
+    on the scan as partition pruning, exactly like :func:`upsert`), then
+    a dynamic partition overwrite of those partitions. Untouched
+    partitions are never read or written.
     """
     from hudi_utility_spark.timeline import new_instant
 
@@ -740,8 +738,8 @@ def merge_into(
         table.compact(spark)
 
     instant = commit_time or new_instant()
-    existing = table.read_base(spark)
-    source = align_timestamp_types(source, existing.schema)
+    base = table.read_base(spark)
+    source = align_timestamp_types(source, base.schema)
 
     # Source-duplicate guard: N source rows per key would fan one target
     # row out N ways and write duplicate keys into a keyed table (Spark
@@ -766,103 +764,70 @@ def merge_into(
                 "dedup the source or include the precombine field"
             )
 
-    touched: set | None = None
-    if table.partition_fields:
-        from hudi_utility_spark.partition_paths import (
-            distinct_partition_tuples,
-            partition_tuple_predicate,
+    def _merged(existing: DataFrame) -> DataFrame:
+        t = existing.withColumn("_t_ex", F.lit(True)).alias("t")
+        s = source.withColumn("_s_ex", F.lit(True)).alias("s")
+        on = F.lit(True)
+        for k in table.record_key:
+            on = on & (F.col(f"t.{k}") == F.col(f"s.{k}"))
+        j = t.join(s, on, "full_outer")
+
+        matched = F.col("t._t_ex").isNotNull() & F.col("s._s_ex").isNotNull()
+        s_only = F.col("t._t_ex").isNull()
+
+        def _gate(cond: str) -> F.Column:
+            # SQL MERGE semantics: a WHEN clause whose predicate evaluates
+            # to NULL is NOT taken. Without the coalesce, `~NULL` is NULL
+            # and the filter below would silently DROP the row (i.e. a NULL
+            # delete_condition value would delete data).
+            return F.coalesce(F.expr(cond), F.lit(False))
+
+        del_gate = (
+            matched & _gate(delete_condition)
+            if delete_condition
+            else F.lit(False)
         )
-
-        # full partition tuples (see delete_keys): a merge whose deletes
-        # empty a leaf sub-partition must remove that exact leaf dir
-        touched = set(distinct_partition_tuples(source, table.partition_fields))
-        existing = existing.filter(
-            partition_tuple_predicate(table.partition_fields, touched)
+        upd_gate = (
+            (matched & _gate(update_condition))
+            if (update_set and update_condition)
+            else (matched if update_set else F.lit(False))
         )
+        ins_gate = (
+            (s_only & _gate(insert_condition)) if insert_condition else s_only
+        )
+        j = j.filter(~del_gate & ~(s_only & ~ins_gate))
 
-    t = existing.withColumn("_t_ex", F.lit(True)).alias("t")
-    s = source.withColumn("_s_ex", F.lit(True)).alias("s")
-    on = F.lit(True)
-    for k in table.record_key:
-        on = on & (F.col(f"t.{k}") == F.col(f"s.{k}"))
-    j = t.join(s, on, "full_outer")
+        from hudi_utility_spark.timeline import COMMIT_COL
 
-    matched = F.col("t._t_ex").isNotNull() & F.col("s._s_ex").isNotNull()
-    s_only = F.col("t._t_ex").isNull()
-
-    def _gate(cond: str) -> F.Column:
-        # SQL MERGE semantics: a WHEN clause whose predicate evaluates
-        # to NULL is NOT taken. Without the coalesce, `~NULL` is NULL
-        # and the filter below would silently DROP the row (i.e. a NULL
-        # delete_condition value would delete data).
-        return F.coalesce(F.expr(cond), F.lit(False))
-
-    del_gate = (
-        matched & _gate(delete_condition)
-        if delete_condition
-        else F.lit(False)
-    )
-    upd_gate = (
-        (matched & _gate(update_condition))
-        if (update_set and update_condition)
-        else (matched if update_set else F.lit(False))
-    )
-    ins_gate = (
-        (s_only & _gate(insert_condition)) if insert_condition else s_only
-    )
-    j = j.filter(~del_gate & ~(s_only & ~ins_gate))
-
-    from hudi_utility_spark.timeline import COMMIT_COL
-
-    cols = []
-    for f in existing.schema.fields:
-        c = f.name
-        if c == "_t_ex":
-            continue
-        t_c = F.col(f"t.{c}")
-        if c == COMMIT_COL:
-            upd_val = ins_val = F.lit(instant)
-        else:
-            upd_val = (
-                F.expr(update_set[c]) if update_set and c in update_set else t_c
-            )
-            if insert_values and c in insert_values:
-                ins_val = F.expr(insert_values[c])
-            elif c in source.columns:
-                ins_val = F.col(f"s.{c}")
+        cols = []
+        for f in existing.schema.fields:
+            c = f.name
+            if c == "_t_ex":
+                continue
+            t_c = F.col(f"t.{c}")
+            if c == COMMIT_COL:
+                upd_val = ins_val = F.lit(instant)
             else:
-                ins_val = F.lit(None)
-        out = (
-            F.when(upd_gate, upd_val)
-            .when(matched | ~s_only, t_c)
-            .otherwise(ins_val)
-            .cast(f.dataType)
-            .alias(c)
-        )
-        cols.append(out)
-    result = j.select(*cols)
+                upd_val = (
+                    F.expr(update_set[c]) if update_set and c in update_set else t_c
+                )
+                if insert_values and c in insert_values:
+                    ins_val = F.expr(insert_values[c])
+                elif c in source.columns:
+                    ins_val = F.col(f"s.{c}")
+                else:
+                    ins_val = F.lit(None)
+            out = (
+                F.when(upd_gate, upd_val)
+                .when(matched | ~s_only, t_c)
+                .otherwise(ins_val)
+                .cast(f.dataType)
+                .alias(c)
+            )
+            cols.append(out)
+        return j.select(*cols)
 
-    if table.partition_fields:
-        from hudi_utility_spark.partition_paths import (
-            distinct_partition_tuples,
-            remove_partition_leaves,
-        )
-
-        kept = result.persist()  # the plan reads the files the write
-        # replaces — materialize before the overwrite (same contract as
-        # delete_keys)
-        survivors = set(distinct_partition_tuples(kept, table.partition_fields))
-        write_partitioned(kept, table.base_path, table.partition_fields, mode="overwrite")
-        kept.unpersist()
-        remove_partition_leaves(
-            table.base_path, table.partition_fields, (touched or set()) - survivors
-        )
-        preserve_schema_if_emptied(table, kept)
-    else:
-        tmp = table.base_path.rstrip("/") + ".merge.tmp"
-        write_partitioned(result, tmp, [], mode="overwrite")
-        atomic_swap_dir(tmp, table.base_path)
-        preserve_schema_if_emptied(table, result)
+    _rewrite_cow(table, base, _touched(table, source), _merged, "merge")
     return table.read(spark)
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hudi_utility_spark.api import Engine
@@ -283,3 +285,37 @@ def test_table_services_export_restore(spark, tmp_path):
     )
     svc.restore_from(str(tmp_path / "bkup"))
     assert svc.read().count() == 1
+
+
+def test_compact_if_needed_ledgers_only_when_it_compacts(spark, tmp_path):
+    from hudi_utility_spark.api import Engine, TableServices
+    from hudi_utility_spark.table import KeyedTable, TableType
+
+    eng = Engine(spark, str(tmp_path / "ledger"))
+    svc = TableServices(
+        eng,
+        KeyedTable(
+            path=str(tmp_path / "t"),
+            record_key=["id"],
+            precombine="ts",
+            partition_fields=["p"],
+            table_type=TableType.MERGE_ON_READ,
+            name="cin_svc",
+        ),
+    )
+    schema = "id int, p string, ts int, v double"
+    svc.upsert(spark.createDataFrame([(i, "a", 1, 1.0) for i in range(50)], schema))
+    svc.upsert(spark.createDataFrame([(1, "a", 2, 2.0)], schema))
+
+    def ledgered():
+        return eng.history(transaction_id_like="cin_svc").count()
+
+    before = ledgered()
+    assert svc.compact_if_needed(max_log_ratio=100.0) is False
+    assert ledgered() == before
+    assert os.path.isdir(svc.table.log_path)
+
+    assert svc.compact_if_needed(max_log_ratio=0.0) is True
+    assert ledgered() == before + 1
+    assert not os.path.isdir(svc.table.log_path)
+    assert {r.id: r.v for r in svc.read().collect()}[1] == 2.0

@@ -247,3 +247,34 @@ def test_tuple_predicate_balanced_depth_and_exactness(spark):
     assert [(r["a"], r["b"]) for r in df2.filter(pred2).collect()] == [(None, 7)]
     with pytest.raises(ValueError):
         pp.partition_tuple_predicate([], [(1,)])
+
+
+@pytest.mark.parametrize("op", ["upsert", "upsert_partial"])
+def test_cow_upsert_into_null_partition_keeps_its_other_rows(spark, tmp_path, op):
+    """The COW rewrite scopes the base by null-safe partition tuples: an
+    ``isin`` on the partition value never matches the NULL partition
+    (``__HIVE_DEFAULT_PARTITION__``), so the rewrite of that partition
+    used to hold only the incoming rows and drop its other keys."""
+    import hudi_utility_spark.write as W
+
+    table = KeyedTable(
+        path=str(tmp_path / "t"),
+        record_key=["id"],
+        precombine="ts",
+        partition_fields=["p"],
+        table_type=TableType.COPY_ON_WRITE,
+    )
+    schema = "id int, p string, ts int, v double"
+    upsert(
+        spark,
+        spark.createDataFrame(
+            [(1, None, 1, 1.0), (2, None, 1, 2.0), (3, "a", 1, 3.0)], schema
+        ),
+        table,
+        commit_time="1",
+    )
+    getattr(W, op)(
+        spark, spark.createDataFrame([(1, None, 2, 10.0)], schema), table, commit_time="2"
+    )
+    got = {r.id: (r.p, r.v) for r in table.read(spark).collect()}
+    assert got == {1: (None, 10.0), 2: (None, 2.0), 3: ("a", 3.0)}

@@ -370,7 +370,9 @@ _MERGE_SOURCE = st.lists(
 
 @given(target=_MERGE_TARGET, source=_MERGE_SOURCE)
 @_SETTINGS
-def test_merge_into_matches_reference_model(spark, target, source, tmp_path_factory):
+def test_merge_into_unpartitioned_matches_reference_model(
+    spark, target, source, tmp_path_factory
+):
     from hudi_utility_spark.table import KeyedTable, TableType
     from hudi_utility_spark.write import merge_into, upsert
 

@@ -535,3 +535,63 @@ def test_delete_last_row_leaves_readable_empty_table(spark, tmp_path):
         delete_condition="true",
     )
     assert t2.read(spark).count() == 0
+
+
+def test_resolve_partial_takes_tombstone_from_the_winner(spark):
+    """``_deleted`` is never filled forward: a partial re-insert after a
+    delete is alive. Columns the re-insert leaves NULL still inherit
+    their pre-delete values (a tombstone carries NULL there)."""
+    from hudi_utility_spark.write import resolve_partial
+
+    rows = [
+        (1, 1, 1.0, None),   # insert
+        (1, 2, None, True),  # delete
+        (1, 3, None, None),  # partial re-insert
+        (2, 1, 7.0, None),
+        (2, 2, None, True),  # deleted, stays deleted
+    ]
+    df = spark.createDataFrame(rows, "id INT, pc INT, a DOUBLE, _deleted BOOLEAN")
+    got = {
+        r.id: (r.pc, r.a, r._deleted)
+        for r in resolve_partial(df, ["id"], "pc").collect()
+    }
+    assert got == {1: (3, 1.0, None), 2: (2, 7.0, True)}
+
+
+def test_mor_read_partial_drops_deleted_keys(spark, tmp_path):
+    from hudi_utility_spark.table import KeyedTable, TableType
+    from hudi_utility_spark.write import delete_keys, read_partial, upsert, upsert_partial
+
+    table = KeyedTable(
+        path=str(tmp_path / "t"),
+        record_key=["id"],
+        precombine="ts",
+        partition_fields=["p"],
+        table_type=TableType.MERGE_ON_READ,
+    )
+    schema = "id int, p string, ts int, v double"
+    upsert(
+        spark,
+        spark.createDataFrame([(1, "a", 1, 1.0), (2, "a", 1, 2.0)], schema),
+        table,
+        commit_time="1",
+    )
+    delete_keys(
+        spark,
+        spark.createDataFrame([(1, "a", 2)], "id int, p string, ts int"),
+        table,
+        commit_time="2",
+    )
+    snap = read_partial(spark, table)
+    assert "_deleted" not in snap.columns
+    assert {r.id for r in snap.collect()} == {2}
+
+    # a partial re-insert after the delete is alive again
+    upsert_partial(
+        spark,
+        spark.createDataFrame([(1, "a", 3, None)], schema),
+        table,
+        commit_time="3",
+    )
+    got = {r.id: r.v for r in read_partial(spark, table).collect()}
+    assert got == {1: 1.0, 2: 2.0}
