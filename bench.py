@@ -426,26 +426,6 @@ def main() -> None:
         )
     if errors:
         out["errors"] = errors
-    # build-vs-probe attribution for write-lifecycle queries: the query
-    # body stamps its eager build seconds into queries.PHASES during the
-    # timed pass (last run wins); probe = blended total - build. Makes a
-    # "2.5x regression" attributable to load on the build side vs a
-    # genuinely slower probe plan.
-    try:
-        from hudi_utility_spark.queries import PHASES as _phases
-
-        phase_out = {}
-        for qname, ph in _phases.items():
-            tot = timings.get(qname, tail_timings.get(qname))
-            if tot is not None and "build" in ph:
-                phase_out[qname] = {
-                    "build": ph["build"],
-                    "probe": round(max(0.0, tot - ph["build"]), 3),
-                }
-        if phase_out:
-            out["phases"] = phase_out
-    except Exception:
-        pass
     # The full per-query line is ~3.5 KB — longer than the driver's
     # output-tail capture, which truncated it to unparseable in r4. So:
     # (1) persist the complete record to BENCH_LOCAL.json next to this

@@ -191,24 +191,30 @@ def resolve_source(spark: SparkSession, path_or_table: str) -> SourceInfo:
 
 @lru_cache(maxsize=None)
 def _nanos_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet timestamp[ns] (driver-side footer peek)."""
-    try:
-        import pyarrow.parquet as pq
+    """Columns stored as parquet timestamp[ns] (driver-side footer peek).
 
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _d, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-            if not files:
-                return ()
-            path = sorted(files)[0]
+    A path this process cannot open (a remote URI, a missing file) has
+    none; a file that is not parquet raises with its path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        files = [
+            os.path.join(root, f)
+            for root, _d, fs in os.walk(path)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        if not files:
+            return ()
+        path = sorted(files)[0]
+    try:
         schema = pq.read_schema(path)
-        return tuple(f.name for f in schema if str(f.type) == "timestamp[ns]")
-    except Exception:
+    except OSError:
         return ()
+    except pa.ArrowInvalid as exc:
+        raise ValueError(f"unreadable parquet footer in {path}: {exc}") from exc
+    return tuple(f.name for f in schema if str(f.type) == "timestamp[ns]")
 
 
 def _strip_scheme(path: str) -> str:

@@ -126,12 +126,11 @@ def maintain_rollup(
             ).alias("sum_value"),
         )
         .filter(F.col("cnt") > 0)
-        .persist()  # the write below replaces the files `old` reads
     )
-    merged.count()
+    # the write goes to a tmp dir and the swap follows it, so `old`'s
+    # files stay in place while `merged` reads them
     tmp = rollup_path.rstrip("/") + ".maint.tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    merged.unpersist()
     from hudi_utility_spark.write import atomic_swap_dir
 
     atomic_swap_dir(tmp, rollup_path)

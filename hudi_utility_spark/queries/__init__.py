@@ -30,19 +30,6 @@ ORACLES: dict[str, str] = {}
 # (ADVICE r8).
 SEQUENTIAL: set[str] = set()
 
-# Sub-phase wall-clock reported by queries whose body spans a write
-# LIFECYCLE (bootstrap/upsert/index build) plus a PROBE: the lifecycle
-# runs eagerly inside the query function and stamps its seconds here;
-# bench.py subtracts it from the query total to attribute build vs
-# probe (r9 verdict #4 — a 2.5x swing in index_point_lookup was
-# unattributable with one blended number). Last run wins per query.
-PHASES: dict[str, dict[str, float]] = {}
-
-
-def record_phase(name: str, phase: str, seconds: float) -> None:
-    """Stamp a sub-phase duration for *name* (see ``PHASES``)."""
-    PHASES.setdefault(name, {})[phase] = round(seconds, 3)
-
 
 def events_table(
     path: str, table_type: TableType = TableType.MERGE_ON_READ
@@ -95,69 +82,6 @@ def fresh_scratch(sf_dir: str, name: str) -> str:
     )
     _shutil.rmtree(root, ignore_errors=True)
     return root
-
-
-def forensic_active(sf_dir: str, table: str, max_rows: int) -> bool:
-    """Forensics (below) only run at correctness-check scale: the
-    driver's oracle draws run at the small SFs, where the per-row
-    stderr dump is the point; at bench SFs the collect+localize adds
-    ~0.7-1 s per invocation for nothing (measured at sf0.1), so the
-    query returns its plain distributed plan there. The row count comes
-    from the parquet FOOTER — no Spark job."""
-    import os as _os
-
-    try:
-        import pyarrow.parquet as _pq
-
-        n = _pq.ParquetFile(
-            _os.path.join(sf_dir, f"{table}.parquet")
-        ).metadata.num_rows
-    except Exception:
-        return True  # unknown input: keep the forensics
-    return n <= max_rows
-
-
-def forensic_return(name: str, spark: SparkSession, out: DataFrame,
-                    row_cap: int = 600) -> DataFrame:
-    """Driver-red forensics (the er_sorted_neighborhood pattern, VERDICT
-    r12 ask #1): materialize *out* once, print an environment stamp, an
-    order-independent row digest, and — when the result is small — every
-    row to stderr, then return the collected rows verbatim. The printed
-    rows ARE what the driver hashes, so a session red names the exact
-    differing values instead of an opaque hash mismatch. Only for
-    queries whose output is bounded enough to collect at any SF (the
-    callers are grouped-by-small-domain aggregates or per-document
-    metadata ≤ O(10k) slim rows)."""
-    import hashlib as _hl
-    import sys as _sys
-
-    import pyspark as _pyspark
-
-    rows = out.collect()
-    lines = [
-        "|".join("NULL" if v is None else str(v) for v in r) for r in rows
-    ]
-    digest = _hl.sha256("\n".join(sorted(lines)).encode()).hexdigest()[:16]
-    try:
-        import duckdb as _duckdb
-
-        _dk = _duckdb.__version__
-    except Exception:  # pragma: no cover - duckdb optional at runtime
-        _dk = "?"
-    try:
-        import numpy as _np
-
-        _npv = _np.__version__
-    except Exception:  # pragma: no cover
-        _npv = "?"
-    msg = (
-        f"{name} env: pyspark={_pyspark.__version__} duckdb={_dk} "
-        f"numpy={_npv} digest={digest} n={len(rows)}"
-    )
-    if len(rows) <= row_cap:
-        msg += " rows=" + ";".join(lines)
-    print(msg, file=_sys.stderr)
-    return spark.createDataFrame(rows, out.schema)
 
 
 def query(name: str, oracle: str | None = None, sequential: bool = False):

@@ -194,8 +194,8 @@ def er_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT block,
            COUNT(*) AS cand_pairs,
-           SUM(CASE WHEN levenshtein(l_key, r_key) <= 2 THEN 1 ELSE 0 END)
-               AS matched
+           CAST(SUM(CASE WHEN levenshtein(l_key, r_key) <= 2 THEN 1 ELSE 0 END)
+                AS BIGINT) AS matched
     FROM pairs GROUP BY block ORDER BY block
     """,
 )
@@ -239,7 +239,7 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     pairs = er.sorted_neighborhood_pairs(r, "block", "key", "rid", window=2)
-    out = (
+    return (
         pairs.groupBy("block")
         .agg(
             F.count(F.lit(1)).alias("cand_pairs"),
@@ -249,32 +249,6 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("block")
     )
-    # Driver-red forensics (r11: this fully deterministic query drew a
-    # red hash on its first driver draw, yet matched the DuckDB oracle
-    # 100/100 rows in an independent local rerun — the divergence is
-    # session-environmental, not algorithmic). Materialize once, print
-    # every per-block row plus a digest to stderr so the next driver
-    # transcript shows EXACTLY which blocks differ, and return the
-    # collected rows verbatim so the printed rows ARE what gets hashed.
-    # 100 rows at any SF (block = last-2-digits), so this is O(1).
-    import hashlib as _hl
-    import sys as _sys
-
-    import duckdb as _duckdb
-    import pyspark as _pyspark
-
-    rows = out.collect()
-    lines = [
-        f"{r['block']}|{r['cand_pairs']}|{r['matched']}" for r in rows
-    ]
-    digest = _hl.sha256("\n".join(lines).encode()).hexdigest()[:16]
-    print(
-        f"er_sorted_neighborhood env: pyspark={_pyspark.__version__} "
-        f"duckdb={_duckdb.__version__} digest={digest} "
-        f"rows={';'.join(lines)}",
-        file=_sys.stderr,
-    )
-    return spark.createDataFrame(rows, out.schema)
 
 
 @query(

@@ -11,12 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.ops import multimodal as M
-from hudi_utility_spark.queries import (
-    forensic_active,
-    forensic_return,
-    query,
-    scratch_base,
-)
+from hudi_utility_spark.queries import query, scratch_base
 from hudi_utility_spark.tables import load_table
 
 
@@ -176,7 +171,8 @@ def mm_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(16 AS BIGINT) AS bits_per_sample,
            MIN(q.n_samples) AS n_samples,
            MIN(q.n_samples * 1000 // q.sample_rate) AS duration_ms,
-           SUM(((q.doc_id * 31 + 7 * t.i) % 65536) - 32768) AS pcm_sum
+           CAST(SUM(((q.doc_id * 31 + 7 * t.i) % 65536) - 32768) AS BIGINT)
+               AS pcm_sum
     FROM q JOIN range(0, 500) t(i) ON t.i < q.n_samples * q.channels
     GROUP BY q.doc_id
     """,
@@ -194,7 +190,7 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enters a shuffle."""
     params = _wav_params(spark, sf_dir)
     wav = M.synth_wav(params)
-    out = M.decode_wav_meta(wav).select(
+    return M.decode_wav_meta(wav).select(
         "media_id",
         "sample_rate",
         "channels",
@@ -203,14 +199,6 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "duration_ms",
         "pcm_sum",
     )
-    # r12 first-draw driver red on untouched all-integer code (rows and
-    # schema matched, hash didn't) — print env + per-row values so the
-    # next driver transcript names the exact drift. Active only at
-    # correctness scale (driver oracle draws run at the small SFs);
-    # the bench keeps the plain distributed plan.
-    if forensic_active(sf_dir, "documents", 1000):
-        return forensic_return("mm_wav_decode", spark, out)
-    return out
 
 
 @query(
@@ -330,9 +318,10 @@ def mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT sample_rate,
            COUNT(*) AS n_files,
-           SUM(n_samples * 1000 // sample_rate) AS total_ms,
-           SUM(n_samples * channels) AS total_samples,
-           SUM(CASE WHEN channels = 2 THEN 1 ELSE 0 END) AS stereo_files
+           CAST(SUM(n_samples * 1000 // sample_rate) AS BIGINT) AS total_ms,
+           CAST(SUM(n_samples * channels) AS BIGINT) AS total_samples,
+           CAST(SUM(CASE WHEN channels = 2 THEN 1 ELSE 0 END) AS BIGINT)
+               AS stereo_files
     FROM q GROUP BY sample_rate
     """,
 )
@@ -346,7 +335,7 @@ def mm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial-combine shuffle of |rates| rows."""
     params = _wav_params(spark, sf_dir)
     decoded = M.decode_wav_meta(M.synth_wav(params))
-    out = decoded.groupBy("sample_rate").agg(
+    return decoded.groupBy("sample_rate").agg(
         F.count(F.lit(1)).alias("n_files"),
         F.sum("duration_ms").alias("total_ms"),
         F.sum(F.col("n_samples") * F.col("channels")).alias("total_samples"),
@@ -354,11 +343,6 @@ def mm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stereo_files"
         ),
     )
-    # r12 first-draw driver red (all-integer aggregate, rows/schema
-    # matched) — same forensics as mm_wav_decode; ≤5 rows at any SF.
-    if forensic_active(sf_dir, "documents", 1000):
-        return forensic_return("mm_audio_stats", spark, out)
-    return out
 
 
 @query(

@@ -1212,7 +1212,8 @@ def dq_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM t
     )
     SELECT bin, CAST(n AS BIGINT) AS n,
-           ROUND(pos, 6) AS pos, ROUND(neg, 6) AS neg,
+           CAST(ROUND(pos, 6) AS DOUBLE) AS pos,
+           CAST(ROUND(neg, 6) AS DOUBLE) AS neg,
            ROUND(woe, 6) AS woe,
            ROUND(SUM(contrib) OVER (), 6) AS iv
     FROM w
@@ -2855,7 +2856,7 @@ def dq_candidate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dq_cross_field_rules",
     """
-    SELECT rule, n_checked, violations,
+    SELECT rule, n_checked, CAST(violations AS BIGINT) AS violations,
            ROUND(violations * 1.0 / n_checked, 6) AS violation_rate
     FROM (
       SELECT 'l_shipdate >= o_orderdate' AS rule,

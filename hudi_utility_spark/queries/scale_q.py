@@ -135,12 +135,7 @@ def index_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hudi_utility_spark.write import write_sorted_partitioned
 
     root = fresh_scratch(sf_dir, "idx_skip")
-    import time as _time
-
-    from hudi_utility_spark.queries import record_phase
-
     li = load_table(spark, sf_dir, "lineitem")
-    _t0 = _time.perf_counter()
     write_sorted_partitioned(
         li, root, ["l_returnflag"], ["l_orderkey"], num_files=16
     )
@@ -148,11 +143,6 @@ def index_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the production stats path (guide §6); pinned scan-build-identical
     # by tests/test_index.py::test_footer_built_index_matches_scan_built
     index.build_column_stats_from_footers(spark, root, ["l_orderkey"])
-    # build = eager write lifecycle + stats index; bench.py subtracts it
-    # from the query total so the PROBE cost is attributable on its own
-    record_phase(
-        "index_file_skipping_scan", "build", _time.perf_counter() - _t0
-    )
     pruned = index.read_with_skipping(spark, root, "l_orderkey", 1000, 2000)
     return (
         pruned.groupBy("l_returnflag")
@@ -186,14 +176,8 @@ def index_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    import time as _time
-
-    from hudi_utility_spark.queries import record_phase
-
-    _t0 = _time.perf_counter()
     upsert(spark, events, table, commit_time="20260101000000001")
     index.build_record_index(spark, table)
-    record_phase("index_point_lookup", "build", _time.perf_counter() - _t0)
     wanted = events.filter(F.col("event_id") % 97 == 0).select("event_id")
     got = index.point_lookup(spark, table, wanted)
     return got.select("event_id", "event_type", F.round("value", 2).alias("value"))
@@ -225,14 +209,8 @@ def index_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    import time as _time
-
-    from hudi_utility_spark.queries import record_phase
-
-    _t0 = _time.perf_counter()
     upsert(spark, events, table, commit_time="20260101000000001")
     index.build_bloom_index(spark, table)
-    record_phase("index_bloom_lookup", "build", _time.perf_counter() - _t0)
     wanted = events.filter(F.col("event_id") % 89 == 0).select("event_id")
     got = index.bloom_lookup(spark, table, wanted)
     return got.select("event_id", "event_type", F.round("value", 2).alias("value"))
@@ -263,15 +241,11 @@ def zorder_two_dim_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = fresh_scratch(sf_dir, "zorder")
     li = load_table(spark, sf_dir, "lineitem")
     # file count derived from input size, not a constant (guide §6: a
-    # hard-coded 16 means 4 MB files at sf0.1 and 6 TB files at 100 TB).
-    # Local default targets ~8 MB/file — small enough that the
-    # skipping index has real pruning granularity at test SFs, floor 8;
-    # production sets SPARK_GRAFT_ZORDER_FILE_BYTES to 128-512 MB.
-    target = int(
-        os.environ.get("SPARK_GRAFT_ZORDER_FILE_BYTES", str(8 << 20))
-    )
+    # hard-coded 16 means 4 MB files at sf0.1 and 6 TB files at 100 TB):
+    # ~8 MB per file, floor 8, so the skipping index has real pruning
+    # granularity at test SFs
     src_bytes = os.path.getsize(os.path.join(sf_dir, "lineitem.parquet"))
-    n_files = max(8, src_bytes // target)
+    n_files = max(8, src_bytes // (8 << 20))
     write_zordered(li, root, ["l_orderkey", "l_partkey"], num_files=n_files)
     # footer-metadata stats build — zero data IO (see index_file_skipping_scan)
     index.build_column_stats_from_footers(spark, root, ["l_orderkey", "l_partkey"])

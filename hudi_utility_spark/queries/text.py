@@ -651,7 +651,7 @@ def pipeline_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id,
            COUNT(*) AS n_spans,
-           SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS n_kept,
+           CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
            COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk_text END,
                                ' ' ORDER BY chunk_idx), '') AS rebuilt
     FROM flagged GROUP BY doc_id
@@ -792,7 +792,7 @@ def text_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     nz AS (SELECT doc_id, ch FROM chars WHERE ch <> ''),
     counts AS (SELECT doc_id, ch, COUNT(*) AS c FROM nz GROUP BY doc_id, ch)
     SELECT doc_id,
-           SUM(c) AS n_chars,
+           CAST(SUM(c) AS BIGINT) AS n_chars,
            ROUND(log2(SUM(c)) - SUM(c * log2(c)) / SUM(c), 6) AS entropy_bits
     FROM counts GROUP BY doc_id
     """,

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.queries import forensic_active, forensic_return, query
+from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
@@ -29,11 +29,12 @@ from hudi_utility_spark.tables import load_table
     """
     SELECT event_type,
            COUNT(*) AS cnt,
-           SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS sum_k,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2)
-                AS DECIMAL(18,2)) AS sum_v0,
-           CAST(ROUND(SUM(CAST(value * 2 AS DECIMAL(18,4))), 2)
-                AS DECIMAL(18,2)) AS sum_v1
+           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
+                AS BIGINT) AS sum_k,
+           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
+               AS sum_v0,
+           CAST(ROUND(SUM(CAST(value * 2 AS DECIMAL(18,4))), 2) AS DOUBLE)
+               AS sum_v1
     FROM events
     GROUP BY event_type
     ORDER BY event_type
@@ -60,7 +61,7 @@ def variant_extract_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     v = ev.select(F.parse_json(envelope).alias("v"))
-    out = (
+    return (
         v.select(
             F.variant_get("v", "$.meta.type", "string").alias("event_type"),
             F.variant_get("v", "$.meta.k", "bigint").alias("k"),
@@ -71,27 +72,15 @@ def variant_extract_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum("k").alias("sum_k"),
-            # explicit DECIMAL(18,2) on BOTH sides: the round keeps the
-            # value, the cast pins the *rendered scale* — a DuckDB
-            # version whose ROUND(DECIMAL, 2) keeps the input scale
-            # would otherwise print '10310.7100' against Spark's
-            # '10310.71' and hash apart on equal values (the r12
-            # first-draw-red signature: rows/schema match, hash not)
             F.round(F.sum(F.col("v0").cast("decimal(18,4)")), 2)
-            .cast("decimal(18,2)")
+            .cast("double")
             .alias("sum_v0"),
             F.round(F.sum(F.col("v1").cast("decimal(18,4)")), 2)
-            .cast("decimal(18,2)")
+            .cast("double")
             .alias("sum_v1"),
         )
         .orderBy("event_type")
     )
-    # forensics at correctness scale only (the sum_v* decimal-scale fix
-    # above is what actually addresses the suspected drift; the dump
-    # names the values if it ever reds again)
-    if forensic_active(sf_dir, "events", 20000):
-        return forensic_return("variant_extract_profile", spark, out)
-    return out
 
 
 @query(

@@ -23,16 +23,20 @@ def _env_cpus() -> str:
     return raw
 
 
-def _env_driver_mem() -> str:
-    """``SPARK_GRAFT_DRIVER_MEM`` (default 24g): a JVM size,
+def _env_size(name: str, default: str) -> str:
+    """Environment variable *name* (default *default*) as a JVM size,
     ``<digits>[kKmMgGtT]?``."""
-    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    raw = os.environ.get(name, default)
     if not re.fullmatch(r"\d+[kKmMgGtT]?", raw):
         raise ValueError(
-            "SPARK_GRAFT_DRIVER_MEM must be a size like 4g, 512m or 1024, "
-            f"got {raw!r}"
+            f"{name} must be a size like 4g, 512m or 1024, got {raw!r}"
         )
     return raw
+
+
+def _env_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` (default 24g)."""
+    return _env_size("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 
 _DEFAULTS = {
@@ -66,7 +70,7 @@ _DEFAULTS = {
     # so this knob only merges waste, it cannot reduce real parallelism
     # of data-sized stages.
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": _env_size(
         "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"
     ),
     "spark.sql.session.timeZone": "UTC",
@@ -138,7 +142,7 @@ def _apply_pyshim() -> None:
         )
         mod = ilu.module_from_spec(spec)
         spec.loader.exec_module(mod)
-    except Exception:
+    except ImportError:
         pass
 
 
@@ -170,7 +174,7 @@ def ensure_pyshim_on_session(spark: SparkSession) -> None:
         if shim not in cur.split(os.pathsep):
             cur = f"{cur}{os.pathsep}{shim}" if cur else shim
         env["PYTHONPATH"] = cur
-    except Exception:
+    except AttributeError:  # a session without a JVM SparkContext
         pass
 
 

@@ -942,11 +942,14 @@ def hudi_bundle_available(spark: SparkSession) -> bool:
     Probed by resolving Hudi's DataSource entry class through the JVM —
     no write attempted, no side effects.
     """
+    from py4j.protocol import Py4JJavaError
+
     try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName("org.apache.hudi.DefaultSource")
+        spark.sparkContext._jvm.java.lang.Class.forName(
+            "org.apache.hudi.DefaultSource"
+        )
         return True
-    except Exception:
+    except Py4JJavaError:  # ClassNotFoundException
         return False
 
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -95,3 +96,12 @@ def test_resolve_source_path(tmp_path, spark, lineitem):
 def test_resolve_source_missing_table(spark):
     with pytest.raises(ValueError, match="not found"):
         resolve_source(spark, "no_such_table_xyz")
+
+
+def test_nanos_columns_names_the_file_with_a_bad_footer(tmp_path):
+    from hudi_utility_spark.io import _nanos_columns
+
+    bad = tmp_path / "x.parquet"
+    bad.write_text("not parquet")
+    with pytest.raises(ValueError, match=re.escape(str(bad))):
+        _nanos_columns(str(bad))

@@ -27,7 +27,7 @@ Input [2]: [k#{a}L, arr#{b}]
 (3) HashAggregate
 Keys [1]: [k#{a}L]
 Functions [1]: [partial_count(1)]
-Subquery [id=#{sub}] over Scan ExistingRDD MapPartitionsRDD[{rdd}]
+Subquery [id=#{sub}] over Scan ExistingRDD MapPartitionsRDD[{rdd}] at applySchemaToPythonRDD at {site}:0
 
 (4) Exchange
 Input [2]: [k#{a}L, count#{e}L]
@@ -45,11 +45,13 @@ RUN_1 = dict(
     a=12, b=13, c=15, d=14, e=20, lam=1, sub=40, rdd=7, pid=31,
     uuid="0f8e2a44-1c9b-4c1e-9a77-3b5f2d6e8a10",
     hexid="ffdd99170d944f87a4b025466e8b9dc9", first="event_type=view",
+    site="NativeMethodAccessorImpl.java",
 )
 RUN_2 = dict(
     a=112, b=113, c=151, d=140, e=200, lam=17, sub=4, rdd=93, pid=8,
     uuid="c3d1e0b2-77aa-4f0e-b0c4-91e2a8d35f6b",
     hexid="d5cbd02ecc0841bfb0df1bd4a409cc98", first="event_type=click",
+    site="<unknown>",
 )
 
 

@@ -825,6 +825,7 @@ def test_good_turing_matches_python(spark, counts):
     import os
     import tempfile
     from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
 
     import pandas as pd
 
@@ -869,6 +870,11 @@ def test_good_turing_matches_python(spark, counts):
             row = rows[r_val]
             assert row["n_types"] == coc[r_val]
             expect_gt = (r_val + 1) * coc.get(r_val + 1, 0) / coc[r_val]
-            assert abs(row["gt_count"] - round(expect_gt, 6)) < 1e-6
+            # Spark's ROUND rounds a tie half up; Python's round() takes
+            # the even neighbour (0.0078125 -> 0.007812, Spark 0.007813)
+            want = Decimal(repr(expect_gt)).quantize(
+                Decimal("1e-6"), rounding=ROUND_HALF_UP
+            )
+            assert abs(row["gt_count"] - float(want)) < 1e-6
         else:
             assert r_val not in rows

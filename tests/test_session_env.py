@@ -3,6 +3,11 @@ value is rejected with an error naming the variable."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from hudi_utility_spark import session
@@ -38,3 +43,21 @@ def test_driver_mem_accepts_jvm_sizes(monkeypatch, raw):
 def test_driver_mem_default(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     assert session._env_driver_mem() == "24g"
+
+
+
+@pytest.mark.parametrize("raw", ["128mb", "1.5m", ""])
+def test_advisory_bytes_rejects_malformed_sizes_at_import(raw):
+    """The session reads the variable when it is imported: a malformed
+    size stops the import with an error naming the variable."""
+    env = {**os.environ, "SPARK_GRAFT_ADVISORY_PARTITION_BYTES": raw}
+    proc = subprocess.run(
+        [sys.executable, "-c", "import hudi_utility_spark.session"],
+        cwd=Path(__file__).resolve().parent.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode != 0
+    assert "ValueError: SPARK_GRAFT_ADVISORY_PARTITION_BYTES" in proc.stderr

@@ -1,6 +1,14 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry against its DuckDB oracle at a given SF and report row-count /
-schema / value-hash agreement.
+schema / column-type / value-hash agreement.
+
+The type rule (``type_mismatches``) holds each oracled column to the
+Spark column's type class: an integral Spark column needs a DuckDB
+TINYINT..BIGINT, a fractional one FLOAT or DOUBLE, and neither side may
+carry HUGEINT or DECIMAL. A DuckDB ``SUM`` over integers is HUGEINT,
+which a pandas round trip turns into float64 (``6153063.0`` against
+Spark's ``6153063``), so values that agree here can still hash apart
+downstream; the rule catches that where a value compare cannot.
 
 Usage: python tools/check_oracles.py [sf_dir] [name_filter]
                                      [--json-out=PATH]
@@ -19,6 +27,13 @@ import sys
 from pathlib import Path
 
 import duckdb
+from pyspark.sql.types import (
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegralType,
+    StructType,
+)
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -50,6 +65,34 @@ def value_hash(rows, colnames) -> str:
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()
+
+
+_DUCK_INTEGRAL = {"tinyint", "smallint", "integer", "bigint"}
+_DUCK_FRACTIONAL = {"float", "double"}
+_DUCK_WIDE = {"hugeint", "uhugeint", "decimal"}
+
+
+def type_mismatches(rel: duckdb.DuckDBPyRelation, schema: StructType) -> list[str]:
+    """Columns of the oracle relation *rel* whose DuckDB type does not
+    match the type class of the same-named column in the Spark *schema*
+    (see the module docstring)."""
+    spark_types = {f.name: f.dataType for f in schema.fields}
+    problems = []
+    for col, dtype in zip(rel.columns, rel.types):
+        st = spark_types.get(col)
+        if st is None:
+            continue
+        if dtype.id in _DUCK_WIDE or isinstance(st, DecimalType):
+            ok = False
+        elif isinstance(st, IntegralType):
+            ok = dtype.id in _DUCK_INTEGRAL
+        elif isinstance(st, (FloatType, DoubleType)):
+            ok = dtype.id in _DUCK_FRACTIONAL
+        else:
+            ok = True
+        if not ok:
+            problems.append(f"type {col}: spark={st.simpleString()} duck={dtype}")
+    return problems
 
 
 def main() -> int:
@@ -102,9 +145,9 @@ def main() -> int:
                 print(f"FAIL  {name}: 0 rows")
             continue
         try:
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            rel = con.sql(oracles[name])
+            dcols = rel.columns
+            drows = rel.fetchall()
         except Exception as exc:
             failures.append(name)
             per_query[name] = {"ok": False, "err": f"oracle error: {str(exc)[:200]}"}
@@ -141,6 +184,7 @@ def main() -> int:
                     problems.append(f"spark-only: {only_s}")
                 if only_d:
                     problems.append(f"duck-only: {only_d}")
+        problems += type_mismatches(rel, sdf.schema)
         if problems:
             failures.append(name)
             per_query[name] = {"ok": False, "err": "; ".join(problems)[:400]}

@@ -4,8 +4,9 @@ fingerprint.
 
 The fingerprint hashes ``explain("formatted")`` after normalising the
 tokens that change from one build of the same plan to the next
-(expression ids, plan ids, lambda-variable suffixes, RDD ids, part-file
-UUIDs, the first file a multi-file index happens to list). Two runs that print the same fingerprint for a query built the
+(expression ids, plan ids, lambda-variable suffixes, RDD ids and call
+sites, part-file UUIDs, the first file a multi-file index happens to
+list). Two runs that print the same fingerprint for a query built the
 same physical plan, which makes the tool a refactor gate: audit with
 ``--all`` before and after a change and diff the fingerprint column.
 
@@ -31,6 +32,10 @@ _UNSTABLE_TOKENS = [
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\b(lambda \w+?_)\d+\b"), r"\1"),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    # the JVM frame an RDD was made from: the same call prints
+    # NativeMethodAccessorImpl.java:0 until the JVM swaps in a generated
+    # reflection accessor after ~15 calls, then <unknown>:0
+    (re.compile(r"(RDD\[\] at \w+ at )\S+:\d+"), r"\1<call site>"),
     # a multi-file index prints one file + a count; which file comes
     # first follows directory listing order, not the plan
     (re.compile(r"(InMemoryFileIndex \[)[^\],]*(, \.\.\. \d+ entries\])"), r"\1<first file>\2"),
