@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.io import read_files
+
 INDEX_DIR = "_index/column_stats"
 
 
@@ -43,7 +45,7 @@ def build_column_stats(
     ``input_file_name()`` (map-side partials make the shuffle O(files ×
     cols)); the result is persisted under ``_index/column_stats`` and
     returned."""
-    df = spark.read.option("mergeSchema", "true").parquet(table_path)
+    df = read_files(spark, table_path)
     aggs = []
     for c in cols:
         # min/max keep the column's native type — comparisons at prune
@@ -62,7 +64,7 @@ def build_column_stats(
     out = _index_path(table_path)
     stats.write.mode("overwrite").parquet(out)
     spark.catalog.refreshByPath(out)
-    return spark.read.parquet(out)
+    return read_files(spark, out, merge_schema=False)
 
 
 def build_column_stats_from_footers(
@@ -114,7 +116,7 @@ def build_column_stats_from_footers(
 
     # schema must match the scan-built index: borrow column types from a
     # zero-row projection of the table itself
-    probe = spark.read.option("mergeSchema", "true").parquet(table_path)
+    probe = read_files(spark, table_path)
     fields = ["CAST(NULL AS STRING) AS file", "CAST(0 AS LONG) AS num_rows"]
     for c in cols:
         t = probe.schema[c].dataType.simpleString()
@@ -131,7 +133,7 @@ def build_column_stats_from_footers(
     out = _index_path(table_path)
     stats.write.mode("overwrite").parquet(out)
     spark.catalog.refreshByPath(out)
-    return spark.read.parquet(out)
+    return read_files(spark, out, merge_schema=False)
 
 
 def prune_files(
@@ -144,7 +146,7 @@ def prune_files(
     """Files whose [min_col, max_col] intersects [lo, hi], compared in
     the column's native type ordering. Returns (kept_files,
     total_files). Driver-side over the small index relation only."""
-    idx = spark.read.parquet(_index_path(table_path))
+    idx = read_files(spark, _index_path(table_path), merge_schema=False)
     total = idx.count()
     kept = (
         idx.filter(
@@ -169,15 +171,10 @@ def read_with_skipping(
     same contract as parquet row-group skipping, one level up)."""
     files, _ = prune_files(spark, table_path, col, lo, hi)
     if not files:
-        base = spark.read.option("mergeSchema", "true").parquet(table_path)
-        return base.filter(F.lit(False))
-    df = (
-        spark.read.option("mergeSchema", "true")
-        # basePath keeps Hive partition columns recoverable when the
-        # scan is handed explicit file paths instead of the table root
-        .option("basePath", table_path)
-        .parquet(*files)
-    )
+        return read_files(spark, table_path).filter(F.lit(False))
+    # basePath keeps Hive partition columns recoverable when the scan is
+    # handed explicit file paths instead of the table root
+    df = read_files(spark, files, base_path=table_path)
     return df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
 
@@ -199,7 +196,7 @@ def build_record_index(spark: SparkSession, table) -> DataFrame:
     out = os.path.join(table.path, RECORD_INDEX_DIR)
     idx.write.mode("overwrite").parquet(out)
     spark.catalog.refreshByPath(out)
-    return spark.read.parquet(out)
+    return read_files(spark, out, merge_schema=False)
 
 
 SECONDARY_INDEX_DIR = "_index/secondary"
@@ -222,7 +219,7 @@ def build_secondary_index(spark: SparkSession, table, col: str) -> DataFrame:
     out = os.path.join(table.path, SECONDARY_INDEX_DIR, col)
     idx.write.mode("overwrite").parquet(out)
     spark.catalog.refreshByPath(out)
-    return spark.read.parquet(out)
+    return read_files(spark, out, merge_schema=False)
 
 
 def secondary_lookup(
@@ -234,17 +231,15 @@ def secondary_lookup(
     (rows whose LATEST version left the probed value set drop out here —
     same residual-filter contract as every index in this module)."""
     probe = F.broadcast(values_df.select(F.col(col).alias("value")).distinct())
-    idx = spark.read.parquet(os.path.join(table.path, SECONDARY_INDEX_DIR, col))
+    idx = read_files(
+        spark, os.path.join(table.path, SECONDARY_INDEX_DIR, col), merge_schema=False
+    )
     files = [
         r.file
         for r in idx.join(probe, "value").select("file").distinct().collect()
     ]
     if files:
-        base = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", table.base_path)
-            .parquet(*files)
-        )
+        base = read_files(spark, files, base_path=table.base_path)
     else:
         base = table.read_base(spark).filter(F.lit(False))
     resolved = table.resolve(base, table.read_log(spark))
@@ -307,7 +302,7 @@ def build_bloom_index(
     with open(os.path.join(table.path, BLOOM_INDEX_DIR + "._meta"), "w") as f:
         json.dump({"m_bits": m_bits, "k": k}, f)
     spark.catalog.refreshByPath(out)
-    return spark.read.parquet(out)
+    return read_files(spark, out, merge_schema=False)
 
 
 def bloom_candidate_files(
@@ -340,7 +335,7 @@ def bloom_candidate_files(
     pe = probes.select(
         F.col("pbits"), F.col("need"), F.explode("pbits").alias("bit")
     )
-    idx = spark.read.parquet(os.path.join(table.path, BLOOM_INDEX_DIR))
+    idx = read_files(spark, os.path.join(table.path, BLOOM_INDEX_DIR), merge_schema=False)
     ie = idx.select("file", F.explode("bits").alias("bit"))
     cand = (
         ie.join(F.broadcast(pe), "bit")
@@ -374,11 +369,7 @@ def bloom_lookup(
     probe = F.broadcast(kd)
     files = bloom_candidate_files(spark, table, kd, m_bits=m_bits, k=k)
     if files:
-        base = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", table.base_path)
-            .parquet(*files)
-        )
+        base = read_files(spark, files, base_path=table.base_path)
         matched = base.join(probe, on=keys, how="left_semi")
     else:
         matched = table.read_base(spark).filter(F.lit(False))
@@ -396,7 +387,7 @@ def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
     partition scan. The MOR log is unioned unpruned because it is the
     small side by design (compaction keeps it so)."""
     keys = table.record_key
-    idx = spark.read.parquet(os.path.join(table.path, RECORD_INDEX_DIR))
+    idx = read_files(spark, os.path.join(table.path, RECORD_INDEX_DIR), merge_schema=False)
     # materialize the point batch ONCE: it feeds three broadcast joins
     # (index probe, base semi-join, log semi-join), and an unmaterialized
     # keys_df would re-run its source scan + distinct shuffle per use —
@@ -410,11 +401,7 @@ def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
         .collect()
     ]
     if files:
-        base = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", table.base_path)
-            .parquet(*files)
-        )
+        base = read_files(spark, files, base_path=table.base_path)
         matched = base.join(F.broadcast(kd), on=keys, how="left_semi")
     else:
         matched = table.read_base(spark).filter(F.lit(False))
@@ -455,7 +442,7 @@ def refresh_indexes(spark: SparkSession, table) -> list[str]:
         if entry == "column_stats":
             cols = sorted(
                 f.name[len("min_"):]
-                for f in spark.read.parquet(p).schema.fields
+                for f in read_files(spark, p, merge_schema=False).schema.fields
                 if f.name.startswith("min_")
             )
             build_column_stats_from_footers(spark, table.path, cols)

@@ -10,15 +10,22 @@ with partition-field discovery via the ``field=value`` regex
 Here the walk is a local/posix+Hadoop-FS-compatible listing, reads go
 through ``spark.read`` (Catalyst gets pushdown/pruning for free), and
 partition discovery uses Spark's own partition inference plus the same
-``field=value`` directory convention.
+``field=value`` directory convention. Every parquet/ORC read of the
+package goes through :func:`read_files`, which infers a file set's
+schema once per listing instead of once per read.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import stat
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from functools import lru_cache
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,16 +76,15 @@ def read_source(
     ``mergeSchema`` for parquet/orc so evolved files union their columns.
     """
     fmt = fmt or sniff_format(path)
-    reader = spark.read
     if fmt == "parquet":
-        ns_cols = _nanos_columns(_strip_scheme(path))
+        ns_cols = _nanos_columns(path)
         if ns_cols:
             # Spark rejects parquet TIMESTAMP(NANOS) (PARQUET_TYPE_ILLEGAL);
             # read ns as long via the legacy conf, convert back to
             # TimestampType (µs) — lossless for µs-aligned data, and the
             # mergeSchema footer pass can't handle NANOS either, so skip it.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = reader.parquet(path)
+            df = read_files(spark, path, merge_schema=False)
             for c in ns_cols:
                 # integer DIV, not float division: ns epochs (~1.7e18)
                 # exceed double's 53-bit integer range, so a float divide
@@ -87,9 +93,9 @@ def read_source(
                     c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
                 )
             return df
-        return reader.option("mergeSchema", str(merge_schema).lower()).parquet(path)
-    if fmt == "orc":
-        return reader.option("mergeSchema", str(merge_schema).lower()).orc(path)
+    if fmt in ("parquet", "orc"):
+        return read_files(spark, path, fmt, merge_schema=merge_schema)
+    reader = spark.read
     if fmt == "csv":
         return reader.option("header", "true").option("inferSchema", "true").csv(path)
     if fmt == "json":
@@ -103,7 +109,155 @@ def read_table(spark: SparkSession, table_path: str) -> DataFrame:
     Spark's partition discovery re-materializes ``field=value`` directory
     partitions as columns automatically.
     """
-    return spark.read.option("mergeSchema", "true").parquet(_strip_scheme(table_path))
+    return read_files(spark, _strip_scheme(table_path))
+
+
+# SQL confs whose values change the schema Spark infers from the same
+# files; a remembered schema holds only under the values it was
+# inferred with
+_INFERENCE_CONFS = (
+    "spark.sql.timestampType",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# per session: (fmt, paths, options) -> (listing + conf values, schema),
+# least recently read first; file-subset reads (index lookups) give
+# many distinct path tuples, so the oldest entries are dropped
+_MAX_SCHEMAS = 256
+_schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_schemas_lock = threading.Lock()
+
+
+def read_files(
+    spark: SparkSession,
+    paths: str | list[str] | tuple[str, ...],
+    fmt: str = "parquet",
+    merge_schema: bool = True,
+    base_path: str | None = None,
+) -> DataFrame:
+    """The package's one parquet/ORC batch reader.
+
+    Spark infers a file-source schema by running a footer-reading job
+    each time a DataFrame is built, even when nothing on disk changed
+    since the last read. This reader remembers the ``StructType``
+    inferred for a listing of *paths* (each visible file's path, size,
+    mtime and inode, plus the inference confs) and, while that listing
+    is unchanged, passes the schema back with ``.schema(...)``, so no
+    job runs. The files Spark itself then lists (``inputFiles()``) must
+    equal the listing, else a commit landed between the two listings
+    and the read infers as usual. Paths this process cannot walk (a
+    non-local URI, a glob) always infer. ``base_path`` is Spark's
+    ``basePath`` option: partition columns of an explicit file list.
+    """
+    paths = (paths,) if isinstance(paths, str) else tuple(paths)
+    options = {"mergeSchema": str(merge_schema).lower()}
+    if base_path is not None:
+        options["basePath"] = base_path
+
+    def reader():  # DataFrameReader.schema() sets the schema in place
+        return spark.read.format(fmt).options(**options)
+
+    listing = _listing(paths)
+    if listing is None:
+        return reader().load(list(paths))
+    key = (fmt, paths, tuple(sorted(options.items())))
+    signature = (listing, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    files = {entry[0] for entry in listing}
+    with _schemas_lock:
+        known = _schemas.setdefault(spark, OrderedDict())
+        entry = known.get(key)
+        if entry is not None:
+            known.move_to_end(key)
+    if entry is not None and entry[0] == signature:
+        df = reader().schema(entry[1]).load(list(paths))
+        if _input_files(df) == files:
+            return df
+    df = reader().load(list(paths))
+    if _input_files(df) == files:
+        schema = df.schema
+        with _schemas_lock:
+            known[key] = (signature, schema)
+            known.move_to_end(key)
+            while len(known) > _MAX_SCHEMAS:
+                known.popitem(last=False)
+    return df
+
+
+def list_files(path: str) -> list[str] | None:
+    """The files Spark's file index would read under *path*, sorted;
+    ``None`` when this process cannot walk *path*."""
+    listing = _listing((path,))
+    return None if listing is None else [entry[0] for entry in listing]
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for names its file index skips
+    (``HadoopFSUtils.shouldFilterOutPathName``): ``_``-prefixed names
+    without ``=`` and ``.``-prefixed names, but not the parquet summary
+    files."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _listing(paths: tuple[str, ...]) -> tuple | None:
+    """Every file Spark would list under *paths*, as sorted (path, size,
+    mtime_ns, inode) tuples; ``None`` when a path is not local or does
+    not exist (the read then infers, and Spark reports what is wrong)."""
+    out = []
+    for p in paths:
+        local = _local_path(p)
+        if local is None:
+            return None
+        try:
+            st = os.stat(local)
+        except OSError:
+            return None
+        if not stat.S_ISDIR(st.st_mode):
+            out.append((local, st.st_size, st.st_mtime_ns, st.st_ino))
+            continue
+        for root, dirs, names in os.walk(local, followlinks=True):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for name in names:
+                if _hidden(name):
+                    continue
+                fp = os.path.join(root, name)
+                try:
+                    st = os.stat(fp)
+                except OSError:  # removed mid-walk: Spark's listing differs
+                    return None
+                out.append((fp, st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sorted(out))
+
+
+def _local_path(path: str) -> str | None:
+    """*path* as an absolute local path, or ``None`` for another
+    filesystem's URI or a glob."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+        if path.startswith("//"):
+            path = path[2:]
+    elif "://" in path or any(ch in path for ch in "*?[{"):
+        return None
+    return os.path.abspath(path)
+
+
+def _input_files(df: DataFrame) -> set[str]:
+    """The files Spark listed for *df*, as local paths (Spark returns
+    percent-encoded URIs); other filesystems' URIs stay as they are."""
+    out = set()
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        out.add(unquote(parsed.path) if parsed.scheme == "file" else uri)
+    return out
 
 
 @dataclass
@@ -189,25 +343,25 @@ def resolve_source(spark: SparkSession, path_or_table: str) -> SourceInfo:
     )
 
 
-@lru_cache(maxsize=None)
 def _nanos_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet timestamp[ns] (driver-side footer peek).
+    """Columns stored as parquet timestamp[ns] (driver-side footer peek
+    of the first file Spark would list under *path*).
 
     A path this process cannot open (a remote URI, a missing file) has
     none; a file that is not parquet raises with its path."""
+    listing = _listing((path,))
+    return _nanos_of(listing) if listing else ()
+
+
+@lru_cache(maxsize=64)
+def _nanos_of(listing: tuple) -> tuple[str, ...]:
+    """:func:`_nanos_columns` of one listing: a rewritten file changes
+    the listing, so its answer is never stale."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, _d, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-        if not files:
-            return ()
-        path = sorted(files)[0]
+    names = [entry[0] for entry in listing]
+    path = ([n for n in names if n.endswith(".parquet")] or names)[0]
     try:
         schema = pq.read_schema(path)
     except OSError:

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.io import read_files
 from hudi_utility_spark.table import KeyedTable
 from hudi_utility_spark.timeline import incremental_cdc, read_as_of
 
@@ -62,7 +63,7 @@ def seed_rollup(
     spark.catalog.refreshByPath(rollup_path)
     with open(rollup_path.rstrip("/") + "._since", "w") as f:
         f.write(as_of)
-    return spark.read.parquet(rollup_path)
+    return read_files(spark, rollup_path, merge_schema=False)
 
 
 def maintain_rollup(
@@ -115,7 +116,7 @@ def maintain_rollup(
         .agg(F.sum("d_cnt").alias("d_cnt"), F.sum("d_sum").alias("d_sum"))
     )
 
-    old = spark.read.parquet(rollup_path)
+    old = read_files(spark, rollup_path, merge_schema=False)
     merged = (
         old.join(delta, on=group_cols, how="full_outer")
         .select(
@@ -135,7 +136,7 @@ def maintain_rollup(
 
     atomic_swap_dir(tmp, rollup_path)
     spark.catalog.refreshByPath(rollup_path)
-    return spark.read.parquet(rollup_path)
+    return read_files(spark, rollup_path, merge_schema=False)
 
 
 def replicate_incremental(

@@ -11,6 +11,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.io import read_files
 from hudi_utility_spark.queries import events_table, fresh_scratch, query
 from hudi_utility_spark.table import TableType
 from hudi_utility_spark.tables import load_table
@@ -114,7 +115,7 @@ def lifecycle_bootstrap_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("src_cnt"))
     )
     dst = (
-        spark.read.parquet(root)
+        read_files(spark, root, merge_schema=False)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("dst_cnt"))
     )
@@ -603,7 +604,7 @@ def v_anti_entropy_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
     )
     spark.catalog.refreshByPath(root)
-    dest = spark.read.parquet(root)
+    dest = read_files(spark, root, merge_schema=False)
     return content_diff(ev, dest, "event_type", ["event_id", "user_id"])
 
 

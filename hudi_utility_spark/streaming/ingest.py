@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.io import read_files
 from hudi_utility_spark.table import KeyedTable
 from hudi_utility_spark.write import latest_by_key, upsert
 
@@ -141,7 +142,7 @@ def stream_dedup_ingest(
         if batch_df.isEmpty():
             return
         if os.path.isdir(store_path):
-            store = spark.read.parquet(store_path)
+            store = read_files(spark, store_path, merge_schema=False)
         else:
             store = fingerprint(batch_df.limit(0), text_col).select(
                 id_col, "fingerprint"
@@ -195,7 +196,7 @@ def stream_neardedup_ingest(
         if batch_df.isEmpty():
             return
         if os.path.isdir(band_store_path):
-            store = spark.read.parquet(band_store_path)
+            store = read_files(spark, band_store_path, merge_schema=False)
         else:
             store = minhash_bands(
                 batch_df.limit(0), id_col, text_col, num_hashes, bands
@@ -267,7 +268,7 @@ def stream_scd2_maintenance(
         if batch_df.isEmpty():
             return
         if os.path.isdir(dim_path):
-            dim = spark.read.parquet(dim_path)
+            dim = read_files(spark, dim_path, merge_schema=False)
             cur = dim.filter(F.col(IS_CURRENT)).select(
                 *keys, F.col(EFF_FROM).alias("_cur_from")
             )

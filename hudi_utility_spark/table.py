@@ -23,6 +23,8 @@ from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hudi_utility_spark.io import list_files, read_files
+
 
 class TableType(str, Enum):
     COPY_ON_WRITE = "COPY_ON_WRITE"
@@ -55,6 +57,17 @@ _MOR_LOG_DIR = "_delta_log"
 # ``_`` prefix keeps it out of reconciliation like Hudi's meta columns
 # (pyspark_script.py:154)
 DELETED_COL = "_deleted"
+
+
+def union_versions(*versions: DataFrame | None) -> DataFrame:
+    """Row versions unioned by column name (``None`` entries skipped);
+    a column some versions lack is NULL in their rows."""
+    from functools import reduce
+
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [v for v in versions if v is not None],
+    )
 
 
 @dataclass
@@ -116,22 +129,33 @@ class KeyedTable:
             # discovery and exists() both ignore it
             marker = os.path.join(self.path, "_empty_schema")
             if os.path.isdir(marker):
-                return spark.read.parquet(marker)
-        df = spark.read.option("mergeSchema", "true").parquet(self.base_path)
+                return read_files(spark, marker, merge_schema=False)
+        df = read_files(spark, self.base_path)
         if _MOR_LOG_DIR in df.columns:  # pragma: no cover - defensive
             df = df.drop(_MOR_LOG_DIR)
         return df
 
     def read_log(self, spark: SparkSession, stream: bool = False) -> DataFrame | None:
         """The MOR delta log (every row version appended since the last
-        compaction), or ``None`` when the table has no log. ``stream``
-        returns it as a streaming source over the log's files instead,
-        with the schema of the log as it stands."""
+        compaction), or ``None`` when the table has no log or the log
+        holds no data file. ``stream`` returns it as a streaming source
+        over the log's files instead, with the schema of the log as it
+        stands.
+
+        The batch read names the log's files with ``basePath`` at the log
+        root: Spark skips ``_``-prefixed directories when it lists, and
+        warns about every read rooted at one."""
         if self.table_type is not TableType.MERGE_ON_READ or not os.path.isdir(
             self.log_path
         ):
             return None
-        log = spark.read.option("mergeSchema", "true").parquet(self.log_path)
+        files = list_files(self.log_path)
+        if files == []:
+            return None
+        if files is None:  # not a local path: Spark lists it
+            log = read_files(spark, self.log_path)
+        else:
+            log = read_files(spark, files, base_path=self.log_path)
         if stream:
             reader = spark.readStream.schema(log.schema).option("mergeSchema", "true")
             return reader.parquet(self.log_path)
@@ -150,16 +174,11 @@ class KeyedTable:
         drop keys whose winning version is a delete tombstone unless
         ``keep_tombstones``. Snapshot reads, time travel, index lookups,
         compaction and every COW commit resolve through here."""
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
         from hudi_utility_spark.write import latest_by_key, resolve_partial
 
-        merged = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            [v for v in versions if v is not None],
-        )
+        merged = union_versions(*versions)
         pick = resolve_partial if partial else latest_by_key
         resolved = pick(merged, self.record_key, self.precombine)
         if DELETED_COL in resolved.columns and not keep_tombstones:

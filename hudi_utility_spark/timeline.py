@@ -32,6 +32,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.io import read_files
 from hudi_utility_spark.table import KeyedTable, TableType
 
 COMMIT_COL = "_commit_time"
@@ -241,6 +242,16 @@ def read_as_of(
             "read_as_of requires a MERGE_ON_READ table: COPY_ON_WRITE "
             "rewrites discard prior record versions"
         )
+    return table.resolve(
+        *_versions_upto(spark, table, instant), keep_tombstones=keep_tombstones
+    )
+
+
+def _versions_upto(
+    spark: SparkSession, table: KeyedTable, instant: str
+) -> list[DataFrame | None]:
+    """Base and log row versions committed at or before ``instant``
+    (unstamped rows count as committed at the epoch)."""
 
     def _upto(versions: DataFrame | None) -> DataFrame | None:
         if versions is None:
@@ -249,11 +260,7 @@ def read_as_of(
             versions = versions.withColumn(COMMIT_COL, F.lit(None).cast("string"))
         return versions.filter(_commit_expr() <= F.lit(instant))
 
-    return table.resolve(
-        _upto(table.read_base(spark)),
-        _upto(table.read_log(spark)),
-        keep_tombstones=keep_tombstones,
-    )
+    return [_upto(table.read_base(spark)), _upto(table.read_log(spark))]
 
 
 def incremental_cdc(
@@ -267,41 +274,46 @@ def incremental_cdc(
     (Hudi's incremental query in CDC format — the after-image variant).
 
     MOR only (COW physically discards the history CDC is derived from).
-    Cost: two precombine windows (winners as-of each boundary) and one
-    join keyed on the record key over only the *changed* keys — the
-    changed side is commit-pruned first, so join volume is proportional
-    to the delta, not the table.
+    Cost: one read of base and log and one precombine window over the
+    versions committed by ``until``. The window ranks each key's
+    versions by precombine: the first row is the winner as of
+    ``until``, and the first version committed by ``since`` says
+    whether the key was alive then. Ties on precombine pick an
+    arbitrary winner, as every resolution does.
 
     Delete rows carry the record key, partition fields, and commit
     columns; other columns are NULL (the before-image lives at
     ``read_as_of(since)`` if the log retains it).
     """
-    from hudi_utility_spark.table import DELETED_COL
+    from pyspark.sql import Window
+
+    from hudi_utility_spark.table import DELETED_COL, union_versions
 
     if table.table_type is not TableType.MERGE_ON_READ:
         raise ValueError("incremental_cdc requires a MERGE_ON_READ table")
     hi = until or "9" * 17
-    after = read_as_of(spark, table, hi, keep_tombstones=True)
-    if DELETED_COL not in after.columns:
-        after = after.withColumn(DELETED_COL, F.lit(False))
-    changed = after.filter(
-        (_commit_expr() > F.lit(since)) & (_commit_expr() <= F.lit(hi))
-    )
-    before_alive = read_as_of(spark, table, since).select(
-        *table.record_key, F.lit(True).alias("__existed")
-    )
-
-    joined = changed.join(before_alive, on=table.record_key, how="left")
+    versions = union_versions(*_versions_upto(spark, table, hi))
+    if DELETED_COL not in versions.columns:
+        versions = versions.withColumn(DELETED_COL, F.lit(False))
     dead = F.coalesce(F.col(DELETED_COL), F.lit(False))
-    existed = F.coalesce(F.col("__existed"), F.lit(False))
+    by_key = Window.partitionBy(*table.record_key).orderBy(F.desc(table.precombine))
+    alive_at_since = F.first(
+        F.when(_commit_expr() <= F.lit(since), ~dead), ignorenulls=True
+    ).over(by_key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    changed = (
+        versions.withColumn("__rn", F.row_number().over(by_key))
+        .withColumn("__existed", F.coalesce(alive_at_since, F.lit(False)))
+        .filter((F.col("__rn") == 1) & (_commit_expr() > F.lit(since)))
+    )
+    existed = F.col("__existed")
     op = (
         F.when(dead & existed, F.lit("delete"))
         .when(~dead & existed, F.lit("update"))
         .when(~dead & ~existed, F.lit("insert"))
     )  # dead & ~existed: tombstone for a never-alive key — dropped
-    out_cols = [c for c in changed.columns if c != DELETED_COL]
+    out_cols = [c for c in versions.columns if c != DELETED_COL]
     return (
-        joined.withColumn("op", op)
+        changed.withColumn("op", op)
         .filter(F.col("op").isNotNull())
         .select("op", *out_cols)
     )
@@ -404,7 +416,7 @@ def export_snapshot(
         "precombine": table.precombine,
         "partition_fields": table.partition_fields,
         "instant": instant,
-        "rows": spark.read.parquet(dest).count(),
+        "rows": read_files(spark, dest, merge_schema=False).count(),
     }
     with open(os.path.join(dest, "_export_meta.json"), "w") as f:
         f.write(_json.dumps(meta))

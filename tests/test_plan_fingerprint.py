@@ -72,3 +72,25 @@ def test_shuffle_count_counts_distinct_exchange_nodes():
     # tree line "Exchange (4)" and detail header "(4) Exchange" are one node
     assert shuffle_count(PLAN.format(**RUN_1)) == 1
     assert shuffle_count("(3) BroadcastExchange\n(5) ReusedExchange\n") == 0
+
+
+# graph_triangles_parts' two broadcast stages: which one AQE numbers
+# first depends on which finished first
+STAGES = """(53) BroadcastQueryStage
+Output [2]: [u#317L, du#318L]
+Arguments: {a}
+
+(54) BroadcastHashJoin [codegen id : 1]
+Left keys [1]: [u#25L]
+
+(60) BroadcastQueryStage
+Output [2]: [v#320L, dv#321L]
+Arguments: {b}
+"""
+
+
+def test_fingerprint_ignores_query_stage_ids():
+    assert fingerprint(STAGES.format(a=3, b=4)) == fingerprint(STAGES.format(a=4, b=3))
+    # an Arguments line of any other node still counts
+    other = STAGES.format(a=3, b=4).replace("(54) BroadcastHashJoin", "(54) Exchange\nArguments: 7\n\n(55) BroadcastHashJoin")
+    assert fingerprint(other) != fingerprint(other.replace("Arguments: 7", "Arguments: 8"))

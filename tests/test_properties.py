@@ -219,6 +219,86 @@ def test_tombstone_wins_by_precombine(spark, ops):
     assert got == _apply_python(uniq)
 
 
+
+# -- CDC labels -----------------------------------------------------------
+
+_CDC_COMMITS = st.lists(
+    st.tuples(
+        st.booleans(),  # True = delete batch, False = upsert batch
+        st.lists(st.tuples(KEYS, PRECOMBINE), min_size=1, max_size=4),
+    ),
+    min_size=1,
+    max_size=3,
+)
+
+
+def _cdc_model(versions, since, until):
+    """pandas model of incremental_cdc: per key, the max-precombine
+    version committed by *until* is the winner; it is a change iff it
+    was committed after *since*, and the key existed at *since* iff its
+    max-precombine version committed by then is not a delete."""
+    import pandas as pd
+
+    v = pd.DataFrame(versions, columns=["k", "ts", "dead", "commit"])
+    v = v[v["commit"] <= until].sort_values("ts", ascending=False)
+    win = v.groupby("k").head(1).set_index("k")
+    prior = v[v["commit"] <= since].groupby("k").head(1).set_index("k")
+    existed = (~prior["dead"]).reindex(win.index, fill_value=False)
+    out = {}
+    for k, row in win[win["commit"] > since].iterrows():
+        if row["dead"] and existed[k]:
+            out[k] = ("delete", row["ts"])
+        elif not row["dead"]:
+            out[k] = ("update" if existed[k] else "insert", row["ts"])
+    return out
+
+
+@given(
+    first=st.lists(st.tuples(KEYS, PRECOMBINE), min_size=1, max_size=4),
+    commits=_CDC_COMMITS,
+)
+@_SETTINGS
+def test_incremental_cdc_matches_pandas_model(spark, tmp_path_factory, first, commits):
+    """CDC labels over random upsert/delete commit sequences equal the
+    pandas model's, for every (since, until] window over the commits.
+    Precombines are unique per key, so no winner is a tie."""
+    from hudi_utility_spark.table import KeyedTable, TableType
+    from hudi_utility_spark.timeline import EPOCH_INSTANT, incremental_cdc
+    from hudi_utility_spark.write import delete_keys, upsert
+
+    table = KeyedTable(
+        path=str(tmp_path_factory.mktemp("cdc") / "t"),
+        record_key=["k"],
+        precombine="ts",
+        table_type=TableType.MERGE_ON_READ,
+    )
+    instants = [f"2026010{i + 1}000000000" for i in range(len(commits) + 1)]
+    seen, versions = set(), []
+    for instant, (dead, rows) in zip(instants, [(False, first), *commits]):
+        batch = {}
+        for k, p in rows:
+            while (k, p) in seen:
+                p += 101
+            seen.add((k, p))
+            batch[k] = max(batch.get(k, p), p)  # one version per key a commit
+        versions += [(k, p, dead, instant) for k, p in batch.items()]
+        df = spark.createDataFrame(
+            [(k, p, f"v{k}-{p}") for k, p in batch.items()],
+            "k long, ts long, payload string",
+        )
+        if dead:
+            delete_keys(spark, df.drop("payload"), table, commit_time=instant)
+        else:
+            upsert(spark, df, table, commit_time=instant)
+    bounds = [EPOCH_INSTANT, *instants]
+    for i, since in enumerate(bounds):
+        for until in bounds[i + 1:]:
+            got = {
+                r.k: (r.op, r.ts)
+                for r in incremental_cdc(spark, table, since, until).collect()
+            }
+            assert got == _cdc_model(versions, since, until), (since, until)
+
 @given(
     s=st.text(
         alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)),

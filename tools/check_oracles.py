@@ -133,16 +133,16 @@ def main() -> int:
         except Exception as exc:
             failures.append(name)
             per_query[name] = {"ok": False, "err": f"spark error: {str(exc)[:200]}"}
-            print(f"FAIL  {name}: spark error: {str(exc)[:200]}")
+            print(f"FAIL  {name}: spark error: {str(exc)[:200]}", flush=True)
             continue
         if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (rows-only check)")
+            print(f"rows  {name}: {len(srows)} rows (rows-only check)", flush=True)
             per_query[name] = {
                 "ok": len(srows) > 0, "rows": len(srows), "mode": "rows_only",
             }
             if len(srows) == 0:
                 failures.append(name)
-                print(f"FAIL  {name}: 0 rows")
+                print(f"FAIL  {name}: 0 rows", flush=True)
             continue
         try:
             rel = con.sql(oracles[name])
@@ -151,7 +151,7 @@ def main() -> int:
         except Exception as exc:
             failures.append(name)
             per_query[name] = {"ok": False, "err": f"oracle error: {str(exc)[:200]}"}
-            print(f"FAIL  {name}: oracle error: {str(exc)[:200]}")
+            print(f"FAIL  {name}: oracle error: {str(exc)[:200]}", flush=True)
             continue
         problems = []
         if len(srows) != len(drows):
@@ -188,11 +188,11 @@ def main() -> int:
         if problems:
             failures.append(name)
             per_query[name] = {"ok": False, "err": "; ".join(problems)[:400]}
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems), flush=True)
         else:
             per_query[name] = {"ok": True, "rows": len(srows)}
-            print(f"ok    {name}: {len(srows)} rows")
-    print(f"\n{checked - len(failures)}/{checked} checked queries agree ({len(qs)} registered)")
+            print(f"ok    {name}: {len(srows)} rows", flush=True)
+    print(f"\n{checked - len(failures)}/{checked} checked queries agree ({len(qs)} registered)", flush=True)
     if json_out:
         import datetime as _dt
         import json as _json

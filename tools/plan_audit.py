@@ -5,8 +5,8 @@ fingerprint.
 The fingerprint hashes ``explain("formatted")`` after normalising the
 tokens that change from one build of the same plan to the next
 (expression ids, plan ids, lambda-variable suffixes, RDD ids and call
-sites, part-file UUIDs, the first file a multi-file index happens to
-list). Two runs that print the same fingerprint for a query built the
+sites, AQE query-stage ids, part-file UUIDs, the first file a multi-file
+index happens to list). Two runs that print the same fingerprint for a query built the
 same physical plan, which makes the tool a refactor gate: audit with
 ``--all`` before and after a change and diff the fingerprint column.
 
@@ -39,6 +39,10 @@ _UNSTABLE_TOKENS = [
     # a multi-file index prints one file + a count; which file comes
     # first follows directory listing order, not the plan
     (re.compile(r"(InMemoryFileIndex \[)[^\],]*(, \.\.\. \d+ entries\])"), r"\1<first file>\2"),
+    # an AQE query stage's id ("Arguments: <n>" under each materialised
+    # "(N) ...QueryStage" node) follows the order its stages finished in
+    (re.compile(r"(\(\d+\) \w+QueryStage\n(?:Output \[\d+\]: [^\n]*\n)?Arguments: )\d+\b"),
+     r"\1<stage id>"),
     # part-file UUIDs, dashed (parquet) or bare 32-hex (text formats)
     (re.compile(r"\b[0-9a-f]{8}(-?)[0-9a-f]{4}\1[0-9a-f]{4}\1[0-9a-f]{4}\1[0-9a-f]{12}\b"), "<uuid>"),
 ]
