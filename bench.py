@@ -186,13 +186,10 @@ def _clear_cache(spark) -> None:
     harness window once the registry hit ~300 queries. Every-8 bounds
     pinned-block accumulation to a handful of queries' worth while
     paying the GC tax ~50 times, not 400."""
-    try:
-        spark.catalog.clearCache()
-        _CLEARS["n"] += 1
-        if _CLEARS["n"] % 8 == 0:
-            spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+    spark.catalog.clearCache()
+    _CLEARS["n"] += 1
+    if _CLEARS["n"] % 8 == 0:
+        spark.sparkContext._jvm.System.gc()
 
 
 def main() -> None:

@@ -26,6 +26,7 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from hudi_utility_spark.engine import bootstrap as _bootstrap
 from hudi_utility_spark.events import StatusObserver
@@ -82,7 +83,7 @@ class Engine:
         button posts ``transaction_data`` back — HistoryTable.js)."""
         row = (
             self.ledger.history(transaction_id_like=transaction_id)
-            .filter(f"transaction_id = '{transaction_id}'")
+            .filter(F.col("transaction_id") == transaction_id)
             .collect()
         )
         if not row:

@@ -17,8 +17,12 @@ as Hudi's metadata-table lookup. Both builds exist: the full-scan
 build (`build_column_stats`, semantics-transparent and testable) and
 the production footer-metadata build
 (`build_column_stats_from_footers`, zero data IO) — proven
-interchangeable in tests. `refresh_indexes` rebuilds whatever indexes
-a table carries after a base rewrite.
+interchangeable in tests.
+
+Every index here is a hint checked against the base's current file
+listing (:func:`_candidate_files`), so an index left stale by a base
+rewrite costs extra file reads, never a wrong answer; `refresh_indexes`
+covers the rewritten files again.
 """
 
 from __future__ import annotations
@@ -28,13 +32,43 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.io import read_files
+from hudi_utility_spark.io import _local_path, read_files, uri_path
 
 INDEX_DIR = "_index/column_stats"
 
 
-def _index_path(table_path: str) -> str:
-    return os.path.join(table_path, INDEX_DIR)
+def _read_index(spark: SparkSession, path: str, build: str) -> DataFrame:
+    """The index stored at *path*; a table without one raises, naming
+    *path* and the function that builds it."""
+    local = _local_path(path)
+    if local is not None and not os.path.isdir(local):
+        raise FileNotFoundError(f"no index at {path}: build it with index.{build}")
+    return read_files(spark, path, merge_schema=False)
+
+
+def _candidate_files(base: DataFrame, marks: DataFrame) -> list[str]:
+    """The one rule for when an index entry is usable: a file listed by
+    *base* (a read of the current base, whose ``inputFiles()`` URIs equal
+    the stored ``input_file_name()``) is a candidate when the index hits
+    it (*marks*: ``file`` and ``hit`` per entry) or does not know it.
+    Entries of files no longer listed are ignored. Sorted URIs."""
+    hit = {
+        r.file: r.hit
+        for r in marks.groupBy("file").agg(F.max("hit").alias("hit")).collect()
+    }
+    return sorted(f for f in base.inputFiles() if hit.get(f, True))
+
+
+def _read_uris(
+    spark: SparkSession, base: DataFrame, files: list[str], base_path: str
+) -> DataFrame:
+    """The rows of *base* in its candidate *files*. The stored URIs are
+    percent-encoded (``p=a%253Ab`` for the on-disk ``p=a%3Ab``) and
+    Spark reads path strings undecoded, so they are decoded here, once;
+    ``basePath`` keeps the Hive partition columns of the file list."""
+    if not files:
+        return base.filter(F.lit(False))
+    return read_files(spark, [uri_path(f) for f in files], base_path=base_path)
 
 
 def build_column_stats(
@@ -61,10 +95,7 @@ def build_column_stats(
         .groupBy("file")
         .agg(F.count(F.lit(1)).alias("num_rows"), *aggs)
     )
-    out = _index_path(table_path)
-    stats.write.mode("overwrite").parquet(out)
-    spark.catalog.refreshByPath(out)
-    return read_files(spark, out, merge_schema=False)
+    return _write_index(spark, stats, os.path.join(table_path, INDEX_DIR))
 
 
 def build_column_stats_from_footers(
@@ -78,26 +109,21 @@ def build_column_stats_from_footers(
     folded to file granularity), interchangeable with it for
     `prune_files` / `read_with_skipping`.
 
-    Footer reads run distributed: the file list is parallelized and
-    each task opens only footers (a few KB per file), so a 100k-file
-    table indexes in one short metadata-only job. Files lacking stats
-    for a column get NULL min/max — `prune_files`' comparisons then
-    never eliminate them (NULL-safe: a file without stats must always
-    be read)."""
-    import glob as _glob
-
-    files = sorted(
-        _glob.glob(os.path.join(table_path, "**", "*.parquet"), recursive=True)
-    )
-    files = [f for f in files if f"{os.sep}_" not in f[len(table_path):]]
+    Footer reads run distributed over the table read's own listing: the
+    file list is parallelized and each task opens only footers (a few KB
+    per file), so a 100k-file table indexes in one short metadata-only
+    job. Files lacking stats for a column get NULL min/max, which
+    `prune_files` never prunes."""
+    table = read_files(spark, table_path)
+    files = [(f, uri_path(f)) for f in sorted(table.inputFiles())]
 
     def _stats(batch):
         import pyarrow.parquet as pq
 
-        for path in batch:
+        for uri, path in batch:
             md = pq.ParquetFile(path).metadata
             names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-            row = ["file://" + path, md.num_rows]
+            row = [uri, md.num_rows]
             for c in cols:
                 mn = mx = None
                 nulls = 0
@@ -116,24 +142,20 @@ def build_column_stats_from_footers(
 
     # schema must match the scan-built index: borrow column types from a
     # zero-row projection of the table itself
-    probe = read_files(spark, table_path)
     fields = ["CAST(NULL AS STRING) AS file", "CAST(0 AS LONG) AS num_rows"]
     for c in cols:
-        t = probe.schema[c].dataType.simpleString()
+        t = table.schema[c].dataType.simpleString()
         fields += [
             f"CAST(NULL AS {t}) AS min_{c}",
             f"CAST(NULL AS {t}) AS max_{c}",
             "CAST(0 AS LONG) AS nulls_" + c,
         ]
-    schema = probe.limit(0).selectExpr(*fields).schema
+    schema = table.limit(0).selectExpr(*fields).schema
     rows = spark.sparkContext.parallelize(files, max(1, min(len(files), 64)))
     stats = spark.createDataFrame(
         rows.mapPartitions(lambda b: _stats(list(b))), schema
     )
-    out = _index_path(table_path)
-    stats.write.mode("overwrite").parquet(out)
-    spark.catalog.refreshByPath(out)
-    return read_files(spark, out, merge_schema=False)
+    return _write_index(spark, stats, os.path.join(table_path, INDEX_DIR))
 
 
 def prune_files(
@@ -144,18 +166,18 @@ def prune_files(
     hi,
 ) -> tuple[list[str], int]:
     """Files whose [min_col, max_col] intersects [lo, hi], compared in
-    the column's native type ordering. Returns (kept_files,
-    total_files). Driver-side over the small index relation only."""
-    idx = read_files(spark, _index_path(table_path), merge_schema=False)
-    total = idx.count()
-    kept = (
-        idx.filter(
-            (F.col(f"max_{col}") >= F.lit(lo)) & (F.col(f"min_{col}") <= F.lit(hi))
-        )
-        .select("file")
-        .collect()
+    the column's native type ordering, plus every listed file the index
+    does not know or holds no stats of *col* for (NULL min/max). Returns
+    (kept_files, total_files), total being the size of the table's
+    current listing."""
+    idx = _read_index(spark, os.path.join(table_path, INDEX_DIR), "build_column_stats")
+    base = read_files(spark, table_path)
+    hit = F.coalesce(
+        (F.col(f"max_{col}") >= F.lit(lo)) & (F.col(f"min_{col}") <= F.lit(hi)),
+        F.lit(True),
     )
-    return [r.file for r in kept], total
+    kept = _candidate_files(base, idx.select("file", hit.alias("hit")))
+    return kept, len(base.inputFiles())
 
 
 def read_with_skipping(
@@ -170,11 +192,7 @@ def read_with_skipping(
     at file granularity; the residual filter restores row precision —
     same contract as parquet row-group skipping, one level up)."""
     files, _ = prune_files(spark, table_path, col, lo, hi)
-    if not files:
-        return read_files(spark, table_path).filter(F.lit(False))
-    # basePath keeps Hive partition columns recoverable when the scan is
-    # handed explicit file paths instead of the table root
-    df = read_files(spark, files, base_path=table_path)
+    df = _read_uris(spark, read_files(spark, table_path), files, table_path)
     return df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
 
@@ -193,10 +211,7 @@ def build_record_index(spark: SparkSession, table) -> DataFrame:
     idx = df.select(
         *table.record_key, F.input_file_name().alias("file")
     ).distinct()
-    out = os.path.join(table.path, RECORD_INDEX_DIR)
-    idx.write.mode("overwrite").parquet(out)
-    spark.catalog.refreshByPath(out)
-    return read_files(spark, out, merge_schema=False)
+    return _write_index(spark, idx, os.path.join(table.path, RECORD_INDEX_DIR))
 
 
 SECONDARY_INDEX_DIR = "_index/secondary"
@@ -216,35 +231,26 @@ def build_secondary_index(spark: SparkSession, table, col: str) -> DataFrame:
     idx = df.select(
         F.col(col).alias("value"), F.input_file_name().alias("file")
     ).distinct()
-    out = os.path.join(table.path, SECONDARY_INDEX_DIR, col)
-    idx.write.mode("overwrite").parquet(out)
-    spark.catalog.refreshByPath(out)
-    return read_files(spark, out, merge_schema=False)
+    return _write_index(spark, idx, os.path.join(table.path, SECONDARY_INDEX_DIR, col))
 
 
 def secondary_lookup(
     spark: SparkSession, table, col: str, values_df: DataFrame
 ) -> DataFrame:
     """Point lookup by a non-key column through the secondary index:
-    read only base files the index maps the probe values to, union the
-    MOR delta log, resolve precombine, then re-apply the exact predicate
-    (rows whose LATEST version left the probed value set drop out here —
-    same residual-filter contract as every index in this module)."""
-    probe = F.broadcast(values_df.select(F.col(col).alias("value")).distinct())
-    idx = read_files(
-        spark, os.path.join(table.path, SECONDARY_INDEX_DIR, col), merge_schema=False
-    )
-    files = [
-        r.file
-        for r in idx.join(probe, "value").select("file").distinct().collect()
-    ]
-    if files:
-        base = read_files(spark, files, base_path=table.base_path)
-    else:
-        base = table.read_base(spark).filter(F.lit(False))
+    read only the candidate base files, union the MOR delta log, resolve
+    precombine, then re-apply the exact predicate (rows whose LATEST
+    version left the probed value set drop out here — same
+    residual-filter contract as every index in this module)."""
+    values = values_df.select(F.col(col).alias("value")).distinct()
+    path = os.path.join(table.path, SECONDARY_INDEX_DIR, col)
+    idx = _read_index(spark, path, "build_secondary_index")
+    marks = idx.join(F.broadcast(values.withColumn("hit", F.lit(True))), "value", "left")
+    base = table.read_base(spark)
+    base = _read_uris(spark, base, _candidate_files(base, marks), table.base_path)
     resolved = table.resolve(base, table.read_log(spark))
     return resolved.join(
-        probe.select(F.col("value").alias(col)), col, "left_semi"
+        F.broadcast(values).select(F.col("value").alias(col)), col, "left_semi"
     )
 
 
@@ -277,6 +283,8 @@ def build_bloom_index(
     index table: per base file, the sorted set of bloom bit positions of
     every record key in it (reference tables get this from
     ``hoodie.index.type=BLOOM`` file footers; the app never surfaces it).
+    The sizing (``m_bits``, ``k``) is stored as metadata of the ``bits``
+    column in the index's parquet footer, where lookups read it back.
 
     Build cost: one explode of k positions per row + one aggregation
     keyed on file name — map-side partial `collect_set` bounds the
@@ -293,26 +301,41 @@ def build_bloom_index(
     idx = (
         df.select(F.input_file_name().alias("file"), F.explode(bits).alias("bit"))
         .groupBy("file")
-        .agg(F.sort_array(F.collect_set("bit")).alias("bits"))
+        .agg(
+            F.sort_array(F.collect_set("bit")).alias(
+                "bits", metadata={"m_bits": m_bits, "k": k}
+            )
+        )
     )
-    out = os.path.join(table.path, BLOOM_INDEX_DIR)
-    idx.write.mode("overwrite").parquet(out)
-    import json
+    return _write_index(spark, idx, os.path.join(table.path, BLOOM_INDEX_DIR))
 
-    with open(os.path.join(table.path, BLOOM_INDEX_DIR + "._meta"), "w") as f:
-        json.dump({"m_bits": m_bits, "k": k}, f)
-    spark.catalog.refreshByPath(out)
-    return read_files(spark, out, merge_schema=False)
+
+def _bloom_index(spark: SparkSession, table) -> tuple[DataFrame, int, int]:
+    """The stored bloom index with the (m_bits, k) it was built with."""
+    path = os.path.join(table.path, BLOOM_INDEX_DIR)
+    idx = _read_index(spark, path, "build_bloom_index")
+    sizing = idx.schema["bits"].metadata
+    if "m_bits" not in sizing:
+        raise ValueError(f"bloom index at {path} has no m_bits/k: rebuild it "
+                         "with index.build_bloom_index")
+    return idx, sizing["m_bits"], sizing["k"]
 
 
 def bloom_candidate_files(
-    spark: SparkSession, table, keys_df: DataFrame, m_bits: int = 4096, k: int = 3
+    spark: SparkSession, table, keys_df: DataFrame
 ) -> list[str]:
     """Base files that may contain any of the probe keys: file f is a
     candidate for key x iff ALL of x's bit positions are set in f's
-    filter. The probe side is a point-lookup batch — small by definition
-    — so it broadcasts into a nested-loop against the (files-sized)
-    index relation; the table's data is never touched."""
+    filter, and every listed file the index does not know. The table's
+    data is never touched."""
+    marks = _bloom_marks(spark, table, keys_df)
+    return _candidate_files(table.read_base(spark), marks)
+
+
+def _bloom_marks(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
+    """The bloom index's ``(file, hit)`` rows for a probe batch — small
+    by definition, so it broadcasts against the (files-sized) index."""
+    idx, m_bits, k = _bloom_index(spark, table)
     probes = (
         keys_df.select(*table.record_key)
         .distinct()
@@ -324,56 +347,33 @@ def bloom_candidate_files(
         .distinct()
         .select(F.col("pbits"), F.size("pbits").alias("need"))
     )
-    # equijoin on BIT POSITION, not a nested loop: the old
-    # forall(pbits, array_contains(bits, ·)) BNLJ cost
-    # files × keys × k × O(m_bits) linear scans (the r8 +12% headline
-    # regression lived here). Exploding both sides turns the membership
-    # test into a broadcast hash join on `bit` plus one (file, probe)
-    # count — a file is a candidate for a probe iff ALL `need` of its
-    # distinct bits matched. Map-only explode on the index side, 6k-row
-    # probe broadcast, partial agg: every stage distributed.
+    # equijoin on BIT POSITION, not a nested loop over
+    # forall(pbits, array_contains(bits, ·)), which costs
+    # files × keys × k × O(m_bits): a broadcast hash join on `bit` plus
+    # one (file, probe) count — a file is a candidate for a probe iff
+    # ALL `need` of its distinct bits matched.
     pe = probes.select(
         F.col("pbits"), F.col("need"), F.explode("pbits").alias("bit")
     )
-    idx = read_files(spark, os.path.join(table.path, BLOOM_INDEX_DIR), merge_schema=False)
     ie = idx.select("file", F.explode("bits").alias("bit"))
-    cand = (
+    hits = (
         ie.join(F.broadcast(pe), "bit")
         .groupBy("file", "pbits", "need")
-        .agg(F.count(F.lit(1)).alias("hit"))
-        .filter(F.col("hit") == F.col("need"))
-        .select("file")
-        .distinct()
-        .collect()
+        .agg(F.count(F.lit(1)).alias("matched"))
+        .filter(F.col("matched") == F.col("need"))
+        .select("file", F.lit(True).alias("hit"))
     )
-    return [r.file for r in cand]
+    return hits.unionByName(idx.select("file", F.lit(False).alias("hit")))
 
 
-def bloom_lookup(
-    spark: SparkSession,
-    table,
-    keys_df: DataFrame,
-    m_bits: int = 4096,
-    k: int = 3,
-) -> DataFrame:
+def bloom_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
     """Point lookup routed through the bloom index: read only candidate
     base files, exact-filter by key (discarding bloom false positives),
     union the MOR delta log, resolve precombine. Same contract as
     `point_lookup` but with O(m_bits)-per-file index storage instead of
     O(records) — the trade Hudi makes between its BLOOM and
     record-level indexes."""
-    keys = table.record_key
-    # materialized once: feeds the bloom candidate probe plus two
-    # semi-joins (see point_lookup — same triple-scan hazard)
-    kd = keys_df.select(*keys).distinct().localCheckpoint()
-    probe = F.broadcast(kd)
-    files = bloom_candidate_files(spark, table, kd, m_bits=m_bits, k=k)
-    if files:
-        base = read_files(spark, files, base_path=table.base_path)
-        matched = base.join(probe, on=keys, how="left_semi")
-    else:
-        matched = table.read_base(spark).filter(F.lit(False))
-    return table.resolve(matched, _log_rows(spark, table, probe))
+    return _keyed_lookup(spark, table, keys_df, lambda kd: _bloom_marks(spark, table, kd))
 
 
 def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
@@ -386,53 +386,57 @@ def point_lookup(spark: SparkSession, table, keys_df: DataFrame) -> DataFrame:
     ~one file per requested key on a clustered layout instead of a full
     partition scan. The MOR log is unioned unpruned because it is the
     small side by design (compaction keeps it so)."""
-    keys = table.record_key
-    idx = read_files(spark, os.path.join(table.path, RECORD_INDEX_DIR), merge_schema=False)
+    path = os.path.join(table.path, RECORD_INDEX_DIR)
+    idx = _read_index(spark, path, "build_record_index")
+    return _keyed_lookup(
+        spark, table, keys_df,
+        lambda kd: idx.join(
+            F.broadcast(kd.withColumn("hit", F.lit(True))), table.record_key, "left"
+        ),
+    )
+
+
+def _keyed_lookup(spark: SparkSession, table, keys_df: DataFrame, marks_of):
+    """The live rows of the keys in *keys_df*: the rows of those keys in
+    the candidate base files the index (``marks_of(keys)``) routes to,
+    plus their MOR log rows, resolved by precombine."""
     # materialize the point batch ONCE: it feeds three broadcast joins
     # (index probe, base semi-join, log semi-join), and an unmaterialized
     # keys_df would re-run its source scan + distinct shuffle per use —
     # measured ~2.4s -> ~1.5s probe at sf0.1 on the registered query
-    kd = keys_df.select(*keys).distinct().localCheckpoint()
-    files = [
-        r.file
-        for r in idx.join(F.broadcast(kd), on=keys)
-        .select("file")
-        .distinct()
-        .collect()
-    ]
-    if files:
-        base = read_files(spark, files, base_path=table.base_path)
-        matched = base.join(F.broadcast(kd), on=keys, how="left_semi")
-    else:
-        matched = table.read_base(spark).filter(F.lit(False))
-    return table.resolve(matched, _log_rows(spark, table, F.broadcast(kd)))
-
-
-def _log_rows(spark: SparkSession, table, probe: DataFrame) -> DataFrame | None:
-    """The MOR log rows of the probed keys (``None`` without a log)."""
+    kd = keys_df.select(*table.record_key).distinct().localCheckpoint()
+    probe = F.broadcast(kd)
+    marks = marks_of(kd)
+    base = table.read_base(spark)
+    base = _read_uris(spark, base, _candidate_files(base, marks), table.base_path)
+    matched = base.join(probe, on=table.record_key, how="left_semi")
     log = table.read_log(spark)
-    if log is None:
-        return None
-    return log.join(probe, on=table.record_key, how="left_semi")
+    if log is not None:
+        log = log.join(probe, on=table.record_key, how="left_semi")
+    return table.resolve(matched, log)
+
+
+def _write_index(spark: SparkSession, idx: DataFrame, out: str) -> DataFrame:
+    """Persist an index relation at *out* and return it read back."""
+    idx.write.mode("overwrite").parquet(out)
+    spark.catalog.refreshByPath(out)
+    return read_files(spark, out, merge_schema=False)
 
 
 def refresh_indexes(spark: SparkSession, table) -> list[str]:
-    """Rebuild every index present under ``<table>/_index`` — the
-    maintenance hook to run after any base rewrite (COW upsert,
-    compaction, clustering), since file-granular indexes go stale when
-    base files are replaced. Discovers what exists and how it was
-    parameterized from the stored artifacts themselves:
+    """Rebuild every index present under ``<table>/_index`` so it covers
+    the files written since it was built (until then those files are
+    read unpruned; see the module docstring). Discovers what exists and
+    how it was parameterized from the stored artifacts themselves:
 
     - ``column_stats``: indexed columns recovered from the ``min_*``
       schema fields; rebuilt via the footer-metadata path (no data scan).
     - ``record_index`` / ``secondary/<col>``: rebuilt as stored.
-    - ``bloom``: (m_bits, k) recovered from the ``._meta`` sidecar.
+    - ``bloom``: (m_bits, k) read back from the stored index.
 
     Returns the list of refreshed index names. Cost: one metadata job
     (column stats) + one projection pass per structural index — all
     bounded by the same economics as their original builds."""
-    import json
-
     root = os.path.join(table.path, "_index")
     if not os.path.isdir(root):
         return []
@@ -451,13 +455,8 @@ def refresh_indexes(spark: SparkSession, table) -> list[str]:
             build_record_index(spark, table)
             refreshed.append("record_index")
         elif entry == "bloom":
-            meta_path = p + "._meta"
-            meta = (
-                json.load(open(meta_path))
-                if os.path.exists(meta_path)
-                else {"m_bits": 4096, "k": 3}
-            )
-            build_bloom_index(spark, table, m_bits=meta["m_bits"], k=meta["k"])
+            _, m_bits, k = _bloom_index(spark, table)
+            build_bloom_index(spark, table, m_bits=m_bits, k=k)
             refreshed.append("bloom")
         elif entry == "secondary" and os.path.isdir(p):
             for col in sorted(os.listdir(p)):

@@ -250,14 +250,19 @@ def _local_path(path: str) -> str | None:
     return os.path.abspath(path)
 
 
+def uri_path(uri: str) -> str:
+    """The local path a ``file:`` URI names, percent-decoded (Spark's
+    ``inputFiles()`` and ``input_file_name()`` give encoded URIs, and
+    Spark reads a path string undecoded); other filesystems' URIs stay
+    as they are. ``unquote``, not ``unquote_plus``: a ``+`` in a path is
+    a ``+``."""
+    parsed = urlparse(uri)
+    return unquote(parsed.path) if parsed.scheme == "file" else uri
+
+
 def _input_files(df: DataFrame) -> set[str]:
-    """The files Spark listed for *df*, as local paths (Spark returns
-    percent-encoded URIs); other filesystems' URIs stay as they are."""
-    out = set()
-    for uri in df.inputFiles():
-        parsed = urlparse(uri)
-        out.add(unquote(parsed.path) if parsed.scheme == "file" else uri)
-    return out
+    """The files Spark listed for *df*, as :func:`uri_path` paths."""
+    return {uri_path(uri) for uri in df.inputFiles()}
 
 
 @dataclass

@@ -156,7 +156,6 @@ def jaccard_pairs(
     text_col: str = "text",
     n: int = 1,
     threshold: float = 0.5,
-    broadcast_sets: bool | None = None,
     max_broadcast_entries: int = 5_000_000,
     max_dense_vocab: int = 4096,
     max_allpairs_groups: int = 8192,
@@ -164,15 +163,12 @@ def jaccard_pairs(
     """Near-dup pairs by shingle-set Jaccard ≥ threshold — exact, via
     PPJoin-style prefix filtering (Xiao et al., WWW'08).
 
-    ``broadcast_sets``: hint the per-doc shingle-set side of the
-    verification join as broadcast. Right while the doc-set relation
-    fits executor memory (≲ a few GB); at full 100 TB corpus scale the
-    verification must be a shuffle join on id instead. The default
-    (``None``) decides from the measured size of the (persisted)
-    shingle relation — broadcast only when it holds at most
-    ``max_broadcast_entries`` (id, shingle) rows, the same
+    The per-doc shingle-set side of the verification join is broadcast
+    only when the (persisted) shingle relation holds at most
+    ``max_broadcast_entries`` (id, shingle) rows — the same
     runtime-stats dispatch AQE uses — so the operator needs no retuning
-    between a 10k-doc test corpus and a full crawl.
+    between a 10k-doc test corpus and a full crawl, where the
+    verification must be a shuffle join on id instead.
 
     **Adaptive verification.** One driver-side count of the distinct
     shingle vocabulary picks the physical strategy (the same move AQE
@@ -225,8 +221,6 @@ def jaccard_pairs(
         # only when it demonstrably fits executor memory. Lazy — the
         # dense all-pairs path never consults it, so small/template
         # corpora skip the extra action entirely.
-        if broadcast_sets is not None:
-            return broadcast_sets
         return sh.count() <= max_broadcast_entries
 
     def _prefix_candidates() -> DataFrame:
@@ -644,19 +638,15 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 2,
     threshold: float = 0.5,
-    broadcast_sigs: bool | None = None,
     max_broadcast_docs: int = 1_000_000,
 ) -> DataFrame:
     """Candidate pairs via banded LSH, verified by signature similarity.
 
-    ``broadcast_sigs``: hint the signature side of the verification
-    joins as broadcast (k×8 bytes per doc). At corpus scales where the
-    signature relation exceeds executor memory the verification must be
-    a shuffle join on id instead; the default (``None``) decides from
-    the measured doc count of the (persisted) signature relation —
-    broadcast only up to ``max_broadcast_docs`` (~k×8 bytes each, so
-    the default bound is ≈256 MB at k=32), the same runtime-stats
-    dispatch as ``jaccard_pairs``.
+    The signature side of the verification joins (k×8 bytes per doc) is
+    broadcast only up to ``max_broadcast_docs`` docs of the (persisted)
+    signature relation (≈256 MB at k=32), the same runtime-stats
+    dispatch as ``jaccard_pairs``; past it, corpus scale needs a
+    shuffle join on id.
 
     Pipeline: signature → split into `bands` bands of k/bands rows →
     hash each band → self-join on (band_idx, band_hash) → estimated
@@ -684,7 +674,7 @@ def minhash_lsh_pairs(
     )
     sig_a = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    if broadcast_sigs if broadcast_sigs is not None else sig.count() <= max_broadcast_docs:
+    if sig.count() <= max_broadcast_docs:
         sig_a, sig_b = F.broadcast(sig_a), F.broadcast(sig_b)
     # Statically-unrolled position-match count: k primitive comparisons
     # inside whole-stage codegen (a zip_with/filter HOF here evaluates
@@ -931,7 +921,6 @@ def containment_pairs(
     text_col: str = "text",
     n: int = 1,
     threshold: float = 0.8,
-    broadcast_sets: bool | None = None,
     max_broadcast_entries: int = 5_000_000,
 ) -> DataFrame:
     """Directed near-dup pairs by shingle-set CONTAINMENT
@@ -1019,12 +1008,7 @@ def containment_pairs(
         F.col("set_size").alias("size_a"),
     )
     sb = sets.select(F.col("id").alias("id_b"), F.col("s").alias("sb"))
-    do_bcast = (
-        broadcast_sets
-        if broadcast_sets is not None
-        else sh.count() <= max_broadcast_entries
-    )
-    if do_bcast:
+    if sh.count() <= max_broadcast_entries:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     return (
         cand.join(sa, "id_a")

@@ -13,8 +13,8 @@ values, regex) is a conditional-count expression inside the same
 map-side-combinable aggregate — adding a constraint adds an expression,
 not a pass. `unique` adds one exact distinct (count_distinct on the key
 — a second shuffle keyed by the constrained columns); `referential`
-adds one left-anti join against the referenced keys (broadcast when the
-dimension is small). Nothing collects more than the k-row report.
+adds one left-anti join against the referenced keys (broadcast: dimension
+keys are small). Nothing collects more than the k-row report.
 """
 
 from __future__ import annotations
@@ -116,15 +116,14 @@ class ReferentialConstraint:
     col: str
     ref: DataFrame = field(compare=False)
     ref_col: str = ""
-    broadcast_ref: bool = True
 
 
 def unique(*cols: str) -> UniqueConstraint:
     return UniqueConstraint(tuple(cols))
 
 
-def references(col: str, ref: DataFrame, ref_col: str, broadcast_ref: bool = True) -> ReferentialConstraint:
-    return ReferentialConstraint(col, ref, ref_col, broadcast_ref)
+def references(col: str, ref: DataFrame, ref_col: str) -> ReferentialConstraint:
+    return ReferentialConstraint(col, ref, ref_col)
 
 
 def constraint_report(df: DataFrame, constraints: list) -> DataFrame:
@@ -133,7 +132,7 @@ def constraint_report(df: DataFrame, constraints: list) -> DataFrame:
 
     Row-local constraints share one aggregate pass; each `unique` adds
     a keyed distinct aggregate; each `references` adds a left-anti join
-    (broadcast by default — dimension keys). The report is a union of
+    (broadcast — dimension keys). The report is a union of
     k one-row relations, so the plan stays a handful of tiny aggregates
     regardless of table size.
     """
@@ -171,9 +170,7 @@ def constraint_report(df: DataFrame, constraints: list) -> DataFrame:
             )
         elif isinstance(c, ReferentialConstraint):
             name = f"references({c.col}->{c.ref_col})"
-            keys = c.ref.select(F.col(c.ref_col).alias(c.col)).distinct()
-            if c.broadcast_ref:
-                keys = F.broadcast(keys)
+            keys = F.broadcast(c.ref.select(F.col(c.ref_col).alias(c.col)).distinct())
             orphans = df.filter(F.col(c.col).isNotNull()).join(
                 keys, c.col, "left_anti"
             )

@@ -250,27 +250,24 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     word ``n``-gram with the benchmark corpus (the standard eval-leak
     guard applied before pretraining).
 
     Returns (id, contaminated). The benchmark's distinct n-gram set is
-    broadcast by default — eval suites are tiny next to the corpus; at
-    an unusually large benchmark pass ``broadcast_benchmark=False`` for
-    a shuffle semi-join on the gram. The corpus side is a map stage +
-    one semi-join; no pair explosion.
+    broadcast — eval suites are tiny next to the corpus. The corpus side
+    is a map stage + one semi-join; no pair explosion.
     """
     df = widen_for_compute(df)  # compute-bound: scan width != CPU width
     grams = df.select(
         F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
     )
-    bench = benchmark.select(
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
-    ).distinct()
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(
+        benchmark.select(
+            F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        ).distinct()
+    )
     flagged = grams.join(bench, "gram", "left_semi").select(id_col).distinct()
     return (
         df.select(id_col)

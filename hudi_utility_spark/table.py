@@ -216,8 +216,9 @@ class KeyedTable:
         disjoint ranges — small files merge and range queries prune.
         Out-of-band like compaction: snapshot content is unchanged (MOR
         logs are folded in first — clustering implies compaction, as in
-        Hudi). Stale column-stats/record indexes under ``_index`` are
-        dropped; rebuild after clustering."""
+        Hudi). Indexes under ``_index`` survive: lookups ignore their
+        entries for the replaced files and read the new ones unpruned
+        until ``index.refresh_indexes`` covers them."""
         from hudi_utility_spark.write import write_sorted_partitioned
 
         if self.table_type is TableType.MERGE_ON_READ:
@@ -229,8 +230,7 @@ class KeyedTable:
         )
         from hudi_utility_spark.write import atomic_swap_dir
 
-        # keep locks/savepoints; _index is stale after the rewrite → drop
-        atomic_swap_dir(tmp, self.path, drop_meta=("_index",))
+        atomic_swap_dir(tmp, self.path)
         spark.catalog.refreshByPath(self.path)
 
     def compact(
@@ -253,9 +253,9 @@ class KeyedTable:
         Partition identity is the FULL partition-field tuple (see
         ``partition_paths``) and removed directory names are
         Spark-escaped — first-field-only bookkeeping or unescaped names
-        would let tombstoned rows resurface once the log is folded. Stored indexes are
-        invalidated (rebuild via ``index.refresh_indexes``), matching
-        the whole-table path's ``_index`` drop.
+        would let tombstoned rows resurface once the log is folded.
+        Stored indexes survive; lookups read the rewritten files
+        unpruned until ``index.refresh_indexes`` covers them.
 
         Crash contract: unpartitioned tables keep the all-or-nothing
         whole-dir swap. The partition-scoped path is WEAKER — the same
@@ -316,19 +316,16 @@ class KeyedTable:
                 for e in os.listdir(self.log_path)
             ):
                 shutil.rmtree(self.log_path)
-            idx = os.path.join(self.path, "_index")
-            if os.path.isdir(idx):
-                shutil.rmtree(idx)
             spark.catalog.refreshByPath(self.path)
             return
 
         resolved = self.resolve(self.read_base(spark), log)
         tmp = self.path.rstrip("/") + ".compact.tmp"
         write_partitioned(resolved, tmp, self.partition_fields, mode="overwrite")
-        # the folded _delta_log and any stale _index go; locks and
-        # savepoints survive (the pre-r3 swap deleted the active writer
-        # lease out from under TableServices' own critical section)
-        atomic_swap_dir(tmp, self.path, drop_meta=(_MOR_LOG_DIR, "_index"))
+        # the folded _delta_log goes; locks, savepoints and indexes
+        # survive (the pre-r3 swap deleted the active writer lease out
+        # from under TableServices' own critical section)
+        atomic_swap_dir(tmp, self.path, drop_meta=(_MOR_LOG_DIR,))
 
     def needs_compaction(self, max_log_ratio: float = 0.2) -> bool:
         """Hudi's compaction *scheduling* policy, size-triggered: True
@@ -389,7 +386,9 @@ class KeyedTable:
         entries), then one ``repartition(partition, salt)`` shuffle —
         so one big flagged partition packs to N files while a tiny one
         packs to 1, in a single job. Unlike :meth:`cluster` (whole-table
-        sort rewrite), cost is O(flagged bytes). Returns
+        sort rewrite), cost is O(flagged bytes). Indexes survive;
+        lookups read the packed files unpruned until
+        ``index.refresh_indexes`` covers them. Returns
         ``{"compacted": {partition: n_files}, "noop": bool}``.
         """
         import math
@@ -412,7 +411,7 @@ class KeyedTable:
             packed = self.read_base(spark).repartition(n)
             tmp = self.path.rstrip("/") + ".optimize.tmp"
             write_partitioned(packed, tmp, [], mode="overwrite")
-            atomic_swap_dir(tmp, self.path, drop_meta=("_index",))
+            atomic_swap_dir(tmp, self.path)
             spark.catalog.refreshByPath(self.path)
             return {"compacted": {"<unpartitioned>": n}, "noop": False}
 
@@ -474,10 +473,11 @@ class KeyedTable:
         lacks, here as an explicit rewrite): re-lay the table out under
         a different Hive partition hierarchy. MOR logs fold in first
         (the new routing applies to every live version), the rewrite
-        lands via the crash-safe swap (locks/savepoints survive; stale
-        `_index` entries drop — rebuild with `index.refresh_indexes`),
-        and a NEW `KeyedTable` spec pointing at the same path is
-        returned; the old spec's reads are stale after this.
+        lands via the crash-safe swap (locks, savepoints and indexes
+        survive; lookups read the re-laid files unpruned until
+        `index.refresh_indexes` covers them), and a NEW `KeyedTable`
+        spec pointing at the same path is returned; the old spec's reads
+        are stale after this.
 
         Cost: one full sorted-less rewrite — the honest price of
         physical re-routing; at 100 TB schedule it like `cluster` (an
@@ -494,7 +494,7 @@ class KeyedTable:
 
         tmp = self.path.rstrip("/") + ".relayout.tmp"
         write_partitioned(resolved, tmp, new_partition_fields, mode="overwrite")
-        atomic_swap_dir(tmp, self.path, drop_meta=(_MOR_LOG_DIR, "_index"))
+        atomic_swap_dir(tmp, self.path, drop_meta=(_MOR_LOG_DIR,))
         spark.catalog.refreshByPath(self.path)
         return replace(self, partition_fields=list(new_partition_fields))
 

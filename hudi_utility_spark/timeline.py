@@ -428,9 +428,9 @@ def restore_snapshot(
 ) -> dict:
     """Restore a table from an :func:`export_snapshot` backup: the
     backup's data replaces the table's base via the crash-safe swap
-    (leases/savepoints survive; the MOR log and stale indexes drop —
-    the restored state IS the resolved snapshot, so the log is
-    incorporated by construction). Refuses a backup whose key spec
+    (leases, savepoints and indexes survive; the MOR log drops — the
+    restored state IS the resolved snapshot, so the log is incorporated
+    by construction). Refuses a backup whose key spec
     disagrees with the table's. Returns the backup metadata."""
     import json as _json
     import os
@@ -454,6 +454,6 @@ def restore_snapshot(
     shutil.copytree(
         backup, tmp, ignore=shutil.ignore_patterns("_export_meta.json")
     )
-    atomic_swap_dir(tmp, table.path, drop_meta=(_MOR_LOG_DIR, "_index"))
+    atomic_swap_dir(tmp, table.path, drop_meta=(_MOR_LOG_DIR,))
     spark.catalog.refreshByPath(table.path)
     return meta

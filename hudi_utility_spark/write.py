@@ -35,7 +35,7 @@ def atomic_swap_dir(
       swap untouched — a rewrite that dropped them would delete the very
       lease serializing it (the pre-r3 ``compact()`` bug). Pass
       ``drop_meta`` for metadata the rewrite *invalidates* (a folded
-      ``_delta_log``, a stale ``_index``).
+      ``_delta_log``).
 
     Local FS / HDFS renames are atomic; object stores have no rename, so
     there the commit point is the ledger + CAS instant in

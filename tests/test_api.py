@@ -319,3 +319,11 @@ def test_compact_if_needed_ledgers_only_when_it_compacts(spark, tmp_path):
     assert ledgered() == before + 1
     assert not os.path.isdir(svc.table.log_path)
     assert {r.id: r.v for r in svc.read().collect()}[1] == 2.0
+
+
+def test_rerun_compares_the_id_as_a_value(engine, sf_dir, tmp_path):
+    """A transaction id is data, never SQL: one with a quote is simply
+    unknown."""
+    engine.bootstrap(_request(sf_dir, tmp_path))
+    with pytest.raises(KeyError):
+        engine.rerun("no'such-tid")

@@ -1,12 +1,17 @@
-"""Column-stats file-skipping: pruned reads must equal full-scan
-filters while touching strictly fewer files on a sorted layout."""
+"""File-level indexes: pruned reads and lookups must equal full-scan
+filters while touching strictly fewer files on a sorted layout, and a
+stale index (base files rewritten since it was built) must cost extra
+reads, never a wrong answer."""
 
 from __future__ import annotations
+
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
 
 from hudi_utility_spark import index
+from hudi_utility_spark.table import KeyedTable, TableType
 from hudi_utility_spark.write import write_sorted_partitioned
 
 
@@ -159,7 +164,7 @@ def test_bloom_index_lookup_matches_exact_filter(spark, events, tmp_path):
     delete_keys(spark, dead, table, commit_time="3")
 
     wanted = events.limit(10).select("event_id")
-    got = index.bloom_lookup(spark, table, wanted, m_bits=2048, k=3)
+    got = index.bloom_lookup(spark, table, wanted)
     rows = {r.event_id: r.value for r in got.select("event_id", "value").collect()}
     dead_ids = {r.event_id for r in dead.collect()}
     want_ids = {r.event_id for r in wanted.collect()} - dead_ids
@@ -188,15 +193,15 @@ def test_bloom_index_prunes_files_and_never_misses(spark, events, tmp_path):
     # single-key probe: candidates must include the key's true file and
     # (at this m/k on distinct keys) strictly prune the file set
     one = events.limit(1).select("event_id")
-    files = index.bloom_candidate_files(spark, table, one, m_bits=4096, k=3)
+    files = index.bloom_candidate_files(spark, table, one)
     assert 0 < len(files) < total
-    got = index.bloom_lookup(spark, table, one, m_bits=4096, k=3)
+    got = index.bloom_lookup(spark, table, one)
     assert got.count() == 1
 
     # absent key: exact residual filter discards bloom false positives
     mx = events.agg(F.max("event_id")).collect()[0][0]
     ghost = spark.range(mx + 500, mx + 501).selectExpr("id AS event_id")
-    assert index.bloom_lookup(spark, table, ghost, m_bits=4096, k=3).isEmpty()
+    assert index.bloom_lookup(spark, table, ghost).isEmpty()
 
 
 def test_secondary_index_lookup_with_log_churn(spark, events, tmp_path):
@@ -305,7 +310,7 @@ def test_refresh_indexes_after_cow_rewrite(spark, events, tmp_path):
     got = index.point_lookup(spark, table, wanted)
     assert got.count() == 20
     assert {r.value for r in got.select("value").collect()} == {55.0}
-    got_b = index.bloom_lookup(spark, table, wanted, m_bits=2048, k=3)
+    got_b = index.bloom_lookup(spark, table, wanted)
     assert got_b.count() == 20
 
     uid = events.select("user_id").first()[0]
@@ -319,3 +324,275 @@ def test_refresh_indexes_after_cow_rewrite(spark, events, tmp_path):
         for r in index.secondary_lookup(spark, table, "user_id", probe).collect()
     }
     assert got_ids == want_ids
+
+
+# -- stale indexes: every reader checks the index against the listing ---------
+
+_ALL_INDEXES = ["bloom", "column_stats", "record_index", "secondary/user_id"]
+
+
+def _rows(df, cols):
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def _indexed_table(spark, events, path, table_type=TableType.COPY_ON_WRITE,
+                   partition_fields=("event_type",), rows=None):
+    """A keyed table of 200 events in several files per partition, with
+    every index kind built over it (bloom sized 2048 bits, not the
+    default)."""
+    from hudi_utility_spark.timeline import stamp
+    from hudi_utility_spark.write import write_partitioned
+
+    table = KeyedTable(
+        path=path,
+        record_key=["event_id"],
+        precombine="ts",
+        partition_fields=list(partition_fields),
+        table_type=table_type,
+    )
+    rows = events.limit(200) if rows is None else rows
+    write_partitioned(stamp(rows, "1").repartition(3), path, table.partition_fields,
+                      pre_partitioned=True)
+    index.build_record_index(spark, table)
+    index.build_bloom_index(spark, table, m_bits=2048, k=3)
+    index.build_secondary_index(spark, table, "user_id")
+    index.build_column_stats(spark, table.path, ["event_id"])
+    return table
+
+
+def _probe(spark, table, n=40):
+    ids = sorted(r.event_id for r in table.read(spark).select("event_id").collect())[:n]
+    return spark.createDataFrame([(i,) for i in ids], "event_id LONG")
+
+
+def _assert_every_index_exact(spark, table, keys):
+    """Each lookup kind equals the snapshot semi-joined with its probe;
+    the column-stats range read equals the exact filter of the base."""
+    snap = table.read(spark)
+    cols = sorted(snap.columns)
+    want = _rows(snap.join(keys, "event_id", "left_semi"), cols)
+    assert want
+    assert _rows(index.point_lookup(spark, table, keys), cols) == want
+    assert _rows(index.bloom_lookup(spark, table, keys), cols) == want
+
+    users = snap.join(keys, "event_id", "left_semi").select("user_id").distinct()
+    want_u = _rows(snap.join(users, "user_id", "left_semi"), cols)
+    got_u = index.secondary_lookup(spark, table, "user_id", users)
+    assert _rows(got_u, cols) == want_u
+
+    ids = [r[0] for r in keys.collect()]
+    lo, hi = min(ids), max(ids)
+    rng = (F.col("event_id") >= lo) & (F.col("event_id") <= hi)
+    got_r = index.read_with_skipping(spark, table.path, "event_id", lo, hi)
+    assert _rows(got_r, cols) == _rows(table.read_base(spark).filter(rng), cols)
+
+
+def _churn(events):
+    """Updates of the first 20 events: new value, later precombine."""
+    return events.limit(20).select(
+        "event_id", "event_type",
+        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
+        "user_id", F.lit(55.0).alias("value"), "props",
+    )
+
+
+def _cow_upsert(spark, events, path):
+    from hudi_utility_spark.write import upsert
+
+    table = _indexed_table(spark, events, path)
+    upsert(spark, _churn(events), table, commit_time="2")
+    return table
+
+
+def _cow_upsert_partial(spark, events, path):
+    from hudi_utility_spark.write import upsert_partial
+
+    table = _indexed_table(spark, events, path)
+    upsert_partial(spark, _churn(events).drop("props"), table, commit_time="2")
+    return table
+
+
+def _cow_delete_keys(spark, events, path):
+    from hudi_utility_spark.write import delete_keys
+
+    table = _indexed_table(spark, events, path)
+    dead = _churn(events).limit(5).select("event_id", "event_type", "ts")
+    delete_keys(spark, dead, table, commit_time="2")
+    return table
+
+
+def _cow_merge_into(spark, events, path):
+    from hudi_utility_spark.write import merge_into
+
+    table = _indexed_table(spark, events, path)
+    merge_into(
+        spark, _churn(events), table,
+        update_set={"value": "s.value"}, delete_condition="t.user_id % 3 = 0",
+        commit_time="2",
+    )
+    return table
+
+
+def _mor_compact(partition_fields):
+    def op(spark, events, path):
+        from hudi_utility_spark.write import upsert
+
+        table = _indexed_table(spark, events, path, TableType.MERGE_ON_READ,
+                               partition_fields)
+        upsert(spark, _churn(events), table, commit_time="2")
+        table.compact(spark)
+        return table
+
+    return op
+
+
+def _cluster(spark, events, path):
+    table = _indexed_table(spark, events, path)
+    table.cluster(spark, ["event_id"], num_files=2)
+    return table
+
+
+def _compact_small_files(spark, events, path):
+    table = _indexed_table(spark, events, path)
+    assert not table.compact_small_files(spark, small_file_bytes=1 << 30)["noop"]
+    return table
+
+
+def _repartition_layout(spark, events, path):
+    table = _indexed_table(spark, events, path)
+    return table.repartition_layout(spark, [])
+
+
+def _restore_snapshot(spark, events, path):
+    from hudi_utility_spark.timeline import export_snapshot, restore_snapshot
+
+    table = _indexed_table(spark, events, path)
+    export_snapshot(spark, table, path + ".bak")
+    restore_snapshot(spark, table, path + ".bak")
+    return table
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        _cow_upsert, _cow_upsert_partial, _cow_delete_keys, _cow_merge_into,
+        _mor_compact(["event_type"]), _mor_compact([]), _cluster,
+        _compact_small_files, _repartition_layout, _restore_snapshot,
+    ],
+    ids=[
+        "cow_upsert", "cow_upsert_partial", "cow_delete_keys", "cow_merge_into",
+        "mor_compact_partitioned", "mor_compact_unpartitioned", "cluster",
+        "compact_small_files", "repartition_layout", "restore_snapshot",
+    ],
+)
+def test_stale_indexes_answer_exactly_after_a_base_rewrite(spark, events, tmp_path, rewrite):
+    """No refresh after the rewrite: entries of replaced files are
+    ignored, new files are read unpruned, and the indexes survive the
+    rewrite for `refresh_indexes` to find."""
+    table = rewrite(spark, events, str(tmp_path / "t"))
+    _assert_every_index_exact(spark, table, _probe(spark, table))
+    assert index.refresh_indexes(spark, table) == _ALL_INDEXES
+
+
+def test_escaped_partition_values_every_index_kind(spark, events, tmp_path):
+    """Partition values Spark escapes on disk (``p=a%3Ab``, ``p=50%25``)
+    or keeps raw (``p=c d``, ``p=x+y``): the stored ``input_file_name()``
+    URIs encode them once more, and reads decode them exactly once."""
+    values = ["a:b", "c d", "50%", "x+y"]
+    rows = events.limit(200).withColumn(
+        "p",
+        F.element_at(
+            F.array(*[F.lit(v) for v in values]),
+            (F.col("event_id") % 4 + 1).cast("int"),
+        ),
+    )
+    table = _indexed_table(spark, events, str(tmp_path / "esc"),
+                           partition_fields=["p"], rows=rows)
+    stored = {r.p for r in table.read(spark).select("p").distinct().collect()}
+    assert stored == set(values)
+    keys = _probe(spark, table)
+    _assert_every_index_exact(spark, table, keys)
+    # the bloom index answers with the sizing it was built with
+    assert index.bloom_lookup(spark, table, keys).count() == 40
+
+    index.build_column_stats_from_footers(spark, table.path, ["event_id"])
+    rng = (F.col("event_id") >= 0) & (F.col("event_id") <= 10**9)
+    got = index.read_with_skipping(spark, table.path, "event_id", 0, 10**9)
+    cols = sorted(table.read(spark).columns)
+    assert _rows(got, cols) == _rows(table.read_base(spark).filter(rng), cols)
+
+
+@pytest.mark.parametrize(
+    "lookup,build",
+    [
+        (lambda s, t, k: index.point_lookup(s, t, k), "build_record_index"),
+        (lambda s, t, k: index.bloom_lookup(s, t, k), "build_bloom_index"),
+        (lambda s, t, k: index.secondary_lookup(s, t, "event_id", k),
+         "build_secondary_index"),
+        (lambda s, t, k: index.read_with_skipping(s, t.path, "event_id", 0, 1),
+         "build_column_stats"),
+    ],
+    ids=["record", "bloom", "secondary", "column_stats"],
+)
+def test_missing_index_names_its_path_and_builder(spark, tmp_path, lookup, build):
+    table = KeyedTable(path=str(tmp_path / "bare"), record_key=["event_id"],
+                       precombine="ts")
+    keys = spark.createDataFrame([(1,)], "event_id LONG")
+    with pytest.raises(FileNotFoundError, match=rf"_index.*index\.{build}"):
+        lookup(spark, table, keys)
+
+
+def test_bloom_index_without_sizing_names_its_builder(spark, tmp_path):
+    """A bloom index whose footer carries no m_bits/k is refused, not
+    probed with a guessed sizing."""
+    table = KeyedTable(path=str(tmp_path / "old"), record_key=["event_id"],
+                       precombine="ts")
+    spark.createDataFrame([("f", [1])], "file STRING, bits ARRAY<INT>") \
+        .write.parquet(table.path + "/" + index.BLOOM_INDEX_DIR)
+    keys = spark.createDataFrame([(1,)], "event_id LONG")
+    with pytest.raises(ValueError, match=r"m_bits/k.*index\.build_bloom_index"):
+        index.bloom_candidate_files(spark, table, keys)
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, build):
+    """(result of *build*(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"index-lookup-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_job_budget_on_a_refreshed_table(spark, events, tmp_path):
+    """Checking the index against the listing launches no Spark job:
+    building and collecting each lookup on a refreshed, unchanged table
+    stays within the jobs it took before the check existed."""
+    table = _indexed_table(spark, events, str(tmp_path / "jobs"))
+    index.refresh_indexes(spark, table)
+    keys = _probe(spark, table)
+    for lookup, budget in ((index.point_lookup, 9), (index.bloom_lookup, 11)):
+        rows, jobs = _jobs(spark, lambda: lookup(spark, table, keys).collect())
+        assert len(rows) == 40
+        assert jobs <= budget, (lookup.__name__, jobs)
+
+
+def test_footer_index_keeps_a_file_without_stats(spark, tmp_path):
+    """A footer without min/max for the column says nothing about its
+    values: the file must be read, not pruned."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "nostats")
+    spark.range(100).selectExpr("id AS k").coalesce(1).write.parquet(root)
+    pq.write_table(pa.table({"k": pa.array([500], pa.int64())}),
+                   root + "/part-nostats.parquet", write_statistics=False)
+    index.build_column_stats_from_footers(spark, root, ["k"])
+    kept, total = index.prune_files(spark, root, "k", 400, 600)
+    assert (len(kept), total) == (1, 2)
+    assert [r.k for r in index.read_with_skipping(spark, root, "k", 400, 600).collect()] == [500]
