@@ -32,7 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.io import _local_path, read_files, uri_path
+from hudi_utility_spark.io import _local_path, list_files, read_files, uri_path
+from hudi_utility_spark.table import _MOR_LOG_DIR
 
 INDEX_DIR = "_index/column_stats"
 
@@ -62,13 +63,18 @@ def _candidate_files(base: DataFrame, marks: DataFrame) -> list[str]:
 def _read_uris(
     spark: SparkSession, base: DataFrame, files: list[str], base_path: str
 ) -> DataFrame:
-    """The rows of *base* in its candidate *files*. The stored URIs are
-    percent-encoded (``p=a%253Ab`` for the on-disk ``p=a%3Ab``) and
-    Spark reads path strings undecoded, so they are decoded here, once;
-    ``basePath`` keeps the Hive partition columns of the file list."""
+    """The rows of *base* in its candidate *files*, read with *base*'s
+    schema: the candidates' own schema would lack the columns only other
+    files carry (``_commit_time`` of rewritten files), and inferring it
+    would cost a job per lookup. The stored URIs are percent-encoded
+    (``p=a%253Ab`` for the on-disk ``p=a%3Ab``) and Spark reads path
+    strings undecoded, so they are decoded here, once; ``basePath``
+    keeps the Hive partition columns of the file list."""
     if not files:
         return base.filter(F.lit(False))
-    return read_files(spark, [uri_path(f) for f in files], base_path=base_path)
+    return read_files(
+        spark, [uri_path(f) for f in files], base_path=base_path, schema=base.schema
+    )
 
 
 def build_column_stats(
@@ -190,7 +196,18 @@ def read_with_skipping(
     """Range read through the index: scan only files that can contain
     ``col ∈ [lo, hi]``, then re-apply the exact predicate (stats prune
     at file granularity; the residual filter restores row precision —
-    same contract as parquet row-group skipping, one level up)."""
+    same contract as parquet row-group skipping, one level up).
+
+    The index covers base files only, so a MOR table whose delta log
+    holds data raises: its snapshot is ``KeyedTable.read`` (or the base
+    after ``KeyedTable.compact``)."""
+    log = os.path.join(table_path, _MOR_LOG_DIR)
+    if list_files(log):
+        raise ValueError(
+            f"read_with_skipping reads base files only, and {log} holds "
+            "uncompacted MOR log files: read the snapshot with "
+            "KeyedTable.read, or run KeyedTable.compact first"
+        )
     files, _ = prune_files(spark, table_path, col, lo, hi)
     df = _read_uris(spark, read_files(spark, table_path), files, table_path)
     return df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))

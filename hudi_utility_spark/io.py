@@ -29,6 +29,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Reference accepts only parquet/orc (app.py:441 VALID_FORMATS); CSV/JSON
 # are free extensions on Spark so we accept them too.
@@ -125,8 +126,8 @@ _INFERENCE_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 # per session: (fmt, paths, options) -> (listing + conf values, schema),
-# least recently read first; file-subset reads (index lookups) give
-# many distinct path tuples, so the oldest entries are dropped
+# least recently read first; file-list reads (a MOR log's files) give
+# a new path tuple per commit, so the oldest entries are dropped
 _MAX_SCHEMAS = 256
 _schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _schemas_lock = threading.Lock()
@@ -138,6 +139,7 @@ def read_files(
     fmt: str = "parquet",
     merge_schema: bool = True,
     base_path: str | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """The package's one parquet/ORC batch reader.
 
@@ -152,6 +154,7 @@ def read_files(
     and the read infers as usual. Paths this process cannot walk (a
     non-local URI, a glob) always infer. ``base_path`` is Spark's
     ``basePath`` option: partition columns of an explicit file list.
+    A given ``schema`` is read with as it is, and nothing is inferred.
     """
     paths = (paths,) if isinstance(paths, str) else tuple(paths)
     options = {"mergeSchema": str(merge_schema).lower()}
@@ -161,6 +164,8 @@ def read_files(
     def reader():  # DataFrameReader.schema() sets the schema in place
         return spark.read.format(fmt).options(**options)
 
+    if schema is not None:
+        return reader().schema(schema).load(list(paths))
     listing = _listing(paths)
     if listing is None:
         return reader().load(list(paths))

@@ -4,18 +4,23 @@ The reference's distinguishing feature: resuming a partially-written
 bootstrap by re-writing only *missing* and *incomplete* partitions
 (``fastapi-backend/pyspark_script.py:199-253,392-401``). Its implementation
 is the repo's biggest perf bug — an O(P) loop issuing a filter+count Spark
-job per partition value per side (``pyspark_script.py:237-247``). Here both
-diffs are single-shuffle DataFrame plans:
+job per partition value per side (``pyspark_script.py:237-247``).
 
-* missing  = broadcast **left-anti join** of distinct source partition
-  values against destination partition values (J1);
-* incomplete = ``groupBy(partition).count()`` on each side + **inner join**
-  + count-inequality filter (J2) — two partial-aggregated scans and one
-  broadcast join, total work independent of partition count.
+Resume asks one question — which source partitions does the destination
+not hold in full — and answers it with one aggregate
+(:func:`partitions_to_repair`): both sides' partition values, tagged by
+side, unioned and grouped by the string form of the value. A partition
+whose destination count differs from its source count (0 when the
+destination lacks it) is missing or incomplete. Each side is scanned
+once, nothing is joined, and the whole diff is two Spark jobs (the
+partial-aggregate stage, then the final aggregate AQE plans after it).
+NULL groups as one value, so a NULL partition is diffed like any other.
 
-At 100 TB the aggregates are map-side partial (Catalyst), the joined
-per-partition count tables are tiny (one row per partition value), and the
-join broadcasts — no full shuffle of the data ever happens.
+The J1/J2 audits stay as separate plans for callers that want either
+half alone: missing = broadcast left-anti join of distinct partition
+values, incomplete = ``groupBy(partition).count()`` per side joined on
+the value. At 100 TB every aggregate here is map-side partial, so the
+shuffle carries one row per partition value per task, never data rows.
 """
 
 from __future__ import annotations
@@ -65,16 +70,37 @@ def incomplete_partitions(
     )
 
 
+def _repair_diff(
+    source: DataFrame, dest: DataFrame | None, partition_field: str
+) -> DataFrame:
+    """``(partition, src_cnt, dst_cnt)`` of every source partition whose
+    destination count differs, from one aggregate over both sides'
+    partition values tagged by side; ``dest=None`` is a destination
+    with no rows."""
+    p = F.col(partition_field).cast("string").alias(partition_field)
+    sides = source.select(p, F.lit(1).alias("side"))
+    if dest is not None:
+        sides = sides.unionByName(dest.select(p, F.lit(0).alias("side")))
+    return (
+        sides.groupBy(partition_field)
+        .agg(F.sum("side").alias("src_cnt"), F.count(F.lit(1)).alias("cnt"))
+        .select(partition_field, "src_cnt", (F.col("cnt") - F.col("src_cnt")).alias("dst_cnt"))
+        .filter((F.col("src_cnt") > 0) & (F.col("src_cnt") != F.col("dst_cnt")))
+    )
+
+
 def partitions_to_repair(
-    source: DataFrame, dest: DataFrame, partition_field: str
-) -> list[str]:
-    """missing ∪ incomplete partition values (the reference's
-    ``set(missing + incomplete)`` union-distinct, ``pyspark_script.py:257``).
-    Collect is safe: one row per partition *value*, never data rows."""
-    miss = missing_partitions(source, dest, partition_field)
-    inc = incomplete_partitions(source, dest, partition_field).select(partition_field)
-    union = miss.union(inc).distinct()
-    return sorted(r[0] for r in union.collect())
+    source: DataFrame, dest: DataFrame | None, partition_field: str
+) -> list[str | None]:
+    """Source partition values the destination does not hold in full:
+    the reference's ``set(missing + incomplete)``
+    (``pyspark_script.py:257``) as one aggregate over both sides, each
+    scanned once. ``dest=None`` stands for a destination with no rows,
+    so every source partition is returned. Values are string forms,
+    sorted, with a NULL partition as ``None`` first. Collect is safe:
+    one row per partition *value*, never data rows."""
+    diff = _repair_diff(source, dest, partition_field).select(partition_field)
+    return sorted((r[0] for r in diff.collect()), key=lambda v: (v is not None, v))
 
 
 def resume_bootstrap(
@@ -92,29 +118,29 @@ def resume_bootstrap(
     if not table.partition_fields:
         raise ValueError("resume requires a partitioned table")
     pfield = table.partition_fields[0]
-    if not table.exists():
-        to_write = [
-            str(r[0]) for r in source_df.select(pfield).distinct().collect()
-        ]
-    else:
-        dest = table.read_base(spark)
-        to_write = partitions_to_repair(source_df, dest, pfield)
+    dest = table.read_base(spark) if table.exists() else None
+    to_write = partitions_to_repair(source_df, dest, pfield)
     if not to_write:
         return {"repaired_partitions": [], "noop": True, "dry_run": dry_run}
     if not dry_run:
         # partition values were compared as strings; filter source by the
-        # string form so typed columns (dates, ints) still match. Dynamic
-        # partition overwrite replaces exactly these partitions.
+        # string form so typed columns (dates, ints) still match, and
+        # match the NULL partition with IS NULL (IN never matches NULL).
+        # Dynamic partition overwrite replaces exactly these partitions.
         from hudi_utility_spark.write import align_timestamp_types, write_partitioned
 
-        src = source_df.filter(F.col(pfield).cast("string").isin(to_write))
-        if table.exists():
+        value = F.col(pfield).cast("string")
+        keep = value.isin([v for v in to_write if v is not None])
+        if None in to_write:
+            keep = keep | value.isNull()
+        src = source_df.filter(keep)
+        if dest is not None:
             # rewritten partitions must carry the destination's timestamp
             # flavor (NTZ vs LTZ) or the next mergeSchema read dies —
             # no-op under the engine session, protects vanilla sessions
-            src = align_timestamp_types(src, table.read_base(spark).schema)
+            src = align_timestamp_types(src, dest.schema)
         write_partitioned(src, table.base_path, table.partition_fields, mode="overwrite")
-    return {"repaired_partitions": sorted(to_write), "noop": False, "dry_run": dry_run}
+    return {"repaired_partitions": to_write, "noop": False, "dry_run": dry_run}
 
 
 # Modulus for the order-independent partition fingerprint: row hashes are

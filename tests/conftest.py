@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -63,6 +64,25 @@ def spark():
     spark = get_spark("hudi_utility_spark-tests")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(build)`` → (result of *build*(), number of Spark jobs
+    it launched), counted by a job group of its own."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(build):
+        group = f"count-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -5,8 +5,6 @@ reads, never a wrong answer."""
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -554,22 +552,7 @@ def test_bloom_index_without_sizing_names_its_builder(spark, tmp_path):
         index.bloom_candidate_files(spark, table, keys)
 
 
-_groups = itertools.count()
-
-
-def _jobs(spark, build):
-    """(result of *build*(), number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"index-lookup-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_lookup_job_budget_on_a_refreshed_table(spark, events, tmp_path):
+def test_lookup_job_budget_on_a_refreshed_table(spark, events, tmp_path, count_jobs):
     """Checking the index against the listing launches no Spark job:
     building and collecting each lookup on a refreshed, unchanged table
     stays within the jobs it took before the check existed."""
@@ -577,7 +560,7 @@ def test_lookup_job_budget_on_a_refreshed_table(spark, events, tmp_path):
     index.refresh_indexes(spark, table)
     keys = _probe(spark, table)
     for lookup, budget in ((index.point_lookup, 9), (index.bloom_lookup, 11)):
-        rows, jobs = _jobs(spark, lambda: lookup(spark, table, keys).collect())
+        rows, jobs = count_jobs(lambda: lookup(spark, table, keys).collect())
         assert len(rows) == 40
         assert jobs <= budget, (lookup.__name__, jobs)
 
@@ -596,3 +579,55 @@ def test_footer_index_keeps_a_file_without_stats(spark, tmp_path):
     kept, total = index.prune_files(spark, root, "k", 400, 600)
     assert (len(kept), total) == (1, 2)
     assert [r.k for r in index.read_with_skipping(spark, root, "k", 400, 600).collect()] == [500]
+
+
+def test_lookups_keep_the_table_schema_when_keys_miss_rewritten_files(spark, tmp_path):
+    """A column only rewritten files carry (a COW commit's
+    ``_commit_time``) is in every lookup's result, NULL for rows of
+    older files, whichever files the probed keys sit in."""
+    from hudi_utility_spark.write import full_bootstrap, upsert
+
+    table = KeyedTable(path=str(tmp_path / "t"), record_key=["id"], precombine="ts",
+                       partition_fields=["p"])
+    rows = [(i, 1, "old" if i < 10 else "new", f"u{i}", float(i)) for i in range(20)]
+    full_bootstrap(spark, spark.createDataFrame(rows, "id LONG, ts LONG, p STRING, "
+                                                "u STRING, v DOUBLE"), table)
+    upsert(spark, spark.createDataFrame([(15, 2, "new", "u15", 99.0)],
+                                        "id LONG, ts LONG, p STRING, u STRING, v DOUBLE"),
+           table, commit_time="2")
+    index.build_record_index(spark, table)
+    index.build_bloom_index(spark, table)
+    index.build_secondary_index(spark, table, "u")
+    index.build_column_stats(spark, table.path, ["id"])
+    snap = table.read(spark)
+    assert "_commit_time" in snap.columns
+    old = snap.filter("id < 3")
+    keys = old.select("id")
+    want = _rows(old, sorted(snap.columns))
+    for got in (index.point_lookup(spark, table, keys),
+                index.bloom_lookup(spark, table, keys),
+                index.secondary_lookup(spark, table, "u", old.select("u")),
+                index.read_with_skipping(spark, table.path, "id", 0, 2)):
+        assert sorted(got.columns) == sorted(snap.columns)
+        assert _rows(got, sorted(snap.columns)) == want
+
+
+def test_read_with_skipping_refuses_a_mor_table_with_a_log(spark, tmp_path):
+    """The column-stats index covers base files only: over an
+    uncompacted MOR log a range read would return row versions the log
+    has since updated or deleted, so it raises instead; after
+    compaction it reads the snapshot."""
+    from hudi_utility_spark.write import delete_keys, upsert, write_partitioned
+
+    table = KeyedTable(path=str(tmp_path / "mor"), record_key=["k"], precombine="ts",
+                       table_type=TableType.MERGE_ON_READ)
+    write_partitioned(spark.range(10).selectExpr("id AS k", "0L AS ts", "CAST(id AS DOUBLE) AS v"),
+                      table.path, [])
+    index.build_column_stats(spark, table.path, ["k"])
+    upsert(spark, spark.createDataFrame([(3, 1, 99.0)], "k LONG, ts LONG, v DOUBLE"), table)
+    delete_keys(spark, spark.createDataFrame([(4, 1)], "k LONG, ts LONG"), table)
+    with pytest.raises(ValueError, match=r"KeyedTable\.read.*KeyedTable\.compact"):
+        index.read_with_skipping(spark, table.path, "k", 2, 5)
+    table.compact(spark)
+    got = index.read_with_skipping(spark, table.path, "k", 2, 5)
+    assert sorted((r.k, r.v) for r in got.collect()) == [(2, 2.0), (3, 99.0), (5, 5.0)]

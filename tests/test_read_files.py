@@ -4,7 +4,6 @@ in the inference confs makes the next read infer again."""
 
 from __future__ import annotations
 
-import itertools
 import os
 
 import pyarrow as pa
@@ -15,21 +14,6 @@ from pyspark.sql import functions as F
 from hudi_utility_spark import io
 from hudi_utility_spark.table import KeyedTable, TableType
 from hudi_utility_spark.write import upsert
-
-_groups = itertools.count()
-
-
-def _jobs(spark, build):
-    """(result of *build*(), number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"read-files-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 def _mor_table(spark, tmp_path):
     table = KeyedTable(
@@ -52,11 +36,11 @@ def _mor_table(spark, tmp_path):
     return table
 
 
-def test_second_read_of_unchanged_table_launches_no_job(spark, tmp_path):
+def test_second_read_of_unchanged_table_launches_no_job(spark, tmp_path, count_jobs):
     table = _mor_table(spark, tmp_path)
     table.read_base(spark), table.read_log(spark)
-    (base, log), jobs = _jobs(
-        spark, lambda: (table.read_base(spark), table.read_log(spark))
+    (base, log), jobs = count_jobs(
+        lambda: (table.read_base(spark), table.read_log(spark))
     )
     assert jobs == 0
     assert sorted(r.id for r in base.collect()) == [1, 2]
@@ -85,7 +69,7 @@ def test_upsert_adding_a_column_is_visible_in_next_read(spark, tmp_path):
     assert {r.id: r.extra for r in table.read_base(spark).collect()} == {1: None, 2: 7}
 
 
-def test_file_truncated_in_place_makes_the_read_infer_again(spark, tmp_path):
+def test_file_truncated_in_place_makes_the_read_infer_again(spark, tmp_path, count_jobs):
     d = str(tmp_path / "trunc")
     spark.range(100).coalesce(1).write.parquet(d)
     io.read_files(spark, d)
@@ -93,13 +77,13 @@ def test_file_truncated_in_place_makes_the_read_infer_again(spark, tmp_path):
     t = pq.read_table(os.path.join(d, name))
     pq.write_table(t.slice(0, t.num_rows // 2), os.path.join(d, name))
     os.remove(os.path.join(d, f".{name}.crc"))  # Hadoop's checksum sidecar
-    df, jobs = _jobs(spark, lambda: io.read_files(spark, d))
+    df, jobs = count_jobs(lambda: io.read_files(spark, d))
     assert jobs > 0
     assert df.count() == 50
 
 
 def test_file_added_between_the_two_listings_makes_the_read_infer_again(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, count_jobs
 ):
     d = str(tmp_path / "race")
     spark.createDataFrame([(1,)], "id long").write.parquet(d)
@@ -114,12 +98,12 @@ def test_file_added_between_the_two_listings_makes_the_read_infer_again(
         return out
 
     monkeypatch.setattr(io, "_listing", listing_then_commit)
-    df, jobs = _jobs(spark, lambda: io.read_files(spark, d))
+    df, jobs = count_jobs(lambda: io.read_files(spark, d))
     assert jobs > 0
     assert sorted(df.columns) == ["id", "late"] and df.count() == 2
 
 
-def test_inference_conf_flip_between_two_reads_is_honoured(spark, tmp_path):
+def test_inference_conf_flip_between_two_reads_is_honoured(spark, tmp_path, count_jobs):
     d = str(tmp_path / "ts")
     spark.sql("SELECT timestamp_ntz'2024-01-01 00:00:00' AS ts").write.parquet(d)
     io.read_files(spark, d)
@@ -127,7 +111,7 @@ def test_inference_conf_flip_between_two_reads_is_honoured(spark, tmp_path):
     flipped = "TIMESTAMP_LTZ" if prev != "TIMESTAMP_LTZ" else "TIMESTAMP_NTZ"
     spark.conf.set("spark.sql.timestampType", flipped)
     try:
-        df, jobs = _jobs(spark, lambda: io.read_files(spark, d))
+        df, jobs = count_jobs(lambda: io.read_files(spark, d))
         want = spark.read.option("mergeSchema", "true").parquet(d).schema
     finally:
         spark.conf.set("spark.sql.timestampType", prev)

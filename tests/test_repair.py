@@ -95,6 +95,64 @@ def test_partitions_to_repair_union(spark, events, bootstrapped):
     assert partitions_to_repair(events, dest, "event_type") == ["click", "purchase"]
 
 
+@pytest.mark.parametrize(
+    "dropped, repaired",
+    [([], []),
+     (["a"], ["a"]),
+     (["__HIVE_DEFAULT_PARTITION__"], [None]),
+     (["a", "__HIVE_DEFAULT_PARTITION__"], [None, "a"])],
+)
+def test_resume_of_a_null_partitioned_table(spark, tmp_path, dropped, repaired):
+    """A table partitioned by p ∈ {a, b, NULL}: the NULL partition is
+    diffed as one value (an intact table is a no-op), sorts first as
+    None, and its rows are rewritten (an IN filter never matches NULL)."""
+    src = spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "b"), (3, 1, None), (4, 1, None), (5, 1, "a")],
+        "id LONG, ts LONG, p STRING",
+    )
+    t = KeyedTable(path=str(tmp_path / "nulls"), record_key=["id"],
+                   precombine="ts", partition_fields=["p"])
+    full_bootstrap(spark, src, t)
+    for leaf in dropped:
+        shutil.rmtree(f"{t.path}/p={leaf}")
+    spark.catalog.refreshByPath(t.path)
+    assert resume_bootstrap(spark, src, t)["repaired_partitions"] == repaired
+    assert sorted(r.id for r in t.read(spark).collect()) == [1, 2, 3, 4, 5]
+    assert resume_bootstrap(spark, src, t)["noop"]
+
+
+def test_resume_of_a_table_not_yet_written_writes_every_partition(spark, tmp_path):
+    src = spark.createDataFrame([(1, 1, "a"), (2, 1, None)], "id LONG, ts LONG, p STRING")
+    t = KeyedTable(path=str(tmp_path / "new"), record_key=["id"],
+                   precombine="ts", partition_fields=["p"])
+    assert resume_bootstrap(spark, src, t)["repaired_partitions"] == [None, "a"]
+    assert sorted(r.id for r in t.read(spark).collect()) == [1, 2]
+
+
+def test_diff_is_two_jobs_and_one_scan_per_side(spark, tmp_path, count_jobs):
+    """missing ∪ incomplete comes from one aggregate over both sides:
+    each side's files are scanned once, nothing is joined, and AQE runs
+    it as two jobs."""
+    from hudi_utility_spark.io import read_files
+    from hudi_utility_spark.repair import _repair_diff
+
+    src_path = str(tmp_path / "src")
+    spark.range(40).selectExpr("id", "CAST(id % 4 AS STRING) AS p").write.parquet(src_path)
+    t = KeyedTable(path=str(tmp_path / "dst"), record_key=["id"],
+                   precombine="id", partition_fields=["p"])
+    source = read_files(spark, src_path)
+    full_bootstrap(spark, source.filter("p != '1' AND id < 38"), t)
+    dest = t.read_base(spark)
+    got, jobs = count_jobs(lambda: partitions_to_repair(source, dest, "p"))
+    assert got == ["1", "2", "3"]
+    assert jobs <= 2
+    plan = _repair_diff(source, dest, "p")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2, plan
+    assert "Join" not in plan, plan
+    assert sorted(tuple(r) for r in _repair_diff(source, dest, "p").collect()) == [
+        ("1", 10, 0), ("2", 10, 9), ("3", 10, 9)]
+
+
 def test_resume_on_timestamp_partitioned_ntz_table(spark, events, tmp_path):
     """The reference's signature scenario (pyspark_script.py:392-401) on
     timestamp-partitioned NTZ data: bootstrap events partitioned by the
