@@ -1,4 +1,5 @@
-"""Hive partition-path handling shared by compact / delete / merge / repair.
+"""Hive partition-path handling and partition identity, shared by
+compact / delete / merge / repair / expiry.
 
 Spark writes Hive-style partition directories with a specific escaping
 scheme (``ExternalCatalogUtils.escapePathName``, cloned from Hive's
@@ -9,6 +10,10 @@ directories by hand (dynamic partition overwrite cannot delete a
 partition that ends up empty) must build the SAME names, or partitions
 whose values contain ``/ : = % #`` … silently survive — for compaction
 that means tombstoned rows resurface once the delta log is folded.
+
+The reverse direction lives here only: a directory segment read back
+to its value, and the rows of a set of partition values selected by
+their string form, NULL included.
 
 This module is also where multi-level partition identity lives: every
 touched/survivor computation works over FULL partition-field tuples.
@@ -99,26 +104,53 @@ def escape_partition_value(v) -> str:
     )
 
 
-def unescape_partition_segment(s: str) -> str:
-    """Inverse of :func:`escape_partition_value` (``%XX`` → char).
-    Both chars after ``%`` must be hex DIGITS, checked explicitly —
-    ``int(x, 16)`` alone also accepts Python-isms like ``'+5'`` or
-    ``' 5'``, which Hive/Spark ``unescapePathName`` passes through
-    literally."""
+def read_partition_segment(segment: str) -> str | None:
+    """The partition value the ``<segment>`` of one ``<field>=<segment>``
+    directory name holds: ``None`` for ``__HIVE_DEFAULT_PARTITION__``,
+    else the segment with each ``%XX`` decoded (the inverse of
+    :func:`escape_partition_value`). Both chars after ``%`` must be hex
+    DIGITS, checked explicitly — ``int(x, 16)`` alone also accepts
+    Python-isms like ``'+5'`` or ``' 5'``, which Hive/Spark
+    ``unescapePathName`` passes through literally."""
+    if segment == DEFAULT_PARTITION:
+        return None
     out, i = [], 0
-    while i < len(s):
+    while i < len(segment):
         if (
-            s[i] == "%"
-            and i + 3 <= len(s)
-            and s[i + 1] in string.hexdigits
-            and s[i + 2] in string.hexdigits
+            segment[i] == "%"
+            and i + 3 <= len(segment)
+            and segment[i + 1] in string.hexdigits
+            and segment[i + 2] in string.hexdigits
         ):
-            out.append(chr(int(s[i + 1 : i + 3], 16)))
+            out.append(chr(int(segment[i + 1 : i + 3], 16)))
             i += 3
             continue
-        out.append(s[i])
+        out.append(segment[i])
         i += 1
     return "".join(out)
+
+
+def partition_segment(path: Column, fields: list[str]) -> Column:
+    """The escaped ``<segment>`` of ``fields[0]``'s directory in a data
+    file's ``path``: the directory ``len(fields)`` levels above the
+    file, which is the one directly below the table root. A
+    ``<field>=`` match higher up (a table stored under ``…/snap=1/``)
+    is not it. :func:`read_partition_segment` reads it back."""
+    pattern = f"/\\Q{fields[0]}\\E=([^/]+)" + "/[^/]+" * len(fields) + "$"
+    return F.regexp_extract(path, pattern, 1)
+
+
+def partition_values_predicate(field: str, values) -> Column:
+    """Rows whose ``field`` holds one of ``values``, compared by Spark's
+    string form of the value (``cast(string)``, the form a partition
+    diff or a directory listing yields), so typed columns (dates, ints)
+    match too. ``None`` selects the NULL partition with ``IS NULL``:
+    ``IN`` never matches NULL."""
+    value = F.col(field).cast("string")
+    keep = value.isin([v for v in values if v is not None])
+    if None in values:
+        keep = keep | value.isNull()
+    return keep
 
 
 def partition_leaf_dir(root: str, fields: list[str], values: tuple) -> str:

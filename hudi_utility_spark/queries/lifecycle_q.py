@@ -576,9 +576,9 @@ def v_anti_entropy_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the J2 count audit, caught only by the fingerprint), one
     partition dropped ('purchase' → missing), one partition the source
     never had ('zombie' → extra). The oracle derives every status and
-    count from the source table alone. The diff itself is two
-    fingerprint aggregates + a broadcast full-outer join over
-    O(partitions) rows — scan-bound at 100 TB, shuffle-free."""
+    count from the source table alone. The diff itself is one
+    aggregate over both sides' rows tagged by side, with a fingerprint
+    per side — scan-bound at 100 TB, no join."""
     from hudi_utility_spark.repair import content_diff
     from hudi_utility_spark.write import write_partitioned
 

@@ -187,7 +187,7 @@ def a_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j1_missing_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: the missing-partition diff (pyspark_script.py:225-243) as a
-    broadcast left-anti join over distinct partition values."""
+    filter of the one side-tagged partition aggregate."""
     from hudi_utility_spark.repair import missing_partitions
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -216,8 +216,8 @@ def j1_missing_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j2_incomplete_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: the per-partition completeness audit (pyspark_script.py:199-222)
-    as two partial aggregates + one broadcast inner join — the engine's
-    clearest win over the reference's O(P)-jobs loop."""
+    as a filter of the one side-tagged partition aggregate — the
+    engine's clearest win over the reference's O(P)-jobs loop."""
     from hudi_utility_spark.repair import incomplete_partitions
 
     li = load_table(spark, sf_dir, "lineitem").select(

@@ -1,4 +1,5 @@
-"""Partition diff, completeness audit, resume (SURVEY §2.3 J1/J2, §2.9 St3).
+"""Partition diff, completeness audit, resume, anti-entropy (SURVEY §2.3
+J1/J2, §2.9 St3).
 
 The reference's distinguishing feature: resuming a partially-written
 bootstrap by re-writing only *missing* and *incomplete* partitions
@@ -6,21 +7,18 @@ bootstrap by re-writing only *missing* and *incomplete* partitions
 is the repo's biggest perf bug — an O(P) loop issuing a filter+count Spark
 job per partition value per side (``pyspark_script.py:237-247``).
 
-Resume asks one question — which source partitions does the destination
-not hold in full — and answers it with one aggregate
-(:func:`partitions_to_repair`): both sides' partition values, tagged by
-side, unioned and grouped by the string form of the value. A partition
-whose destination count differs from its source count (0 when the
-destination lacks it) is missing or incomplete. Each side is scanned
-once, nothing is joined, and the whole diff is two Spark jobs (the
-partial-aggregate stage, then the final aggregate AQE plans after it).
-NULL groups as one value, so a NULL partition is diffed like any other.
-
-The J1/J2 audits stay as separate plans for callers that want either
-half alone: missing = broadcast left-anti join of distinct partition
-values, incomplete = ``groupBy(partition).count()`` per side joined on
-the value. At 100 TB every aggregate here is map-side partial, so the
-shuffle carries one row per partition value per task, never data rows.
+Every question here is a filter of one aggregate (:func:`_repair_diff`):
+both sides' rows, tagged by side, unioned and grouped by the string form
+of the partition value, giving each partition's source and destination
+row counts (0 on a side that lacks it) and, for anti-entropy, each
+side's content fingerprint. Resume's repair set, the missing (J1) and
+incomplete (J2) audits and :func:`content_diff`'s statuses all read it.
+Each side is scanned once, nothing is joined, and the whole diff is two
+Spark jobs (the partial-aggregate stage, then the final aggregate AQE
+plans after it). NULL groups as one value, so a NULL partition is
+diffed like any other. At 100 TB the aggregate is map-side partial, so
+the shuffle carries one row per partition value per task, never data
+rows.
 """
 
 from __future__ import annotations
@@ -28,8 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.partition_paths import (
+    partition_segment,
+    partition_values_predicate,
+    remove_partition_leaves,
+)
 from hudi_utility_spark.table import KeyedTable
-
+from hudi_utility_spark.write import align_timestamp_types, write_partitioned
 
 def partition_counts(df: DataFrame, partition_field: str) -> DataFrame:
     """Per-partition row counts in one hash aggregate (replaces the
@@ -39,54 +42,57 @@ def partition_counts(df: DataFrame, partition_field: str) -> DataFrame:
     )
 
 
+def _repair_diff(
+    source: DataFrame,
+    dest: DataFrame | None,
+    partition_field: str,
+    hash_cols: list[str] | None = None,
+) -> DataFrame:
+    """``(partition, src_cnt, dst_cnt)`` of every partition either side
+    holds, from one aggregate over both sides' rows tagged by side; the
+    partition is the string form of the value. With ``hash_cols`` each
+    side's content fingerprint follows as ``src_fp`` / ``dst_fp`` (NULL
+    on a side without the partition). ``dest=None`` is a destination
+    with no rows."""
+    p = F.col(partition_field).cast("string").alias(partition_field)
+    fp = [row_fingerprint(hash_cols).alias("fp")] if hash_cols else []
+    sides = source.select(p, F.lit(1).alias("side"), *fp)
+    if dest is not None:
+        sides = sides.unionByName(dest.select(p, F.lit(0).alias("side"), *fp))
+    fps = ("src_fp", "dst_fp") if hash_cols else ()
+    fp_sums = [
+        (F.sum(F.when(F.col("side") == side, F.col("fp"))) % FINGERPRINT_MOD).alias(name)
+        for side, name in zip((1, 0), fps)
+    ]
+    return (
+        sides.groupBy(partition_field)
+        .agg(F.sum("side").alias("src_cnt"), F.count(F.lit(1)).alias("cnt"), *fp_sums)
+        .select(
+            partition_field,
+            "src_cnt",
+            (F.col("cnt") - F.col("src_cnt")).alias("dst_cnt"),
+            *fps,
+        )
+    )
+
+
 def missing_partitions(
     source: DataFrame, dest: DataFrame, partition_field: str
 ) -> DataFrame:
     """Partition values present in source but absent from dest (J1).
-
-    Broadcast left-anti join over distinct partition values; result column
-    is the partition field cast to string (the reference compares string
-    forms, ``pyspark_script.py:234``).
-    """
-    s = source.select(F.col(partition_field).cast("string").alias(partition_field)).distinct()
-    d = dest.select(F.col(partition_field).cast("string").alias(partition_field)).distinct()
-    return s.join(F.broadcast(d), partition_field, "left_anti")
+    The result column is the partition field cast to string (the
+    reference compares string forms, ``pyspark_script.py:234``)."""
+    diff = _repair_diff(source, dest, partition_field)
+    return diff.filter("src_cnt > 0 AND dst_cnt = 0").select(partition_field)
 
 
 def incomplete_partitions(
     source: DataFrame, dest: DataFrame, partition_field: str
 ) -> DataFrame:
-    """Partitions present on both sides whose row counts disagree (J2).
-
-    Returns (partition, src_cnt, dst_cnt) for mismatches — the
-    reference's "incomplete partition" audit as one joined aggregate.
-    """
-    s = partition_counts(source, partition_field).withColumnRenamed("cnt", "src_cnt")
-    d = partition_counts(dest, partition_field).withColumnRenamed("cnt", "dst_cnt")
-    return (
-        s.join(F.broadcast(d), partition_field, "inner")
-        .filter(F.col("src_cnt") != F.col("dst_cnt"))
-        .select(partition_field, "src_cnt", "dst_cnt")
-    )
-
-
-def _repair_diff(
-    source: DataFrame, dest: DataFrame | None, partition_field: str
-) -> DataFrame:
-    """``(partition, src_cnt, dst_cnt)`` of every source partition whose
-    destination count differs, from one aggregate over both sides'
-    partition values tagged by side; ``dest=None`` is a destination
-    with no rows."""
-    p = F.col(partition_field).cast("string").alias(partition_field)
-    sides = source.select(p, F.lit(1).alias("side"))
-    if dest is not None:
-        sides = sides.unionByName(dest.select(p, F.lit(0).alias("side")))
-    return (
-        sides.groupBy(partition_field)
-        .agg(F.sum("side").alias("src_cnt"), F.count(F.lit(1)).alias("cnt"))
-        .select(partition_field, "src_cnt", (F.col("cnt") - F.col("src_cnt")).alias("dst_cnt"))
-        .filter((F.col("src_cnt") > 0) & (F.col("src_cnt") != F.col("dst_cnt")))
-    )
+    """Partitions present on both sides whose row counts disagree (J2):
+    ``(partition, src_cnt, dst_cnt)`` for each mismatch."""
+    diff = _repair_diff(source, dest, partition_field)
+    return diff.filter("src_cnt > 0 AND dst_cnt > 0 AND src_cnt != dst_cnt")
 
 
 def partitions_to_repair(
@@ -99,8 +105,27 @@ def partitions_to_repair(
     so every source partition is returned. Values are string forms,
     sorted, with a NULL partition as ``None`` first. Collect is safe:
     one row per partition *value*, never data rows."""
-    diff = _repair_diff(source, dest, partition_field).select(partition_field)
-    return sorted((r[0] for r in diff.collect()), key=lambda v: (v is not None, v))
+    diff = _repair_diff(source, dest, partition_field)
+    to_repair = diff.filter("src_cnt > 0 AND src_cnt != dst_cnt").select(partition_field)
+    return _sorted_values(r[0] for r in to_repair.collect())
+
+
+def _sorted_values(values) -> list[str | None]:
+    return sorted(values, key=lambda v: (v is not None, v))
+
+
+def _rewrite_partitions(
+    source_df: DataFrame, table: KeyedTable, dest: DataFrame | None, values: list
+) -> None:
+    """Replace exactly the partitions ``values`` (string forms, ``None``
+    for NULL) of ``table`` with their ``source_df`` rows, by dynamic
+    partition overwrite. The rewritten rows carry the destination's
+    timestamp flavor (NTZ vs LTZ) or the next mergeSchema read dies — a
+    no-op under the engine session, it protects vanilla sessions."""
+    src = source_df.filter(partition_values_predicate(table.partition_fields[0], values))
+    if dest is not None:
+        src = align_timestamp_types(src, dest.schema)
+    write_partitioned(src, table.base_path, table.partition_fields, mode="overwrite")
 
 
 def resume_bootstrap(
@@ -123,23 +148,7 @@ def resume_bootstrap(
     if not to_write:
         return {"repaired_partitions": [], "noop": True, "dry_run": dry_run}
     if not dry_run:
-        # partition values were compared as strings; filter source by the
-        # string form so typed columns (dates, ints) still match, and
-        # match the NULL partition with IS NULL (IN never matches NULL).
-        # Dynamic partition overwrite replaces exactly these partitions.
-        from hudi_utility_spark.write import align_timestamp_types, write_partitioned
-
-        value = F.col(pfield).cast("string")
-        keep = value.isin([v for v in to_write if v is not None])
-        if None in to_write:
-            keep = keep | value.isNull()
-        src = source_df.filter(keep)
-        if dest is not None:
-            # rewritten partitions must carry the destination's timestamp
-            # flavor (NTZ vs LTZ) or the next mergeSchema read dies —
-            # no-op under the engine session, protects vanilla sessions
-            src = align_timestamp_types(src, dest.schema)
-        write_partitioned(src, table.base_path, table.partition_fields, mode="overwrite")
+        _rewrite_partitions(source_df, table, dest, to_write)
     return {"repaired_partitions": to_write, "noop": False, "dry_run": dry_run}
 
 
@@ -205,46 +214,25 @@ def content_diff(
     partition_field: str,
     hash_cols: list[str],
 ) -> DataFrame:
-    """Anti-entropy partition diff: full-outer join of both sides'
-    fingerprints → ``(partition, status, src_cnt, dst_cnt)`` with
-    status ∈ {match, divergent, missing, extra}.
+    """Anti-entropy partition diff: ``(partition, status, src_cnt,
+    dst_cnt)`` with status ∈ {match, divergent, missing, extra}, read
+    off the side-tagged aggregate with each side's fingerprint.
 
     * ``missing``  — partition in source, absent from dest (J1's case);
     * ``extra``    — partition in dest only (replica drift J1 can't see);
     * ``divergent``— both present, fingerprint or count differs
       (catches same-count corruption J2 can't see);
     * ``match``    — content-identical.
-
-    Both inputs collapse to one row per partition value before the
-    join, so the join is a broadcast over O(partitions) rows no matter
-    the data volume.
     """
-    s = partition_fingerprints(source, partition_field, hash_cols).select(
-        partition_field,
-        F.col("fp").alias("src_fp"),
-        F.col("row_cnt").alias("src_cnt"),
+    src, dst = F.col("src_cnt"), F.col("dst_cnt")
+    status = (
+        F.when(src == 0, "extra")
+        .when(dst == 0, "missing")
+        .when((F.col("src_fp") != F.col("dst_fp")) | (src != dst), "divergent")
+        .otherwise("match")
     )
-    d = partition_fingerprints(dest, partition_field, hash_cols).select(
-        partition_field,
-        F.col("fp").alias("dst_fp"),
-        F.col("row_cnt").alias("dst_cnt"),
-    )
-    return (
-        s.join(F.broadcast(d), partition_field, "full_outer")
-        .select(
-            partition_field,
-            F.when(F.col("src_fp").isNull(), "extra")
-            .when(F.col("dst_fp").isNull(), "missing")
-            .when(
-                (F.col("src_fp") != F.col("dst_fp"))
-                | (F.col("src_cnt") != F.col("dst_cnt")),
-                "divergent",
-            )
-            .otherwise("match")
-            .alias("status"),
-            F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
-            F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
-        )
+    return _repair_diff(source, dest, partition_field, hash_cols).select(
+        partition_field, status.alias("status"), "src_cnt", "dst_cnt"
     )
 
 
@@ -276,38 +264,23 @@ def anti_entropy_repair(
     if not table.partition_fields:
         raise ValueError("anti_entropy_repair requires a partitioned table")
     pfield = table.partition_fields[0]
-    diff = content_diff(
-        source_df, table.read_base(spark), pfield, hash_cols
-    ).filter(F.col("status") != "match")
+    dest = table.read_base(spark)
     # one row per partition VALUE — safe scalar collect
-    rows = diff.collect()
-    to_rewrite = sorted(
-        r[pfield] for r in rows if r["status"] in ("missing", "divergent")
+    rows = (
+        content_diff(source_df, dest, pfield, hash_cols)
+        .filter(F.col("status") != "match")
+        .collect()
     )
-    extras = sorted(r[pfield] for r in rows if r["status"] == "extra")
     if not rows:
         return {"rewritten": [], "dropped": [], "noop": True, "dry_run": dry_run}
+    to_rewrite = _sorted_values(
+        r[pfield] for r in rows if r["status"] in ("missing", "divergent")
+    )
+    extras = _sorted_values(r[pfield] for r in rows if r["status"] == "extra")
     if not dry_run:
-        from hudi_utility_spark.write import (
-            align_timestamp_types,
-            write_partitioned,
-        )
-
         if to_rewrite:
-            src = source_df.filter(
-                F.col(pfield).cast("string").isin(to_rewrite)
-            )
-            src = align_timestamp_types(src, table.read_base(spark).schema)
-            write_partitioned(
-                src, table.base_path, table.partition_fields, mode="overwrite"
-            )
+            _rewrite_partitions(source_df, table, dest, to_rewrite)
         if drop_extra and extras:
-            from hudi_utility_spark.partition_paths import (
-                remove_partition_leaves,
-            )
-
-            # Spark-escaped dir names — an extra partition whose value
-            # contains '/', ':', '=' … must still resolve to its real dir
             remove_partition_leaves(
                 table.base_path, [pfield], [(val,) for val in extras]
             )
@@ -346,7 +319,7 @@ def file_layout_report(
     )
     if table.partition_fields:
         pfield = table.partition_fields[0]
-        part = F.regexp_extract(F.col("path"), f"{pfield}=([^/]+)/", 1)
+        part = partition_segment(F.col("path"), table.partition_fields)
     else:
         pfield, part = "partition", F.lit("<unpartitioned>")
     return (

@@ -389,22 +389,27 @@ class KeyedTable:
         sort rewrite), cost is O(flagged bytes). Indexes survive;
         lookups read the packed files unpruned until
         ``index.refresh_indexes`` covers them. Returns
-        ``{"compacted": {partition: n_files}, "noop": bool}``.
+        ``{"compacted": {partition value: n_files}, "noop": bool}``,
+        keyed by the string form of each value (``None`` for NULL).
         """
         import math
 
+        from hudi_utility_spark.partition_paths import (
+            partition_values_predicate,
+            read_partition_segment,
+        )
         from hudi_utility_spark.repair import file_layout_report
 
+        report = [
+            r
+            for r in file_layout_report(
+                spark, self, small_file_bytes=small_file_bytes
+            ).collect()
+            if r["small_files"] and r["n_files"] > 1
+        ]
+        if not report:
+            return {"compacted": {}, "noop": True}
         if not self.partition_fields:
-            report = [
-                r
-                for r in file_layout_report(
-                    spark, self, small_file_bytes=small_file_bytes
-                ).collect()
-                if r["small_files"] and r["n_files"] > 1
-            ]
-            if not report:
-                return {"compacted": {}, "noop": True}
             n = max(1, math.ceil(report[0]["bytes"] / target_file_bytes))
             from hudi_utility_spark.write import atomic_swap_dir, write_partitioned
 
@@ -417,29 +422,26 @@ class KeyedTable:
 
         pcol = self.partition_fields[0]
         flagged = {
-            r[pcol]: max(1, math.ceil(r["bytes"] / target_file_bytes))
-            for r in file_layout_report(
-                spark, self, small_file_bytes=small_file_bytes
-            ).collect()
-            if r["small_files"] and r["n_files"] > 1
+            read_partition_segment(r[pcol]): max(1, math.ceil(r["bytes"] / target_file_bytes))
+            for r in report
         }
-        if not flagged:
-            return {"compacted": {}, "noop": True}
 
         from pyspark.sql import functions as F
 
         from hudi_utility_spark.write import write_partitioned
 
-        budget = F.create_map(
-            *[F.lit(v) for kv in flagged.items() for v in kv]
-        )
+        # a Spark map key cannot be NULL: the NULL partition's budget is
+        # the fallback of the per-value map lookup
+        budget = F.lit(flagged.get(None))
+        named = [F.lit(x) for v, n in flagged.items() if v is not None for x in (v, n)]
+        if named:
+            budget = F.coalesce(
+                F.create_map(*named)[F.col(pcol).cast("string")], budget
+            )
         scoped = self.read_base(spark).filter(
-            F.col(pcol).cast("string").isin(*flagged)
+            partition_values_predicate(pcol, list(flagged))
         )
-        salt = F.pmod(
-            F.hash(*[F.col(k) for k in self.record_key]),
-            budget[F.col(pcol).cast("string")],
-        )
+        salt = F.pmod(F.hash(*[F.col(k) for k in self.record_key]), budget)
         # Pin the shuffle-partition count (disables AQE coalescing for
         # this exchange) at 4x the total file budget so distinct
         # (partition, salt) groups rarely collide into one task — each

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.io import read_files
+from hudi_utility_spark.partition_paths import read_partition_segment
 from hudi_utility_spark.table import KeyedTable, TableType
 
 COMMIT_COL = "_commit_time"
@@ -326,9 +327,11 @@ def expire_partitions(
     partition whose partition VALUE orders strictly below ``cutoff`` —
     a **metadata-only** operation: directory removals on base and MOR
     log, zero data scanned or rewritten, O(partitions) filesystem calls
-    at any data size. (Hive-layout values are strings; for ISO dates
-    and zero-padded keys lexical order is the value order, same
-    assumption the reference's partition regexes make.)
+    at any data size. Values are read back from the directory names
+    (``%XX`` decoded) and compared as strings: for ISO dates and
+    zero-padded keys lexical order is the value order, same assumption
+    the reference's partition regexes make. A NULL partition never
+    expires.
 
     Contrast with `delete_keys` (row-granular, rewrites touched
     partitions) and `clean` (version-granular, preserves the current
@@ -351,9 +354,14 @@ def expire_partitions(
             return []
         return [d for d in os.listdir(root) if d.startswith(prefix)]
 
+    def _value(d: str) -> str | None:
+        return read_partition_segment(d[len(prefix):])
+
+    # NULL < cutoff is not true (the savepoint guard's SQL below): the
+    # NULL partition never expires
     doomed = {
         d for d in _parts(table.base_path) + _parts(table.log_path)
-        if d[len(prefix):] < cutoff
+        if (v := _value(d)) is not None and v < cutoff
     }
     # savepoints pin history; refuse to silently break one. On MOR the
     # pinned snapshot is reconstructable (read_as_of) so the check is
@@ -383,7 +391,7 @@ def expire_partitions(
         for d in _parts(root):
             if d in doomed:
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    dropped = sorted(d[len(prefix):] for d in doomed)
+    dropped = sorted(_value(d) for d in doomed)
     kept = len(_parts(table.base_path))
     spark.catalog.refreshByPath(table.base_path)
     return {"dropped": dropped, "kept": kept}

@@ -1,4 +1,4 @@
-"""Write paths: bootstrap, partition append, upsert (SURVEY §2.1 S5-S7, §2.3 J4).
+"""Write paths: bootstrap, upsert, delete, merge (SURVEY §2.1 S5-S7, §2.3 J4).
 
 The reference delegates these to the Hudi datasource
 (``fastapi-backend/pyspark_script.py:255-291,360-391``); here they are pure
@@ -371,23 +371,21 @@ def full_bootstrap(
         return result
 
     df = source_df
+    pcol = F.col(table.partition_fields[0]).cast("string") if table.partition_fields else None
     if mode is BootstrapMode.REGEX:
         if not table.partition_fields:
             raise ValueError("REGEX bootstrap requires a partitioned table")
         if not partition_regex:
             raise ValueError("REGEX bootstrap requires partition_regex")
-        pcol = F.col(table.partition_fields[0]).cast("string")
         df = source_df.filter(pcol.rlike(partition_regex))
         if not dry_run and source_path is not None:
             # the non-matching remainder stays queryable, metadata-only
             result["registered_view"] = table.register_metadata_only(spark, source_path)
 
-    if table.partition_fields:
-        parts = [
-            str(r[0])
-            for r in df.select(table.partition_fields[0]).distinct().collect()
-        ]
-        result["written_partitions"] = sorted(parts)
+    if pcol is not None:
+        # resume's form: Spark's string form, NULL as None and first
+        parts = [r[0] for r in df.select(pcol).distinct().collect()]
+        result["written_partitions"] = sorted(parts, key=lambda v: (v is not None, v))
     if not dry_run:
         # full bootstrap is a static overwrite: the destination becomes
         # exactly the source (stale partitions from prior runs are wiped)
@@ -395,31 +393,6 @@ def full_bootstrap(
             df, table.base_path, table.partition_fields, mode="overwrite", dynamic=False
         )
     return result
-
-
-def append_partitions(
-    spark: SparkSession,
-    source_df: DataFrame,
-    table: KeyedTable,
-    partition_values: list,
-) -> dict:
-    """Write exactly the given partition values into the table (S6).
-
-    The reference appends with ``mode("Append")`` + bulk_insert
-    (``pyspark_script.py:270-276``), which double-writes rows already
-    present in an *incomplete* partition. We instead use **dynamic
-    partition overwrite**: only the partitions present in the written
-    DataFrame are replaced, atomically per partition — idempotent repair
-    (SURVEY §7 hard-part (c)).
-    """
-    if not table.partition_fields:
-        raise ValueError("append_partitions requires a partitioned table")
-    pcol = table.partition_fields[0]
-    subset = source_df.filter(F.col(pcol).isin(partition_values))
-    if table.exists():
-        subset = align_timestamp_types(subset, table.read_base(spark).schema)
-    write_partitioned(subset, table.base_path, table.partition_fields, mode="overwrite")
-    return {"written_partitions": sorted(str(v) for v in partition_values)}
 
 
 def _touched(table: KeyedTable, df: DataFrame) -> set | None:

@@ -22,7 +22,7 @@ from hudi_utility_spark.partition_paths import (
     DEFAULT_PARTITION,
     escape_partition_value,
     partition_leaf_dir,
-    unescape_partition_segment,
+    read_partition_segment,
 )
 from hudi_utility_spark.table import KeyedTable, TableType
 from hudi_utility_spark.write import delete_keys, merge_into, upsert
@@ -47,8 +47,8 @@ def test_escape_matches_spark_layout():
 
 
 def test_unescape_roundtrip():
-    for v in ["x/y", "c:d", "100%", "a=b#c", "plain", "sp ace", "m\\n"]:
-        assert unescape_partition_segment(escape_partition_value(v)) == v
+    for v in ["x/y", "c:d", "100%", "a=b#c", "plain", "sp ace", "m\\n", None]:
+        assert read_partition_segment(escape_partition_value(v)) == v
 
 
 def test_partition_leaf_dir_two_levels(tmp_path):
@@ -224,11 +224,11 @@ def test_float_partition_values_rejected():
 
 def test_unescape_requires_strict_hex_pairs():
     # '%+5' / '% 5' are NOT escapes (int('+5',16) would accept them)
-    assert pp.unescape_partition_segment("a%+5b") == "a%+5b"
-    assert pp.unescape_partition_segment("a% 5b") == "a% 5b"
-    assert pp.unescape_partition_segment("a%2Fb") == "a/b"
-    assert pp.unescape_partition_segment("a%2fb") == "a/b"
-    assert pp.unescape_partition_segment("trail%2") == "trail%2"
+    assert pp.read_partition_segment("a%+5b") == "a%+5b"
+    assert pp.read_partition_segment("a% 5b") == "a% 5b"
+    assert pp.read_partition_segment("a%2Fb") == "a/b"
+    assert pp.read_partition_segment("a%2fb") == "a/b"
+    assert pp.read_partition_segment("trail%2") == "trail%2"
 
 
 def test_tuple_predicate_balanced_depth_and_exactness(spark):
@@ -278,3 +278,103 @@ def test_cow_upsert_into_null_partition_keeps_its_other_rows(spark, tmp_path, op
     )
     got = {r.id: (r.p, r.v) for r in table.read(spark).collect()}
     assert got == {1: (None, 10.0), 2: (None, 2.0), 3: ("a", 3.0)}
+
+
+# ---------------------------------------------------------------------------
+# partition identity: every path that names a partition by value agrees on
+# the values Spark escapes in paths, and on NULL
+
+
+@pytest.fixture(
+    params=[None, "a:b", "c d", "50%", "x+y"],
+    ids=["null", "colon", "space", "percent", "plus"],
+)
+def awkward(request):
+    """A partition value whose directory name is escaped, holds a
+    character URL decoding changes, or is the NULL partition."""
+    return request.param
+
+
+def _p_table(tmp_path, name="t"):
+    return KeyedTable(path=str(tmp_path / name), record_key=["id"],
+                      precombine="ts", partition_fields=["p"])
+
+
+def _p_rows(spark, values):
+    return spark.createDataFrame(
+        [(i, 1, v) for i, v in enumerate(values)], "id long, ts long, p string"
+    )
+
+
+def test_anti_entropy_repair_leaves_an_intact_table_alone(spark, tmp_path, awkward):
+    """An intact replica diffs all-match, NULL partition included (a
+    join on the partition value never matches NULL, which once made
+    the NULL partition both missing and extra and removed its leaf),
+    and a dropped leaf of the awkward value is rewritten."""
+    from hudi_utility_spark.repair import anti_entropy_repair
+    from hudi_utility_spark.write import full_bootstrap
+
+    src = _p_rows(spark, ["a", "b", awkward, awkward, "a"])
+    t = _p_table(tmp_path)
+    full_bootstrap(spark, src, t)
+    assert anti_entropy_repair(spark, src, t, ["id"]) == {
+        "rewritten": [], "dropped": [], "noop": True, "dry_run": False}
+    assert t.read(spark).count() == 5
+
+    import shutil
+
+    shutil.rmtree(partition_leaf_dir(t.base_path, ["p"], (awkward,)))
+    spark.catalog.refreshByPath(t.path)
+    rep = anti_entropy_repair(spark, src, t, ["id"])
+    assert (rep["rewritten"], rep["dropped"]) == ([awkward], [])
+    assert sorted(r.id for r in t.read(spark).collect()) == [0, 1, 2, 3, 4]
+    assert anti_entropy_repair(spark, src, t, ["id"])["noop"]
+
+
+def test_full_bootstrap_reports_partitions_as_resume_does(spark, tmp_path, awkward):
+    from hudi_utility_spark.repair import partitions_to_repair
+    from hudi_utility_spark.write import full_bootstrap
+
+    src = _p_rows(spark, ["a", "b", awkward])
+    written = full_bootstrap(spark, src, _p_table(tmp_path))["written_partitions"]
+    assert written == partitions_to_repair(src, None, "p")
+    assert awkward in written
+
+
+def test_compact_small_files_packs_every_flagged_partition(spark, tmp_path, awkward):
+    """8 files in each leaf: every leaf packs to one file, and the
+    result is keyed by partition value."""
+    t = _p_table(tmp_path)
+    rows = _p_rows(spark, [v for v in (awkward, "x") for _ in range(400)])
+    for k in range(8):
+        rows.filter(F.col("id") % 8 == k).repartition(1).write.partitionBy(
+            "p").mode("append").parquet(t.base_path)
+
+    def n_files(v):
+        leaf = partition_leaf_dir(t.base_path, ["p"], (v,))
+        return sum(f.endswith(".parquet") for f in os.listdir(leaf))
+
+    assert n_files(awkward) == n_files("x") == 8
+    res = t.compact_small_files(spark, target_file_bytes=10**9)
+    assert res == {"compacted": {awkward: 1, "x": 1}, "noop": False}
+    assert n_files(awkward) == n_files("x") == 1
+    assert t.read(spark).count() == 800
+
+
+def test_expire_partitions_compares_and_reports_values(spark, tmp_path, awkward):
+    """Expiry compares the values the directories hold, not their
+    escaped names (``a%3Ab`` sorts below the cutoff ``a:b``), reports
+    values, and never expires the NULL partition (``NULL < cutoff`` is
+    not true)."""
+    from hudi_utility_spark import timeline
+    from hudi_utility_spark.write import full_bootstrap
+
+    t = _p_table(tmp_path)
+    full_bootstrap(spark, _p_rows(spark, ["0", awkward]), t)
+    cutoff = "~" if awkward is None else awkward
+    assert timeline.expire_partitions(spark, t, cutoff) == {"dropped": ["0"], "kept": 1}
+    if awkward is None:
+        assert timeline.expire_partitions(spark, t, "~") == {"dropped": [], "kept": 1}
+        assert [r.p for r in t.read(spark).collect()] == [None]
+    else:
+        assert timeline.expire_partitions(spark, t, "~") == {"dropped": [awkward], "kept": 0}

@@ -130,11 +130,11 @@ def test_resume_of_a_table_not_yet_written_writes_every_partition(spark, tmp_pat
 
 
 def test_diff_is_two_jobs_and_one_scan_per_side(spark, tmp_path, count_jobs):
-    """missing ∪ incomplete comes from one aggregate over both sides:
-    each side's files are scanned once, nothing is joined, and AQE runs
-    it as two jobs."""
+    """missing ∪ incomplete, and the anti-entropy statuses, come from one
+    aggregate over both sides: each side's files are scanned once,
+    nothing is joined, and AQE runs it as two jobs."""
     from hudi_utility_spark.io import read_files
-    from hudi_utility_spark.repair import _repair_diff
+    from hudi_utility_spark.repair import _repair_diff, content_diff
 
     src_path = str(tmp_path / "src")
     spark.range(40).selectExpr("id", "CAST(id % 4 AS STRING) AS p").write.parquet(src_path)
@@ -143,14 +143,22 @@ def test_diff_is_two_jobs_and_one_scan_per_side(spark, tmp_path, count_jobs):
     source = read_files(spark, src_path)
     full_bootstrap(spark, source.filter("p != '1' AND id < 38"), t)
     dest = t.read_base(spark)
-    got, jobs = count_jobs(lambda: partitions_to_repair(source, dest, "p"))
-    assert got == ["1", "2", "3"]
-    assert jobs <= 2
-    plan = _repair_diff(source, dest, "p")._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 2, plan
-    assert "Join" not in plan, plan
     assert sorted(tuple(r) for r in _repair_diff(source, dest, "p").collect()) == [
-        ("1", 10, 0), ("2", 10, 9), ("3", 10, 9)]
+        ("0", 10, 10), ("1", 10, 0), ("2", 10, 9), ("3", 10, 9)]
+    statuses = [("0", "match", 10, 10), ("1", "missing", 10, 0),
+                ("2", "divergent", 10, 9), ("3", "divergent", 10, 9)]
+    for build, want in [
+        (lambda: partitions_to_repair(source, dest, "p"), ["1", "2", "3"]),
+        (lambda: sorted(tuple(r) for r in content_diff(source, dest, "p", ["id"]).collect()),
+         statuses),
+    ]:
+        got, jobs = count_jobs(build)
+        assert got == want
+        assert jobs <= 2
+    for diff in (_repair_diff(source, dest, "p"), content_diff(source, dest, "p", ["id"])):
+        plan = diff._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 2, plan
+        assert "Join" not in plan, plan
 
 
 def test_resume_on_timestamp_partitioned_ntz_table(spark, events, tmp_path):
@@ -262,6 +270,23 @@ def test_file_layout_report_matches_filesystem(spark, events, tmp_path):
     assert {k: v[:2] for k, v in got.items()} == want
     # sf0.001 parquet partitions are tiny -> all flagged small
     assert all(v[2] for v in got.values())
+
+
+def test_file_layout_report_reads_the_segment_below_the_table(spark, tmp_path):
+    """A table stored under ``…/snap=1/`` and partitioned by ``p``: the
+    ``p=`` segment is the one directly below the table path, not the
+    ``snap=1`` that also ends in ``p=``."""
+    from hudi_utility_spark.repair import file_layout_report
+
+    t = KeyedTable(path=str(tmp_path / "snap=1" / "t"), record_key=["id"],
+                   precombine="id", partition_fields=["p"])
+    rows = spark.range(40).selectExpr("id", "CAST(id % 2 AS STRING) AS p")
+    for k in range(4):
+        rows.filter(f"floor(id / 2) % 4 = {k}").repartition(1).write.partitionBy("p").mode(
+            "append").parquet(t.base_path)
+    report = {r["p"]: r["n_files"] for r in file_layout_report(spark, t).collect()}
+    assert report == {"0": 4, "1": 4}
+    assert t.compact_small_files(spark)["compacted"] == {"0": 1, "1": 1}
 
 
 # ---------------------------------------------------------------------------
