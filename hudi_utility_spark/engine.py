@@ -8,6 +8,12 @@ reproduces the reference's 4-way mode predicate
 (``fastapi-backend/pyspark_script.py:373``): full bootstrap when *not
 resume*, or *no existing partitions*, or *a partition regex is given*, or
 *METADATA_ONLY*; otherwise the incremental repair path.
+
+The source is counted by the pass that writes it (or, on resume, by the
+diff that reads it), through ``df.observe``, and reconciliation takes
+that count rather than scanning the source again. Only the full plan
+probes for an empty source first, because its static overwrite would
+otherwise leave an empty table.
 """
 
 from __future__ import annotations
@@ -27,6 +33,8 @@ from hudi_utility_spark.validate import (
     validate_fields_in_schema,
 )
 from hudi_utility_spark.write import full_bootstrap
+
+_EMPTY_SOURCE = "Input DataFrame is empty — nothing to bootstrap"
 
 
 def choose_plan(
@@ -69,12 +77,12 @@ def bootstrap(
         errors = validate_fields_in_schema(df, table)
         if errors:
             raise ValidationError(errors)
-        if df.isEmpty():
-            raise ValidationError(["Input DataFrame is empty — nothing to bootstrap"])
-
         has_existing = table.exists() and bool(table.partition_fields)
         plan = choose_plan(req.resume, has_existing, req.partition_regex, req.bootstrap_type)
         if plan == "full":
+            # the static overwrite would leave an empty table: refuse first
+            if df.isEmpty():
+                raise ValidationError([_EMPTY_SOURCE])
             summary = full_bootstrap(
                 spark,
                 df,
@@ -86,12 +94,15 @@ def bootstrap(
             )
         else:
             summary = resume_bootstrap(spark, df, table, dry_run=req.dry_run)
+            # counted by the diff; an empty source has no partition to rewrite
+            if summary["source_count"] == 0:
+                raise ValidationError([_EMPTY_SOURCE])
         summary["plan"] = plan
 
         mode = BootstrapMode.parse(req.bootstrap_type)
         counts = None
         if not req.dry_run and mode is not BootstrapMode.METADATA_ONLY and not req.partition_regex:
-            counts = reconcile(spark, df, table)
+            counts = reconcile(spark, df, table, _source_count=summary["source_count"])
             summary["record_counts"] = {
                 "input": counts["source_count"],
                 "destination": counts["dest_count"],

@@ -69,17 +69,15 @@ class Ledger:
     ) -> None:
         """Append the terminal row (``app.py:173-204``). The ledger is
         append-only; the latest row per id wins (read-side precombine —
-        same semantic as the engine's keyed tables)."""
+        same semantic as the engine's keyed tables). The row carries only
+        its own fields: the reads fill ``start_time`` and
+        ``transaction_data`` from the transaction's PENDING row, so a
+        finish reads no earlier event."""
         if status not in ("SUCCESS", "FAILED", "PENDING"):
             raise ValueError(f"invalid status: {status}")
-        row = self._latest_event_py(transaction_id)
-        start = row["start_time"] if row else None
-        data = row["transaction_data"] if row else None
         self._append_row(
             transaction_id=transaction_id,
             status=status,
-            transaction_data=data,
-            start_time=start,
             end_time=datetime.now(timezone.utc),
             error_log=error_log,
             record_counts=json.dumps(record_counts, default=str)
@@ -203,48 +201,6 @@ class Ledger:
         )
         os.replace(tmp, os.path.join(self.path, fname))
 
-    def _latest_event_py(self, transaction_id: str) -> dict | None:
-        """Driver-side point lookup of one transaction's winning event
-        (same precombine semantics as ``_latest``: max end_time,
-        non-null beats null) — a pyarrow scan of the event files
-        instead of a Spark window job per ``finish``. The ledger is
-        one-row-per-job control-plane data, so this is O(jobs) tiny
-        files read in-process."""
-        import glob as _glob
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        # "_tmp-*" files are appends still in flight (see _append_row);
-        # like Spark's reader, skip "_"- and "."-prefixed names
-        files = [
-            fp
-            for fp in _glob.glob(os.path.join(self.path, "*.parquet"))
-            if not os.path.basename(fp).startswith(("_", "."))
-        ]
-        if not files:
-            return None
-        _epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
-
-        def _key(r: dict):
-            et = r.get("end_time")
-            return (et is not None, et or _epoch)
-
-        best: dict | None = None
-        for fp in files:
-            try:
-                t = pq.read_table(fp)
-            except FileNotFoundError:
-                continue  # compacted away between the glob and the read
-            except pa.ArrowException as e:
-                raise ValueError(f"corrupt ledger event file {fp}: {e}") from e
-            for r in t.to_pylist():
-                if r.get("transaction_id") != transaction_id:
-                    continue
-                if best is None or _key(r) > _key(best):
-                    best = r
-        return best
-
     def _read(self) -> DataFrame:
         if not os.path.isdir(self.path):
             return self.spark.createDataFrame([], schema=_SCHEMA)
@@ -252,15 +208,26 @@ class Ledger:
 
     def _latest(self) -> DataFrame:
         """Latest event per transaction — the ledger's own precombine
-        window (end_time desc, nulls last → PENDING loses to terminal)."""
+        window (end_time desc, nulls last → PENDING loses to terminal).
+        ``start_time`` and ``transaction_data`` are each the first
+        non-null value over the transaction's events in that order: a
+        terminal row written without them takes the PENDING row's, and
+        one that carries them keeps its own."""
         from pyspark.sql import Window
 
         w = Window.partitionBy("transaction_id").orderBy(
             F.col("end_time").desc_nulls_last()
         )
+        events = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         return (
             self._read()
             .withColumn("__rn", F.row_number().over(w))
+            .withColumns(
+                {
+                    c: F.first(c, ignorenulls=True).over(events)
+                    for c in ("start_time", "transaction_data")
+                }
+            )
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )

@@ -153,6 +153,13 @@ def partition_values_predicate(field: str, values) -> Column:
     return keep
 
 
+def sorted_partition_values(values) -> list[str | None]:
+    """String-form partition values in the order every repair and
+    bootstrap summary reports them: sorted, with NULL as ``None``
+    first."""
+    return sorted(values, key=lambda v: (v is not None, v))
+
+
 def partition_leaf_dir(root: str, fields: list[str], values: tuple) -> str:
     """``root/f1=v1/f2=v2/...`` with Spark-escaped value segments."""
     segs = [

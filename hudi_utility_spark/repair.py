@@ -23,13 +23,14 @@ rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.partition_paths import (
     partition_segment,
     partition_values_predicate,
     remove_partition_leaves,
+    sorted_partition_values,
 )
 from hudi_utility_spark.table import KeyedTable
 from hudi_utility_spark.write import align_timestamp_types, write_partitioned
@@ -107,11 +108,7 @@ def partitions_to_repair(
     one row per partition *value*, never data rows."""
     diff = _repair_diff(source, dest, partition_field)
     to_repair = diff.filter("src_cnt > 0 AND src_cnt != dst_cnt").select(partition_field)
-    return _sorted_values(r[0] for r in to_repair.collect())
-
-
-def _sorted_values(values) -> list[str | None]:
-    return sorted(values, key=lambda v: (v is not None, v))
+    return sorted_partition_values(r[0] for r in to_repair.collect())
 
 
 def _rewrite_partitions(
@@ -138,18 +135,26 @@ def resume_bootstrap(
 
     Computes missing+incomplete partitions and rewrites exactly those via
     dynamic partition overwrite. Running it twice writes nothing the
-    second time. Returns {"repaired_partitions": [...], "noop": bool}.
+    second time. The source's row count is observed on the diff's own
+    scan of it. Returns {"repaired_partitions": [...], "noop": bool,
+    "dry_run": bool, "source_count": n}.
     """
     if not table.partition_fields:
         raise ValueError("resume requires a partitioned table")
     pfield = table.partition_fields[0]
     dest = table.read_base(spark) if table.exists() else None
-    to_write = partitions_to_repair(source_df, dest, pfield)
-    if not to_write:
-        return {"repaired_partitions": [], "noop": True, "dry_run": dry_run}
-    if not dry_run:
+    obs = Observation()
+    observed = source_df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    to_write = partitions_to_repair(observed, dest, pfield)
+    summary = {
+        "repaired_partitions": to_write,
+        "noop": not to_write,
+        "dry_run": dry_run,
+        "source_count": obs.get["rows"],
+    }
+    if to_write and not dry_run:
         _rewrite_partitions(source_df, table, dest, to_write)
-    return {"repaired_partitions": to_write, "noop": False, "dry_run": dry_run}
+    return summary
 
 
 # Modulus for the order-independent partition fingerprint: row hashes are
@@ -273,10 +278,10 @@ def anti_entropy_repair(
     )
     if not rows:
         return {"rewritten": [], "dropped": [], "noop": True, "dry_run": dry_run}
-    to_rewrite = _sorted_values(
+    to_rewrite = sorted_partition_values(
         r[pfield] for r in rows if r["status"] in ("missing", "divergent")
     )
-    extras = _sorted_values(r[pfield] for r in rows if r["status"] == "extra")
+    extras = sorted_partition_values(r[pfield] for r in rows if r["status"] == "extra")
     if not dry_run:
         if to_rewrite:
             _rewrite_partitions(source_df, table, dest, to_rewrite)

@@ -34,6 +34,25 @@ def _env_size(name: str, default: str) -> str:
     return raw
 
 
+# the master URLs Spark accepts: local, local[N], local[*], local[N,F]
+# (F task failures allowed), local-cluster[...], spark://, yarn, k8s://
+_MASTER = re.compile(
+    r"local(\[([1-9]\d*|\*)(,\s*\d+)?\])?|local-cluster\[[^\]]+\]"
+    r"|spark://.+|yarn|k8s://.+"
+)
+
+
+def _env_master(cpus: str) -> str:
+    """``SPARK_GRAFT_MASTER`` (default ``local[<cpus>]``): a Spark master URL."""
+    raw = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    if not _MASTER.fullmatch(raw):
+        raise ValueError(
+            "SPARK_GRAFT_MASTER must be local, local[N], local[*], local[N,F], "
+            f"local-cluster[...], spark://..., yarn or k8s://..., got {raw!r}"
+        )
+    return raw
+
+
 def _env_driver_mem() -> str:
     """``SPARK_GRAFT_DRIVER_MEM`` (default 24g)."""
     return _env_size("SPARK_GRAFT_DRIVER_MEM", "24g")
@@ -186,10 +205,7 @@ def get_spark(app_name: str = "hudi_utility_spark", **conf: str) -> SparkSession
     configured by the caller's environment (e.g. spark-submit on a cluster).
     """
     _apply_pyshim()
-    cpus = _env_cpus()
-    builder = SparkSession.builder.appName(app_name).master(
-        os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    )
+    builder = SparkSession.builder.appName(app_name).master(_env_master(_env_cpus()))
     merged = dict(_DEFAULTS)
     merged.update({k: str(v) for k, v in conf.items()})
     for k, v in merged.items():

@@ -149,6 +149,8 @@ def reconcile(
     table: KeyedTable,
     check_schema: bool = True,
     expect_equal_counts: bool = True,
+    *,
+    _source_count: int | None = None,
 ) -> dict:
     """V3: post-write reconciliation (``pyspark_script.py:146-178``).
 
@@ -157,12 +159,17 @@ def reconcile(
     {"source_count": n, "dest_count": m, "schema_errors": []} on success.
     Upserted tables may legitimately have dest < source (precombine
     dedup), so the count check is toggleable.
+
+    ``_source_count`` is private to the bootstrap lifecycle, whose write
+    already counted the source (``engine.bootstrap``); left unset, the
+    source is counted here. The destination is always re-read and
+    counted: that re-read is what verifies the write.
     """
     dest = table.read(spark)
     errors: list[str] = []
     if check_schema:
         errors.extend(schema_diff(source, dest))
-    src_count = source.count()
+    src_count = source.count() if _source_count is None else _source_count
     dst_count = dest.count()
     if expect_equal_counts and src_count != dst_count:
         errors.append(

@@ -12,9 +12,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.partition_paths import sorted_partition_values
 from hudi_utility_spark.table import BootstrapMode, KeyedTable, TableType
 
 
@@ -358,7 +359,15 @@ def full_bootstrap(
 
     ``dry_run`` (resurrected from the legacy backend,
     ``fastapi-backend/backend.py:54-58``) plans but writes nothing.
-    Returns a summary dict with the partition values written.
+
+    The rows written are counted, and their partition values collected,
+    by an observation on the write itself (a dry run runs the same
+    observed frame into Spark's ``noop`` sink), so the source is read
+    once. Returns a summary dict with the partition values written
+    (resume's form: Spark's string form, NULL as ``None`` and first) and
+    ``source_count``, the number of rows written (the REGEX-matching
+    rows in REGEX mode); METADATA_ONLY reads no rows and reports no
+    count.
     """
     mode = BootstrapMode.parse(mode)
     result: dict = {"mode": mode.value, "dry_run": dry_run, "written_partitions": []}
@@ -382,16 +391,24 @@ def full_bootstrap(
             # the non-matching remainder stays queryable, metadata-only
             result["registered_view"] = table.register_metadata_only(spark, source_path)
 
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows")]
     if pcol is not None:
-        # resume's form: Spark's string form, NULL as None and first
-        parts = [r[0] for r in df.select(pcol).distinct().collect()]
-        result["written_partitions"] = sorted(parts, key=lambda v: (v is not None, v))
-    if not dry_run:
+        # a struct per value: collect_set skips NULLs, a struct of NULL it keeps
+        metrics.append(F.collect_set(F.struct(pcol)).alias("parts"))
+    df = df.observe(obs, *metrics)
+    if dry_run:
+        df.write.format("noop").mode("overwrite").save()
+    else:
         # full bootstrap is a static overwrite: the destination becomes
         # exactly the source (stale partitions from prior runs are wiped)
         write_partitioned(
             df, table.base_path, table.partition_fields, mode="overwrite", dynamic=False
         )
+    seen = obs.get
+    result["source_count"] = seen["rows"]
+    if pcol is not None:
+        result["written_partitions"] = sorted_partition_values(r[0] for r in seen["parts"])
     return result
 
 

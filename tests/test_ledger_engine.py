@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import json
+from datetime import datetime, timezone
+
 import pytest
 
 from hudi_utility_spark.engine import bootstrap, choose_plan
@@ -160,24 +163,47 @@ def test_bootstrap_from_csv_source(spark, events, tmp_path):
     assert set(got.columns) >= {"event_id", "value", "event_type"}
 
 
-def test_latest_event_skips_in_flight_and_vanished_files(tmp_path, monkeypatch):
-    """The driver-side point lookup never opens an in-flight ``_tmp-``
-    append, and an event file removed between the directory listing
-    and the read (a concurrent compact) is skipped, not an error."""
-    import glob
+def test_finish_opens_no_event_file(spark, tmp_path, monkeypatch):
+    """A finish appends its own row and reads nothing; history and status
+    still give the transaction's start_time and request from its PENDING
+    row."""
+    import pyarrow.parquet as pq
 
-    led = Ledger(None, str(tmp_path / "ledger"))
-    tid = led.begin("events")
-    (tmp_path / "ledger" / "_tmp-part-x.snappy.parquet").write_bytes(b"partial")
-    gone = str(tmp_path / "ledger" / "part-gone.snappy.parquet")
-    real_glob = glob.glob
-    monkeypatch.setattr(glob, "glob", lambda pat: real_glob(pat) + [gone])
-    assert led._latest_event_py(tid)["status"] == "PENDING"
+    led = Ledger(spark, str(tmp_path / "ledger"))
+    tid = led.begin("events", {"a": 1})
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("finish read an event file")
+
+    for name in ("read_table", "ParquetFile", "ParquetDataset"):
+        monkeypatch.setattr(pq, name, no_read)
+    led.finish(tid, "SUCCESS", record_counts={"input": 3})
+    monkeypatch.undo()
+    (row,) = led.history().collect()
+    assert (row.status, row.start_time is not None, row.end_time is not None) == (
+        "SUCCESS", True, True)
+    assert json.loads(row.transaction_data) == {"a": 1}
+    assert led.status(tid)["record_counts"] == {"input": 3}
 
 
-def test_latest_event_raises_on_corrupt_event_file(tmp_path):
-    led = Ledger(None, str(tmp_path / "ledger"))
-    tid = led.begin("events")
+def test_terminal_rows_that_carry_the_request_read_the_same(spark, tmp_path):
+    """Ledgers written when finish copied start_time and the request into
+    the terminal row read as before."""
+    led = Ledger(spark, str(tmp_path / "ledger"))
+    tid = led.begin("events", {"a": 1})
+    (pending,) = led.history().collect()
+    led._append_row(
+        transaction_id=tid, status="SUCCESS", transaction_data=pending.transaction_data,
+        start_time=pending.start_time, end_time=datetime.now(timezone.utc),
+    )
+    (row,) = led.history().collect()
+    assert (row.status, row.start_time, row.transaction_data) == (
+        "SUCCESS", pending.start_time, pending.transaction_data)
+
+
+def test_history_raises_on_corrupt_event_file(spark, tmp_path):
+    led = Ledger(spark, str(tmp_path / "ledger"))
+    led.begin("events")
     (tmp_path / "ledger" / "part-bad.snappy.parquet").write_bytes(b"garbage")
-    with pytest.raises(ValueError, match="part-bad.snappy.parquet"):
-        led._latest_event_py(tid)
+    with pytest.raises(Exception, match="part-bad.snappy.parquet"):
+        led.history().collect()

@@ -4,7 +4,7 @@ operator change hashes differently."""
 
 from __future__ import annotations
 
-from tools.plan_audit import fingerprint, shuffle_count
+from tools.plan_audit import REPO_ROOT, fingerprint, normalise, shuffle_count
 
 PLAN = """== Physical Plan ==
 AdaptiveSparkPlan (6)
@@ -94,3 +94,13 @@ def test_fingerprint_ignores_query_stage_ids():
     # an Arguments line of any other node still counts
     other = STAGES.format(a=3, b=4).replace("(54) BroadcastHashJoin", "(54) Exchange\nArguments: 7\n\n(55) BroadcastHashJoin")
     assert fingerprint(other) != fingerprint(other.replace("Arguments: 7", "Arguments: 8"))
+
+
+def test_fingerprint_ignores_the_checkout_path():
+    """bucketed_colocated_join saves its tables under the run directory's
+    spark-warehouse: the plan printed in this checkout hashes like the
+    same plan printed in a clone at another path."""
+    plan = "(1) Scan parquet default.t\nLocation: InMemoryFileIndex [file:{root}/spark-warehouse/t]\n"
+    here = plan.format(root=REPO_ROOT)
+    assert REPO_ROOT not in normalise(here)
+    assert fingerprint(here) == fingerprint(plan.format(root="<repo>"))

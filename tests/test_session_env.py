@@ -45,6 +45,30 @@ def test_driver_mem_default(monkeypatch):
     assert session._env_driver_mem() == "24g"
 
 
+@pytest.mark.parametrize(
+    "raw",
+    ["local", "local[4]", "local[*]", "local[4,2]", "local[*, 3]",
+     "local-cluster[2,1,1024]", "spark://host:7077", "yarn", "k8s://https://host:6443"],
+)
+def test_master_accepts_spark_master_urls(monkeypatch, raw):
+    monkeypatch.setenv("SPARK_GRAFT_MASTER", raw)
+    assert session._env_master("4") == raw
+
+
+@pytest.mark.parametrize(
+    "raw", ["", "local[]", "local[0]", "local[four]", "local[4", "locale", "mesos://h:5050",
+            "spark://", "YARN", " local", "host:7077"],
+)
+def test_master_rejects_anything_else(monkeypatch, raw):
+    monkeypatch.setenv("SPARK_GRAFT_MASTER", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_MASTER"):
+        session._env_master("4")
+
+
+def test_master_default_follows_cpus(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    assert session._env_master("4") == "local[4]"
+
 
 @pytest.mark.parametrize("raw", ["128mb", "1.5m", ""])
 def test_advisory_bytes_rejects_malformed_sizes_at_import(raw):

@@ -36,3 +36,28 @@ def test_every_span_target_resolves(spans):
     for module, cls, method in spans.LAYER_METHODS:
         klass = getattr(importlib.import_module(module), cls, None)
         assert callable(getattr(klass, method, None)), (module, cls, method)
+
+
+def test_resume_makes_its_diff_through_the_traced_attribute(monkeypatch):
+    """The benchmark's ``repair.diff_s`` is the span the tracer puts on
+    ``repair.partitions_to_repair``. It reads 0 unless resume_bootstrap
+    calls the diff through that module attribute."""
+    from types import SimpleNamespace
+    from unittest import mock
+
+    from hudi_utility_spark import repair
+
+    calls = []
+
+    def diff(source, dest, partition_field):
+        calls.append((source, dest, partition_field))
+        return []
+
+    source = mock.Mock()
+    monkeypatch.setattr(repair, "partitions_to_repair", diff)
+    monkeypatch.setattr(repair, "F", mock.MagicMock())  # no Spark session here
+    monkeypatch.setattr(repair, "Observation", lambda: SimpleNamespace(get={"rows": 3}))
+    table = SimpleNamespace(partition_fields=["p"], exists=lambda: False)
+    summary = repair.resume_bootstrap(None, source, table)
+    assert calls == [(source.observe.return_value, None, "p")]
+    assert summary["noop"] and summary["source_count"] == 3

@@ -6,9 +6,10 @@ The fingerprint hashes ``explain("formatted")`` after normalising the
 tokens that change from one build of the same plan to the next
 (expression ids, plan ids, lambda-variable suffixes, RDD ids and call
 sites, AQE query-stage ids, part-file UUIDs, the first file a multi-file
-index happens to list). Two runs that print the same fingerprint for a query built the
-same physical plan, which makes the tool a refactor gate: audit with
-``--all`` before and after a change and diff the fingerprint column.
+index happens to list, the checkout's path). Two runs that print the
+same fingerprint for a query built the same physical plan, which makes
+the tool a refactor gate: audit with ``--all`` before and after a change
+and diff the fingerprint column.
 
 Usage: python tools/plan_audit.py [sf_dir] [name_filter] [--all]
 """
@@ -22,11 +23,15 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO_ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO_ROOT)
 
 # run-specific tokens of a formatted plan, in the order they are
 # rewritten: "[id=#12]" must go before the bare "#12" rule eats its id
 _UNSTABLE_TOKENS = [
+    # the checkout's own path: tables saved under Spark's default
+    # warehouse (the run directory's spark-warehouse) print it
+    (re.compile(re.escape(REPO_ROOT) + r"(?=/)"), "<repo>"),
     (re.compile(r"\[id=#\d+\]"), "[id=#]"),
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
