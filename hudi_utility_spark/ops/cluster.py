@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.ops import phash
+
 
 def _sq_dist(a: Column, b: Column) -> Column:
     """Squared L2 distance between two float arrays, JVM-side."""
@@ -203,20 +205,9 @@ def kmeans_parallel_init(
             phi = float(emb.agg(F.round(F.sum(d2), 2)).collect()[0][0])
         else:
             phi = prev_phi
-        u48 = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.lit(seed), F.lit(str(r)), F.col("_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("long")
-        u = (u48 + F.lit(0.5)) / F.lit(float(1 << 48))
+        u = phash.uniform(
+            F.concat_ws(":", F.lit(seed), F.lit(str(r)), F.col("_id").cast("string"))
+        )
         obs = Observation()
         # no orderBy here: a distributed sort's range-partitioner runs a
         # SAMPLING pass through the child, which would fire the observe

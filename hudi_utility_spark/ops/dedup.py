@@ -150,6 +150,44 @@ def _shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     ).dropDuplicates(["id", "shingle"])
 
 
+
+def _rarest_first(sh: DataFrame, dfreq: DataFrame) -> DataFrame:
+    """Each shingle of `_shingles` with its document frequency ``df``,
+    its rank ``rn`` in its set under the canonical global order
+    (document frequency asc, shingle: rarest first, deterministic
+    tiebreak) and the set's size ``set_size``: the order prefix
+    filtering needs."""
+    return (
+        sh.join(dfreq, "shingle")
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
+            ),
+        )
+        .withColumn("set_size", F.count(F.lit(1)).over(Window.partitionBy("id")))
+    )
+
+
+def _bitset_jaccard(pairs: DataFrame, nwords: int) -> DataFrame:
+    """*pairs* with the overlap ``common`` of two shingle-set bitmasks
+    (popcount of ``wa{i} & wb{i}`` over the *nwords* 64-bit words) and
+    the ``jaccard`` it gives against ``size_a``/``size_b``, 6 places."""
+    common = sum(
+        (
+            F.bit_count(F.col(f"wa{i}").bitwiseAND(F.col(f"wb{i}")))
+            for i in range(nwords)
+        ),
+        start=F.lit(0),
+    )
+    return pairs.withColumn("common", common).withColumn(
+        "jaccard",
+        F.round(
+            F.col("common") / (F.col("size_a") + F.col("size_b") - F.col("common")),
+            6,
+        ),
+    )
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -227,16 +265,7 @@ def jaccard_pairs(
         # Canonical global order: (document frequency asc, shingle) —
         # rarest first, deterministic tiebreak. dfreq is the persisted
         # build-time aggregate — a cache scan here, not a fresh pass.
-        ranked = (
-            sh.join(dfreq, "shingle")
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
-                ),
-            )
-            .withColumn("set_size", F.count(F.lit(1)).over(Window.partitionBy("id")))
-        )
+        ranked = _rarest_first(sh, dfreq)
         prefix_len = (
             F.col("set_size") - F.ceil(F.lit(threshold) * F.col("set_size")) + 1
         )
@@ -328,13 +357,6 @@ def jaccard_pairs(
             # block would merely recompute through the lineage.
             sh.unpersist()
             dfreq.unpersist()
-            common = sum(
-                (
-                    F.bit_count(F.col(f"wa{i}").bitwiseAND(F.col(f"wb{i}")))
-                    for i in range(nwords)
-                ),
-                start=F.lit(0),
-            )
             ga = groups.select(
                 F.col("gid").alias("gid_a"),
                 F.col("set_size").alias("size_a"),
@@ -348,20 +370,14 @@ def jaccard_pairs(
                 *[F.col(f"w{i}").alias(f"wb{i}") for i in range(nwords)],
             )
             gpairs = (
-                ga.join(
-                    F.broadcast(gb),
-                    (F.col("gid_a") < F.col("gid_b"))
-                    & (F.col("size_b") * F.lit(threshold) <= F.col("size_a"))
-                    & (F.col("size_a") * F.lit(threshold) <= F.col("size_b")),
-                )
-                .withColumn("common", common)
-                .withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("common")
-                        / (F.col("size_a") + F.col("size_b") - F.col("common")),
-                        6,
+                _bitset_jaccard(
+                    ga.join(
+                        F.broadcast(gb),
+                        (F.col("gid_a") < F.col("gid_b"))
+                        & (F.col("size_b") * F.lit(threshold) <= F.col("size_a"))
+                        & (F.col("size_a") * F.lit(threshold) <= F.col("size_b")),
                     ),
+                    nwords,
                 )
                 # common > 0 keeps this path's contract identical to the
                 # candidate-generation paths: disjoint sets are never a
@@ -406,27 +422,9 @@ def jaccard_pairs(
         )
         if _should_broadcast():
             ma, mb = F.broadcast(ma), F.broadcast(mb)
-        common = sum(
-            (
-                F.bit_count(F.col(f"wa{i}").bitwiseAND(F.col(f"wb{i}")))
-                for i in range(nwords)
-            ),
-            start=F.lit(0),
-        )
-        verified = (
-            cand.join(ma, "id_a")
-            .join(mb, "id_b")
-            .withColumn("common", common)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("common")
-                    / (F.col("size_a") + F.col("size_b") - F.col("common")),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        verified = _bitset_jaccard(
+            cand.join(ma, "id_a").join(mb, "id_b"), nwords
+        ).filter(F.col("jaccard") >= threshold)
         return verified.select("id_a", "id_b", "jaccard")
 
     cand = _prefix_candidates()
@@ -954,17 +952,7 @@ def containment_pairs(
     # B index with positions for the PPJoin+ positional filter below);
     # persist so the df-join + windows run once, not once per side.
     # Same caller-clears-cache lifetime contract as `sh`.
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
-            ),
-        )
-        .withColumn("set_size", F.count(F.lit(1)).over(Window.partitionBy("id")))
-        .persist()
-    )
+    ranked = _rarest_first(sh, dfreq).persist()
     prefix_len = (
         F.col("set_size") - F.ceil(F.lit(threshold) * F.col("set_size")) + 1
     )

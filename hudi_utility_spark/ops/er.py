@@ -189,6 +189,17 @@ def fellegi_sunter_score(
     )
 
 
+# Soundex consonant classes and their digits
+_SOUNDEX_CLASSES = [
+    ("[bfpv]", "1"),
+    ("[cgjkqsxz]", "2"),
+    ("[dt]", "3"),
+    ("[l]", "4"),
+    ("[mn]", "5"),
+    ("[r]", "6"),
+]
+
+
 def phonetic_key(col: Column) -> Column:
     """Simplified Soundex phonetic key, ENGINE-PORTABLE by construction:
     first letter + up to 3 consonant-class digits (b/f/p/v→1,
@@ -206,14 +217,7 @@ def phonetic_key(col: Column) -> Column:
     first = F.upper(F.substring(w, 1, 1))
     rest = F.substring(w, 2, 100)
     code = rest
-    for cls, d in [
-        ("[bfpv]", "1"),
-        ("[cgjkqsxz]", "2"),
-        ("[dt]", "3"),
-        ("[l]", "4"),
-        ("[mn]", "5"),
-        ("[r]", "6"),
-    ]:
+    for cls, d in _SOUNDEX_CLASSES:
         code = F.regexp_replace(code, cls, d)
     code = F.regexp_replace(code, "[aeiouyhw]", "")
     for d in "123456":
@@ -226,14 +230,7 @@ def phonetic_key_sql(expr: str) -> str:
     """DuckDB rendition of :func:`phonetic_key` — the identical
     operation chain, for oracles."""
     code = f"substr(lower({expr}), 2, 100)"
-    for cls, d in [
-        ("[bfpv]", "1"),
-        ("[cgjkqsxz]", "2"),
-        ("[dt]", "3"),
-        ("[l]", "4"),
-        ("[mn]", "5"),
-        ("[r]", "6"),
-    ]:
+    for cls, d in _SOUNDEX_CLASSES:
         code = f"regexp_replace({code}, '{cls}', '{d}', 'g')"
     code = f"regexp_replace({code}, '[aeiouyhw]', '', 'g')"
     for d in "123456":

@@ -359,16 +359,8 @@ def tie_aware_auc(
         quantize_bins=quantize_bins,
         context="tie_aware_auc",
     )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = per_score.withColumn(
-        "cum_before", F.sum("cnt").over(w) - F.col("cnt")
-    )
-    agg = ranked.agg(
-        F.sum(
-            F.col("pos") * (F.col("cum_before") + (F.col("cnt") + 1) / 2.0)
-        ).alias("rank_sum"),
+    agg = _rank_sum_agg(
+        per_score,
         F.sum("pos").alias("n_pos"),
         F.sum("neg").alias("n_neg"),
     )
@@ -465,7 +457,7 @@ def mann_whitney_u(
     Returns one row: (n_pos, n_neg, u_stat, z_score) where u_stat is
     U for the label=1 sample.
     """
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
     per_score = _collapse_scored(
         scored,
@@ -475,14 +467,8 @@ def mann_whitney_u(
         quantize_bins=quantize_bins,
         context="mann_whitney_u",
     )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = per_score.withColumn(
-        "cum_before", F.sum("cnt").over(w) - F.col("cnt")
-    )
-    agg = ranked.agg(
-        F.sum(
-            F.col("pos") * (F.col("cum_before") + (F.col("cnt") + 1) / 2.0)
-        ).alias("rank_sum"),
+    agg = _rank_sum_agg(
+        per_score,
         F.sum("pos").alias("n1"),
         F.sum("neg").alias("n2"),
         F.sum(
@@ -503,6 +489,26 @@ def mann_whitney_u(
         F.col("n2").cast("long").alias("n_neg"),
         F.round(u, 6).alias("u_stat"),
         F.round((u - mu) / sigma, 6).alias("z_score"),
+    )
+
+
+def _rank_sum_agg(per_score: DataFrame, *aggs) -> DataFrame:
+    """One row: the positives' rank sum ``rank_sum`` over a
+    `_collapse_scored` relation, beside *aggs*. Rows tied on a score
+    share its mid-rank ``cum_before + (cnt + 1) / 2``, where
+    ``cum_before`` counts the rows of lower scores (one ordered window
+    over the collapsed relation)."""
+    from pyspark.sql import Window, functions as F
+
+    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
+    ranked = per_score.withColumn(
+        "cum_before", F.sum("cnt").over(w) - F.col("cnt")
+    )
+    return ranked.agg(
+        F.sum(
+            F.col("pos") * (F.col("cum_before") + (F.col("cnt") + 1) / 2.0)
+        ).alias("rank_sum"),
+        *aggs,
     )
 
 
@@ -1064,8 +1070,11 @@ def g_test(
                 ).otherwise(0.0)
             )
         ).alias("g"),
-        F.count_distinct(F.col(row_col)).alias("nr"),
-        F.count_distinct(F.col(col_col)).alias("nc"),
+        # collect_set, not count_distinct: two distinct counts in one
+        # aggregate plan an Expand whose projection order follows
+        # expression ids, so the plan changed from build to build
+        F.size(F.collect_set(F.col(row_col))).alias("nr"),
+        F.size(F.collect_set(F.col(col_col))).alias("nc"),
     )
     return agg.select(
         F.col("n").cast("long").alias("n"),
@@ -1104,6 +1113,22 @@ def grouped_permutation_pvalues(
     )
 
 
+def _p_ranked(pvals: DataFrame, p_col: str, key_col: str):
+    """*pvals* with each test's ascending p-value ``rank`` (ties on the
+    key) and the test count ``m``, plus that rank's window."""
+    from pyspark.sql import Window, functions as F
+
+    m = F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
+    w = Window.orderBy(F.col(p_col), F.col(key_col))
+    ranked = pvals.select(
+        key_col,
+        p_col,
+        F.row_number().over(w).alias("rank"),
+        m.alias("m"),
+    )
+    return ranked, w
+
+
 def holm_bonferroni(
     pvals: DataFrame,
     p_col: str = "p_value",
@@ -1120,14 +1145,7 @@ def holm_bonferroni(
     engines order identically."""
     from pyspark.sql import Window, functions as F
 
-    m = F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
-    w = Window.orderBy(F.col(p_col), F.col(key_col))
-    ranked = pvals.select(
-        key_col,
-        p_col,
-        F.row_number().over(w).alias("rank"),
-        m.alias("m"),
-    )
+    ranked, w = _p_ranked(pvals, p_col, key_col)
     step = (F.col("m") - F.col("rank") + 1) * F.col(p_col)
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)
     return ranked.select(
@@ -1156,14 +1174,7 @@ def benjamini_hochberg(
     like Holm, every window runs over tests, not rows."""
     from pyspark.sql import Window, functions as F
 
-    m = F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
-    w = Window.orderBy(F.col(p_col), F.col(key_col))
-    ranked = pvals.select(
-        key_col,
-        p_col,
-        F.row_number().over(w).alias("rank"),
-        m.alias("m"),
-    )
+    ranked, w = _p_ranked(pvals, p_col, key_col)
     step = F.least(F.col("m") * F.col(p_col) / F.col("rank"), F.lit(1.0))
     wfwd = w.rowsBetween(0, Window.unboundedFollowing)
     return ranked.select(

@@ -623,6 +623,18 @@ def decode_ppm_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.mapInPandas(run, schema=PPM_META_SCHEMA)
 
 
+def _ppm_raster(p):
+    """The (height, width, 3) uint8 raster of one P6 payload."""
+    import numpy as np
+
+    payload = bytes(p)
+    meta = decode_ppm(payload)
+    w, h = meta["width"], meta["height"]
+    return np.frombuffer(
+        payload, dtype=np.uint8, offset=len(payload) - w * h * 3
+    ).reshape(h, w, 3)
+
+
 def ppm_resize_stats(
     df: DataFrame,
     target: tuple[int, int] = (8, 8),
@@ -644,12 +656,8 @@ def ppm_resize_stats(
         for pdf in batches:
             rows = []
             for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = bytes(p)
-                meta = decode_ppm(payload)
-                w, h = meta["width"], meta["height"]
-                raster = np.frombuffer(
-                    payload, dtype=np.uint8, offset=len(payload) - w * h * 3
-                ).reshape(h, w, 3)
+                raster = _ppm_raster(p)
+                h, w, _ = raster.shape
                 ys = (np.arange(th, dtype=np.int64) * h) // th
                 xs = (np.arange(tw, dtype=np.int64) * w) // tw
                 resized = raster[np.ix_(ys, xs)].astype(np.int64)
@@ -696,12 +704,8 @@ def ppm_dhash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         for pdf in batches:
             rows = []
             for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = bytes(p)
-                meta = decode_ppm(payload)
-                w, h = meta["width"], meta["height"]
-                raster = np.frombuffer(
-                    payload, dtype=np.uint8, offset=len(payload) - w * h * 3
-                ).reshape(h, w, 3).astype(np.int64)
+                raster = _ppm_raster(p).astype(np.int64)
+                h, w, _ = raster.shape
                 gray = (
                     299 * raster[:, :, 0]
                     + 587 * raster[:, :, 1]

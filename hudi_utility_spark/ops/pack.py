@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.ops import phash
+
 
 def with_shard(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
     """Content-stable shard id: first 8 md5 hex chars of the id modulo
@@ -302,13 +304,7 @@ def weighted_sample(
     with NULL or non-positive weight never win (they'd need an
     infinite clock) and are filtered before the race.
     """
-    # 48-bit md5 prefix -> u in (0,1); +0.5 keeps u strictly positive
-    x = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("long")
-    u = (x + F.lit(0.5)) / F.lit(float(1 << 48))
+    u = phash.uniform(F.col(id_col).cast("string"))
     key = -F.log(u) / F.col(weight_col).cast("double")
     return (
         df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
@@ -476,23 +472,11 @@ def hedge_mix_weights(
             *[x for d in domains for x in (F.lit(d), F.lit(w[d]))]
         )
         wd = F.element_at(wmap, F.col("_dom"))
-        u48 = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(seed),
-                        F.lit(str(t)),
-                        F.col(id_col).cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("long")
-        u = (u48 + F.lit(0.5)) / F.lit(float(1 << 48))
+        u = phash.uniform(
+            F.concat_ws(
+                ":", F.lit(seed), F.lit(str(t)), F.col(id_col).cast("string")
+            )
+        )
         inc = u < F.least(
             F.lit(1.0), F.lit(base_rate) * wd / F.lit(mean_w)
         )

@@ -54,6 +54,19 @@ def md5_hex(col: Column) -> Column:
     return F.md5(col.cast("binary"))
 
 
+def uniform(col: Column) -> Column:
+    """A draw in (0, 1) from the first 48 bits of md5(col); the +0.5
+    keeps it strictly positive."""
+    u48 = F.conv(F.substring(md5_hex(col), 1, 12), 16, 10).cast("long")
+    return (u48 + F.lit(0.5)) / F.lit(float(1 << 48))
+
+
+def md5_parity(col: Column) -> Column:
+    """0 or 1: the first 24 bits of md5(col) mod 2, the portable A/B
+    split (DuckDB: ``CAST(concat('0x', substr(md5(x), 1, 6)) AS BIGINT) % 2``)."""
+    return F.conv(F.substring(F.md5(col), 1, 6), 16, 10).cast("long") % 2
+
+
 def parts(col: Column) -> tuple[Column, Column]:
     """(hi, lo) 32-bit halves of md5(col)."""
     m = md5_hex(col)

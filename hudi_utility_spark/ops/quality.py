@@ -24,6 +24,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hudi_utility_spark.ops import phash
+
 
 @dataclass(frozen=True)
 class Constraint:
@@ -264,8 +266,6 @@ def hll_distinct(df: DataFrame, cols: list[str], p: int = 9) -> DataFrame:
     1.04/√2^p (~4.6% at p=9)."""
     from pyspark.sql import functions as F
 
-    from hudi_utility_spark.ops import phash
-
     m = 1 << p
     alpha = 0.7213 / (1 + 1.079 / m)
     stack_args = ", ".join(
@@ -497,10 +497,7 @@ def dp_noisy_counts(
     key = F.concat_ws(
         "", F.lit(seed), *[F.col(c).cast("string") for c in group_cols]
     )
-    u48 = F.conv(F.substring(F.md5(key.cast("binary")), 1, 12), 16, 10).cast(
-        "long"
-    )
-    u = (u48 + F.lit(0.5)) / F.lit(float(1 << 48))
+    u = phash.uniform(key)
     s = u - F.lit(0.5)
     noise = (
         -F.lit(1.0 / epsilon)
@@ -592,23 +589,9 @@ def bootstrap_ci(
         F.col(id_col).cast("string").alias("_rid"),
         rep,
     )
-    u48 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(seed),
-                    F.col("rep").cast("string"),
-                    F.col("_rid"),
-                ).cast("binary")
-            ),
-            1,
-            12,
-        ),
-        16,
-        10,
-    ).cast("long")
-    u = (u48 + F.lit(0.5)) / F.lit(float(1 << 48))
+    u = phash.uniform(
+        F.concat_ws(":", F.lit(seed), F.col("rep").cast("string"), F.col("_rid"))
+    )
     w = F.lit(len(th))
     for k in range(len(th) - 1, -1, -1):
         w = F.when(u < F.lit(th[k]), F.lit(k)).otherwise(w)
@@ -649,8 +632,6 @@ def hll_sketch(df: DataFrame, col: str, p: int = 9) -> DataFrame:
     union-cardinality question without rescanning the data: merging is
     a per-bucket MAX, the property that makes sketches the unit of
     exchange in a 100 TB profiling pipeline."""
-    from hudi_utility_spark.ops import phash
-
     m = 1 << p
     vals = df.select(F.col(col).cast("string").alias("v")).filter(
         F.col("v").isNotNull()

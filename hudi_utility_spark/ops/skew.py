@@ -77,10 +77,20 @@ def cms_sketch(
     reduce each task to ≤ depth·width counters before the exchange)
     instead of an O(keys) histogram shuffle. Hashes are the portable md5
     family, so estimates are engine-reproducible (oracle-checkable)."""
+    cells = _cms_cells(key_col, depth, width)
+    return (
+        df.select(F.explode(cells).alias("c"))
+        .groupBy(F.col("c.j").alias("j"), F.col("c.pos").alias("pos"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _cms_cells(key_col: str, depth: int, width: int):
+    """The *depth* counters (j, h_j(key) % *width*) a key hits."""
     from hudi_utility_spark.ops import phash
 
     hi, lo = phash.parts(F.col(key_col).cast("string"))
-    cells = F.array(
+    return F.array(
         *[
             F.struct(
                 F.lit(j).alias("j"),
@@ -88,11 +98,6 @@ def cms_sketch(
             )
             for j in range(depth)
         ]
-    )
-    return (
-        df.select(F.explode(cells).alias("c"))
-        .groupBy(F.col("c.j").alias("j"), F.col("c.pos").alias("pos"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -104,18 +109,7 @@ def cms_estimate(
     undercount, and overcount by ≤ εN with probability 1−δ for
     width = e/ε, depth = ln(1/δ). The probe side is a candidate-key
     batch joined against the broadcast-sized sketch relation."""
-    from hudi_utility_spark.ops import phash
-
-    hi, lo = phash.parts(F.col(key_col).cast("string"))
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                (phash.family_hash(hi, lo, j) % F.lit(width)).alias("pos"),
-            )
-            for j in range(depth)
-        ]
-    )
+    cells = _cms_cells(key_col, depth, width)
     probes = keys.select(F.col(key_col), F.explode(cells).alias("c")).select(
         key_col, F.col("c.j").alias("j"), F.col("c.pos").alias("pos")
     )

@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.ops import lits
+from hudi_utility_spark.ops import lits, phash
 
 from hudi_utility_spark.ops import widen_for_compute
 
@@ -463,8 +463,6 @@ def winnowing_fingerprints(
     interpreted per-element work.
     """
     df = widen_for_compute(df)  # compute-bound: scan width != CPU width
-    from hudi_utility_spark.ops import phash
-
     grams = df.select(
         F.col(id_col), F.posexplode(word_ngrams(F.col(text_col), k)).alias("pos", "g")
     )
@@ -508,8 +506,6 @@ def feature_hash_score(
     keyed exchange regardless of corpus size; no model state beyond the
     D scalars."""
     df = widen_for_compute(df)  # compute-bound: scan width != CPU width
-    from hudi_utility_spark.ops import phash
-
     toks = df.select(
         F.col(id_col), F.explode(F.split(normalized(F.col(text_col)), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -685,8 +681,6 @@ def dsir_importance_weights(
     `unigram_logprob_score`. All arithmetic is fixed-order double math
     on integer counts — oracle-replayable."""
     df = widen_for_compute(df)  # compute-bound: scan width != CPU width
-    from hudi_utility_spark.ops import phash
-
     toks = df.select(
         F.col(id_col),
         target_cond.cast("long").alias("_tgt"),
@@ -760,14 +754,7 @@ def dsir_select(
     w = dsir_importance_weights(
         df, target_cond, id_col=id_col, text_col=text_col, dims=dims, alpha=alpha
     )
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string").cast("binary")), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 48))
+    u = phash.uniform(F.col(id_col).cast("string"))
     gumbel = -F.log(-F.log(u))
     return (
         w.withColumn("sel_key", F.round(F.col("log_weight") + gumbel, 6))
@@ -1492,12 +1479,7 @@ def naive_bayes_langid(
         F.col(id_col).alias("doc"),
         F.col(label_col).alias("label"),
         F.split(normalized(F.col(text_col)), " ").alias("ws"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 6), 16, 10
-            ).cast("long")
-            % 2
-        ).alias("split"),
+        phash.md5_parity(F.col(id_col).cast("string")).alias("split"),
     )
     train = base.filter(F.col("split") == 0)
     test = base.filter(F.col("split") == 1)

@@ -46,6 +46,15 @@ def events_table(
     )
 
 
+# the oracle twin of reading an `events_table` written with the row
+# versions of CTE ``unioned``: each event's latest version has rn = 1
+EVENTS_RESOLVED = """resolved AS (
+      SELECT *, ROW_NUMBER() OVER (
+        PARTITION BY event_id ORDER BY ts DESC) AS rn
+      FROM unioned
+    )"""
+
+
 def scratch_base() -> str:
     """Root for the query layer's PER-RUN scratch (replay input slices,
     streaming checkpoints, lifecycle/table round-trip copies). Ephemeral

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from hudi_utility_spark.tsutil import us
 
+from hudi_utility_spark.ops import phash
 from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
@@ -128,6 +129,171 @@ def _basket_pairs(
     )
     return baskets.select(F.explode(pair_structs).alias("p")).select(
         f"p.{a}", f"p.{b}"
+    )
+
+
+# distinct co-purchased part pairs u < v (items: distinct order-part rows)
+_PART_PAIRS = """pairs AS (
+      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+      FROM items a JOIN items b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    )"""
+
+# the collapsed hourly series (mean event value per hour index since the
+# epoch) the time-series oracles start from; _BY_TYPE keeps event_type
+_HOURLY = """hourly AS (
+        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
+                   AS hidx,
+               AVG(value) AS y
+        FROM events GROUP BY 1
+    )"""
+_HOURLY_BY_TYPE = """hourly AS (
+        SELECT event_type,
+               CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
+                   AS hidx,
+               AVG(value) AS y
+        FROM events GROUP BY 1, 2
+    )"""
+
+
+def _hidx():
+    """Hours since the epoch of the event's hour: the series index."""
+    return (
+        F.unix_micros(F.date_trunc("hour", F.col("ts")))
+        / F.lit(3_600_000_000)
+    ).cast("long")
+
+
+def _hourly_means(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """Spark twin of `_HOURLY`, or of `_HOURLY_BY_TYPE` when *keys* is
+    ``("event_type",)``: ``(*keys, hidx, y)`` from one hash aggregate
+    over the events, so every window downstream runs over hours."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.withColumn("hidx", _hidx())
+        .groupBy(*keys, "hidx")
+        .agg(F.avg("value").alias("y"))
+    )
+
+
+# ... numbered 1..n per event type in time order (t, n), for recursions
+_HOURLY_SERIES = _HOURLY_BY_TYPE + """,
+    idx AS (
+        SELECT event_type, y,
+               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hidx) AS t,
+               COUNT(*) OVER (PARTITION BY event_type) AS n
+        FROM hourly
+    )"""
+
+
+def _hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `_HOURLY_SERIES`: each event type's hourly means as
+    one time-ordered array ``ys`` (the recursions fold over it)."""
+    return (
+        _hourly_means(spark, sf_dir, "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("hidx", "y"))),
+                lambda s: s["y"],
+            ).alias("ys")
+        )
+    )
+
+
+def _lag_pairs(hourly: DataFrame, mu: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The ACF build over an `_hourly_means` series: the series centred
+    on *mu*'s ``mu`` (``dv``, checkpointed: read three times), every
+    pair of its hours 1..12 apart by an EQUIJOIN on ``hidx + lag``
+    (``lag, dv, dv2``), and the centred sum of squares ``den``."""
+    dev = (
+        hourly.crossJoin(F.broadcast(mu))
+        .select("hidx", (F.col("y") - F.col("mu")).alias("dv"))
+        .localCheckpoint(eager=False)
+    )
+    den = dev.agg(F.sum(F.col("dv") * F.col("dv")).alias("den"))
+    a = dev.select(
+        "hidx",
+        "dv",
+        F.explode(F.sequence(F.lit(1), F.lit(12))).alias("lag"),
+    ).withColumn("tgt", F.col("hidx") + F.col("lag"))
+    pairs = a.join(
+        dev.select(F.col("hidx").alias("tgt"), F.col("dv").alias("dv2")),
+        "tgt",
+    )
+    return pairs, den
+
+
+# ... with each type's centred 25-hour moving-average trend (RANGE frame
+# keyed by hour index, so gaps count as hours)
+_HOURLY_TRENDED = _HOURLY_BY_TYPE + """,
+    t AS (
+        SELECT event_type, hidx, y,
+               AVG(y) OVER (PARTITION BY event_type ORDER BY hidx
+                            RANGE BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend
+        FROM hourly
+    )"""
+
+
+def _hourly_trended(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `_HOURLY_TRENDED`: ``(event_type, hidx, y, trend)``."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("event_type").orderBy("hidx").rangeBetween(-12, 12)
+    return _hourly_means(spark, sf_dir, "event_type").withColumn(
+        "trend", F.avg("y").over(w)
+    )
+
+
+# each event's successor in its user's (ts, event_id) order
+_NEXT_EVENT = """ordered AS (
+        SELECT user_id, event_type,
+               LEAD(event_type) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+        FROM events
+    )"""
+
+
+def _transition_counts(e: DataFrame) -> DataFrame:
+    """Spark twin of `_NEXT_EVENT`, counted: ``(from_type, to_type,
+    n_transitions)`` over consecutive events of each user."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ordered = e.withColumn("next_type", F.lead("event_type").over(w))
+    return (
+        ordered.filter(F.col("next_type").isNotNull())
+        .groupBy(
+            F.col("event_type").alias("from_type"),
+            F.col("next_type").alias("to_type"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_transitions"))
+    )
+
+
+# daily order revenue per day index since the epoch: the business series
+_DAILY_REVENUE = """daily AS (
+        SELECT date_diff('day', DATE '1970-01-01',
+                         CAST(date_trunc('day', o_orderdate) AS DATE))
+                   AS didx,
+               ROUND(SUM(o_totalprice), 4) AS y
+        FROM orders GROUP BY 1
+    )"""
+
+
+def _didx():
+    """Days since the epoch of the order date, as ``didx``."""
+    return F.datediff(
+        F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
+        F.lit("1970-01-01").cast("date"),
+    ).alias("didx")
+
+
+def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `_DAILY_REVENUE`: ``(didx, y)``."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.groupBy(_didx()).agg(
+        F.round(F.sum("o_totalprice"), 4).alias("y")
     )
 
 
@@ -436,12 +602,7 @@ def ev_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ev_top_transitions",
     """
-    WITH ordered AS (
-        SELECT user_id, event_type,
-               LEAD(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        FROM events
-    )
+    WITH """ + _NEXT_EVENT + """
     SELECT event_type AS from_type, next_type AS to_type,
            COUNT(*) AS n_transitions
     FROM ordered WHERE next_type IS NOT NULL
@@ -456,18 +617,9 @@ def ev_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id)). One user-keyed window shuffle + one (from, to)
     aggregate — high-cardinality keys, no hot partition; the standard
     behavioral-flow readout of an events store."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = e.withColumn("next_type", F.lead("event_type").over(w))
     return (
-        ordered.filter(F.col("next_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
+        _transition_counts(e)
         .orderBy(F.desc("n_transitions"), "from_type", "to_type")
         .limit(10)
     )
@@ -1115,11 +1267,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_triangles_parts",
     """
     WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    """ + _PART_PAIRS + """,
     tri AS (
       SELECT p1.u AS a, p1.v AS b, p2.v AS c
       FROM pairs p1
@@ -1298,18 +1446,7 @@ def ev_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_seasonal_decompose",
     """
-    WITH hourly AS (
-        SELECT event_type,
-               CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT) AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    t AS (
-        SELECT event_type, hidx, y,
-               AVG(y) OVER (PARTITION BY event_type ORDER BY hidx
-                            RANGE BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend
-        FROM hourly
-    )
+    WITH """ + _HOURLY_TRENDED + """
     SELECT event_type,
            CAST(hidx % 24 AS INT) AS hod,
            ROUND(AVG(y - trend), 6) AS seasonal,
@@ -1325,22 +1462,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregated (types x hours << facts) before any window and the
     trend frame partitions by type — no global window anywhere; at
     100 TB the only fact-sized work is the first hash aggregate."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("event_type", "hidx")
-        .agg(F.avg("value").alias("y"))
-    )
-    w = Window.partitionBy("event_type").orderBy("hidx").rangeBetween(-12, 12)
-    t = hourly.withColumn("trend", F.avg("y").over(w))
+    t = _hourly_trended(spark, sf_dir)
     return (
         t.groupBy(
             "event_type", (F.col("hidx") % 24).cast("int").alias("hod")
@@ -1355,12 +1477,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ev_markov_transitions",
     """
-    WITH ordered AS (
-        SELECT user_id, event_type,
-               LEAD(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        FROM events
-    ),
+    WITH """ + _NEXT_EVENT + """,
     counts AS (
         SELECT event_type AS from_type, next_type AS to_type,
                COUNT(*) AS c
@@ -1380,19 +1497,8 @@ def ev_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     next-action prediction and anomalous-flow scoring. One user-keyed
     lead window + one matrix-sized aggregate; smoothing constants are
     scalar broadcasts."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = e.withColumn("next_type", F.lead("event_type").over(w))
-    counts = (
-        ordered.filter(F.col("next_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    )
+    counts = _transition_counts(e)
     k = e.agg(F.count_distinct("event_type").alias("k"))
     row_t = counts.groupBy("from_type").agg(
         F.sum("n_transitions").alias("row_total")
@@ -1455,18 +1561,7 @@ def ml_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_seasonal_anomalies",
     """
-    WITH hourly AS (
-        SELECT event_type,
-               CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT) AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    t AS (
-        SELECT event_type, hidx, y,
-               AVG(y) OVER (PARTITION BY event_type ORDER BY hidx
-                            RANGE BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend
-        FROM hourly
-    ),
+    WITH """ + _HOURLY_TRENDED + """,
     seas AS (
         SELECT event_type, CAST(hidx % 24 AS INT) AS hod,
                AVG(y - trend) AS seasonal
@@ -1494,22 +1589,7 @@ def ts_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     that doesn't fire every rush hour (a plain z-score on the raw
     series would). Composes the decomposition with one stats broadcast;
     everything downstream of the hourly aggregate is series-sized."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("event_type", "hidx")
-        .agg(F.avg("value").alias("y"))
-    )
-    w = Window.partitionBy("event_type").orderBy("hidx").rangeBetween(-12, 12)
-    t = hourly.withColumn("trend", F.avg("y").over(w))
+    t = _hourly_trended(spark, sf_dir)
     seas = t.groupBy(
         "event_type", (F.col("hidx") % 24).cast("int").alias("hod")
     ).agg(F.avg(F.col("y") - F.col("trend")).alias("seasonal"))
@@ -2081,12 +2161,7 @@ def ev_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_acf_profile",
     """
-    WITH hourly AS (
-        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH """ + _HOURLY + """,
     mu AS (SELECT AVG(y) AS mu FROM hourly),
     dev AS (SELECT hidx, y - m.mu AS dv FROM hourly, mu m),
     den AS (SELECT SUM(dv * dv) AS den FROM dev),
@@ -2112,34 +2187,8 @@ def ts_acf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     no pair (documented: ACF over the observed grid)."""
     from pyspark.sql import functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("hidx")
-        .agg(F.avg("value").alias("y"))
-    )
-    mu = hourly.agg(F.avg("y").alias("mu"))
-    dev = (
-        hourly.crossJoin(F.broadcast(mu))
-        .select("hidx", (F.col("y") - F.col("mu")).alias("dv"))
-        .localCheckpoint(eager=False)
-    )
-    den = dev.agg(F.sum(F.col("dv") * F.col("dv")).alias("den"))
-    a = dev.select(
-        "hidx",
-        "dv",
-        F.explode(F.sequence(F.lit(1), F.lit(12))).alias("lag"),
-    ).withColumn("tgt", F.col("hidx") + F.col("lag"))
-    pairs = a.join(
-        dev.select(F.col("hidx").alias("tgt"), F.col("dv").alias("dv2")),
-        "tgt",
-    )
+    hourly = _hourly_means(spark, sf_dir)
+    pairs, den = _lag_pairs(hourly, hourly.agg(F.avg("y").alias("mu")))
     return (
         pairs.groupBy("lag")
         .agg(
@@ -2283,12 +2332,7 @@ def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_theil_sen_trend",
     """
-    WITH hourly AS (
-        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH """ + _HOURLY + """,
     lags AS (SELECT CAST(range AS BIGINT) AS lag FROM range(1, 169)),
     slopes AS (
         SELECT (b.y - a.y) / l.lag AS slope
@@ -2320,19 +2364,7 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating percentiles over the bounded pair relation."""
     from pyspark.sql import functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("hidx")
-        .agg(F.avg("value").alias("y"))
-        .localCheckpoint(eager=False)
-    )
+    hourly = _hourly_means(spark, sf_dir).localCheckpoint(eager=False)
     a = hourly.select(
         "hidx",
         F.col("y").alias("y1"),
@@ -2398,11 +2430,7 @@ def ev_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate, closed form, no sampling."""
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
-        (
-            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("variant"),
+        phash.md5_parity(F.col("event_id").cast("string")).alias("variant"),
         (F.col("event_type") == "purchase").cast("int").alias("conv"),
     )
     agg = base.groupBy("variant").agg(
@@ -2468,12 +2496,7 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stat_spearman_trend",
     """
-    WITH hourly AS (
-        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH """ + _HOURLY + """,
     rx AS (
         SELECT hidx, y,
                CAST(ROW_NUMBER() OVER (ORDER BY hidx) AS DOUBLE) AS rx
@@ -2511,19 +2534,7 @@ def stat_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     run over the bounded series, never facts."""
     from pyspark.sql import Window, functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("hidx")
-        .agg(F.avg("value").alias("y"))
-        .localCheckpoint(eager=False)
-    )
+    hourly = _hourly_means(spark, sf_dir).localCheckpoint(eager=False)
     rx = hourly.select(
         "y",
         F.row_number().over(Window.orderBy("hidx")).cast("double").alias("rx"),
@@ -2595,11 +2606,7 @@ def ev_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     base = ev.select(
-        (
-            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("variant"),
+        phash.md5_parity(F.col("event_id").cast("string")).alias("variant"),
         "value",
     )
     probs = F.array(*[F.lit(i / 10.0) for i in range(1, 10)])
@@ -2798,19 +2805,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_holt_linear",
     """
-    WITH RECURSIVE hourly AS (
-        SELECT event_type,
-               CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-        SELECT event_type, y,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hidx) AS t,
-               COUNT(*) OVER (PARTITION BY event_type) AS n
-        FROM hourly
-    ),
+    WITH RECURSIVE """ + _HOURLY_SERIES + """,
     holt(event_type, t, n, l, b) AS (
         SELECT i1.event_type, 1, i1.n, i1.y, i2.y - i1.y
         FROM idx i1 JOIN idx i2
@@ -2841,24 +2836,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE, so even a 700-step float recursion hash-matches at 4dp."""
     from pyspark.sql import functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("event_type", "hidx")
-        .agg(F.avg("value").alias("y"))
-    )
-    series = hourly.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("hidx", "y"))),
-            lambda s: s["y"],
-        ).alias("ys")
-    ).filter(F.size("ys") >= 2)
+    series = _hourly_series(spark, sf_dir).filter(F.size("ys") >= 2)
     alpha, beta = 0.4, 0.3
     init = F.struct(
         F.element_at("ys", 1).alias("l"),
@@ -2887,19 +2865,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_holt_winters",
     """
-    WITH RECURSIVE hourly AS (
-        SELECT event_type,
-               CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-        SELECT event_type, y,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hidx) AS t,
-               COUNT(*) OVER (PARTITION BY event_type) AS n
-        FROM hourly
-    ),
+    WITH RECURSIVE """ + _HOURLY_SERIES + """,
     base AS (
         SELECT event_type, MAX(n) AS n,
                ROUND(AVG(CASE WHEN t <= 24 THEN y END), 6) AS l0,
@@ -2957,24 +2923,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-step forecast l + b + s[next]."""
     from pyspark.sql import functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("event_type", "hidx")
-        .agg(F.avg("value").alias("y"))
-    )
-    series = hourly.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("hidx", "y"))),
-            lambda s: s["y"],
-        ).alias("ys")
-    ).filter(F.size("ys") >= 48)
+    series = _hourly_series(spark, sf_dir).filter(F.size("ys") >= 48)
     a, be, g = 0.3, 0.2, 0.1
     first24 = F.slice("ys", 1, 24)
     second24 = F.slice("ys", 25, 24)
@@ -3035,12 +2984,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stat_runs_test",
     """
-    WITH hourly AS (
-        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH """ + _HOURLY + """,
     med AS (SELECT quantile_cont(y, 0.5) AS m FROM hourly),
     signs AS (
         SELECT hidx, CASE WHEN y > med.m THEN 1 ELSE 0 END AS s
@@ -3078,19 +3022,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic is three scalars."""
     from pyspark.sql import Window, functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("hidx")
-        .agg(F.avg("value").alias("y"))
-        .localCheckpoint(eager=False)
-    )
+    hourly = _hourly_means(spark, sf_dir).localCheckpoint(eager=False)
     med = hourly.agg(F.percentile("y", F.lit(0.5)).alias("m"))
     signs = (
         hourly.crossJoin(F.broadcast(med))
@@ -3207,13 +3139,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_forecast_accuracy",
     """
-    WITH daily AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(date_trunc('day', o_orderdate) AS DATE))
-                   AS didx,
-               ROUND(SUM(o_totalprice), 4) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH """ + _DAILY_REVENUE + """,
     lags AS (
         SELECT 'naive_lag1' AS model, 1 AS lag
         UNION ALL SELECT 'seasonal_naive_lag7', 7
@@ -3253,17 +3179,7 @@ def ts_forecast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented: accuracy over the observed grid)."""
     from pyspark.sql import functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = (
-        o.groupBy(
-            F.datediff(
-                F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-                F.lit("1970-01-01").cast("date"),
-            ).alias("didx")
-        )
-        .agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
-        .localCheckpoint(eager=False)
-    )
+    daily = _daily_revenue(spark, sf_dir).localCheckpoint(eager=False)
     lags = daily.sparkSession.createDataFrame(
         [("naive_lag1", 1), ("seasonal_naive_lag7", 7)], "model string, lag int"
     )
@@ -3301,13 +3217,7 @@ def ts_forecast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_technical_indicators",
     """
-    WITH daily AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(date_trunc('day', o_orderdate) AS DATE))
-                   AS didx,
-               ROUND(SUM(o_totalprice), 4) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH """ + _DAILY_REVENUE + """,
     deltas AS (
         SELECT didx, y,
                GREATEST(y - LAG(y) OVER (ORDER BY didx), 0) AS gain,
@@ -3353,13 +3263,7 @@ def ts_technical_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly reproducible in one window on both engines."""
     from pyspark.sql import Window, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("didx")
-    ).agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
+    daily = _daily_revenue(spark, sf_dir)
     ordw = Window.orderBy("didx")
     w20 = ordw.rowsBetween(-19, 0)
     w14 = ordw.rowsBetween(-13, 0)
@@ -3406,11 +3310,7 @@ def ts_technical_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_clustering_coefficient",
     """
     WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    """ + _PART_PAIRS + """,
     sym AS (
       SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs
     ),
@@ -3475,11 +3375,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE items AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ),
-    pairs AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    """ + _PART_PAIRS + """,
     sym AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
     walk(node, dist) AS (
         SELECT (SELECT MIN(u) FROM sym), 0
@@ -3564,12 +3460,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     daily = (
-        o.groupBy(
-            F.datediff(
-                F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-                F.lit("1970-01-01").cast("date"),
-            ).alias("didx")
-        )
+        o.groupBy(_didx())
         .agg(
             F.count(F.lit(1)).cast("double").alias("x"),
             F.round(F.sum("o_totalprice"), 4).alias("y"),
@@ -3616,12 +3507,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stat_ljung_box",
     """
-    WITH hourly AS (
-        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH """ + _HOURLY + """,
     mu AS (SELECT AVG(y) AS mu, CAST(COUNT(*) AS DOUBLE) AS n FROM hourly),
     dev AS (SELECT hidx, y - m.mu AS dv FROM hourly, mu m),
     den AS (SELECT SUM(dv * dv) AS den FROM dev),
@@ -3652,33 +3538,13 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum runs over the 12-row ACF relation."""
     from pyspark.sql import Window, functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("hidx")
-        .agg(F.avg("value").alias("y"))
-    )
+    hourly = _hourly_means(spark, sf_dir)
     mu = hourly.agg(
         F.avg("y").alias("mu"), F.count(F.lit(1)).cast("double").alias("n")
     )
-    dev = (
-        hourly.crossJoin(F.broadcast(mu))
-        .select("hidx", (F.col("y") - F.col("mu")).alias("dv"))
-        .localCheckpoint(eager=False)
-    )
-    den = dev.agg(F.sum(F.col("dv") * F.col("dv")).alias("den"))
-    a = dev.select(
-        "hidx", "dv", F.explode(F.sequence(F.lit(1), F.lit(12))).alias("lag")
-    ).withColumn("tgt", F.col("hidx") + F.col("lag"))
+    pairs, den = _lag_pairs(hourly, mu)
     acf = (
-        a.join(dev.select(F.col("hidx").alias("tgt"), F.col("dv").alias("dv2")), "tgt")
-        .groupBy("lag")
+        pairs.groupBy("lag")
         .agg(F.sum(F.col("dv") * F.col("dv2")).alias("num"))
         .crossJoin(F.broadcast(den))
         .select("lag", (F.col("num") / F.col("den")).alias("rho"))
@@ -3704,13 +3570,7 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stat_grubbs_outlier",
     """
-    WITH daily AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(date_trunc('day', o_orderdate) AS DATE))
-                   AS didx,
-               ROUND(SUM(o_totalprice), 4) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH """ + _DAILY_REVENUE + """,
     st AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n, AVG(y) AS mu,
                STDDEV_SAMP(y) AS sd
@@ -3739,13 +3599,7 @@ def stat_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines can't flip the winner)."""
     from pyspark.sql import functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("didx")
-    ).agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
+    daily = _daily_revenue(spark, sf_dir)
     st = daily.agg(
         F.count(F.lit(1)).alias("n"),
         F.avg("y").alias("mu"),
@@ -4193,11 +4047,7 @@ def ev_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_assortativity",
     """
     WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    """ + _PART_PAIRS + """,
     sym AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
     deg AS (SELECT u AS node, CAST(COUNT(*) AS DOUBLE) AS d FROM sym
             GROUP BY u),
@@ -4281,12 +4131,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_seasonal_strength",
     """
-    WITH hourly AS (
-        SELECT CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH """ + _HOURLY + """,
     tr AS (
         SELECT hidx, y,
                AVG(y) OVER w AS trend,
@@ -4328,18 +4173,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     both strengths come from one variance aggregate."""
     from pyspark.sql import Window, functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("hidx")
-        .agg(F.avg("value").alias("y"))
-    )
+    hourly = _hourly_means(spark, sf_dir)
     w = Window.orderBy("hidx").rowsBetween(-11, 12)
     det = (
         hourly.select(
@@ -4564,17 +4398,7 @@ def ts_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window, functions as F
 
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            )
-            .cast("long")
-            .alias("hidx")
-        )
-        .distinct()
-    )
+    hourly = ev.select(_hidx().alias("hidx")).distinct()
     grp = hourly.select(
         "hidx",
         (F.col("hidx") - F.row_number().over(Window.orderBy("hidx"))).alias(
@@ -4725,11 +4549,7 @@ def ev_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_modularity",
     """
     WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    """ + _PART_PAIRS + """,
     lab AS (
         SELECT pairs.u, pairs.v, pu.p_brand AS cu, pv.p_brand AS cv
         FROM pairs JOIN part pu ON pairs.u = pu.p_partkey
@@ -4823,13 +4643,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ev_its_segmented",
     """
-    WITH daily AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(date_trunc('day', o_orderdate) AS DATE))
-                   AS didx,
-               ROUND(SUM(o_totalprice), 4) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH """ + _DAILY_REVENUE + """,
     cutp AS (
         SELECT MIN(didx) + CAST(FLOOR((MAX(didx) - MIN(didx)) / 2.0)
                                 AS BIGINT) AS cut
@@ -4878,13 +4692,7 @@ def ev_its_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate (level + trend change)."""
     from pyspark.sql import functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("didx")
-    ).agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
+    daily = _daily_revenue(spark, sf_dir)
     cutp = daily.agg(
         (
             F.min("didx")
@@ -5005,6 +4813,21 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _heavy_purchaser_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per user: parity arm ``treated`` and whether they made at least
+    14 purchases (``converted``)."""
+    e = load_table(spark, sf_dir, "events")
+    return e.groupBy("user_id").agg(
+        (
+            F.sum((F.col("event_type") == "purchase").cast("int")) >= 14
+        )
+        .cast("int")
+        .alias("converted")
+    ).select(
+        (F.col("user_id") % 2).cast("int").alias("treated"), "converted"
+    )
+
+
 @query(
     "ev_two_proportion_z",
     """
@@ -5043,16 +4866,7 @@ def ev_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + one four-sum aggregate, everything map-combinable."""
     from pyspark.sql import functions as F
 
-    e = load_table(spark, sf_dir, "events")
-    arms = e.groupBy("user_id").agg(
-        (
-            F.sum((F.col("event_type") == "purchase").cast("int")) >= 14
-        )
-        .cast("int")
-        .alias("converted")
-    ).select(
-        (F.col("user_id") % 2).cast("int").alias("treated"), "converted"
-    )
+    arms = _heavy_purchaser_arms(spark, sf_dir)
     t, c = F.col("treated"), F.col("converted")
     agg = arms.agg(
         F.sum(t).cast("double").alias("n1"),
@@ -5420,13 +5234,7 @@ def ev_markov_absorbing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stat_durbin_watson",
     """
-    WITH daily AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(date_trunc('day', o_orderdate) AS DATE))
-                   AS didx,
-               ROUND(SUM(o_totalprice), 4) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH """ + _DAILY_REVENUE + """,
     fit AS (
         SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(didx) AS sx, SUM(y) AS sy,
                SUM(didx * y) AS sxy, SUM(CAST(didx AS DOUBLE) * didx) AS sxx
@@ -5462,13 +5270,7 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     window live on the collapsed calendar-bounded daily relation."""
     from pyspark.sql import Window
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("didx")
-    ).agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
+    daily = _daily_revenue(spark, sf_dir)
     fit = daily.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("didx").cast("double").alias("sx"),
@@ -5872,13 +5674,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stat_var_backtest",
     """
-    WITH daily AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(date_trunc('day', o_orderdate) AS DATE))
-                   AS didx,
-               ROUND(SUM(o_totalprice), 4) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH """ + _DAILY_REVENUE + """,
     rets AS (
         SELECT didx, ln(y / LAG(y) OVER (ORDER BY didx)) AS r
         FROM daily
@@ -5923,13 +5719,7 @@ def stat_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the bounded series."""
     from pyspark.sql import Window, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", F.col("o_orderdate"))),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("didx")
-    ).agg(F.round(F.sum("o_totalprice"), 4).alias("y"))
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("didx")
     rets = daily.select(
         "didx", F.log(F.col("y") / F.lag("y").over(w)).alias("r")
@@ -5978,19 +5768,7 @@ def stat_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ts_holt_eval",
     """
-    WITH RECURSIVE hourly AS (
-        SELECT event_type,
-               CAST(epoch_us(date_trunc('hour', ts)) / 3600000000 AS BIGINT)
-                   AS hidx,
-               AVG(value) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-        SELECT event_type, y,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hidx) AS t,
-               COUNT(*) OVER (PARTITION BY event_type) AS n
-        FROM hourly
-    ),
+    WITH RECURSIVE """ + _HOURLY_SERIES + """,
     holt(event_type, t, n, l, b, sh, sn, prev) AS (
         SELECT i1.event_type, 1, i1.n, i1.y, i2.y - i1.y,
                CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE), i1.y
@@ -6027,24 +5805,7 @@ def ts_holt_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ~700 accumulation steps."""
     from pyspark.sql import functions as F
 
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.withColumn(
-            "hidx",
-            (
-                F.unix_micros(F.date_trunc("hour", F.col("ts")))
-                / F.lit(3_600_000_000)
-            ).cast("long"),
-        )
-        .groupBy("event_type", "hidx")
-        .agg(F.avg("value").alias("y"))
-    )
-    series = hourly.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("hidx", "y"))),
-            lambda s: s["y"],
-        ).alias("ys")
-    ).filter(F.size("ys") >= 2)
+    series = _hourly_series(spark, sf_dir).filter(F.size("ys") >= 2)
     alpha, beta = 0.4, 0.3
     init = F.struct(
         F.element_at("ys", 1).alias("l"),
@@ -6084,11 +5845,7 @@ def ts_holt_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE items AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ),
-    pairs AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    """ + _PART_PAIRS + """,
     sym AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
     w1(node, dist) AS (
         SELECT (SELECT MIN(u) FROM sym), 0
@@ -6295,14 +6052,7 @@ def ev_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     One user-collapse + one 2-row aggregate."""
     from pyspark.sql import functions as F
 
-    e = load_table(spark, sf_dir, "events")
-    arms = e.groupBy("user_id").agg(
-        (
-            F.sum((F.col("event_type") == "purchase").cast("int")) >= 14
-        )
-        .cast("int")
-        .alias("converted")
-    ).select((F.col("user_id") % 2).cast("int").alias("treated"), "converted")
+    arms = _heavy_purchaser_arms(spark, sf_dir)
     agg = arms.groupBy("treated").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("converted").cast("double").alias("x"),

@@ -200,17 +200,22 @@ def pack_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "rtr_bm25_topk",
-    f"""
-    WITH base AS (
+# the retrieval family's per-document term frequencies for the fixed
+# 3-term query {hash, vector, spark}, which every ranker scores from
+_RANK_BASE = f"""base AS (
         SELECT doc_id,
                len({_TOKS}) AS dl,
                len(list_filter({_TOKS}, x -> x = 'hash')) AS tf_0,
                len(list_filter({_TOKS}, x -> x = 'vector')) AS tf_1,
                len(list_filter({_TOKS}, x -> x = 'spark')) AS tf_2
         FROM documents
-    ),
+    )"""
+
+
+@query(
+    "rtr_bm25_topk",
+    f"""
+    WITH {_RANK_BASE},
     stats AS (
         SELECT COUNT(*) AS n, AVG(dl) AS avgdl,
                SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS df_0,
@@ -618,18 +623,7 @@ def pack_hedge_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return PK.hedge_mix_weights(d, loss, rounds=3, eta=0.5, base_rate=0.5)
 
 
-# Shared oracle fragments for the probabilistic rankers: base tf CTE +
-# the per-scorer scored CTE, parameterized by the fixed 3-term query
-# {hash, vector, spark} the retrieval family standardizes on.
-_RANK_BASE = f"""base AS (
-        SELECT doc_id,
-               len({_TOKS}) AS dl,
-               len(list_filter({_TOKS}, x -> x = 'hash')) AS tf_0,
-               len(list_filter({_TOKS}, x -> x = 'vector')) AS tf_1,
-               len(list_filter({_TOKS}, x -> x = 'spark')) AS tf_2
-        FROM documents
-    )"""
-
+# the per-scorer scored CTEs over _RANK_BASE
 _BM25_SCORED = """bm25 AS (
         SELECT doc_id,
                ROUND(
@@ -767,17 +761,47 @@ def rtr_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.rrf_fuse([bm25, ql], k_const=60, top_k=10)
 
 
+# BM25's top 10 ranked 1..10: the ranking the retrieval evals score
+_BM25_TOP10 = """ranked AS (
+        SELECT doc_id,
+               CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id)
+                    AS DOUBLE) AS rank
+        FROM bm25 ORDER BY score DESC, doc_id LIMIT 10
+    )"""
+
+
+def _doc_toks(docs: DataFrame) -> DataFrame:
+    """Spark twin of `_TOKS`: each document's normalised, non-empty
+    tokens as ``toks``."""
+    return docs.select(
+        "doc_id",
+        F.filter(
+            F.split(
+                F.regexp_replace(
+                    F.regexp_replace(F.lower("text"), r"[^a-z0-9\s]", " "),
+                    r"\s+",
+                    " ",
+                ),
+                " ",
+            ),
+            lambda t: t != "",
+        ).alias("toks"),
+    )
+
+
+def _has_term(term: str):
+    """Does ``toks`` hold *term*? Bound by closure, NOT a defaulted
+    second lambda param: HOF lambdas dispatch on arity and a 2-ary
+    lambda receives the array index (see ops/retrieval.py::_term_count)."""
+    return F.exists("toks", lambda x: x == F.lit(term))
+
+
 @query(
     "rtr_ndcg_mrr",
     f"""
     WITH {_RANK_BASE},
     {_BM25_SCORED},
-    ranked AS (
-        SELECT doc_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id)
-                    AS DOUBLE) AS rank
-        FROM bm25 ORDER BY score DESC, doc_id LIMIT 10
-    ),
+    {_BM25_TOP10},
     labels AS (
         SELECT doc_id,
                CAST((CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END)
@@ -829,29 +853,9 @@ def rtr_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = R.bm25_topk(docs, terms, k=10).select(
         "doc_id", F.row_number().over(w).alias("rank")
     )
-    toks = docs.select(
+    labels = _doc_toks(docs).select(
         "doc_id",
-        F.filter(
-            F.split(
-                F.regexp_replace(
-                    F.regexp_replace(F.lower("text"), r"[^a-z0-9\s]", " "),
-                    r"\s+",
-                    " ",
-                ),
-                " ",
-            ),
-            lambda t: t != "",
-        ).alias("toks"),
-    )
-    def _has(term: str):
-        # bind via closure, NOT a defaulted second lambda param — HOF
-        # lambdas dispatch on arity and a 2-ary lambda receives the
-        # array index (see ops/retrieval.py::_term_count)
-        return F.exists("toks", lambda x: x == F.lit(term)).cast("int")
-
-    labels = toks.select(
-        "doc_id",
-        sum(_has(t) for t in terms).alias("rel"),
+        sum(_has_term(t).cast("int") for t in terms).alias("rel"),
     )
     return R.ranking_metrics(ranked, labels, k=10)
 
@@ -1098,12 +1102,7 @@ def rtr_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH {_RANK_BASE},
     {_BM25_SCORED},
-    ranked AS (
-        SELECT doc_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id)
-                    AS DOUBLE) AS rank
-        FROM bm25 ORDER BY score DESC, doc_id LIMIT 10
-    ),
+    {_BM25_TOP10},
     labels AS (
         SELECT doc_id,
                CASE WHEN tf_0 > 0 OR tf_1 > 0 OR tf_2 > 0
@@ -1143,30 +1142,11 @@ def rtr_map_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = R.bm25_topk(docs, terms, k=10).select(
         "doc_id", F.row_number().over(w).cast("double").alias("rank")
     )
-    toks = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(
-                F.regexp_replace(
-                    F.regexp_replace(F.lower("text"), r"[^a-z0-9\s]", " "),
-                    r"\s+",
-                    " ",
-                ),
-                " ",
-            ),
-            lambda t: t != "",
-        ).alias("toks"),
-    )
-    def _has(term: str):
-        # bind via closure, NOT a defaulted lambda param — HOF lambdas
-        # dispatch on arity (see rtr_ndcg_mrr above)
-        return F.exists("toks", lambda x: x == F.lit(term))
-
     rel = None
     for t in terms:
-        has = _has(t)
+        has = _has_term(t)
         rel = has if rel is None else rel | has
-    labels = toks.select("doc_id", rel.cast("double").alias("rel"))
+    labels = _doc_toks(docs).select("doc_id", rel.cast("double").alias("rel"))
     wc = Window.orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
     got = ranked.join(labels, "doc_id").select(
         "rank", "rel", F.sum("rel").over(wc).alias("cum_rel")

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from hudi_utility_spark.ops import dedup as D
 from hudi_utility_spark.queries import query
+from hudi_utility_spark.queries.similarity import _IVF_CENTS
 from hudi_utility_spark.tables import load_table
 
 _NORM_SQL = (
@@ -16,16 +17,17 @@ _NORM_SQL = (
 
 # normalized unigram word sets, their sizes, and the shared-word count
 # of every doc pair a < b: the CTEs the Jaccard oracles start from
-_UNIGRAM_COMMON = f"""words AS (
-        SELECT doc_id, unnest(list_distinct(string_split({_NORM_SQL}, ' '))) AS w
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
+_UNIGRAM_OVERLAP = """sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
     common AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
         FROM words a JOIN words b ON a.w = b.w AND a.doc_id < b.doc_id
         GROUP BY 1, 2
     )"""
+_UNIGRAM_COMMON = f"""words AS (
+        SELECT doc_id, unnest(list_distinct(string_split({_NORM_SQL}, ' '))) AS w
+        FROM documents
+    ),
+    {_UNIGRAM_OVERLAP}"""
 
 # the same over distinct word trigrams, for every ordered pair a <> b
 # (containment is directed)
@@ -96,9 +98,9 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.jaccard_pairs(d, n=1, threshold=0.8)
 
 
-_PAIRS_09_SQL = f"""
-    WITH RECURSIVE {_UNIGRAM_COMMON},
-    pairs AS (
+# Jaccard >= 0.9 pairs over those CTEs and their connected components:
+# every paired doc with each label reachable from it (reach: id, lbl)
+_COMPONENTS_09 = """pairs AS (
         SELECT id_a, id_b FROM common
         JOIN sizes sa ON sa.doc_id = id_a
         JOIN sizes sb ON sb.doc_id = id_b
@@ -113,7 +115,10 @@ _PAIRS_09_SQL = f"""
         SELECT id, id FROM nodes
         UNION
         SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-    )
+    )"""
+_PAIRS_09_SQL = f"""
+    WITH RECURSIVE {_UNIGRAM_COMMON},
+    {_COMPONENTS_09}
 """
 
 
@@ -550,17 +555,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_semdedup",
     """
-    WITH dims AS (
-        SELECT label AS cell, d.i AS dim, AVG(d.v) AS mean_v
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding::DOUBLE[]) AS v,
-                             generate_subscripts(embedding, 1) AS i) d
-        GROUP BY label, d.i
-    ),
-    cents AS (
-        SELECT cell, list(mean_v ORDER BY dim) AS centroid
-        FROM dims GROUP BY cell
-    ),
+    WITH """ + _IVF_CENTS + """,
     assigned AS (
         SELECT vec_id, v, cell AS cluster FROM (
             SELECT e.vec_id, e.embedding::DOUBLE[] AS v, c.cell,

@@ -19,6 +19,25 @@ from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 
 
+def _last_click(
+    spark: SparkSession, sf_dir: str, tolerance_seconds: int | None = None
+) -> DataFrame:
+    """Every purchase with its user's latest click at or before it
+    (``event_id_right``, ``ts_right``), backward as-of."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase")
+    clicks = ev.filter(F.col("event_type") == "click")
+    return asof_join(
+        purchases,
+        clicks,
+        on=["user_id"],
+        left_ts="ts",
+        right_ts="ts",
+        right_cols=["event_id"],
+        tolerance_seconds=tolerance_seconds,
+    )
+
+
 @query(
     "asof_purchase_click",
     oracle="""
@@ -36,17 +55,7 @@ def asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join: each purchase matched to the user's latest
     preceding (or simultaneous) click. Single shuffle on user_id via the
     union-tag + last(ignorenulls) window plan."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-    clicks = ev.filter(F.col("event_type") == "click")
-    joined = asof_join(
-        purchases,
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="ts",
-        right_cols=["event_id"],
-    )
+    joined = _last_click(spark, sf_dir)
     return joined.select(
         F.col("event_id").alias("purchase_id"),
         "user_id",
@@ -75,18 +84,7 @@ def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     but matches older than 10 minutes are nulled out — the
     ``tolerance_seconds`` arm of the union-tag window plan. The oracle
     applies the same tolerance as a post-filter on DuckDB's native ASOF."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-    clicks = ev.filter(F.col("event_type") == "click")
-    joined = asof_join(
-        purchases,
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="ts",
-        right_cols=["event_id"],
-        tolerance_seconds=600,
-    )
+    joined = _last_click(spark, sf_dir, tolerance_seconds=600)
     return joined.select(
         F.col("event_id").alias("purchase_id"),
         "user_id",

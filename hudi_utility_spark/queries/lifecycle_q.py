@@ -12,7 +12,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.io import read_files
-from hudi_utility_spark.queries import events_table, fresh_scratch, query
+from hudi_utility_spark.queries import (
+    EVENTS_RESOLVED,
+    events_table,
+    fresh_scratch,
+    query,
+)
 from hudi_utility_spark.table import TableType
 from hudi_utility_spark.tables import load_table
 from hudi_utility_spark.write import upsert
@@ -29,11 +34,7 @@ _SIGNUP_RESOLVED = """
              user_id, event_type,
              value + 5000 AS value
       FROM events WHERE event_type = 'signup'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )"""
+    ), """ + EVENTS_RESOLVED + """"""
 
 
 def _signup_update_table(spark: SparkSession, sf_dir: str, name: str):
@@ -143,11 +144,7 @@ def lifecycle_bootstrap_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
       UNION ALL
       SELECT event_id, ts + INTERVAL 1 HOUR AS ts, event_type, 0.9 AS score
       FROM events WHERE event_type = 'click'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT event_id, event_type, ROUND(score, 2) AS score
     FROM resolved WHERE rn = 1
     """,
@@ -194,11 +191,7 @@ def lifecycle_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL
       SELECT t.event_id, t.ts, e.event_type, CAST(NULL AS DOUBLE), t.dead
       FROM tomb t JOIN events e USING (event_id)
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT event_id, event_type, ROUND(value, 2) AS value
     FROM resolved WHERE rn = 1 AND NOT dead
     """,
@@ -316,11 +309,7 @@ def s7_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_id, ts + INTERVAL 1 HOUR AS ts, event_type,
              user_id, CAST(NULL AS DOUBLE), TRUE AS dead
       FROM events WHERE event_type = 'view'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT user_id, COUNT(*) AS cnt, ROUND(SUM(value), 2) AS sum_value
     FROM resolved WHERE rn = 1 AND NOT dead
     GROUP BY user_id
@@ -669,11 +658,7 @@ def rollup_join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
              user_id, event_type,
              value + 250 AS value
       FROM events WHERE event_type = 'click'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT event_id, user_id, event_type, ROUND(value, 2) AS value
     FROM resolved WHERE rn = 1
     """,

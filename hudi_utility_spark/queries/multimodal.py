@@ -15,6 +15,30 @@ from hudi_utility_spark.queries import query, scratch_base
 from hudi_utility_spark.tables import load_table
 
 
+# _wav_params' per-doc WAV parameters, derived from md5 bits h
+_WAV_HASH = """p AS (
+      SELECT doc_id,
+             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
+                  AS BIGINT) AS h
+      FROM documents
+    )"""
+_WAV_PARAMS = _WAV_HASH + """, q AS (
+      SELECT doc_id,
+             list_extract([8000, 16000, 22050, 44100, 48000],
+                          CAST(h % 5 AS INT) + 1) AS sample_rate,
+             1 + h % 2 AS channels,
+             50 + h % 200 AS n_samples
+      FROM p
+    )"""
+# _ppm_params' 40 images: id and size
+_PPM_IMGS = """imgs AS (
+        SELECT doc_id AS media_id,
+               16 + doc_id % 16 AS w,
+               12 + doc_id % 9 AS h
+        FROM documents ORDER BY doc_id LIMIT 40
+    )"""
+
+
 def _wav_params(spark: SparkSession, sf_dir: str, tone: bool = False) -> DataFrame:
     """Per-document synthetic-WAV parameters from the portable md5
     formula the audio oracles replay: h (48 bits of md5(doc_id)) picks
@@ -152,19 +176,7 @@ def mm_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_wav_decode",
     """
-    WITH p AS (
-      SELECT doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-                  AS BIGINT) AS h
-      FROM documents
-    ), q AS (
-      SELECT doc_id,
-             list_extract([8000, 16000, 22050, 44100, 48000],
-                          CAST(h % 5 AS INT) + 1) AS sample_rate,
-             1 + h % 2 AS channels,
-             50 + h % 200 AS n_samples
-      FROM p
-    )
+    WITH """ + _WAV_PARAMS + """
     SELECT q.doc_id AS media_id,
            MIN(q.sample_rate) AS sample_rate,
            MIN(q.channels) AS channels,
@@ -204,19 +216,7 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_audio_qc",
     """
-    WITH p AS (
-      SELECT doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-                  AS BIGINT) AS h
-      FROM documents
-    ), q AS (
-      SELECT doc_id,
-             list_extract([8000, 16000, 22050, 44100, 48000],
-                          CAST(h % 5 AS INT) + 1) AS sample_rate,
-             1 + h % 2 AS channels,
-             50 + h % 200 AS n_samples
-      FROM p
-    ), pcm AS (
+    WITH """ + _WAV_PARAMS + """, pcm AS (
       SELECT q.doc_id,
              MIN(q.n_samples * q.channels) AS n,
              MAX(ABS(((q.doc_id * 31 + 7 * t.i) % 65536) - 32768)) AS pcm_peak,
@@ -262,12 +262,7 @@ def mm_audio_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_audio_spectral",
     """
-    WITH p AS (
-      SELECT doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-                  AS BIGINT) AS h
-      FROM documents
-    ), q AS (
+    WITH """ + _WAV_HASH + """, q AS (
       SELECT doc_id,
              list_extract([8000, 16000, 22050, 44100, 48000],
                           CAST(h % 5 AS INT) + 1) AS sample_rate,
@@ -303,19 +298,7 @@ def mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_audio_stats",
     """
-    WITH p AS (
-      SELECT doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-                  AS BIGINT) AS h
-      FROM documents
-    ), q AS (
-      SELECT doc_id,
-             list_extract([8000, 16000, 22050, 44100, 48000],
-                          CAST(h % 5 AS INT) + 1) AS sample_rate,
-             1 + h % 2 AS channels,
-             50 + h % 200 AS n_samples
-      FROM p
-    )
+    WITH """ + _WAV_PARAMS + """
     SELECT sample_rate,
            COUNT(*) AS n_files,
            CAST(SUM(n_samples * 1000 // sample_rate) AS BIGINT) AS total_ms,
@@ -367,12 +350,7 @@ def mm_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_ppm_decode",
     """
-    WITH imgs AS (
-        SELECT doc_id AS media_id,
-               16 + doc_id % 16 AS w,
-               12 + doc_id % 9 AS h
-        FROM documents ORDER BY doc_id LIMIT 40
-    )
+    WITH """ + _PPM_IMGS + """
     SELECT i.media_id,
            i.w AS width,
            i.h AS height,
@@ -409,12 +387,7 @@ def mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_ppm_resize",
     """
-    WITH imgs AS (
-        SELECT doc_id AS media_id,
-               16 + doc_id % 16 AS w,
-               12 + doc_id % 9 AS h
-        FROM documents ORDER BY doc_id LIMIT 40
-    )
+    WITH """ + _PPM_IMGS + """
     SELECT i.media_id,
            8 AS out_w, 8 AS out_h,
            CAST(SUM((i.media_id * 13 + ((y.y * i.h) // 8) * 7
@@ -596,12 +569,7 @@ def mm_caption_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_image_size_filter",
     """
-    WITH imgs AS (
-        SELECT doc_id AS media_id,
-               16 + doc_id % 16 AS w,
-               12 + doc_id % 9 AS h
-        FROM documents ORDER BY doc_id LIMIT 40
-    )
+    WITH """ + _PPM_IMGS + """
     SELECT media_id,
            CAST(w AS INT) AS width,
            CAST(h AS INT) AS height,
@@ -679,12 +647,7 @@ def mm_incremental_dhash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_audio_silence",
     """
-    WITH p AS (
-      SELECT doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-                  AS BIGINT) AS h
-      FROM documents
-    ), q AS (
+    WITH """ + _WAV_HASH + """, q AS (
       SELECT doc_id,
              1 + h % 2 AS channels,
              50 + h % 200 AS n_samples
@@ -724,12 +687,7 @@ def mm_audio_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_image_entropy",
     """
-    WITH imgs AS (
-        SELECT doc_id AS media_id,
-               16 + doc_id % 16 AS w,
-               12 + doc_id % 9 AS h
-        FROM documents ORDER BY doc_id LIMIT 40
-    ),
+    WITH """ + _PPM_IMGS + """,
     px AS (
         SELECT i.media_id,
                (i.media_id * 13 + y.y * 7 + x.x * 3 + c.c * 11) % 256 AS v

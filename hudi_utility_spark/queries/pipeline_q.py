@@ -13,8 +13,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark.ops import pipeline as P
-from hudi_utility_spark.queries.dedup import _PAIRS_09_SQL
+from hudi_utility_spark.queries.dedup import (
+    _COMPONENTS_09,
+    _PAIRS_09_SQL,
+    _UNIGRAM_OVERLAP,
+)
 from hudi_utility_spark.queries import query
+from hudi_utility_spark.queries.text import (
+    _LANG_CASE,
+    _LANG_SCORES,
+    _QUALITY,
+    _QUALITY_STATS_COLS,
+)
 from hudi_utility_spark.tables import load_table
 
 # Shared oracle CTE chain: documents → dedup → quality-gated survivors.
@@ -32,28 +42,11 @@ _FUNNEL_CTES = r"""
       ) WHERE rn = 1
     ), stats AS (
       SELECT doc_id, text,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             ROUND(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-                   / greatest(length(text), 1), 6) AS punct_ratio,
-             ROUND(len(list_intersect(
-                     list_transform(string_split_regex(trim(text), '\s+'),
-                                    x -> lower(x)),
-                     ['the','a','an','and','or','of','to','in','is','are',
-                      'was','were','be','been','it','this','that','for',
-                      'on','with','as','by','at','from']))
-                   / greatest(len(string_split_regex(trim(text), '\s+')), 1),
-                   6) AS stopword_ratio
+             """ + _QUALITY_STATS_COLS + r"""
       FROM dedup
     ), scored AS (
       SELECT doc_id, text,
-             ROUND(CASE WHEN n_words < 5 THEN 0.0
-                        WHEN punct_ratio > 0.3 THEN 0.2
-                        ELSE least(1.0,
-                                   ROUND(0.4 * least(n_words / 100.0, 1.0)
-                                         + 0.3 * (1 - punct_ratio)
-                                         + 0.3 * least(stopword_ratio * 4, 1.0),
-                                         6))
-                   END, 6) AS quality
+             """ + _QUALITY + r"""
       FROM stats
     ), gated AS (
       SELECT doc_id, text, quality FROM scored WHERE quality >= 0.5
@@ -83,24 +76,13 @@ def pipeline_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     + r"""
     , langed AS (
       SELECT quality,
-             len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
-             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
-             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
-             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
-             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh
+             """ + _LANG_SCORES + r"""
       FROM (SELECT quality,
                    list_transform(string_split_regex(trim(text), '\s+'),
                                   x -> lower(x)) AS words
             FROM gated)
     )
-    SELECT CASE
-             WHEN greatest(s_en,s_es,s_fr,s_de,s_zh) = 0 THEN 'und'
-             WHEN s_zh = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'zh'
-             WHEN s_fr = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-             WHEN s_es = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-             WHEN s_en = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-             ELSE 'de'
-           END AS lang_pred,
+    SELECT """ + _LANG_CASE + r""" AS lang_pred,
            COUNT(*) AS n_docs,
            ROUND(AVG(quality), 4) AS avg_quality
     FROM langed GROUP BY lang_pred
@@ -366,28 +348,8 @@ def pipeline_walkforward_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ' '))) AS w
         FROM documents
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM words GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM words a JOIN words b ON a.w = b.w AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM common
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE common / (sa.set_size + sb.set_size - common) >= 0.9
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION ALL SELECT id_b, id_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, lbl) AS (
-        SELECT id, id FROM nodes
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-    ),
+    """ + _UNIGRAM_OVERLAP + """,
+    """ + _COMPONENTS_09 + """,
     survivors AS (
         SELECT d.doc_id FROM documents d
         LEFT JOIN (SELECT id, MIN(lbl) AS group_id FROM reach GROUP BY id) g

@@ -7,11 +7,55 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.ops import quality as Q
+from hudi_utility_spark.ops import phash, quality as Q
 from hudi_utility_spark.queries import query
 from hudi_utility_spark.tables import load_table
 from hudi_utility_spark.tsutil import us
 
+
+# the word-count signal and long-document label the ranking, calibration
+# and test queries score documents with, and its decile bins
+_WORD_BINS = """scored AS (
+        SELECT least(CAST(floor(
+                   len(string_split_regex(trim(text), '\\s+')) / 10.0)
+                   AS INT), 9) AS bin,
+               CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS label
+        FROM documents
+    )"""
+# per distinct score of `scored`: label counts and the rows ranked below it
+_MID_RANKS = """per_score AS (
+        SELECT score,
+               SUM(label) AS pos,
+               COUNT(*) - SUM(label) AS neg,
+               COUNT(*) AS cnt
+        FROM scored GROUP BY score
+    ),
+    ranked AS (
+        SELECT pos, neg, cnt,
+               SUM(cnt) OVER (ORDER BY score) - cnt AS cum_before
+        FROM per_score
+    )"""
+
+
+def _words():
+    """Whitespace word count of ``text``."""
+    return F.size(F.split(F.trim(F.col("text")), r"\s+"))
+
+
+def _long_doc():
+    """1 for a document of at least 300 characters, else 0."""
+    return F.when(F.col("n_chars") >= 300, 1).otherwise(0)
+
+
+def _word_bin():
+    """Word-count decile bin 0..9 (tens of words, capped)."""
+    return F.least(F.floor(_words() / 10.0).cast("int"), F.lit(9)).alias("bin")
+
+
+def _word_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `_WORD_BINS`: ``(bin, label)`` per document."""
+    d = load_table(spark, sf_dir, "documents")
+    return d.select(_word_bin(), _long_doc().alias("label"))
 
 @query(
     "dq_constraint_report",
@@ -117,8 +161,6 @@ def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hll_oracle(cols: list[str], table: str = "events", p: int = 9) -> str:
     """Portable-HLL oracle: identical md5 bucket/rank integer arithmetic
     and the same harmonic + linear-counting estimate, per column."""
-    from hudi_utility_spark.ops import phash
-
     m = 1 << p
     alpha = 0.7213 / (1 + 1.079 / m)
     arms = []
@@ -494,9 +536,11 @@ def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .agg(
             F.round(F.sum(F.pow(F.col("obs") - e, 2) / e), 4).alias("chi2"),
+            # collect_set: two count_distincts plan an Expand whose
+            # projection order follows expression ids (see mlfit.g_test)
             (
-                (F.count_distinct("lang") - 1)
-                * (F.count_distinct("source") - 1)
+                (F.size(F.collect_set("lang")) - 1)
+                * (F.size(F.collect_set("source")) - 1)
             ).cast("long").alias("dof"),
         )
     )
@@ -614,8 +658,6 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hll_union_oracle(p: int = 9) -> str:
     """Two sketches built independently (click users / purchase users),
     merged per-bucket, estimated — plus the exact union distinct."""
-    from hudi_utility_spark.ops import phash
-
     m = 1 << p
     alpha = 0.7213 / (1 + 1.079 / m)
     hi, lo = phash.sql_parts("CAST(user_id AS VARCHAR)")
@@ -866,18 +908,7 @@ def stat_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS score
         FROM documents
     ),
-    per_score AS (
-        SELECT score,
-               SUM(label) AS pos,
-               COUNT(*) - SUM(label) AS neg,
-               COUNT(*) AS cnt
-        FROM scored GROUP BY score
-    ),
-    ranked AS (
-        SELECT pos, neg, cnt,
-               SUM(cnt) OVER (ORDER BY score) - cnt AS cum_before
-        FROM per_score
-    ),
+    """ + _MID_RANKS + """,
     agg AS (
         SELECT SUM(pos * (cum_before + (cnt + 1) / 2.0)) AS rank_sum,
                SUM(pos) AS n_pos, SUM(neg) AS n_neg
@@ -904,10 +935,8 @@ def ml_auc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
-        F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("label"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("double").alias(
-            "score"
-        ),
+        _long_doc().alias("label"),
+        _words().cast("double").alias("score"),
     )
     return tie_aware_auc(scored)
 
@@ -935,13 +964,8 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     only THAT it does). One map + one bin-sized aggregate."""
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
-        F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("label"),
-        F.least(
-            F.floor(
-                F.size(F.split(F.trim(F.col("text")), r"\s+")) / 10.0
-            ).cast("int"),
-            F.lit(9),
-        ).alias("bin"),
+        _long_doc().alias("label"),
+        _word_bin(),
     )
     return scored.groupBy("bin").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1073,10 +1097,8 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
-        F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("label"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("double")
-        .alias("score"),
+        _long_doc().alias("label"),
+        _words().cast("double").alias("score"),
     )
     return pr_curve(scored)
 
@@ -1090,18 +1112,7 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS score
         FROM documents
     ),
-    per_score AS (
-        SELECT score,
-               SUM(label) AS pos,
-               COUNT(*) - SUM(label) AS neg,
-               COUNT(*) AS cnt
-        FROM scored GROUP BY score
-    ),
-    ranked AS (
-        SELECT pos, neg, cnt,
-               SUM(cnt) OVER (ORDER BY score) - cnt AS cum_before
-        FROM per_score
-    ),
+    """ + _MID_RANKS + """,
     agg AS (
         SELECT SUM(pos * (cum_before + (cnt + 1) / 2.0)) AS rank_sum,
                SUM(pos) AS n1, SUM(neg) AS n2,
@@ -1129,9 +1140,7 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
         (F.col("lang") == "en").cast("int").alias("label"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("double")
-        .alias("score"),
+        _words().cast("double").alias("score"),
     )
     return mann_whitney_u(scored)
 
@@ -1176,9 +1185,9 @@ def dq_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     rated = d.select(
-        F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("a"),
+        _long_doc().alias("a"),
         F.when(
-            F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 50, 1
+            _words() >= 50, 1
         ).otherwise(0).alias("b"),
     )
     return cohen_kappa(rated, "a", "b")
@@ -1187,13 +1196,7 @@ def dq_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_woe_iv",
     """
-    WITH scored AS (
-        SELECT least(CAST(floor(
-                   len(string_split_regex(trim(text), '\\s+')) / 10.0)
-                   AS INT), 9) AS bin,
-               CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS label
-        FROM documents
-    ),
+    WITH """ + _WORD_BINS + """,
     per_bin AS (
         SELECT bin, COUNT(*) AS n, SUM(label) AS pos_raw
         FROM scored GROUP BY bin
@@ -1228,16 +1231,7 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is window math over <=10 rows."""
     from hudi_utility_spark.ops.mlfit import woe_iv
 
-    d = load_table(spark, sf_dir, "documents")
-    binned = d.select(
-        F.least(
-            F.floor(
-                F.size(F.split(F.trim(F.col("text")), r"\s+")) / 10.0
-            ).cast("int"),
-            F.lit(9),
-        ).alias("bin"),
-        F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("label"),
-    )
+    binned = _word_bins(spark, sf_dir)
     return woe_iv(binned)
 
 
@@ -1359,9 +1353,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("double")
-        .alias("score"),
+        _words().cast("double").alias("score"),
         (F.col("lang") == "en").cast("int").alias("label"),
     )
     return welch_ttest(scored)
@@ -1370,13 +1362,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_isotonic_calibration",
     """
-    WITH scored AS (
-        SELECT least(CAST(floor(
-                   len(string_split_regex(trim(text), '\\s+')) / 10.0)
-                   AS INT), 9) AS bin,
-               CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS label
-        FROM documents
-    ),
+    WITH """ + _WORD_BINS + """,
     per_bin AS (
         SELECT bin, COUNT(*) AS n, SUM(label) AS pos
         FROM scored GROUP BY bin
@@ -1420,16 +1406,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually consume (ops/mlfit.py isotonic_calibrate)."""
     from hudi_utility_spark.ops.mlfit import isotonic_calibrate
 
-    d = load_table(spark, sf_dir, "documents")
-    binned = d.select(
-        F.least(
-            F.floor(
-                F.size(F.split(F.trim(F.col("text")), r"\s+")) / 10.0
-            ).cast("int"),
-            F.lit(9),
-        ).alias("bin"),
-        F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("label"),
-    )
+    binned = _word_bins(spark, sf_dir)
     return isotonic_calibrate(binned)
 
 
@@ -1505,13 +1482,7 @@ def dq_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_calibration_ece",
     """
-    WITH scored AS (
-        SELECT least(CAST(floor(
-                   len(string_split_regex(trim(text), '\\s+')) / 10.0)
-                   AS INT), 9) AS bin,
-               CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS label
-        FROM documents
-    ),
+    WITH """ + _WORD_BINS + """,
     per_bin AS (
         SELECT bin, COUNT(*) AS n,
                AVG(CAST(label AS DOUBLE)) AS rate,
@@ -1531,17 +1502,8 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the two scalars a reliability diagram (`ml_calibration_bins`)
     compresses to, and what `ml_isotonic_calibration` exists to drive
     toward zero. One bin-sized aggregate after the collapse."""
-    d = load_table(spark, sf_dir, "documents")
     per_bin = (
-        d.select(
-            F.least(
-                F.floor(
-                    F.size(F.split(F.trim(F.col("text")), r"\s+")) / 10.0
-                ).cast("int"),
-                F.lit(9),
-            ).alias("bin"),
-            F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("label"),
-        )
+        _word_bins(spark, sf_dir)
         .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1696,11 +1658,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select(
         "event_type",
         "value",
-        (
-            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("split"),
+        phash.md5_parity(F.col("event_id").cast("string")).alias("split"),
     )
     model = base.filter(F.col("split") == 0).groupBy("event_type").agg(
         F.avg("value").alias("pred")
@@ -2184,11 +2142,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     base = ev.select(
         "user_id",
-        (
-            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("half"),
+        phash.md5_parity(F.col("event_id").cast("string")).alias("half"),
         "value",
     )
     pairs = (
@@ -2240,7 +2194,7 @@ def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     d = load_table(spark, sf_dir, "documents")
-    v = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("double")
+    v = _words().cast("double")
     is1 = (F.col("lang") == "en").cast("int") == 1
     agg = d.select(v.alias("v"), is1.alias("is1")).agg(
         F.sum(F.when(F.col("is1") & F.col("v").isNotNull(), 1).otherwise(0))
@@ -2427,11 +2381,7 @@ def stat_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
-        (
-            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("half"),
+        phash.md5_parity(F.col("event_id").cast("string")).alias("half"),
         (F.col("event_type") == "purchase").cast("int").alias("conv"),
     )
     pairs = (

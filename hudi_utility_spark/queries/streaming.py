@@ -6,13 +6,21 @@ exercised in tests/test_streaming.py with real readStream/watermarks).
 
 from __future__ import annotations
 
+import contextlib
+import glob as _glob
 import os as _os
 import threading
+import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hudi_utility_spark.queries import events_table, fresh_scratch, query
+from hudi_utility_spark.queries import (
+    EVENTS_RESOLVED,
+    events_table,
+    fresh_scratch,
+    query,
+)
 from hudi_utility_spark.streaming.windows import (
     session_windows_batch,
     sliding_counts,
@@ -34,6 +42,16 @@ _INTERVAL_JOIN_ORACLE = """
       ON c.user_id = p.user_id
      AND p.ts > c.ts
      AND p.ts <= c.ts + INTERVAL 30 MINUTE
+    """
+
+# 5-minute tumbling-window counts per event type, shared by the batch
+# twin and the true streaming replay
+_TUMBLING_ORACLE = """
+    SELECT CAST(floor(epoch(ts) / 300) * 300 * 1000000 AS BIGINT) AS window_start_us,
+           event_type,
+           COUNT(*) AS cnt,
+           ROUND(SUM(value), 2) AS total_value
+    FROM events GROUP BY 1, 2
     """
 
 # closed form of the per-user EWMA recursion (alpha 0.3), shared by the
@@ -69,20 +87,7 @@ def _replay_width(root: str) -> int:
     transformWithState (Python state server) queries keep their
     separately-measured optimum of 8 (r12: 8 beat both 2 and 32 — the
     Python worker parallelism dominates there, not store count). At
-    100 TB this knob is keys-per-executor-sized — the env override
-    takes precedence."""
-    env = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if env:
-        try:
-            width = int(env)
-        except ValueError:
-            width = 0
-        if width < 1:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTS must be a positive "
-                f"integer, got {env!r}"
-            )
-        return width
+    100 TB this width is keys-per-executor-sized."""
     total = 0
     for dirpath, _dirs, files in _os.walk(root):
         for f in files:
@@ -92,6 +97,78 @@ def _replay_width(root: str) -> int:
                 except OSError:
                     pass
     return min(16, max(4, total // (256 * 1024)))
+
+
+def _replay(spark: SparkSession, schema, root: str) -> DataFrame:
+    """The parquet files under *root* as a stream, one file per
+    micro-batch, oldest modification time first."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(root)
+    )
+
+
+def _append_file(df: DataFrame, root: str) -> set[str]:
+    """Append *df* to the replay directory *root* as one file; the
+    files it added."""
+    before = set(_glob.glob(_os.path.join(root, "*.parquet")))
+    df.coalesce(1).write.mode("append").parquet(root)
+    return set(_glob.glob(_os.path.join(root, "*.parquet"))) - before
+
+
+def _pin_batches(*batches: set[str]) -> None:
+    """Stamp each file set one minute after the one before it, so
+    `_replay` delivers them in this order under any scheduler load."""
+    now = _time.time()
+    for order, files in enumerate(batches):
+        for f in files:
+            t = now + order * 60
+            _os.utime(f, (t, t))
+
+
+def _drain_to_memory(df: DataFrame, sink: str, mode: str, ckpt: str) -> None:
+    """Run the stream *df* into the memory table *sink* in output *mode*
+    until its input is drained, then stop it."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+
+
+@contextlib.contextmanager
+def _rocksdb_state(spark: SparkSession):
+    """RocksDB state stores and 8 shuffle partitions for a
+    transformWithState replay; both confs are restored on exit. Each
+    partition opens and checkpoints its own store per micro-batch, so
+    32 stores for a 10k-row replay was measured 2x slower (44.9s vs
+    16.3s warm). Cluster-size this to keys/executor in production."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    pkey = "spark.sql.shuffle.partitions"
+    pprev = spark.conf.get(pkey, None)
+    spark.conf.set(pkey, "8")
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+        if pprev is None:
+            spark.conf.unset(pkey)
+        else:
+            spark.conf.set(pkey, pprev)
 
 
 class _scoped_shuffle_partitions:
@@ -137,13 +214,7 @@ class _scoped_shuffle_partitions:
 
 @query(
     "stream_tumbling_counts",
-    """
-    SELECT CAST(floor(epoch(ts) / 300) * 300 * 1000000 AS BIGINT) AS window_start_us,
-           event_type,
-           COUNT(*) AS cnt,
-           ROUND(SUM(value), 2) AS total_value
-    FROM events GROUP BY 1, 2
-    """,
+    _TUMBLING_ORACLE,
     sequential=True,
 )
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,13 +386,7 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_true_tumbling",
-    """
-    SELECT CAST(floor(epoch(ts) / 300) * 300 * 1000000 AS BIGINT) AS window_start_us,
-           event_type,
-           COUNT(*) AS cnt,
-           ROUND(SUM(value), 2) AS total_value
-    FROM events GROUP BY 1, 2
-    """,
+    _TUMBLING_ORACLE,
     sequential=True,
 )
 def stream_true_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,22 +420,11 @@ def stream_true_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.coalesce(2).write.parquet(root)
     sink = f"true_tumbling_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(root, "_ckpt")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
-    )
+    stream = _replay(spark, ev.schema, root)
     with _scoped_shuffle_partitions(spark, _replay_width(root)):
-        q = (
-            tumbling_counts(stream, width="5 minutes")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
+        _drain_to_memory(
+            tumbling_counts(stream, width="5 minutes"), sink, "complete", ckpt
         )
-        q.processAllAvailable()
-        q.stop()
     return spark.table(sink).select(
         "window_start_us", "event_type", "cnt", "total_value"
     )
@@ -418,22 +472,10 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thing at twice the per-batch fixed cost — guide §2/§5 "fewer,
     # fatter micro-batches"; dedup output is batching-invariant, so
     # the result is unchanged).
-    import glob as _glob
-    import time as _time
-
-    ev.coalesce(1).write.mode("append").parquet(root)
-    first_files = set(_glob.glob(os.path.join(root, "*.parquet")))
-    ev.coalesce(1).write.mode("append").parquet(root)
-    now = _time.time()
-    for f in _glob.glob(os.path.join(root, "*.parquet")):
-        os.utime(f, (now, now) if f in first_files else (now + 60, now + 60))
+    _pin_batches(_append_file(ev, root), _append_file(ev, root))
     sink = f"dedup_wm_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(root, "_ckpt")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
-    )
+    stream = _replay(spark, ev.schema, root)
     # Watermarks require an instant (TIMESTAMP), not wall-clock NTZ;
     # the cast only feeds watermark bookkeeping — the aggregate below
     # never reads ts, so session-timezone choice cannot leak into values.
@@ -443,15 +485,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     with _scoped_shuffle_partitions(spark, _replay_width(root)):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        _drain_to_memory(deduped, sink, "append", ckpt)
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -491,9 +525,7 @@ def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: state per key is two scalars hash-partitioned
     across RocksDB stores (off-heap, incremental checkpoints); the
     per-batch sort is within-key within-batch only."""
-    import glob
     import os
-    import time as _time
     import uuid
 
     from pyspark.sql import Window
@@ -514,60 +546,17 @@ def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = ev.agg(
         F.expr("percentile_approx(ts, 0.5)").alias("thr")
     ).collect()[0]["thr"]
-    ev.filter(F.col("ts") <= F.lit(thr)).coalesce(1).write.mode(
-        "append"
-    ).parquet(root)
-    first_files = set(glob.glob(os.path.join(root, "*.parquet")))
-    ev.filter(F.col("ts") > F.lit(thr)).coalesce(1).write.mode(
-        "append"
-    ).parquet(root)
     # explicit mtimes pin trigger order (oldest-first) under any load
-    now = _time.time()
-    for f in glob.glob(os.path.join(root, "*.parquet")):
-        os.utime(f, (now, now) if f in first_files else (now + 60, now + 60))
+    _pin_batches(
+        _append_file(ev.filter(F.col("ts") <= F.lit(thr)), root),
+        _append_file(ev.filter(F.col("ts") > F.lit(thr)), root),
+    )
 
     sink = f"ewma_tws_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(root, "_ckpt")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    # right-size the state stores to the micro-batch volume: each
-    # shuffle partition opens (and checkpoints) its own RocksDB store
-    # per batch, so 32 stores for a 10k-row replay is pure fixed cost
-    # (measured 2x on the sessionizer twin). On a real cluster this is
-    # the same knob sized to keys/executor.
-    pkey = "spark.sql.shuffle.partitions"
-    pprev = spark.conf.get(pkey, None)
-    spark.conf.set(pkey, "8")
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-        q = (
-            running_ewma_tws(stream, alpha=0.3)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-        if pprev is None:
-            spark.conf.unset(pkey)
-        else:
-            spark.conf.set(pkey, pprev)
+    with _rocksdb_state(spark):
+        stream = _replay(spark, ev.schema, root)
+        _drain_to_memory(running_ewma_tws(stream, alpha=0.3), sink, "update", ckpt)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         spark.table(sink)
@@ -650,9 +639,7 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB posture: state per key is 3 longs + 1 timer; one key
     shuffle; watermark horizon bounds state lifetime exactly."""
-    import glob
     import os
-    import time as _time
     import uuid
 
     from hudi_utility_spark.session import ensure_pyshim_on_session
@@ -666,61 +653,23 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.col("ts").cast("timestamp_ltz").alias("ts")
     )
     root = fresh_scratch(sf_dir, "sess_tws")
-    ev.coalesce(1).write.parquet(root)
-    first_files = set(glob.glob(os.path.join(root, "*.parquet")))
+    first_files = _append_file(ev, root)
     sentinel_uid = 10**9
     far = ev.agg(F.max("ts")).collect()[0][0]
     import datetime as _dt
 
-    spark.createDataFrame(
+    sentinel = spark.createDataFrame(
         [(sentinel_uid, far + _dt.timedelta(days=30))], ev.schema
-    ).coalesce(1).write.mode("append").parquet(root)
-    now = _time.time()
-    for f in glob.glob(os.path.join(root, "*.parquet")):
-        os.utime(f, (now, now) if f in first_files else (now + 60, now + 60))
+    )
+    _pin_batches(first_files, _append_file(sentinel, root))
 
     sink = f"sess_tws_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(root, "_ckpt")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    # 8 shuffle partitions: each partition opens + checkpoints its own
-    # RocksDB store per micro-batch; 32 stores for a 10k-row replay was
-    # measured 2x slower (44.9s vs 16.3s warm). Cluster-size this to
-    # keys/executor in production.
-    pkey = "spark.sql.shuffle.partitions"
-    pprev = spark.conf.get(pkey, None)
-    spark.conf.set(pkey, "8")
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-            .withWatermark("ts", "0 seconds")
+    with _rocksdb_state(spark):
+        stream = _replay(spark, ev.schema, root).withWatermark(
+            "ts", "0 seconds"
         )
-        q = (
-            sessionize_tws(stream, gap_seconds=1800)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-        if pprev is None:
-            spark.conf.unset(pkey)
-        else:
-            spark.conf.set(pkey, pprev)
+        _drain_to_memory(sessionize_tws(stream, gap_seconds=1800), sink, "append", ckpt)
     return spark.table(sink).filter(F.col("user_id") != sentinel_uid).select(
         "user_id", "session_start_us", "session_end_us", "n_events"
     )
@@ -737,11 +686,7 @@ def stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
              user_id, event_type,
              value + 500 AS value
       FROM events WHERE event_id % 11 = 0
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT event_id, user_id, event_type,
            ROUND(value, 2) AS value,
            epoch_us(ts) AS ts_us
@@ -768,9 +713,7 @@ def stream_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the upsert rewrites only partitions the batch touches (dynamic
     partition overwrite); checkpointed offsets make redelivery a no-op
     rewrite rather than a duplicate row."""
-    import glob
     import os
-    import time as _time
 
     from hudi_utility_spark.streaming.ingest import stream_upsert
     from hudi_utility_spark.table import TableType
@@ -780,24 +723,16 @@ def stream_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    ev.coalesce(1).write.mode("append").parquet(src)
-    first_files = set(glob.glob(os.path.join(src, "*.parquet")))
+    first_files = _append_file(ev, src)
     updates = (
         ev.filter(F.col("event_id") % 11 == 0)
         .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
         .withColumn("value", F.col("value") + 500)
     )
-    updates.coalesce(1).write.mode("append").parquet(src)
-    now = _time.time()
-    for f in glob.glob(os.path.join(src, "*.parquet")):
-        os.utime(f, (now, now) if f in first_files else (now + 60, now + 60))
+    _pin_batches(first_files, _append_file(updates, src))
 
     table = events_table(os.path.join(root, "table"), TableType.COPY_ON_WRITE)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _replay(spark, ev.schema, src)
     q = stream_upsert(
         spark, stream, table, checkpoint_dir=os.path.join(root, "_ckpt")
     )
@@ -866,9 +801,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: the watermark horizon × key cardinality is what
     bounds streaming state; this pins the exact drop boundary that
     arithmetic relies on."""
-    import glob
     import os
-    import time as _time
 
     from hudi_utility_spark.streaming.windows import tumbling_counts
 
@@ -879,35 +812,23 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr_us = mm.mn + (mm.mx - mm.mn) // 2
     root = fresh_scratch(sf_dir, "late_drop")
 
-    def _write(df) -> set[str]:
-        before = set(glob.glob(os.path.join(root, "*.parquet")))
-        df.coalesce(1).write.mode("append").parquet(root)
-        return set(glob.glob(os.path.join(root, "*.parquet"))) - before
-
-    f1 = _write(ev.filter(us("ts") <= F.lit(thr_us)))
-    f2 = _write(ev.filter(us("ts") > F.lit(thr_us)))
+    f1 = _append_file(ev.filter(us("ts") <= F.lit(thr_us)), root)
+    f2 = _append_file(ev.filter(us("ts") > F.lit(thr_us)), root)
     late = ev.filter(us("ts") < F.lit(mm.mn + 3_600_000_000)).unionByName(
         ev.filter(us("ts") > F.lit(mm.mx - 1_200_000_000))
     )
-    f3 = _write(late)
+    f3 = _append_file(late, root)
     import datetime as _dt
 
-    f4 = _write(
+    f4 = _append_file(
         spark.createDataFrame(
             [(_dt.datetime(2200, 1, 1), "__sentinel__", 0.0)], ev.schema
-        )
+        ),
+        root,
     )
-    now = _time.time()
-    for order, files in enumerate((f1, f2, f3, f4)):
-        for f in files:
-            t = now + order * 60
-            os.utime(f, (t, t))
+    _pin_batches(f1, f2, f3, f4)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
-    )
+    stream = _replay(spark, ev.schema, root)
     # capture finalized (append-mode) windows per committed micro-batch
     # via foreachBatch — synchronous with the commit, keyed by batch id
     # so checkpoint replay overwrites instead of duplicating; the memory
@@ -977,7 +898,6 @@ def stream_true_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-batch capture here collects the JOIN OUTPUT (the query's
     own result set, driver-bound by contract), not the inputs."""
     import os
-    import time as _time
 
     from hudi_utility_spark.streaming.joins import followed_within
 
@@ -998,29 +918,13 @@ def stream_true_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     thr = mm.mn + (mm.mx - mm.mn) // 2
 
-    def _write(df) -> set[str]:
-        import glob as _glob
-
-        before = set(_glob.glob(os.path.join(root, "*.parquet")))
-        df.coalesce(1).write.mode("append").parquet(root)
-        return set(_glob.glob(os.path.join(root, "*.parquet"))) - before
-
     t_us = us("ts")
-    slices = [
-        _write(ev.filter(t_us <= F.lit(thr))),
-        _write(ev.filter(t_us > F.lit(thr))),
-    ]
-    now = _time.time()
-    for order, files in enumerate(slices):
-        for f in files:
-            t = now + order * 60
-            os.utime(f, (t, t))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
+    _pin_batches(
+        _append_file(ev.filter(t_us <= F.lit(thr)), root),
+        _append_file(ev.filter(t_us > F.lit(thr)), root),
     )
+
+    stream = _replay(spark, ev.schema, root)
     out = followed_within(
         stream.filter(F.col("event_type") == "click"),
         stream.filter(F.col("event_type") == "purchase"),

@@ -11,7 +11,21 @@ from hudi_utility_spark.tables import load_table
 
 
 # stopword-marker language prediction per document (ops.text.LANG_MARKERS
-# and array_max's tiebreak in SQL), shared by the langid oracles
+# and array_max's tiebreak in SQL): the marker hits of a ``words`` list,
+# and the argmax over them, shared by the langid oracles
+_LANG_SCORES = r"""len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
+             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
+             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
+             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
+             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh"""
+_LANG_CASE = r"""CASE
+               WHEN greatest(s_en,s_es,s_fr,s_de,s_zh) = 0 THEN 'und'
+               WHEN s_zh = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'zh'
+               WHEN s_fr = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
+               WHEN s_es = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
+               WHEN s_en = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
+               ELSE 'de'
+             END"""
 _LANGID_PRED = r"""w AS (
       SELECT doc_id, lang,
              list_transform(string_split_regex(trim(text), '\s+'),
@@ -19,30 +33,17 @@ _LANGID_PRED = r"""w AS (
       FROM documents
     ), scored AS (
       SELECT doc_id, lang,
-             len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
-             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
-             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
-             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
-             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh
+             """ + _LANG_SCORES + r"""
       FROM w
     ), pred AS (
-      SELECT lang, CASE
-               WHEN greatest(s_en,s_es,s_fr,s_de,s_zh) = 0 THEN 'und'
-               WHEN s_zh = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'zh'
-               WHEN s_fr = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-               WHEN s_es = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-               WHEN s_en = greatest(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-               ELSE 'de'
-             END AS lang_pred
+      SELECT lang, """ + _LANG_CASE + r""" AS lang_pred
       FROM scored
     )"""
 
 
-# per-document quality-heuristic inputs (ops.text quality score), shared
-# by the quality-score oracles
-_QUALITY_STATS = r"""stats AS (
-      SELECT doc_id,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
+# per-document quality-heuristic inputs and score (ops.text quality
+# score), shared by the quality-score oracles
+_QUALITY_STATS_COLS = r"""len(string_split_regex(trim(text), '\s+')) AS n_words,
              ROUND(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
                    / greatest(length(text), 1), 6) AS punct_ratio,
              ROUND(len(list_intersect(
@@ -52,9 +53,40 @@ _QUALITY_STATS = r"""stats AS (
                       'was','were','be','been','it','this','that','for',
                       'on','with','as','by','at','from']))
                    / greatest(len(string_split_regex(trim(text), '\s+')), 1),
-                   6) AS stopword_ratio
+                   6) AS stopword_ratio"""
+_QUALITY = r"""ROUND(CASE WHEN n_words < 5 THEN 0.0
+                      WHEN punct_ratio > 0.3 THEN 0.2
+                      ELSE least(1.0,
+                                 ROUND(0.4 * least(n_words / 100.0, 1.0)
+                                       + 0.3 * (1 - punct_ratio)
+                                       + 0.3 * least(stopword_ratio * 4, 1.0),
+                                       6))
+                 END, 6) AS quality"""
+_QUALITY_STATS = r"""stats AS (
+      SELECT doc_id,
+             """ + _QUALITY_STATS_COLS + r"""
       FROM documents
     )"""
+
+# lower-cased whitespace tokens ``t`` per document, the n-gram oracles' input
+_WORD_TOKS = r"""toks AS (
+        SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
+        FROM documents
+    )"""
+
+
+def _trigrams(col: str):
+    """The space-joined word trigrams of the token array *col* (at
+    least 3 tokens)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size(col) - 3),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(F.col(col), i + 1),
+            F.element_at(F.col(col), i + 2),
+            F.element_at(F.col(col), i + 3),
+        ),
+    )
 
 
 @query(
@@ -95,21 +127,8 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-scoring ratios (punctuation/whitespace density) — the
     oracle-checkable core of ops.text.with_text_stats."""
     d = load_table(spark, sf_dir, "documents")
-    c = F.col("text")
-    words = F.split(F.trim(c), r"\s+")
-    return d.select(
-        "doc_id",
-        F.size(words).alias("n_words"),
-        F.round(
-            F.length(F.regexp_replace(c, r"[a-zA-Z0-9\s]", ""))
-            / F.greatest(F.length(c), F.lit(1)),
-            6,
-        ).alias("punct_ratio"),
-        F.round(
-            (F.length(c) - F.length(F.regexp_replace(c, r"\s", "")))
-            / F.greatest(F.length(c), F.lit(1)),
-            6,
-        ).alias("space_ratio"),
+    return X.with_text_stats(d).select(
+        "doc_id", "n_words", "punct_ratio", "space_ratio"
     )
 
 
@@ -158,11 +177,7 @@ def text_length_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ), scored AS (
       SELECT doc_id,
-             len(list_intersect(words, ['the','and','of','to','a','in','is'])) AS s_en,
-             len(list_intersect(words, ['el','la','de','que','y','los'])) AS s_es,
-             len(list_intersect(words, ['le','la','et','les','des','une'])) AS s_fr,
-             len(list_intersect(words, ['der','die','und','das','ist','ein'])) AS s_de,
-             len(list_intersect(words, ['de5','shi4','le5'])) AS s_zh
+             """ + _LANG_SCORES + r"""
       FROM w
     )
     SELECT CASE
@@ -196,14 +211,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _QUALITY_STATS
     + r"""
     SELECT doc_id,
-           ROUND(CASE WHEN n_words < 5 THEN 0.0
-                      WHEN punct_ratio > 0.3 THEN 0.2
-                      ELSE least(1.0,
-                                 ROUND(0.4 * least(n_words / 100.0, 1.0)
-                                       + 0.3 * (1 - punct_ratio)
-                                       + 0.3 * least(stopword_ratio * 4, 1.0),
-                                       6))
-                 END, 6) AS quality
+           """ + _QUALITY + r"""
     FROM stats
     WHERE quality >= 0.0
     """,
@@ -333,10 +341,7 @@ def text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_decontaminate",
     r"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        FROM documents
-    ),
+    WITH """ + _WORD_TOKS + r""",
     grams AS (
         SELECT doc_id, array_to_string(t[s + 1 : s + 5], ' ') AS gram
         FROM toks, UNNEST(range(0, greatest(len(t) - 4, 1), 1)) AS u(s)
@@ -367,10 +372,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_repetition_profile",
     r"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        FROM documents
-    ),
+    WITH """ + _WORD_TOKS + r""",
     grams AS (
         SELECT doc_id, array_to_string(t[s + 1 : s + 2], ' ') AS gram
         FROM toks, UNNEST(range(0, greatest(len(t) - 1, 1), 1)) AS u(s)
@@ -398,10 +400,7 @@ def _winnowing_oracle(k: int = 3, window: int = 4) -> str:
 
     h = phash.sql_hash64("g")
     return rf"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        FROM documents
-    ),
+    WITH {_WORD_TOKS},
     ghs AS (
         SELECT doc_id, list({h} ORDER BY s) AS gh FROM (
             SELECT doc_id, s,
@@ -434,10 +433,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_hot_ngram_spans",
     r"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        FROM documents
-    ),
+    WITH """ + _WORD_TOKS + r""",
     grams AS (
         SELECT DISTINCT doc_id, array_to_string(t[s + 1 : s + 8], ' ') AS gram
         FROM toks, UNNEST(range(0, greatest(len(t) - 7, 1), 1)) AS u(s)
@@ -590,14 +586,7 @@ def text_feature_hash_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     + r""",
     scored AS (
       SELECT doc_id, n_words,
-             ROUND(CASE WHEN n_words < 5 THEN 0.0
-                        WHEN punct_ratio > 0.3 THEN 0.2
-                        ELSE least(1.0,
-                                   ROUND(0.4 * least(n_words / 100.0, 1.0)
-                                         + 0.3 * (1 - punct_ratio)
-                                         + 0.3 * least(stopword_ratio * 4, 1.0),
-                                         6))
-                   END, 6) AS quality
+             """ + _QUALITY + r"""
       FROM stats
     )
     SELECT LEAST(CAST(FLOOR(quality * 5) AS BIGINT), 4) AS bin,
@@ -806,6 +795,27 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.char_entropy(d)
 
 
+def _bpe_apply(prev: str, i: int) -> str:
+    """Merge bp<i> applied to ``<prev>.state``: the trainer's padded
+    double replace (twice, so overlapping pairs all merge)."""
+    return f"""trim(replace(replace(' ' || {prev}.state || ' ',
+                                  ' ' || bp{i}.a || ' ' || bp{i}.b || ' ',
+                                  ' ' || bp{i}.a || bp{i}.b || ' '),
+                          ' ' || bp{i}.a || ' ' || bp{i}.b || ' ',
+                          ' ' || bp{i}.a || bp{i}.b || ' '))"""
+
+
+def _bpe_encoded(d: DataFrame) -> DataFrame:
+    """*d* encoded with the 4 merges `bpe_train_merges` learns from it
+    (vocabulary cap 200), in merge-rank order: a collect-driven fit."""
+    merges = X.bpe_train_merges(d, n_merges=4, vocab_cap=200).collect()
+    pairs = [
+        tuple(r.pair.split("+", 1))
+        for r in sorted(merges, key=lambda r: r.merge_rank)
+    ]
+    return X.bpe_encode(d, pairs)
+
+
 def _bpe_stages(n_merges: int) -> list[str]:
     """One (pairs -> best -> apply) CTE triple per merge round, same
     double-replace application as the trainer."""
@@ -826,11 +836,7 @@ def _bpe_stages(n_merges: int) -> list[str]:
     bp{i} AS (SELECT a, b, pcnt FROM p{i} ORDER BY pcnt DESC, a, b LIMIT 1),
     st{i} AS (
       SELECT word, cnt,
-             trim(replace(replace(' ' || {prev}.state || ' ',
-                                  ' ' || bp{i}.a || ' ' || bp{i}.b || ' ',
-                                  ' ' || bp{i}.a || bp{i}.b || ' '),
-                          ' ' || bp{i}.a || ' ' || bp{i}.b || ' ',
-                          ' ' || bp{i}.a || bp{i}.b || ' ')) AS state
+             {_bpe_apply(prev, i)} AS state
       FROM {prev}, bp{i}
     )"""
         )
@@ -1053,11 +1059,7 @@ def _bpe_encode_oracle(n_merges: int = 4, vocab_cap: int = 200) -> str:
         enc.append(
             f"""e{i} AS (
       SELECT doc_id,
-             trim(replace(replace(' ' || {prev}.state || ' ',
-                                  ' ' || bp{i}.a || ' ' || bp{i}.b || ' ',
-                                  ' ' || bp{i}.a || bp{i}.b || ' '),
-                          ' ' || bp{i}.a || ' ' || bp{i}.b || ' ',
-                          ' ' || bp{i}.a || bp{i}.b || ' ')) AS state
+             {_bpe_apply(prev, i)} AS state
       FROM {prev}, bp{i}
     )"""
         )
@@ -1096,31 +1098,40 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrains identically in SQL and encodes the same way. Per-doc BPE
     token counts are the compression diagnostic a tokenizer-aware
     packing stage consumes."""
-    d = load_table(spark, sf_dir, "documents")
-    merges = X.bpe_train_merges(d, n_merges=4, vocab_cap=200).collect()
-    pairs = [tuple(r.pair.split("+", 1)) for r in sorted(merges, key=lambda r: r.merge_rank)]
-    return X.bpe_encode(d, pairs)
+    return _bpe_encoded(load_table(spark, sf_dir, "documents"))
 
 
-@query(
-    "text_bigram_backoff",
-    f"""
-    WITH toks AS (
+# the bigram LM oracles' pieces: positioned BPE-ish tokens and unigram
+# counts; adjacent pairs and the pruned top-2000 bigram table; and each
+# document's (n_bigrams, n_model_hits, avg_neg_logprob) from per_doc
+_BIGRAM_TOKS = f"""toks AS (
         SELECT doc_id,
                unnest({_BP_TOKS}) AS tok,
                generate_subscripts({_BP_TOKS}, 1) AS pos
         FROM documents
     ),
-    uni AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
-    n AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM uni),
-    pairs AS (
+    uni AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok)"""
+_TOP_BIGRAMS = """pairs AS (
         SELECT a.doc_id, a.tok AS w1, b.tok AS w2
         FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
     ),
     topbg AS (
         SELECT w1, w2, COUNT(*) AS cb FROM pairs GROUP BY w1, w2
         ORDER BY cb DESC, w1, w2 LIMIT 2000
-    ),
+    )"""
+_BIGRAM_SCORES = """SELECT d.doc_id,
+           CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+           CAST(COALESCE(p.hits, 0) AS BIGINT) AS n_model_hits,
+           COALESCE(p.s, 0.0) AS avg_neg_logprob
+    FROM documents d LEFT JOIN per_doc p USING (doc_id)"""
+
+
+@query(
+    "text_bigram_backoff",
+    f"""
+    WITH {_BIGRAM_TOKS},
+    n AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM uni),
+    {_TOP_BIGRAMS},
     bgmodel AS (
         SELECT t.w1, t.w2, t.cb, u.c AS c_prev
         FROM topbg t JOIN uni u ON t.w1 = u.tok
@@ -1144,11 +1155,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROUND(AVG(neg_logp), 6) AS s
         FROM scored GROUP BY doc_id
     )
-    SELECT d.doc_id,
-           CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           CAST(COALESCE(p.hits, 0) AS BIGINT) AS n_model_hits,
-           COALESCE(p.s, 0.0) AS avg_neg_logprob
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
+    {_BIGRAM_SCORES}
     """,
 )
 def text_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,12 +1211,7 @@ def pack_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hudi_utility_spark.ops import pack as PK
 
     d = load_table(spark, sf_dir, "documents")
-    merges = X.bpe_train_merges(d, n_merges=4, vocab_cap=200).collect()
-    pairs = [
-        tuple(r.pair.split("+", 1))
-        for r in sorted(merges, key=lambda r: r.merge_rank)
-    ]
-    enc = X.bpe_encode(d, pairs)
+    enc = _bpe_encoded(d)
     scored = d.select("doc_id", "n_chars").join(enc, "doc_id").select(
         "doc_id",
         F.col("n_chars").alias("score"),
@@ -1362,12 +1364,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain, and a language-keyed rollup; the oracle replays train +
     encode + rollup in one statement."""
     d = load_table(spark, sf_dir, "documents")
-    merges = X.bpe_train_merges(d, n_merges=4, vocab_cap=200).collect()
-    pairs = [
-        tuple(r.pair.split("+", 1))
-        for r in sorted(merges, key=lambda r: r.merge_rank)
-    ]
-    enc = X.bpe_encode(d, pairs)
+    enc = _bpe_encoded(d)
     words = d.select(
         "doc_id",
         F.explode(
@@ -1411,21 +1408,8 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Shared Kneser-Ney model+scoring CTE chain (up to per_doc), reused by
 # the KN scoring query and the CCNet-style perplexity bucketing query.
-_KN_CTES = f"""toks AS (
-        SELECT doc_id,
-               unnest({_BP_TOKS}) AS tok,
-               generate_subscripts({_BP_TOKS}, 1) AS pos
-        FROM documents
-    ),
-    uni AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
-    pairs AS (
-        SELECT a.doc_id, a.tok AS w1, b.tok AS w2
-        FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-    ),
-    topbg AS (
-        SELECT w1, w2, COUNT(*) AS cb FROM pairs GROUP BY w1, w2
-        ORDER BY cb DESC, w1, w2 LIMIT 2000
-    ),
+_KN_CTES = f"""{_BIGRAM_TOKS},
+    {_TOP_BIGRAMS},
     np AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_pairs FROM topbg),
     w1s AS (
         SELECT f.w1, u.c AS c_prev, f.n1f
@@ -1462,11 +1446,7 @@ _KN_CTES = f"""toks AS (
     "text_kneser_ney",
     f"""
     WITH {_KN_CTES}
-    SELECT d.doc_id,
-           CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           CAST(COALESCE(p.hits, 0) AS BIGINT) AS n_model_hits,
-           COALESCE(p.s, 0.0) AS avg_neg_logprob
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
+    {_BIGRAM_SCORES}
     """,
 )
 def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1668,6 +1648,23 @@ _NB_NORM = (
     "string_split(trim(regexp_replace(regexp_replace(lower(text),"
     " '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' ')"
 )
+# each language's normalised word counts (lang, w, c)
+_LANG_WORD_COUNTS = f"""toks AS (
+        SELECT lang, t.w FROM (
+            SELECT lang, {_NB_NORM} AS ws FROM documents
+        ), LATERAL (SELECT unnest(ws) AS w) t
+        WHERE t.w != ''
+    ),
+    counts AS (SELECT lang, w, COUNT(*) AS c FROM toks GROUP BY 1, 2)"""
+
+
+def _lang_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of `_LANG_WORD_COUNTS`."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "lang", F.explode(F.split(X.normalized(F.col("text")), " ")).alias("w")
+    ).filter(F.col("w") != "")
+    return toks.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("c"))
 
 
 @query(
@@ -1769,13 +1766,7 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_js_divergence",
     f"""
-    WITH toks AS (
-        SELECT lang, t.w FROM (
-            SELECT lang, {_NB_NORM} AS ws FROM documents
-        ), LATERAL (SELECT unnest(ws) AS w) t
-        WHERE t.w != ''
-    ),
-    counts AS (SELECT lang, w, COUNT(*) AS c FROM toks GROUP BY 1, 2),
+    WITH {_LANG_WORD_COUNTS},
     totals AS (SELECT lang, SUM(c) AS n FROM counts GROUP BY lang),
     probs AS (
         SELECT c.lang, c.w, c.c / CAST(t.n AS DOUBLE) AS p
@@ -1806,13 +1797,7 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 − Σ shared p) is the COMPLETE divergence — no full-outer join,
     no zero-filled grid; the only data-sized work is the (lang, word)
     count aggregate."""
-    d = load_table(spark, sf_dir, "documents")
-    from hudi_utility_spark.ops.text import normalized
-
-    toks = d.select(
-        "lang", F.explode(F.split(normalized(F.col("text")), " ")).alias("w")
-    ).filter(F.col("w") != "")
-    counts = toks.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("c"))
+    counts = _lang_word_counts(spark, sf_dir)
     totals = counts.groupBy("lang").agg(F.sum("c").alias("n"))
     probs = counts.join(totals, "lang").select(
         "lang", "w", (F.col("c") / F.col("n").cast("double")).alias("p")
@@ -1859,13 +1844,7 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_hapax_profile",
     f"""
-    WITH toks AS (
-        SELECT lang, t.w FROM (
-            SELECT lang, {_NB_NORM} AS ws FROM documents
-        ), LATERAL (SELECT unnest(ws) AS w) t
-        WHERE t.w != ''
-    ),
-    counts AS (SELECT lang, w, COUNT(*) AS c FROM toks GROUP BY 1, 2)
+    WITH {_LANG_WORD_COUNTS}
     SELECT lang,
            CAST(SUM(c) AS BIGINT) AS n_tokens,
            CAST(COUNT(*) AS BIGINT) AS vocab,
@@ -1884,13 +1863,7 @@ def text_hapax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     authenticity check (generated/templated text collapses the hapax
     tail; natural language holds it near 40-60%). One (lang, word)
     count aggregate, per-language rollup."""
-    d = load_table(spark, sf_dir, "documents")
-    from hudi_utility_spark.ops.text import normalized
-
-    toks = d.select(
-        "lang", F.explode(F.split(normalized(F.col("text")), " ")).alias("w")
-    ).filter(F.col("w") != "")
-    counts = toks.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("c"))
+    counts = _lang_word_counts(spark, sf_dir)
     return counts.groupBy("lang").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).alias("vocab"),
@@ -2167,17 +2140,7 @@ def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ts = F.filter(F.split(X.normalized(F.col("text")), " "), lambda t: t != "")
     grams = d.select(ts.alias("ts")).filter(F.size("ts") >= 3).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("ts") - 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at(F.col("ts"), i + 1),
-                    F.element_at(F.col("ts"), i + 2),
-                    F.element_at(F.col("ts"), i + 3),
-                ),
-            )
-        ).alias("token")
+        F.explode(_trigrams("ts")).alias("token")
     )
     vocab = grams.groupBy("token").agg(
         F.count(F.lit(1)).cast("double").alias("r")
@@ -2253,17 +2216,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = base.select(
         "doc_id",
         "holdout",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("ts") - 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at(F.col("ts"), i + 1),
-                    F.element_at(F.col("ts"), i + 2),
-                    F.element_at(F.col("ts"), i + 3),
-                ),
-            )
-        ).alias("gram"),
+        F.explode(_trigrams("ts")).alias("gram"),
     )
     train = grams.filter(~F.col("holdout")).select("gram").distinct()
     held = grams.filter(F.col("holdout")).select("doc_id", "gram")

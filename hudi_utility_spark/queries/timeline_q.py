@@ -11,7 +11,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hudi_utility_spark import timeline
-from hudi_utility_spark.queries import events_table, fresh_scratch, query
+from hudi_utility_spark.queries import (
+    EVENTS_RESOLVED,
+    events_table,
+    fresh_scratch,
+    query,
+)
 from hudi_utility_spark.tables import load_table
 from hudi_utility_spark.write import upsert
 
@@ -26,11 +31,7 @@ _TWO_COMMIT_STATE = """
       SELECT event_id, ts + INTERVAL 1 HOUR AS ts, event_type,
              value + 1000 AS value
       FROM events WHERE event_type = 'click'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT event_id, event_type, ROUND(value, 2) AS value
     FROM resolved WHERE rn = 1
     """
@@ -186,11 +187,7 @@ def timeline_read_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_id, ts + INTERVAL 2 HOUR AS ts, event_type,
              value + 2000 AS value
       FROM events WHERE event_type = 'click'
-    ), resolved AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY event_id ORDER BY ts DESC) AS rn
-      FROM unioned
-    )
+    ), """ + EVENTS_RESOLVED + """
     SELECT event_id, event_type, ROUND(value, 2) AS value
     FROM resolved WHERE rn = 1
     """,

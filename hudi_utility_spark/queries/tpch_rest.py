@@ -357,9 +357,11 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     per_order = ll.groupBy("l_orderkey").agg(
-        F.count_distinct("l_suppkey").alias("n_supp"),
-        F.count_distinct(
-            F.when(F.col("late") == 1, F.col("l_suppkey"))
+        # collect_set: two count_distincts plan an Expand whose
+        # projection order follows expression ids (see mlfit.g_test)
+        F.size(F.collect_set("l_suppkey")).alias("n_supp"),
+        F.size(
+            F.collect_set(F.when(F.col("late") == 1, F.col("l_suppkey")))
         ).alias("n_late"),
     )
     return (

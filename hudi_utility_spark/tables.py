@@ -7,8 +7,6 @@ that Spark would otherwise reject.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from hudi_utility_spark.io import read_source
@@ -30,11 +28,3 @@ TABLE_NAMES = [
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table, normalizing ns-timestamps to TimestampType."""
     return read_source(spark, f"{sf_dir}/{name}.parquet", fmt="parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {
-        name: load_table(spark, sf_dir, name)
-        for name in TABLE_NAMES
-        if os.path.exists(f"{sf_dir}/{name}.parquet")
-    }

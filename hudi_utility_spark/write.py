@@ -622,7 +622,6 @@ def delete_keys(
     is dropped outright. Returns the resolved snapshot.
     """
     from hudi_utility_spark.table import DELETED_COL
-    from hudi_utility_spark.timeline import stamp
 
     if not table.exists():
         raise ValueError(f"cannot delete from non-existent table at {table.path}")
@@ -633,27 +632,8 @@ def delete_keys(
             f"keys_df is missing required columns {missing} "
             "(record key + precombine + partition fields)"
         )
-    tomb = stamp(
-        keys_df.select(*required).withColumn(DELETED_COL, F.lit(True)),
-        commit_time,
-    )
-    # tombstones union with base/log rows at read time — their timestamp
-    # flavor must match the table's (no-op under the engine session)
-    base = table.read_base(spark)
-    tomb = align_timestamp_types(tomb, base.schema)
-
-    if table.table_type is TableType.MERGE_ON_READ:
-        write_partitioned(tomb, table.log_path, table.partition_fields, mode="append")
-        return table.read(spark)
-
-    _rewrite_cow(
-        table,
-        base,
-        _touched(table, tomb),
-        lambda scoped: table.resolve(scoped, tomb),
-        "delete",
-    )
-    return table.read(spark)
+    tomb = keys_df.select(*required).withColumn(DELETED_COL, F.lit(True))
+    return _upsert(spark, tomb, table, commit_time, partial=False)
 
 
 def merge_into(

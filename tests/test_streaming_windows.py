@@ -164,18 +164,3 @@ def test_scoped_shuffle_partitions_serializes_concurrent_scopes(spark):
     assert observed == ["4", before]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
-
-@pytest.mark.parametrize("raw", ["0", "-3", "4.5"])
-def test_replay_width_env_rejects_non_positive_integers(monkeypatch, tmp_path, raw):
-    from hudi_utility_spark.queries.streaming import _replay_width
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", raw)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
-        _replay_width(str(tmp_path))
-
-
-def test_replay_width_env_override(monkeypatch, tmp_path):
-    from hudi_utility_spark.queries.streaming import _replay_width
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "6")
-    assert _replay_width(str(tmp_path)) == 6
